@@ -1,6 +1,65 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** A query that threw in a timed rep. The bench fails naming it
+    * instead of recording the throw as a (fast) time. */
+  final class QueryFailed(val query: String, cause: Throwable)
+      extends RuntimeException(s"query $query failed: $cause", cause)
+
+  /** `body` run and timed `reps` times (at least once): each rep's
+    * result and seconds. A rep that throws fails with [[QueryFailed]]. */
+  def timeReps[A](query: String, reps: Int)(body: => A): Seq[(A, Double)] =
+    (1 to math.max(1, reps)).map { _ =>
+      val t0 = System.nanoTime()
+      val r = try body catch { case NonFatal(e) => throw new QueryFailed(query, e) }
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+
+  /** Run a bench main's body; a failed query stops the session and
+    * exits non-zero, naming the query on stderr. */
+  def failLoudly[A](spark: SparkSession)(body: => A): A =
+    try body catch {
+      case f: QueryFailed =>
+        System.err.println(s"graft bench: ${f.getMessage}")
+        f.printStackTrace()
+        spark.stop()
+        sys.exit(1)
+    }
+
+  /** Each query's (cold, steady) seconds over `reps` timed reps on
+    * `sfDir`, each query first run untimed on `warmDir` (a warm-up
+    * failure is ignored: the timed rep then fails on its own). */
+  def measure(spark: SparkSession, queries: Map[String, (SparkSession, String) => DataFrame],
+      sfDir: String, warmDir: Option[String], reps: Int): Map[String, (Double, Double)] =
+    queries.map { case (name, fn) =>
+      // scope the post-query unpersist to blocks THIS query created:
+      // unpersisting a shared localCheckpoint would truncate its
+      // lineage unrecoverably for every later query that reuses it
+      val preExisting = spark.sparkContext.getPersistentRDDs.keySet
+      warmDir.foreach { d =>
+        try { fn(spark, d).queryExecution.toRdd.count() }
+        catch { case NonFatal(_) => () }
+      }
+      // execute the FULL physical plan (a plain count() would let
+      // Catalyst prune projection-only work down to a bare scan)
+      val times = timeReps(name, reps)(fn(spark, sfDir).queryExecution.toRdd.count()).map(_._2)
+      // drop this query's persisted blocks before moving on: every
+      // fn(...) call builds a FRESH DataFrame, so each warmup + rep
+      // leaves its own localCheckpoint blocks behind (nothing frees
+      // them until the ContextCleaner's GC cycle) — across ~90 queries
+      // the block manager fills, later queries pay eviction + GC that
+      // an isolated run never sees, and the steady totals drift ~10%
+      // above the sum of per-query minima. Unpersisting between
+      // queries is bench hygiene only: each timed rep still pays its
+      // own checkpoint materialization inside the measured window.
+      spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !preExisting(id) }
+        .values.foreach(_.unpersist(blocking = false))
+      name -> ((times.head, times.min))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -63,37 +122,7 @@ object Bench {
     require(anchorNames.forall(SparkEntry.queries.contains),
       s"anchor queries missing from SparkEntry.queries: " +
         anchorNames.filterNot(SparkEntry.queries.contains).mkString(", "))
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      // scope the post-query unpersist to blocks THIS query created:
-      // unpersisting a shared localCheckpoint would truncate its
-      // lineage unrecoverably for every later query that reuses it
-      val preExisting = spark.sparkContext.getPersistentRDDs.keySet
-      warmDir.foreach { d =>
-        try { fn(spark, d).queryExecution.toRdd.count() }
-        catch { case _: Throwable => () }
-      }
-      val times = (1 to math.max(1, reps)).map { _ =>
-        val t0 = System.nanoTime()
-        // execute the FULL physical plan (a plain count() would let
-        // Catalyst prune projection-only work down to a bare scan)
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      // drop this query's persisted blocks before moving on: every
-      // fn(...) call builds a FRESH DataFrame, so each warmup + rep
-      // leaves its own localCheckpoint blocks behind (nothing frees
-      // them until the ContextCleaner's GC cycle) — across ~90 queries
-      // the block manager fills, later queries pay eviction + GC that
-      // an isolated run never sees, and the steady totals drift ~10%
-      // above the sum of per-query minima. Unpersisting between
-      // queries is bench hygiene only: each timed rep still pays its
-      // own checkpoint materialization inside the measured window.
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !preExisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      name -> ((times.head, times.min))
-    }
+    val results = failLoudly(spark)(measure(spark, SparkEntry.queries, sfDir, warmDir, reps))
     // explicit-ROOT-locale formatting: the f"" interpolator uses the
     // JVM default locale, so under e.g. de_DE "%.3f" emits a comma
     // decimal and the metric line stops being JSON

@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{BandKeysExpr, DecodePlcWordsExpr, NearestCellsExpr,
-  PhashExpr, SpanFingerprintsExpr, VectorDotExpr}
+import graft.functions.GraftFunctions
 import graft.plans.{AsOfJoinStrategy, PushProbeFilterThroughAsOfJoin}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
@@ -17,41 +16,9 @@ import graft.plans.{AsOfJoinStrategy, PushProbeFilterThroughAsOfJoin}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    import graft.functions.GraftFunctions.{arity, intLiteral}
-    e.injectFunction((
-      FunctionIdentifier("decode_plc_words"),
-      new ExpressionInfo(classOf[DecodePlcWordsExpr].getName, "decode_plc_words"),
-      (exprs: Seq[Expression]) => DecodePlcWordsExpr(arity("decode_plc_words", 1, exprs).head)))
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VectorDotExpr].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => { val a = arity("vec_dot", 2, exprs); VectorDotExpr(a(0), a(1)) }))
-    e.injectFunction((
-      FunctionIdentifier("phash_blocks"),
-      new ExpressionInfo(classOf[PhashExpr].getName, "phash_blocks"),
-      (exprs: Seq[Expression]) => {
-        val a = arity("phash_blocks", 2, exprs)
-        PhashExpr(a(0), intLiteral("phash_blocks nBits", a(1)))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("band_keys"),
-      new ExpressionInfo(classOf[BandKeysExpr].getName, "band_keys"),
-      (exprs: Seq[Expression]) => BandKeysExpr(arity("band_keys", 1, exprs).head)))
-    e.injectFunction((
-      FunctionIdentifier("nearest_cells"),
-      new ExpressionInfo(classOf[NearestCellsExpr].getName, "nearest_cells"),
-      (exprs: Seq[Expression]) => {
-        val a = arity("nearest_cells", 4, exprs)
-        NearestCellsExpr(a(0), a(1), a(2), intLiteral("nearest_cells p", a(3)))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("span_fps"),
-      new ExpressionInfo(classOf[SpanFingerprintsExpr].getName, "span_fps"),
-      (exprs: Seq[Expression]) => {
-        val a = arity("span_fps", 3, exprs)
-        SpanFingerprintsExpr(a(0), intLiteral("span_fps window", a(1)),
-          intLiteral("span_fps stride", a(2)))
-      }))
+    GraftFunctions.sqlFunctions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name), new ExpressionInfo(f.impl, f.name), f.build))
+    }
     e.injectPlannerStrategy(_ => new AsOfJoinStrategy)
     e.injectOptimizerRule(_ => PushProbeFilterThroughAsOfJoin)
   }

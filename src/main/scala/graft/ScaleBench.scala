@@ -62,15 +62,13 @@ object ScaleBench {
 
     // rows, cold, steady per (query, rung)
     val results: Seq[(String, Int, Long, Double, Double)] =
-      for ((n, dir) <- dirs; q <- Queries) yield {
-        var rows = -1L
-        val times = (1 to math.max(1, reps)).map { _ =>
-          val t0 = System.nanoTime()
-          try rows = SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
-          catch { case _: Throwable => () }
-          (System.nanoTime() - t0) / 1e9
+      Bench.failLoudly(spark) {
+        for ((n, dir) <- dirs; q <- Queries) yield {
+          val runs = Bench.timeReps(s"$q at x$n", reps)(
+            SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count())
+          val times = runs.map(_._2)
+          (q, n, runs.last._1, times.head, times.min)
         }
-        (q, n, rows, times.head, times.min)
       }
 
     def d3(v: Double): String =

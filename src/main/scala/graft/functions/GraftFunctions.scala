@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.expressions.UnresolvedNamedLambdaVariable
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.ColumnBridge.{column, expression}
@@ -80,8 +81,12 @@ object GraftFunctions {
     df.stat.bloomFilter(colName, math.max(n, floorItems), fpp)
   }
 
-  private def sqlMacro(spark: SparkSession, template: String): Seq[Expression] => Expression = {
-    val parsed = spark.sessionState.sqlParser.parseExpression(template)
+  /** An SQL template with `__aN` placeholders, parsed once, whose
+    * placeholders the call arguments replace. Parsed with the
+    * session-independent Catalyst parser, so the macro can be injected
+    * at session build time as well as registered into a live session. */
+  private def sqlMacro(template: String): Seq[Expression] => Expression = {
+    val parsed = CatalystSqlParser.parseExpression(template)
     exprs =>
       parsed.transformUp {
         case a: UnresolvedAttribute
@@ -122,57 +127,62 @@ object GraftFunctions {
     }
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def macroFn(template: String) = sqlMacro(spark, template)
+  /** One SQL function of the engine: its name, the class that
+    * implements it (for `DESCRIBE FUNCTION`) and its builder. */
+  final case class SqlFunction(name: String, impl: String,
+      build: Seq[Expression] => Expression)
 
-    reg.createOrReplaceTempFunction("decode_plc_words",
-      exprs => DecodePlcWordsExpr(arity("decode_plc_words", 1, exprs).head), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => { val e = arity("vec_dot", 2, exprs); VectorDotExpr(e(0), e(1)) }, "scala_udf")
-    reg.createOrReplaceTempFunction("int8_pack",
-      exprs => { val e = arity("int8_pack", 2, exprs); Int8PackExpr(e(0), e(1)) }, "scala_udf")
-    reg.createOrReplaceTempFunction("int8_dot",
-      exprs => { val e = arity("int8_dot", 2, exprs); Int8DotExpr(e(0), e(1)) }, "scala_udf")
-    reg.createOrReplaceTempFunction("phash_blocks",
-      exprs => {
-        val e = arity("phash_blocks", 2, exprs)
-        PhashExpr(e(0), intLiteral("phash_blocks nBits", e(1)))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("band_keys",
-      exprs => BandKeysExpr(arity("band_keys", 1, exprs).head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sigs",
-      exprs => MinhashSigsExpr(arity("minhash_sigs", 1, exprs).head), "scala_udf")
-    reg.createOrReplaceTempFunction("nearest_cells",
-      exprs => {
-        val e = arity("nearest_cells", 4, exprs)
-        NearestCellsExpr(e(0), e(1), e(2), intLiteral("nearest_cells p", e(3)))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("span_fps",
-      exprs => {
-        val e = arity("span_fps", 3, exprs)
-        SpanFingerprintsExpr(e(0), intLiteral("span_fps window", e(1)),
-          intLiteral("span_fps stride", e(2)))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("encode_plc_words", macroFn(
+  private def native(name: String, impl: Class[_])(build: Seq[Expression] => Expression) =
+    SqlFunction(name, impl.getName, build)
+  private def macroFn(name: String, template: String) =
+    SqlFunction(name, getClass.getName, sqlMacro(template))
+
+  /** The one table of SQL functions: [[register]] installs it into a
+    * live session, [[graft.GraftExtensions]] injects it at session build. */
+  lazy val sqlFunctions: Seq[SqlFunction] = Seq(
+    native("decode_plc_words", classOf[DecodePlcWordsExpr])(
+      e => DecodePlcWordsExpr(arity("decode_plc_words", 1, e).head)),
+    native("vec_dot", classOf[VectorDotExpr]) { e =>
+      val a = arity("vec_dot", 2, e); VectorDotExpr(a(0), a(1)) },
+    native("int8_pack", classOf[Int8PackExpr]) { e =>
+      val a = arity("int8_pack", 2, e); Int8PackExpr(a(0), a(1)) },
+    native("int8_dot", classOf[Int8DotExpr]) { e =>
+      val a = arity("int8_dot", 2, e); Int8DotExpr(a(0), a(1)) },
+    native("phash_blocks", classOf[PhashExpr]) { e =>
+      val a = arity("phash_blocks", 2, e)
+      PhashExpr(a(0), intLiteral("phash_blocks nBits", a(1)))
+    },
+    native("band_keys", classOf[BandKeysExpr])(
+      e => BandKeysExpr(arity("band_keys", 1, e).head)),
+    native("minhash_sigs", classOf[MinhashSigsExpr])(
+      e => MinhashSigsExpr(arity("minhash_sigs", 1, e).head)),
+    native("nearest_cells", classOf[NearestCellsExpr]) { e =>
+      val a = arity("nearest_cells", 4, e)
+      NearestCellsExpr(a(0), a(1), a(2), intLiteral("nearest_cells p", a(3)))
+    },
+    native("span_fps", classOf[SpanFingerprintsExpr]) { e =>
+      val a = arity("span_fps", 3, e)
+      SpanFingerprintsExpr(a(0), intLiteral("span_fps window", a(1)),
+        intLiteral("span_fps stride", a(2)))
+    },
+    macroFn("encode_plc_words",
       s"""if(length(__a0) = 0, cast(array() as array<int>),
          | transform(sequence(0, cast(length($Padded) / 2 as int) - 1),
          |  i -> cast(ascii(substr($Padded, 1 + i * 2, 1))
          |          + ascii(substr($Padded, 2 + i * 2, 1)) * 256 as int)))""".stripMargin),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("expand_alternatives", macroFn(
+    macroFn("expand_alternatives",
       """aggregate(split(__a0, ' '), array(''),
         |  (acc, t) -> flatten(transform(acc,
         |    a -> transform(split(t, '/'), alt -> concat(a, alt)))))""".stripMargin),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("expand_block", macroFn(
+    macroFn("expand_block",
       """transform(sequence(0, cast(__a1 as int) - 1),
         |  i -> concat(regexp_replace(__a0, '[0-9]', ''),
         |    cast(cast(regexp_replace(__a0, '[^0-9]', '') as bigint) + i as string)))""".stripMargin),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("shift_of",
-      macroFn("if(hour(__a0) between 8 and 15, 1, 2)"), "scala_udf")
-    reg.createOrReplaceTempFunction("plan_date_of",
-      macroFn("if(hour(__a0) >= 8, to_date(__a0), date_sub(to_date(__a0), 1))"), "scala_udf")
+    macroFn("shift_of", "if(hour(__a0) between 8 and 15, 1, 2)"),
+    macroFn("plan_date_of", "if(hour(__a0) >= 8, to_date(__a0), date_sub(to_date(__a0), 1))"))
+
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    sqlFunctions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -142,9 +142,15 @@ case class TickOffset(tick: Long) extends Offset {
 
 class PlcSimMicroBatchStream(cfg: PlcSimConfig,
     schema: StructType = PlcSim.schema)
-  extends MicroBatchStream with SupportsAdmissionControl {
+  extends MicroBatchStream with SupportsAdmissionControl
+  with SupportsTriggerAvailableNow {
   override def initialOffset(): Offset = TickOffset(0L)
   override def latestOffset(): Offset = TickOffset(cfg.maxTicks)
+  // the generator's end is fixed at maxTicks, so "available now" is
+  // already bounded; implementing the interface keeps the read limit
+  // under Trigger.AvailableNow (Spark's fallback wrapper for sources
+  // without it drains the whole backlog in one batch)
+  override def prepareForTriggerAvailableNow(): Unit = ()
   override def deserializeOffset(json: String): Offset = TickOffset(json.toLong)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -1,7 +1,8 @@
 package graft.stream
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,104 +45,156 @@ object Sinks {
     fs.delete(old, true)
   }
 
-  /** [[upsertParquet]] at table scale: the table is laid out as
-    * `__bucket=NN/` hive partitions keyed by a stable hash of the
-    * upsert key, and each micro-batch rewrites ONLY the buckets its
-    * keys touch — partition-pruned read of those buckets, newest-per-
-    * key merge, dynamic partition overwrite. Per-batch IO is
-    * O(touched buckets × bucket size) instead of O(table): a
-    * 100-key micro-batch against a 10⁹-row table reads and rewrites
-    * ≤ 100 buckets of ~1/nBuckets of the table each, and the bucket
-    * count scales the unit of rewrite down independently of table
-    * growth. The same layout makes point lookups bucket-prunable.
-    * Crash-safety matches dynamic partition overwrite (per-partition
-    * staged commit); consumers read with [[readUpsertedBucketed]]. */
-  def upsertParquetBucketed(batch: DataFrame, path: String, keys: Seq[String],
-      version: Seq[String], nBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the bucket count is part of the table's physical identity — a
-    // different count re-keys every row's bucket and would strand stale
-    // versions in old buckets. Pin it in a root marker BEFORE the first
-    // data write: a crash between a data commit and marker creation
-    // must never leave bucketed partitions whose count a later call
-    // could silently re-pin.
-    val root = new Path(path)
-    val rootListing =
-      if (fs.exists(root)) fs.listStatus(root) else Array.empty[org.apache.hadoop.fs.FileStatus]
-    val bucketDirs = rootListing.filter(_.getPath.getName.startsWith("__bucket="))
-    val marker = new Path(path, "_graft_buckets")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val stored = try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
-      require(stored == nBuckets,
-        s"table at $path was bucketed with nBuckets=$stored, got $nBuckets")
-    } else {
-      require(bucketDirs.isEmpty,
-        s"bucketed table at $path has no _graft_buckets marker; refusing to " +
-          "re-pin a bucket count over existing partitions (restore the marker)")
-      // a FLAT table (plain parquet files, no __bucket= layout) must not
-      // be adopted either: pinning a marker over it would make every
-      // subsequent `filter(__bucket isin …)` read throw. Names starting
-      // with '.' or '_' (without '=') are metadata, not data.
-      val flatData = rootListing.map(_.getPath.getName)
-        .filter(n => !(n.startsWith(".") || (n.startsWith("_") && !n.contains("="))))
-      require(flatData.isEmpty,
-        s"path $path already holds a non-bucketed table " +
-          s"(e.g. ${flatData.take(3).mkString(", ")}); refusing to pin a bucket " +
-          "layout over it — run Sinks.migrateToBucketed once, or pass " +
-          "recordBuckets = 0 to keep the flat upsertParquet layout")
-      val outS = fs.create(marker, true)
-      try outS.write(nBuckets.toString.getBytes("UTF-8")) finally outS.close()
-    }
-    val b = batch.withColumn("__bucket",
-      pmod(hash(keys.map(col): _*), lit(nBuckets)))
-    // bucket ids of this batch: bounded by nBuckets, not by batch size
-    val touched = b.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val merged =
-      // gate the merge-read on DATA presence (any __bucket= partition),
-      // not on fs.exists(path): the marker above materializes the table
-      // directory before the first data write, and reading a dir that
-      // holds only the marker throws UNABLE_TO_INFER_SCHEMA
-      if (bucketDirs.nonEmpty) {
-        // partition pruning keeps the read to the touched buckets
-        spark.read.parquet(path).filter(col("__bucket").isin(touched: _*))
-          .unionByName(b, allowMissingColumns = true)
-      } else b
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(version.map(c => col(c).desc): _*)
-    // materialize BEFORE the overwrite: the merge reads the very
-    // partitions the write replaces, so cut the lineage first rather
-    // than lean on commit ordering for read-own-output safety.
-    // partitionOverwriteMode is a per-writer option, NOT a session conf
-    // mutation — a concurrent partitioned Overwrite on the same session
-    // must not inherit dynamic mode from this writer's window.
-    merged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint()
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(path)
+  /** A hive partition layout for a keyed upsert table: the partition
+    * column and how each row's value derives from its key, so every
+    * version of a key lands in the same partition. */
+  sealed trait Layout {
+    def column: String
+    def value: Column
+    /** Called before each write under `root`: a layout with parameters
+      * pins them on the first write and checks them on later ones. */
+    private[Sinks] def pin(fs: FileSystem, root: Path): Unit = ()
   }
 
-  /** Read a [[upsertParquetBucketed]] table without its layout column. */
+  /** `__bucket=NN/`: a stable hash of the keys modulo `n`. The bucket
+    * count is part of the table's physical identity — a different count
+    * re-keys every row and would strand stale versions in old buckets —
+    * so it is pinned in a `_graft_buckets` root marker BEFORE the first
+    * data write: a crash between a data commit and marker creation must
+    * never leave partitions whose count a later call could re-pin. */
+  final case class Buckets(keys: Seq[String], n: Int) extends Layout {
+    def column: String = BucketColumn
+    def value: Column = pmod(hash(keys.map(col): _*), lit(n))
+    override private[Sinks] def pin(fs: FileSystem, root: Path): Unit = {
+      val marker = new Path(root, BucketMarker)
+      if (fs.exists(marker)) {
+        val stored = readBucketCount(fs, root)
+        require(stored == n, s"table at $root was bucketed with nBuckets=$stored, got $n")
+      } else {
+        require(!dataEntries(fs, root).exists(_.startsWith(column + "=")),
+          s"bucketed table at $root has no $BucketMarker marker; refusing to " +
+            "re-pin a bucket count over existing partitions (restore the marker)")
+        val out = fs.create(marker, true)
+        try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+      }
+    }
+  }
+
+  /** `__shift=<date>|<shift>/`: the layout of `production_records`. The
+    * value is the `date|shift` suffix of `record_id`
+    * ([[StateMachine.recordId]]), taken from the key itself because
+    * update rows ([[ActionRow.updateQty]]) leave `plan_date` and
+    * `shift_id` empty. At the reference's 1 Hz cadence every live key
+    * updates every tick, and every live key belongs to the current
+    * shift, so an epoch rewrites one partition: the live shift's
+    * records, however old the table is. */
+  case object RecordShifts extends Layout {
+    def column: String = ShiftColumn
+    def value: Column = substring_index(col("record_id"), "|", -2)
+  }
+
+  private val BucketColumn = "__bucket"
+  private val ShiftColumn = "__shift"
+  private val LayoutColumns = Seq(BucketColumn, ShiftColumn)
+  private val BucketMarker = "_graft_buckets"
+
+  private def readBucketCount(fs: FileSystem, root: Path): Int = {
+    val in = fs.open(new Path(root, BucketMarker))
+    try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
+  }
+
+  // names starting with '.' or '_' (without '=') are metadata, not data
+  private def dataEntries(fs: FileSystem, root: Path): Seq[String] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filterNot(n => n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
+
+  /** Keyed upsert into a table laid out by `layout`: newest row per key
+    * wins, ordered by `version` (ties broken by later columns). Each
+    * batch reads only the partitions its keys map to, with the batch's
+    * own schema (no listing or schema-inference job), merges
+    * newest-per-key, and dynamically overwrites those partitions.
+    * Dynamic overwrite stages the output and swaps each partition in at
+    * job commit, after every read of the merge, so the merge may read
+    * the partitions it replaces (single writer; foreachBatch
+    * serializes). A table in another layout — flat files or other
+    * partitions — is refused with a pointer to [[migrateLayout]]. */
+  def upsertParquetPartitioned(batch: DataFrame, path: String, keys: Seq[String],
+      version: Seq[String], layout: Layout): Unit = {
+    val spark = batch.sparkSession
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val foreign = dataEntries(fs, root).filterNot(_.startsWith(layout.column + "="))
+    require(foreign.isEmpty,
+      s"table at $path is not in the ${layout.column}= layout " +
+        s"(e.g. ${foreign.take(3).mkString(", ")}); run Sinks.migrateLayout " +
+        s"once to adopt it")
+    layout.pin(fs, root)
+    val b = batch.withColumn(layout.column, layout.value)
+    // the batch's partition values: bounded by the layout, not by the
+    // batch; null and "" land in Hive's default partition, as on write
+    val present = firstPerKey(b.select(layout.column), layout.column, Int.MaxValue)
+      .map(r => if (r.isNullAt(0) || r.get(0) == "") ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+        else r.get(0).toString)
+      .map(v => new Path(root, ExternalCatalogUtils.getPartitionPathString(layout.column, v)))
+      .filter(p => EpochFold.hasDataFiles(spark, p.toString))
+    val merged =
+      if (present.isEmpty) b
+      else spark.read.schema(b.schema).option("basePath", path)
+        .parquet(present.map(_.toString).toSeq: _*).unionByName(b)
+    // the layout column leads the window key (it is a function of the
+    // keys, so the groups are the same): the window's sort then already
+    // orders rows the way the partitioned write needs, and the write
+    // adds no second sort holding its own memory pages in the same task
+    val w = Window.partitionBy((layout.column +: keys).map(col): _*)
+      .orderBy(version.map(c => col(c).desc): _*)
+    // partitionOverwriteMode is a per-writer option, NOT a session conf
+    // mutation — a concurrent partitioned Overwrite on the same session
+    // must not inherit dynamic mode from this writer
+    merged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(layout.column).parquet(path)
+  }
+
+  /** [[upsertParquetPartitioned]] over [[Buckets]] of the key: a batch
+    * rewrites the buckets its keys hash to, and point lookups
+    * ([[lookupBucketed]]) open one bucket. A batch of k keys touches
+    * min(k, nBuckets) buckets, so this pays off only when batches touch
+    * few keys of a large table; a stream whose live keys all update
+    * every tick touches most buckets every batch. */
+  def upsertParquetBucketed(batch: DataFrame, path: String, keys: Seq[String],
+      version: Seq[String], nBuckets: Int = 64): Unit =
+    upsertParquetPartitioned(batch, path, keys, version, Buckets(keys, nBuckets))
+
+  /** Up to `cap` rows of `df`, one per distinct `key`. Each task keeps
+    * the first row of each key, the driver the first of those: one job
+    * and no shuffle, so a result bounded by the number of keys costs
+    * no more than one pass over the batch. */
+  private def firstPerKey(df: DataFrame, key: String, cap: Int): Array[Row] = {
+    val i = df.schema.fieldIndex(key)
+    df.rdd.mapPartitions { rows =>
+      val seen = collection.mutable.HashSet.empty[Any]
+      rows.filter(r => seen.add(r.get(i))).take(cap)
+    }.collect().distinctBy(_.get(i)).take(cap)
+  }
+
+  /** Read an [[upsertParquetPartitioned]] table without its layout column. */
   def readUpsertedBucketed(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("__bucket")
+    spark.read.parquet(path).drop(LayoutColumns: _*)
 
   /** Point lookup in a bucketed upsert table: the key's bucket is the
     * same `pmod(hash(keys), n)` the writer used (n from the pinned
     * marker), expressed as a constant-foldable filter on the partition
     * column — so the scan opens ONE `__bucket=` directory out of n,
-    * never the table (SinksSpec pins the partition filter). This is the
-    * read-side payoff of the bucketed layout: record-by-id queries on a
-    * 10⁹-row table touch 1/n of it. */
+    * never the table (SinksSpec pins the partition filter). */
   def lookupBucketed(spark: SparkSession, path: String, keys: Seq[String],
       keyValues: Seq[Any]): DataFrame = {
     require(keys.length == keyValues.length, "one value per key column")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(path, "_graft_buckets")
-    require(fs.exists(marker), s"no _graft_buckets marker at $path")
-    val in = fs.open(marker)
-    val n = try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(new Path(root, BucketMarker)), s"no $BucketMarker marker at $path")
+    val n = readBucketCount(fs, root)
     val table = spark.read.parquet(path)
     // hash() is type-sensitive: an Int literal probed against a Long key
     // column Murmur3-hashes differently from the writer's hash(col), so
@@ -156,35 +209,33 @@ object Sinks {
     table
       // all-literal expression: constant-folded to `__bucket = <N>` at
       // optimization time, which partition-prunes the scan
-      .filter(col("__bucket") === pmod(hash(typedLits: _*), lit(n)) && keyPred)
-      .drop("__bucket")
+      .filter(col(BucketColumn) === pmod(hash(typedLits: _*), lit(n)) && keyPred)
+      .drop(BucketColumn)
   }
 
-  /** One-time migration of a flat [[upsertParquet]] table to the
-    * bucketed layout [[upsertParquetBucketed]] expects. The rewritten
-    * table (plus its `_graft_buckets` marker) is staged in a temp dir
-    * and swapped in with the same two-rename dance as [[upsertParquet]],
-    * so a crash at any point leaves either the old flat table or the
-    * complete bucketed one — never a half-layout the upsert path would
-    * refuse or misread. Needed because `applyActions`' default switched
-    * from the flat to the bucketed layout (recordBuckets = 64): tables
-    * written under the old default must be migrated once, explicitly. */
-  def migrateToBucketed(spark: SparkSession, path: String, keys: Seq[String],
-      nBuckets: Int = 64): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** One-time migration of an upsert table into `layout`, from the flat
+    * [[upsertParquet]] layout or from another partition layout — e.g. a
+    * `production_records` table written in `__bucket=` hash buckets,
+    * before [[applyActions]] laid it out by [[RecordShifts]]. The
+    * rewritten table (with any marker the layout pins) is staged in a
+    * temp dir and swapped in with the same two-rename dance as
+    * [[upsertParquet]], so a crash at any point leaves either the old
+    * table or the complete new one — never a half-layout the upsert
+    * path would refuse or misread. */
+  def migrateLayout(spark: SparkSession, path: String, layout: Layout): Unit = {
     val cur = new Path(path)
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "._tmp")
     val old = new Path(path + "._old")
     if (!fs.exists(cur) && fs.exists(old)) fs.rename(old, cur) // crash recovery
     require(fs.exists(cur), s"no table at $path to migrate")
-    require(!fs.exists(new Path(path, "_graft_buckets")),
-      s"table at $path is already bucketed")
+    require(dataEntries(fs, cur).exists(!_.startsWith(layout.column + "=")),
+      s"table at $path is already in the ${layout.column}= layout")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.parquet(path)
-      .withColumn("__bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmp.toString)
-    val outS = fs.create(new Path(tmp, "_graft_buckets"), true)
-    try outS.write(nBuckets.toString.getBytes("UTF-8")) finally outS.close()
+    layout.pin(fs, tmp)
+    spark.read.parquet(path).drop(LayoutColumns: _*)
+      .withColumn(layout.column, layout.value)
+      .write.mode(SaveMode.Append).partitionBy(layout.column).parquet(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     require(fs.rename(cur, old), s"could not displace $cur")
     require(fs.rename(tmp, cur), s"could not install migrated table at $cur")
@@ -209,7 +260,7 @@ object Sinks {
     *
     * Per-batch IO under Delta is O(files containing matched keys) via
     * data skipping — the transactional version of what
-    * [[upsertParquetBucketed]] approximates with hash buckets. */
+    * [[upsertParquetPartitioned]] approximates with partitions. */
   def upsertDelta(batch: DataFrame, table: String, keys: Seq[String],
       version: Seq[String], run: String => Unit = null): Unit = {
     val spark = batch.sparkSession
@@ -349,31 +400,38 @@ object Sinks {
     *
     * With `epochId >= 0` (wired by [[applyActions]]) the sink keeps a
     * content-keyed parquet index in a dot-dir beside the CSV and lays
-    * the CSV out in `epoch=N` partitions. The per-batch probe then
-    * reads the INDEX (pushed-IN for trickle batches, broadcast beyond
-    * — IngestDedup's regimes), never the accumulated CSV, so per-batch
-    * read IO stops growing with table size — this was the last sink
-    * whose batch cost was O(accumulated rows). Epoch OVERWRITE of both
-    * the CSV partition and the index partition makes replays
-    * exactly-once; the index folds on a cadence under the crash-safe
-    * [[EpochFold]] protocol. A pre-epoch flat CSV is adopted into
-    * `epoch=-1` on first contact and its keys bootstrapped into the
-    * index (one-time full read). CSV consumers see the same rows —
-    * partition discovery adds only the `epoch` column.
+    * the CSV out in `epoch=N` partitions. The per-batch probe reads the
+    * INDEX, never the accumulated CSV. A batch of at most
+    * `isinKeyLimit` keys (every live epoch) stays on the driver: one
+    * bounded collect of its rows, one collect of the index hits (the
+    * keys push into the scan as IN), survivors filtered and written
+    * from the driver. An epoch with no new key writes nothing, so a
+    * fleet that re-reports the same unknown parts every tick adds no
+    * CSV or index partition. Larger batches probe by broadcast or
+    * sort-merge join (IngestDedup's regimes, [[csvDedupSurvivors]]).
+    *
+    * Epoch OVERWRITE of both the CSV partition and the index partition
+    * makes replays exactly-once: the survivors of epoch N depend only
+    * on index epochs < N, which a fold keeps visible, so a replay
+    * writes (or skips) exactly what the first attempt did. The index
+    * folds on a cadence under the crash-safe [[EpochFold]] protocol. A
+    * pre-epoch flat CSV is adopted into `epoch=-1` on first contact and
+    * its keys bootstrapped into the index (one-time full read). CSV
+    * consumers see the same rows — partition discovery adds only the
+    * `epoch` column.
     *
     * `epochId = -1` keeps the original whole-CSV anti-join for callers
     * without a batch id (at-least-once, self-healing, flat layout). */
   def appendCsvDedup(batch: DataFrame, path: String, epochId: Long = -1L,
       compactEvery: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val keys = Seq("estacion", "numero_parte", "fecha")
-    val fresh = batch.dropDuplicates(keys)
+    val fresh = batch.dropDuplicates(NfKeys)
     if (epochId < 0) {
       val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val toWrite =
         if (fs.exists(new Path(path))) {
           val existing = spark.read.schema(batch.schema).option("header", "true").csv(path)
-          fresh.join(existing.select(keys.map(col): _*), keys, "left_anti")
+          fresh.join(existing.select(NfKeys.map(col): _*), NfKeys, "left_anti")
             .select(batch.columns.map(col): _*) // join moves key cols first; keep file layout stable
         } else fresh
       toWrite.write.mode(SaveMode.Append).option("header", "true").csv(path)
@@ -385,14 +443,27 @@ object Sinks {
     if (!EpochFold.hasDataFiles(spark, idxPath) &&
         EpochFold.hasDataFiles(spark, s"$path/epoch=-1")) {
       spark.read.schema(batch.schema).option("header", "true").csv(s"$path/epoch=-1")
-        .select(nfKey(keys).as("nf_key"))
+        .select(nfKey.as("nf_key"))
         .sortWithinPartitions("nf_key")
         .write.mode(SaveMode.Overwrite).parquet(s"$idxPath/epoch=-1")
     }
     if (compactEvery > 0 && epochId > 0 && epochId % compactEvery == 0)
       EpochFold.fold(spark, idxPath, epochId, 128L * 1024 * 1024, Seq("nf_key"))
-    val survivors = csvDedupSurvivors(fresh, path, epochId)
-      .localCheckpoint() // feeds the CSV write and the index write
+    val keyed = batch.withColumn("nf_key", nfKey)
+    val limit = IngestDedup.isinKeyLimit(spark)
+    val head = firstPerKey(keyed, "nf_key", math.min(limit + 1, Int.MaxValue.toLong).toInt)
+    val survivors =
+      if (head.length <= limit) {
+        val keyOf = (r: Row) => r.getAs[String]("nf_key")
+        val known =
+          if (!EpochFold.hasDataFiles(spark, idxPath)) Set.empty[String]
+          else nfIndexHits(nfIndex(spark, path, epochId), head.map(keyOf).toSeq)
+            .collect().map(_.getString(0)).toSet
+        val novel = head.filterNot(r => known(keyOf(r)))
+        if (novel.isEmpty) return
+        spark.createDataFrame(java.util.Arrays.asList(novel: _*), keyed.schema).coalesce(1)
+      } else csvDedupSurvivors(fresh, path, epochId)
+        .localCheckpoint() // feeds the CSV write and the index write
     survivors.select(batch.columns.map(col): _*)
       .write.mode(SaveMode.Overwrite).option("header", "true")
       .csv(s"$path/epoch=$epochId")
@@ -400,6 +471,7 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).parquet(s"$idxPath/epoch=$epochId")
   }
 
+  private val NfKeys = Seq("estacion", "numero_parte", "fecha")
   private def nfIdxPath(path: String) = s"$path/._nf_idx"
   // "\\u0001" separator (explicit escape, not a raw control byte):
   // ("ab","c") and ("a","bc") must not share a key. concat_ws SKIPS
@@ -407,24 +479,35 @@ object Sinks {
   // ("x",null) and with ("","x") — so each column is coalesced to a
   // "\\u0000" sentinel first, keeping null distinct from empty and
   // position-stable.
-  private def nfKey(keys: Seq[String]) =
+  private def nfKey =
     md5(concat_ws("\u0001",
-      keys.map(k => coalesce(col(k).cast("string"), lit("\u0000"))): _*)
+      NfKeys.map(k => coalesce(col(k).cast("string"), lit("\u0000"))): _*)
       .cast("binary"))
 
+  /** The index entries epoch N may see (`epoch < N`), read with the
+    * index's known schema: no schema-inference job. */
+  private def nfIndex(spark: SparkSession, path: String, epochId: Long): DataFrame =
+    spark.read.schema("nf_key STRING, epoch LONG").parquet(nfIdxPath(path))
+      .filter(col("epoch") < epochId)
+
+  /** The trickle probe: the batch keys push into the index scan as IN. */
+  private def nfIndexHits(idx: DataFrame, keys: Seq[String]): DataFrame =
+    idx.filter(col("nf_key").isin(keys: _*)).select("nf_key")
+
   /** The batch rows whose logical key is absent from the index, as a
-    * pure plan (probe regimes and `epoch < N` visibility exactly like
-    * [[IngestDedup.survivors]]) — split out so specs can pin that the
-    * probe reads the index, never the accumulated CSV. */
+    * plan (probe regimes and `epoch < N` visibility exactly like
+    * [[IngestDedup.survivors]]) — the path for batches beyond the
+    * driver-side trickle path of [[appendCsvDedup]], split out so
+    * specs can pin that the probe reads the index, never the
+    * accumulated CSV. */
   private[graft] def csvDedupSurvivors(fresh: DataFrame, path: String,
       epochId: Long): DataFrame = {
     val spark = fresh.sparkSession
-    val keys = Seq("estacion", "numero_parte", "fecha")
-    val keyed = fresh.withColumn("nf_key", nfKey(keys))
+    val keyed = fresh.withColumn("nf_key", nfKey)
       .localCheckpoint() // one micro-batch; probed + anti-joined below
     if (!EpochFold.hasDataFiles(spark, nfIdxPath(path))) keyed
     else {
-      val idx = spark.read.parquet(nfIdxPath(path)).filter(col("epoch") < epochId)
+      val idx = nfIndex(spark, path, epochId)
       val batchRows = keyed.count()
       // same conf-overridable switch points as the doc-ingest probes
       // (spark.graft.ingest.*), so one set of knobs tunes — and one
@@ -433,10 +516,9 @@ object Sinks {
         keyed.join(idx.select("nf_key"), Seq("nf_key"), "left_anti")
       else {
         val hits =
-          if (batchRows <= IngestDedup.isinKeyLimit(spark)) {
-            val lits = keyed.select("nf_key").collect().map(_.getString(0)).toSeq
-            idx.filter(col("nf_key").isin(lits: _*)).select("nf_key")
-          } else
+          if (batchRows <= IngestDedup.isinKeyLimit(spark))
+            nfIndexHits(idx, keyed.select("nf_key").collect().map(_.getString(0)).toSeq)
+          else
             idx.join(broadcast(keyed.select("nf_key").distinct()), Seq("nf_key"))
               .select("nf_key")
         keyed.join(broadcast(hits), Seq("nf_key"), "left_anti")
@@ -447,16 +529,18 @@ object Sinks {
   /** Apply one micro-batch of [[ActionRow]]s: records upsert (create →
     * update → close precedence at equal ts), histories append,
     * parts-not-found CSV dedup (the E3 foreachBatch sink).
-    * `production_records` is the table that grows without bound, so the
-    * default layout is the bucketed upsert ([[upsertParquetBucketed]]):
-    * per-batch IO stays O(touched buckets), independent of table
-    * growth. `recordBuckets = 0` is the tiny-table escape hatch
-    * (whole-table rewrite per batch, no layout column).
     *
-    * BREAKING DEFAULT: `recordBuckets` changed from flat (0) to 64. A
-    * `production_records` table written under the old default is
-    * refused by the bucketed path with a pointer to
-    * [[migrateToBucketed]] — run that once, or pass 0 explicitly.
+    * `production_records` is laid out by [[RecordShifts]]. At the
+    * reference's 1 Hz cadence every live key updates every tick, so a
+    * layout hashed on the key (one bucket per key, up to the bucket
+    * count) rewrites nearly the whole table each epoch once the fleet
+    * has as many live keys as buckets. Every live key belongs to the
+    * current shift, so the shift layout rewrites one partition per
+    * epoch: the live shift's records, independent of the table's age
+    * (two at a shift rollover). A table in the flat or `__bucket=`
+    * layout is refused with a pointer to [[migrateLayout]]; run
+    * `migrateLayout(spark, path, RecordShifts)` once. Read the table
+    * with [[readUpsertedBucketed]].
     *
     * Delivery guarantee: the records upsert and the CSV dedup-append
     * are idempotent by construction (newest-per-key merge; logical-PK
@@ -469,14 +553,14 @@ object Sinks {
     * contact. `epochId = -1` keeps the at-least-once append for
     * callers without a batch id. */
   def applyActions(actions: Dataset[ActionRow], outDir: String,
-      recordBuckets: Int = 64, epochId: Long = -1L): Unit = {
+      epochId: Long = -1L): Unit = {
     val df = actions.toDF().cache()
     try {
       // ONE job gates all three sink branches (this also materializes
       // the cache for the writes below); the previous per-branch
       // isEmpty actions ran three jobs per micro-batch
-      val present = df.groupBy(col("action")).count()
-        .collect().map(_.getString(0)).toSet
+      val present = firstPerKey(df.select("action"), "action", Int.MaxValue)
+        .map(_.getString(0)).toSet
       val records = df
         .filter(col("action").isin(ActionRow.Create, ActionRow.Update, ActionRow.Close))
         .withColumn("rank",
@@ -486,14 +570,9 @@ object Sinks {
           col("planDate").as("plan_date"), col("shiftId").as("shift_id"),
           col("produced"), col("plannedQty").as("planned"),
           col("statusId").as("status_id"), col("ts"), col("rank"))
-      if (Seq(ActionRow.Create, ActionRow.Update, ActionRow.Close).exists(present)) {
-        if (recordBuckets > 0)
-          upsertParquetBucketed(records, s"$outDir/production_records",
-            Seq("record_id"), Seq("ts", "rank"), recordBuckets)
-        else
-          upsertParquet(records, s"$outDir/production_records",
-            Seq("record_id"), Seq("ts", "rank"))
-      }
+      if (Seq(ActionRow.Create, ActionRow.Update, ActionRow.Close).exists(present))
+        upsertParquetPartitioned(records, s"$outDir/production_records",
+          Seq("record_id"), Seq("ts", "rank"), RecordShifts)
 
       val hist = df.filter(col("action") === ActionRow.History)
         .select(col("recordId").as("record_id"), col("station"), col("parte"),
@@ -547,15 +626,14 @@ object Sinks {
   def startPipeline(obs: Dataset[PartObservation], machine: StateMachine,
       outDir: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"),
-      recordBuckets: Int = 64)
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       : org.apache.spark.sql.streaming.StreamingQuery =
     machine(obs).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[ActionRow], id: Long) =>
-        applyActions(batch, outDir, recordBuckets, epochId = id)
+        applyActions(batch, outDir, epochId = id)
       }
       .start()
 }

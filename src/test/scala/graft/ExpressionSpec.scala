@@ -111,6 +111,21 @@ class ExpressionSpec extends SparkSpec {
     assert(functions.contains("decode_plc_words") && functions.contains("vec_dot"))
   }
 
+  test("GraftExtensions and GraftFunctions.register read one function table") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
+    val (_, _, injected) =
+      org.apache.spark.sql.graftshim.ExtensionsProbe.probe(new GraftExtensions, spark)
+    val viaExtensions = injected.toSet -- builtin
+    val s = spark.newSession()
+    GraftFunctions.register(s)
+    val viaRegister = s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet -- builtin
+    assert(viaExtensions == viaRegister,
+      s"only injected: ${viaExtensions -- viaRegister}; only registered: ${viaRegister -- viaExtensions}")
+    assert(viaExtensions == GraftFunctions.sqlFunctions.map(_.name).toSet)
+    assert(Set("minhash_sigs", "int8_pack", "int8_dot", "shift_of").subsetOf(viaExtensions))
+  }
+
   test("vec_dot interpreted evaluation == codegen evaluation") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)

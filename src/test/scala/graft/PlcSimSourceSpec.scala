@@ -82,6 +82,23 @@ class PlcSimSourceSpec extends SparkSpec {
     assert(observed.length >= 3, s"catch-up split across batches: $observed")
   }
 
+  test("maxTicksPerTrigger holds under Trigger.AvailableNow: a 60-tick backlog drains in 3 epochs") {
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = spark.readStream.format("plc-sim")
+      .option("ips", "10.0.0.1").option("addresses", "D3100")
+      .option("counters", "D3100").option("maxTicks", "60")
+      .option("maxTicksPerTrigger", "20").load()
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        sizes.synchronized { sizes += b.count() }; ()
+      }
+      .start()
+    assert(q.awaitTermination(120000), "AvailableNow drain timed out")
+    val observed = sizes.synchronized(sizes.filter(_ > 0).toSeq)
+    assert(observed == Seq(20L, 20L, 20L), s"three data epochs of 20 ticks: $observed")
+  }
+
   test("full integration: plc-sim → decode → state machine → records") {
     val outDir = Files.createTempDirectory("graft_sim").toString
     val layout = Seq(StationSideConfig("10.0.0.1", "PRENSA1", "LH",

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.stream.Sinks
+import graft.stream.{Sinks, StateMachine}
 
 /** Upsert + dedup-append sink behavior (K1-K5, K4). */
 class SinksSpec extends SparkSpec
@@ -68,7 +68,7 @@ class SinksSpec extends SparkSpec
     assert(e.getMessage.contains("nBuckets=8"))
   }
 
-  test("upsertParquetBucketed: refuses a flat table; migrateToBucketed adopts it") {
+  test("upsertParquetBucketed: refuses a flat table; migrateLayout adopts it") {
     val dir = Files.createTempDirectory("graft_upsertb3").toString + "/t"
     // a round-3-era flat table written by the non-bucketed upsert
     Sinks.upsertParquet(
@@ -77,11 +77,11 @@ class SinksSpec extends SparkSpec
       Sinks.upsertParquetBucketed(
         Seq(("c", 1L, 30L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nBuckets = 8)
     }
-    assert(e.getMessage.contains("migrateToBucketed"))
+    assert(e.getMessage.contains("migrateLayout"))
     // the refused call must not have poisoned the table with a marker
     assert(spark.read.parquet(dir).count() == 2)
 
-    Sinks.migrateToBucketed(spark, dir, Seq("k"), nBuckets = 8)
+    Sinks.migrateLayout(spark, dir, Sinks.Buckets(Seq("k"), 8))
     Sinks.upsertParquetBucketed(
       Seq(("a", 2L, 99L), ("c", 1L, 30L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), 8)
     val got = Sinks.readUpsertedBucketed(spark, dir)
@@ -223,11 +223,11 @@ class SinksSpec extends SparkSpec
       ActionRow.appendHistory("P1", "AAA", "r1", 10L, 1.5, ts("2024-03-05 09:00:00")))
     val b1 = Seq(
       ActionRow.appendHistory("P1", "AAA", "r1", 14L, 1.6, ts("2024-03-05 09:00:05")))
-    Sinks.applyActions(b0.toDS(), outDir, recordBuckets = 0, epochId = 0)
-    Sinks.applyActions(b1.toDS(), outDir, recordBuckets = 0, epochId = 1)
+    Sinks.applyActions(b0.toDS(), outDir, epochId = 0)
+    Sinks.applyActions(b1.toDS(), outDir, epochId = 1)
     // crash-replay of epoch 1 (restart before checkpoint commit):
     // epoch-dir overwrite replaces, never appends beside
-    Sinks.applyActions(b1.toDS(), outDir, recordBuckets = 0, epochId = 1)
+    Sinks.applyActions(b1.toDS(), outDir, epochId = 1)
     val hist = spark.read.parquet(s"$outDir/histories")
     assert(hist.count() == 2, "replayed epoch must not duplicate history rows")
     assert(hist.agg(sum("quantity")).as[Long].collect().head == 24L)
@@ -240,11 +240,11 @@ class SinksSpec extends SparkSpec
     // round-4-era layout: plain appends, no epoch dirs
     Sinks.applyActions(Seq(
       ActionRow.appendHistory("P1", "AAA", "r1", 5L, 1.5, ts("2024-03-05 08:00:00"))
-    ).toDS(), outDir, recordBuckets = 0) // epochId defaulted: legacy append
+    ).toDS(), outDir) // epochId defaulted: legacy append
     // new layout takes over mid-table; both generations stay readable
     Sinks.applyActions(Seq(
       ActionRow.appendHistory("P1", "AAA", "r1", 7L, 1.5, ts("2024-03-05 09:00:00"))
-    ).toDS(), outDir, recordBuckets = 0, epochId = 0)
+    ).toDS(), outDir, epochId = 0)
     val hist = spark.read.parquet(s"$outDir/histories")
     assert(hist.count() == 2)
     assert(hist.agg(sum("quantity")).as[Long].collect().head == 12L)
@@ -331,5 +331,158 @@ class SinksSpec extends SparkSpec
     assert(got.count() == 2)
     assert(got.select("fecha").as[String].collect().toSet ==
       Set("2024-03-05", "2024-03-06"))
+  }
+
+  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
+  private def records(outDir: String) =
+    Sinks.readUpsertedBucketed(spark, s"$outDir/production_records")
+      .select("record_id", "produced", "status_id", "ts").as[(String, Long, Int, java.sql.Timestamp)]
+      .collect().sortBy(_._1).toSeq
+
+  private def dirNames(dir: String, prefix: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith(prefix)).toSet
+
+  test("applyActions: replaying an epoch leaves the shift-laid-out records identical") {
+    import graft.model.ActionRow
+    val outDir = Files.createTempDirectory("graft_rec_replay").toString
+    val (r1, r2) = ("P1|AAA|2024-03-05|1", "P2|BBB|2024-03-05|1")
+    val epochs = Seq(
+      Seq(ActionRow.create("P1", "AAA", r1, "2024-03-05", 1, 0L, ts("2024-03-05 09:00:00")),
+        ActionRow.create("P2", "BBB", r2, "2024-03-05", 1, 0L, ts("2024-03-05 09:00:00"))),
+      Seq(ActionRow.updateQty("P1", "AAA", r1, 10L, 7, ts("2024-03-05 09:00:01")),
+        ActionRow.updateQty("P2", "BBB", r2, 20L, 7, ts("2024-03-05 09:00:01"))),
+      Seq(ActionRow.updateQty("P1", "AAA", r1, 12L, 7, ts("2024-03-05 09:00:02")),
+        ActionRow.updateQty("P1", "AAA", r1, 11L, 7, ts("2024-03-05 09:00:01"))))
+    epochs.zipWithIndex.foreach { case (b, e) => Sinks.applyActions(b.toDS(), outDir, epochId = e) }
+    val before = records(outDir)
+    assert(before.map(r => r._1 -> r._2) == Seq(r1 -> 12L, r2 -> 20L))
+    // crash-replay of the last epoch (restart before the checkpoint commit)
+    Sinks.applyActions(epochs.last.toDS(), outDir, epochId = 2)
+    assert(records(outDir) == before, "a replayed epoch must not change production_records")
+    assert(dirNames(s"$outDir/production_records", "__shift=") == Set("__shift=2024-03-05|1"))
+  }
+
+  test("applyActions: a batch spanning a shift rollover lands in two partitions") {
+    import graft.model.ActionRow
+    val outDir = Files.createTempDirectory("graft_rec_roll").toString
+    val (r1, r2) = ("P1|AAA|2024-03-05|1", "P1|AAA|2024-03-05|2")
+    Sinks.applyActions(Seq(
+      ActionRow.create("P1", "AAA", r1, "2024-03-05", 1, 0L, ts("2024-03-05 15:59:50"))
+    ).toDS(), outDir, epochId = 0)
+    Sinks.applyActions(Seq(
+      ActionRow.updateQty("P1", "AAA", r1, 9L, 7, ts("2024-03-05 15:59:58")),
+      ActionRow.updateQty("P1", "AAA", r1, 10L, 7, ts("2024-03-05 15:59:59")),
+      ActionRow.closeShift("P1", "AAA", r1, "2024-03-05", 1, ts("2024-03-05 16:00:00")),
+      ActionRow.create("P1", "AAA", r2, "2024-03-05", 2, 0L, ts("2024-03-05 16:00:00")),
+      ActionRow.updateQty("P1", "AAA", r2, 1L, 7, ts("2024-03-05 16:00:01"))
+    ).toDS(), outDir, epochId = 1)
+    assert(dirNames(s"$outDir/production_records", "__shift=") ==
+      Set("__shift=2024-03-05|1", "__shift=2024-03-05|2"))
+    val got = Sinks.readUpsertedBucketed(spark, s"$outDir/production_records")
+    assert(!got.columns.contains("__shift"), "the layout column must not leak to readers")
+    assert(records(outDir) == Seq(
+      (r1, 0L, StateMachine.StatusPaused, ts("2024-03-05 16:00:00")),
+      (r2, 1L, StateMachine.StatusProducing, ts("2024-03-05 16:00:01"))))
+  }
+
+  test("applyActions refuses a flat or bucketed production_records; migrateLayout adopts it") {
+    import graft.model.ActionRow
+    val rid = "P1|AAA|2024-03-05|1"
+    val old = Seq((rid, "P1", "AAA", "2024-03-05", 1, 5L, 0L, 7, ts("2024-03-05 09:00:00"), 2))
+      .toDF("record_id", "station", "parte", "plan_date", "shift_id", "produced", "planned",
+        "status_id", "ts", "rank")
+    val update = Seq(ActionRow.updateQty("P1", "AAA", rid, 6L, 7, ts("2024-03-05 09:00:01")))
+    Seq[String => Unit](
+      Sinks.upsertParquet(old, _, Seq("record_id"), Seq("ts", "rank")),
+      Sinks.upsertParquetBucketed(old, _, Seq("record_id"), Seq("ts", "rank"), 8)
+    ).foreach { writeOld =>
+      val outDir = Files.createTempDirectory("graft_rec_mig").toString
+      val path = s"$outDir/production_records"
+      writeOld(path)
+      val e = intercept[IllegalArgumentException] {
+        Sinks.applyActions(update.toDS(), outDir, epochId = 0)
+      }
+      assert(e.getMessage.contains("migrateLayout"), e.getMessage)
+      assert(records(outDir).map(_._2) == Seq(5L), "a refused epoch must leave the table as it was")
+      Sinks.migrateLayout(spark, path, Sinks.RecordShifts)
+      assert(dirNames(path, "__") == Set("__shift=2024-03-05|1"))
+      Sinks.applyActions(update.toDS(), outDir, epochId = 0)
+      assert(records(outDir).map(r => r._1 -> r._2) == Seq(rid -> 6L))
+    }
+  }
+
+  test("appendCsvDedup: an epoch of already-indexed keys writes nothing; replays stay exact") {
+    val dir = Files.createTempDirectory("graft_csv_skip").toString + "/nf"
+    def nf(rows: (String, String)*) = rows.map { case (st, p) => (st, p, p, "2024-03-05", "t") }
+      .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp")
+    def csvRows = spark.read.option("header", "true").csv(dir)
+      .select("estacion", "numero_parte").as[(String, String)].collect().sorted.toSeq
+    val idx = s"$dir/._nf_idx"
+    Sinks.appendCsvDedup(nf("P1" -> "A", "P2" -> "B"), dir, epochId = 0)
+    // epoch 1 re-reports the same unknown parts: no partition at all
+    Sinks.appendCsvDedup(nf("P1" -> "A", "P2" -> "B", "P1" -> "A"), dir, epochId = 1)
+    assert(dirNames(dir, "epoch=") == Set("epoch=0"))
+    assert(dirNames(idx, "epoch=") == Set("epoch=0"))
+    Sinks.appendCsvDedup(nf("P1" -> "A", "P2" -> "B"), dir, epochId = 1) // replay
+    assert(dirNames(dir, "epoch=") == Set("epoch=0") && dirNames(idx, "epoch=") == Set("epoch=0"))
+    assert(csvRows == Seq("P1" -> "A", "P2" -> "B"))
+    // a later epoch with one new key lands once, also when replayed
+    Sinks.appendCsvDedup(nf("P1" -> "A", "P3" -> "C"), dir, epochId = 2)
+    Sinks.appendCsvDedup(nf("P1" -> "A", "P3" -> "C"), dir, epochId = 2)
+    assert(dirNames(dir, "epoch=") == Set("epoch=0", "epoch=2"))
+    assert(dirNames(idx, "epoch=") == Set("epoch=0", "epoch=2"))
+    assert(csvRows == Seq("P1" -> "A", "P2" -> "B", "P3" -> "C"))
+    Sinks.appendCsvDedup(nf("P3" -> "C"), dir, epochId = 3)
+    assert(csvRows.size == 3 && dirNames(dir, "epoch=") == Set("epoch=0", "epoch=2"))
+  }
+
+  test("appendCsvDedup: the driver path and the join path past isinKeyLimit keep the same rows") {
+    def nf(parts: String*) = parts.map(p => (s"P$p", p, p, "2024-03-05", "t"))
+      .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp")
+    val epochs = Seq(nf("A", "B"), nf("A", "B", "C"), nf("C", "D", "A", "D"))
+    def run(isinKeyLimit: Option[String]): Seq[String] = {
+      val dir = Files.createTempDirectory("graft_csv_gate").toString + "/nf"
+      isinKeyLimit.foreach(spark.conf.set("spark.graft.ingest.isinKeyLimit", _))
+      try {
+        epochs.zipWithIndex.foreach { case (b, e) => Sinks.appendCsvDedup(b, dir, epochId = e) }
+        Sinks.appendCsvDedup(epochs.last, dir, epochId = epochs.size - 1) // replay
+      } finally spark.conf.unset("spark.graft.ingest.isinKeyLimit")
+      spark.read.option("header", "true").csv(dir).select("numero_parte").as[String]
+        .collect().sorted.toSeq
+    }
+    val driver = run(None)
+    assert(driver == Seq("A", "B", "C", "D"))
+    assert(run(Some("1")) == driver, "every batch above holds more than one key")
+  }
+
+  test("upsertParquetPartitioned: the partitioned write reuses the merge's sort") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_onesort").toString + "/t"
+    def batch(v: Long) = (0 until 20).map(i => (s"P$i|A|2024-03-05|${i % 2 + 1}", v, i.toLong))
+      .toDF("record_id", "v", "x")
+    Sinks.upsertParquetPartitioned(batch(1L), dir, Seq("record_id"), Seq("v"), Sinks.RecordShifts)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    import scala.jdk.CollectionConverters._
+    def writes = plans.asScala.filter(_.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
+    try {
+      Sinks.upsertParquetPartitioned(batch(2L), dir, Seq("record_id"), Seq("v"), Sinks.RecordShifts)
+      val deadline = System.nanoTime() + 30e9.toLong // listener events arrive asynchronously
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1)
+    // the merge's window sorts by (__shift, record_id, v); a write that
+    // needed its own order would add a sort by __shift alone
+    val sorts = collectWithSubqueries(writes.head.executedPlan) { case s: SortExec => s }
+    assert(sorts.nonEmpty && sorts.forall(_.sortOrder.size == 3),
+      s"the write must reuse the window's order: $sorts")
+    assert(Sinks.readUpsertedBucketed(spark, dir).select("v").as[Long].collect().toSet == Set(2L))
   }
 }

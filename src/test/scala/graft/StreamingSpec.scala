@@ -80,7 +80,7 @@ class StreamingSpec extends SparkSpec {
       PartObservation(station, "AAA", "AAA", 10, 1.5, ts("2024-03-05 09:00:00")),
       PartObservation(station, "AAA", "AAA", 14, 1.6, ts("2024-03-05 09:00:05")))
     val q = Sinks.startPipeline(input.toDS(), machine, outDir, ckpt,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow(), recordBuckets = 8)
+      org.apache.spark.sql.streaming.Trigger.AvailableNow())
     assert(q.awaitTermination(120000), "drain timed out")
 
     val rec = Sinks.readUpsertedBucketed(spark, s"$outDir/production_records").collect()
