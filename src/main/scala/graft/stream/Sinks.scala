@@ -1,10 +1,18 @@
 package graft.stream
 
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model._
 
@@ -118,7 +126,13 @@ object Sinks {
     * job commit, after every read of the merge, so the merge may read
     * the partitions it replaces (single writer; foreachBatch
     * serializes). A table in another layout — flat files or other
-    * partitions — is refused with a pointer to [[migrateLayout]]. */
+    * partitions — is refused with a pointer to [[migrateLayout]].
+    *
+    * The batch must carry the table's full schema: the merge reads the
+    * old rows with the batch's columns, so a table column the batch
+    * lacked would vanish from every rewritten row. The footer of one
+    * file in a touched partition is checked on the driver, and a batch
+    * whose column names or types differ from it is refused. */
   def upsertParquetPartitioned(batch: DataFrame, path: String, keys: Seq[String],
       version: Seq[String], layout: Layout): Unit = {
     val spark = batch.sparkSession
@@ -133,15 +147,26 @@ object Sinks {
     val b = batch.withColumn(layout.column, layout.value)
     // the batch's partition values: bounded by the layout, not by the
     // batch; null and "" land in Hive's default partition, as on write
-    val present = firstPerKey(b.select(layout.column), layout.column, Int.MaxValue)
-      .map(r => if (r.isNullAt(0) || r.get(0) == "") ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else r.get(0).toString)
+    val present = distinctUpTo(b.select(layout.column), Int.MaxValue).toSeq
+      .map(v => if (v == null || v == "") ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+        else v.toString)
       .map(v => new Path(root, ExternalCatalogUtils.getPartitionPathString(layout.column, v)))
       .filter(p => EpochFold.hasDataFiles(spark, p.toString))
+    present.headOption.foreach { p =>
+      val file = fs.listStatus(p).map(_.getPath)
+        .find(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")).get
+      val shape = (s: StructType) => s.fields.toSeq.filter(_.name != layout.column)
+        .map(f => f.name.toLowerCase -> f.dataType.catalogString).toSet
+      val table = footerSchema(file, spark.sparkContext.hadoopConfiguration)
+      require(shape(table) == shape(b.schema),
+        s"batch columns ${shape(b.schema).toSeq.sorted.mkString(", ")} differ from the " +
+          s"table's ${shape(table).toSeq.sorted.mkString(", ")} at $path; an upsert " +
+          "batch must carry the table's full schema")
+    }
     val merged =
       if (present.isEmpty) b
       else spark.read.schema(b.schema).option("basePath", path)
-        .parquet(present.map(_.toString).toSeq: _*).unionByName(b)
+        .parquet(present.map(_.toString): _*).unionByName(b)
     // the layout column leads the window key (it is a function of the
     // keys, so the groups are the same): the window's sort then already
     // orders rows the way the partitioned write needs, and the write
@@ -167,16 +192,25 @@ object Sinks {
       version: Seq[String], nBuckets: Int = 64): Unit =
     upsertParquetPartitioned(batch, path, keys, version, Buckets(keys, nBuckets))
 
-  /** Up to `cap` rows of `df`, one per distinct `key`. Each task keeps
-    * the first row of each key, the driver the first of those: one job
-    * and no shuffle, so a result bounded by the number of keys costs
-    * no more than one pass over the batch. */
-  private def firstPerKey(df: DataFrame, key: String, cap: Int): Array[Row] = {
-    val i = df.schema.fieldIndex(key)
-    df.rdd.mapPartitions { rows =>
-      val seen = collection.mutable.HashSet.empty[Any]
-      rows.filter(r => seen.add(r.get(i))).take(cap)
-    }.collect().distinctBy(_.get(i)).take(cap)
+  /** Up to `cap` distinct values of `df`'s one column. Each task keeps
+    * at most `cap` of them and the driver merges task results into one
+    * set as they arrive, capped again: one job, no shuffle, and the
+    * driver holds at most `cap` values besides a task result in flight. */
+  private def distinctUpTo(df: DataFrame, cap: Int): collection.Set[Any] = {
+    def add(s: mutable.HashSet[Any], v: Any) = { if (s.size < cap) s += v; s }
+    df.rdd.map(_.get(0)).aggregate(mutable.HashSet.empty[Any])(add, _.foldLeft(_)(add))
+  }
+
+  /** The Spark schema a parquet file was written with, from its footer:
+    * read on the driver, no job. */
+  private def footerSchema(file: Path, conf: Configuration): StructType = {
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try {
+      val meta = in.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter().convert(meta.getSchema))
+    } finally in.close()
   }
 
   /** Read an [[upsertParquetPartitioned]] table without its layout column. */
@@ -402,13 +436,15 @@ object Sinks {
     * content-keyed parquet index in a dot-dir beside the CSV and lays
     * the CSV out in `epoch=N` partitions. The per-batch probe reads the
     * INDEX, never the accumulated CSV. A batch of at most
-    * `isinKeyLimit` keys (every live epoch) stays on the driver: one
-    * bounded collect of its rows, one collect of the index hits (the
-    * keys push into the scan as IN), survivors filtered and written
-    * from the driver. An epoch with no new key writes nothing, so a
-    * fleet that re-reports the same unknown parts every tick adds no
-    * CSV or index partition. Larger batches probe by broadcast or
-    * sort-merge join (IngestDedup's regimes, [[csvDedupSurvivors]]).
+    * `isinKeyLimit` keys (every live epoch) is probed from the driver:
+    * one collect of its distinct keys, at most `isinKeyLimit + 1` on
+    * the driver at a time, and one collect of the index hits (the keys
+    * push into the scan as IN). An epoch with no new key writes
+    * nothing, so a fleet that re-reports the same unknown parts every
+    * tick adds no CSV or index partition; otherwise the rows of the
+    * new keys are written, and only that write reads the batch again.
+    * Larger batches probe by broadcast or sort-merge join
+    * (IngestDedup's regimes).
     *
     * Epoch OVERWRITE of both the CSV partition and the index partition
     * makes replays exactly-once: the survivors of epoch N depend only
@@ -451,24 +487,27 @@ object Sinks {
       EpochFold.fold(spark, idxPath, epochId, 128L * 1024 * 1024, Seq("nf_key"))
     val keyed = batch.withColumn("nf_key", nfKey)
     val limit = IngestDedup.isinKeyLimit(spark)
-    val head = firstPerKey(keyed, "nf_key", math.min(limit + 1, Int.MaxValue.toLong).toInt)
-    val survivors =
-      if (head.length <= limit) {
-        val keyOf = (r: Row) => r.getAs[String]("nf_key")
+    val keys = distinctUpTo(keyed.select("nf_key"), math.min(limit + 1, Int.MaxValue).toInt)
+      .map(_.asInstanceOf[String])
+    val (rows, newKeys) =
+      if (keys.size <= limit) {
         val known =
           if (!EpochFold.hasDataFiles(spark, idxPath)) Set.empty[String]
-          else nfIndexHits(nfIndex(spark, path, epochId), head.map(keyOf).toSeq)
-            .collect().map(_.getString(0)).toSet
-        val novel = head.filterNot(r => known(keyOf(r)))
+          else nfIndexHits(spark, path, epochId, keys.toSeq).collect().map(_.getString(0)).toSet
+        val novel = keys.toSeq.filterNot(known).sorted
         if (novel.isEmpty) return
-        spark.createDataFrame(java.util.Arrays.asList(novel: _*), keyed.schema).coalesce(1)
-      } else csvDedupSurvivors(fresh, path, epochId)
-        .localCheckpoint() // feeds the CSV write and the index write
-    survivors.select(batch.columns.map(col): _*)
+        // one partition: the per-key dedup needs no shuffle
+        (keyed.filter(col("nf_key").isin(novel: _*)).coalesce(1).dropDuplicates("nf_key"),
+          spark.createDataFrame(novel.map(Tuple1(_))).toDF("nf_key").coalesce(1))
+      } else {
+        val survivors = csvDedupSurvivors(fresh, path, epochId)
+          .localCheckpoint() // feeds the CSV write and the index write
+        (survivors, survivors.select(col("nf_key")).sortWithinPartitions("nf_key"))
+      }
+    rows.select(batch.columns.map(col): _*)
       .write.mode(SaveMode.Overwrite).option("header", "true")
       .csv(s"$path/epoch=$epochId")
-    survivors.select(col("nf_key")).sortWithinPartitions("nf_key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$idxPath/epoch=$epochId")
+    newKeys.write.mode(SaveMode.Overwrite).parquet(s"$idxPath/epoch=$epochId")
   }
 
   private val NfKeys = Seq("estacion", "numero_parte", "fecha")
@@ -490,37 +529,30 @@ object Sinks {
     spark.read.schema("nf_key STRING, epoch LONG").parquet(nfIdxPath(path))
       .filter(col("epoch") < epochId)
 
-  /** The trickle probe: the batch keys push into the index scan as IN. */
-  private def nfIndexHits(idx: DataFrame, keys: Seq[String]): DataFrame =
-    idx.filter(col("nf_key").isin(keys: _*)).select("nf_key")
+  /** The index hits among `keys`, which push into the index scan as IN. */
+  private def nfIndexHits(spark: SparkSession, path: String, epochId: Long,
+      keys: Seq[String]): DataFrame =
+    nfIndex(spark, path, epochId).filter(col("nf_key").isin(keys: _*)).select("nf_key")
 
-  /** The batch rows whose logical key is absent from the index, as a
-    * plan (probe regimes and `epoch < N` visibility exactly like
-    * [[IngestDedup.survivors]]) — the path for batches beyond the
-    * driver-side trickle path of [[appendCsvDedup]], split out so
-    * specs can pin that the probe reads the index, never the
-    * accumulated CSV. */
-  private[graft] def csvDedupSurvivors(fresh: DataFrame, path: String,
-      epochId: Long): DataFrame = {
+  /** The batch rows whose logical key is absent from the index, for
+    * batches of more than `isinKeyLimit` keys: the index probe is a
+    * broadcast or sort-merge join (the regimes and `epoch < N`
+    * visibility of [[IngestDedup.survivors]]). */
+  private def csvDedupSurvivors(fresh: DataFrame, path: String, epochId: Long): DataFrame = {
     val spark = fresh.sparkSession
     val keyed = fresh.withColumn("nf_key", nfKey)
       .localCheckpoint() // one micro-batch; probed + anti-joined below
     if (!EpochFold.hasDataFiles(spark, nfIdxPath(path))) keyed
     else {
       val idx = nfIndex(spark, path, epochId)
-      val batchRows = keyed.count()
-      // same conf-overridable switch points as the doc-ingest probes
+      // same conf-overridable switch point as the doc-ingest probes
       // (spark.graft.ingest.*), so one set of knobs tunes — and one
       // spec style can force — every probe regime in the library
-      if (batchRows > IngestDedup.broadcastKeyLimit(spark))
+      if (keyed.count() > IngestDedup.broadcastKeyLimit(spark))
         keyed.join(idx.select("nf_key"), Seq("nf_key"), "left_anti")
       else {
-        val hits =
-          if (batchRows <= IngestDedup.isinKeyLimit(spark))
-            nfIndexHits(idx, keyed.select("nf_key").collect().map(_.getString(0)).toSeq)
-          else
-            idx.join(broadcast(keyed.select("nf_key").distinct()), Seq("nf_key"))
-              .select("nf_key")
+        val hits = idx.join(broadcast(keyed.select("nf_key").distinct()), Seq("nf_key"))
+          .select("nf_key")
         keyed.join(broadcast(hits), Seq("nf_key"), "left_anti")
       }
     }
@@ -559,8 +591,7 @@ object Sinks {
       // ONE job gates all three sink branches (this also materializes
       // the cache for the writes below); the previous per-branch
       // isEmpty actions ran three jobs per micro-batch
-      val present = firstPerKey(df.select("action"), "action", Int.MaxValue)
-        .map(_.getString(0)).toSet
+      val present = distinctUpTo(df.select("action"), Int.MaxValue)
       val records = df
         .filter(col("action").isin(ActionRow.Create, ActionRow.Update, ActionRow.Close))
         .withColumn("rank",

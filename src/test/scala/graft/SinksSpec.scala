@@ -89,6 +89,27 @@ class SinksSpec extends SparkSpec
     assert(got == Map("a" -> 99L, "b" -> 20L, "c" -> 30L))
   }
 
+  test("upsertParquetPartitioned refuses a batch whose columns differ from the table's") {
+    val dir = Files.createTempDirectory("graft_upsert_schema").toString + "/t"
+    Sinks.upsertParquetBucketed(
+      Seq(("a", 1L, 10L), ("b", 1L, 20L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), 1)
+    Seq(Seq(("a", 2L)).toDF("k", "v"),                   // lacks x: x would vanish from b
+        Seq(("a", 2L, "10")).toDF("k", "v", "x"),         // x retyped
+        Seq(("a", 2L, 10L, 1)).toDF("k", "v", "x", "y")   // adds y
+    ).foreach { batch =>
+      val e = intercept[IllegalArgumentException] {
+        Sinks.upsertParquetBucketed(batch, dir, Seq("k"), Seq("v"), 1)
+      }
+      assert(e.getMessage.contains("full schema"), e.getMessage)
+    }
+    assert(Sinks.readUpsertedBucketed(spark, dir).select("k", "v", "x")
+      .as[(String, Long, Long)].collect().sorted.toSeq == Seq(("a", 1L, 10L), ("b", 1L, 20L)),
+      "a refused batch must leave the table as it was")
+    Sinks.upsertParquetBucketed(Seq(("a", 2L, 11L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), 1)
+    assert(Sinks.readUpsertedBucketed(spark, dir).select("k", "x").as[(String, Long)]
+      .collect().sorted.toSeq == Seq("a" -> 11L, "b" -> 20L))
+  }
+
   test("upsertParquetBucketed: first write to a fresh table succeeds (default path)") {
     // regression: the marker used to materialize the dir before the first
     // data write, and the merge-read then died on UNABLE_TO_INFER_SCHEMA
@@ -272,7 +293,9 @@ class SinksSpec extends SparkSpec
   }
 
   test("appendCsvDedup probe reads the key index, never the accumulated CSV") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
     val dir = Files.createTempDirectory("graft_csv_p").toString + "/nf"
     (0 to 2).foreach { e =>
       Sinks.appendCsvDedup(
@@ -280,15 +303,27 @@ class SinksSpec extends SparkSpec
           .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp"),
         dir, epochId = e)
     }
-    val probe = Sinks.csvDedupSurvivors(
-      Seq(("P0", "X", "X/Y", "2024-03-01", "t"), ("P9", "Y", "Y/Z", "2024-03-09", "t"))
-        .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp"),
-      dir, epochId = 3)
-    assert(probe.select("estacion").as[String].collect().toSeq == Seq("P9"),
-      "known key P0 rejected by the index; novel P9 survives")
-    val scans = collectWithSubqueries(probe.queryExecution.executedPlan) {
-      case sc: FileSourceScanExec => sc
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    import scala.jdk.CollectionConverters._
+    def writes = plans.asScala.filter(_.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
+    try {
+      Sinks.appendCsvDedup(
+        Seq(("P0", "X", "X/Y", "2024-03-01", "t"), ("P9", "Y", "Y/Z", "2024-03-09", "t"))
+          .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp"),
+        dir, epochId = 3)
+      val deadline = System.nanoTime() + 30e9.toLong // listener events arrive asynchronously
+      while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(spark.read.option("header", "true").csv(s"$dir/epoch=3").select("estacion")
+      .as[String].collect().toSeq == Seq("P9"), "known key P0 rejected by the index; novel P9 survives")
+    assert(writes.size == 2, "one CSV write and one index write")
+    val scans = plans.asScala.toSeq.flatMap(qe =>
+      collectWithSubqueries(qe.executedPlan) { case sc: FileSourceScanExec => sc })
     val idxScans = scans.filter(_.relation.location.rootPaths
       .exists(_.toString.contains("_nf_idx")))
     assert(idxScans.nonEmpty, "the probe must read the key index")
@@ -297,6 +332,8 @@ class SinksSpec extends SparkSpec
       s"batch keys must push into the index scan: ${idxScans.map(_.metadata("PushedFilters"))}")
     assert(scans.size == idxScans.size,
       "per-batch read IO must not include the accumulated CSV itself")
+    assert(writes.forall(qe => collectWithSubqueries(qe.executedPlan) {
+      case x: ShuffleExchangeExec => x }.isEmpty), "the survivor writes must not shuffle")
   }
 
   test("appendCsvDedup adopts a flat legacy CSV; its keys still dedup") {
