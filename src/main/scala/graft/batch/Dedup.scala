@@ -1257,7 +1257,7 @@ object Dedup {
     * the cap sits on the WITNESS side only, so a boilerplate flood
     * bucket still witnesses every new doc at |new| × cap pairs instead
     * of |new| × |bucket| — the streaming membrane's one-sided-cap
-    * argument ([[graft.stream.EmbedIngest.inBatchLoserIds]]) applied
+    * argument ([[graft.stream.EmbedIngest.inBatchLosers]]) applied
     * batch-side; hash-ordering keeps eviction unbiased and
     * oracle-reproducible. Witnessed pairs verify at the signature
     * level (qd2's n_match / 6), and a new doc is a dup when its best

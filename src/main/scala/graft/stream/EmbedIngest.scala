@@ -1,6 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.batch.IvfIndex
@@ -49,10 +50,10 @@ import graft.batch.IvfIndex
   * membrane, readers get the 3× cheaper scans (BASELINE.md r12). */
 object EmbedIngest {
 
-  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private[stream] def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     graft.functions.GraftFunctions.vec_dot(a, b)
 
-  private def withNorm(df: DataFrame): DataFrame =
+  private[stream] def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
 
   // quantizer dimensionality per index dir, cached on the driver: it
@@ -66,7 +67,7 @@ object EmbedIngest {
   // (round-12 ADVICE).
   private val dimCache = scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  private def quantizerDim(s: SparkSession, dir: String, cents: DataFrame): Int =
+  private[stream] def quantizerDim(s: SparkSession, dir: String, cents: DataFrame): Int =
     dimCache.getOrElseUpdate(dir, cents.select(size(col("ce"))).head.getInt(0))
 
   /** Pin the coarse quantizer. `centroids` must be (cid, ce: embedding,
@@ -326,7 +327,7 @@ object EmbedIngest {
 
   /** Finish (or discard) a requantize interrupted by a crash: committed
     * snapshots are installed, uncommitted ones discarded. Run at every
-    * entry ([[survivors]], [[requantize]], [[corpus]]) — one root
+    * entry ([[verdicts]], [[requantize]], [[corpus]]) — one root
     * listing when idle. */
   private[graft] def recoverRequant(s: SparkSession, dir: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -338,7 +339,7 @@ object EmbedIngest {
     if (tmps.isEmpty) return // the idle hot path: one listing, no lease
     // recovery MUTATES the layout, so it takes the same maintenance
     // fence as requantize/compactCells — but a READ path calling it
-    // (survivors, corpus) must not fail because a foreign writer is
+    // (verdicts, corpus) must not fail because a foreign writer is
     // live: that writer owns the snapshot and finishes (or discards)
     // its own install; the read proceeds on the committed layout.
     graft.batch.FsLease.monitorOf(dir).synchronized {
@@ -370,22 +371,31 @@ object EmbedIngest {
                   tau: Double = 0.95, nProbe: Int = 4): Unit =
     // survivors land in THEIR nearest cell (pr = 1) for this epoch;
     // epoch-dir OVERWRITE is the replay-idempotence point
-    survivors(batch, dir, epochId, tau, nProbe)
+    admitted(verdicts(batch, dir, epochId, tau, nProbe))
       .write.mode(SaveMode.Overwrite).partitionBy("cell")
       .parquet(s"$dir/cells/epoch=$epochId")
 
   /** Witness-side cap for the in-batch pair stage — per probe cell,
     * only the first [[InBatchWitnessCap]] members (by vec_id) serve as
-    * rejection witnesses. See [[inBatchLoserIds]] for why the cap sits
+    * rejection witnesses. See [[inBatchLosers]] for why the cap sits
     * on ONE side here, unlike qd13's two-sided member prefix. */
   private[graft] val InBatchWitnessCap = 512
 
-  /** In-batch losers: vec_ids with a SMALLER tau-near batch-mate
-    * sharing a probe cell. The witness (smaller-id) side is capped per
-    * cell at [[InBatchWitnessCap]], so the pair space is
-    * rows × nProbe × cap — LINEAR in the micro-batch with O(cap²) for a
-    * cap-sized batch — instead of quadratic when a degenerate batch
-    * collapses into one cell.
+  /** The cap-prefix witness set per cell — split out so the flood spec
+    * can pin the pair-space bound on the exact frame the join uses. */
+  private[graft] def cappedWitnesses(probes: DataFrame): DataFrame =
+    probes
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("cell").orderBy("vec_id")))
+      .filter(col("rk") <= InBatchWitnessCap).drop("rk", "pr")
+
+  /** In-batch losers `(vec_id, dup_of)`: vec_ids with a SMALLER
+    * tau-near batch-mate sharing a probe cell, and the smallest such
+    * witness. The witness (smaller-id) side is capped per cell at
+    * [[InBatchWitnessCap]], so the pair space is rows × nProbe × cap —
+    * LINEAR in the micro-batch with O(cap²) for a cap-sized batch —
+    * instead of quadratic when a degenerate batch collapses into one
+    * cell.
     *
     * The cap deliberately sits on one side, not on membership like
     * qd13's CellCap: the a-side is already bounded by the micro-batch
@@ -398,32 +408,41 @@ object EmbedIngest {
     * flood. Recall loss exists only in the adversarial
     * crowded-cell-with-late-witness shape, the same class qd13
     * documents. */
-  /** The cap-prefix witness set per cell — split out so the flood spec
-    * can pin the pair-space bound on the exact frame the join uses. */
-  private[graft] def cappedWitnesses(probes: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    probes
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("cell").orderBy("vec_id")))
-      .filter(col("rk") <= InBatchWitnessCap).drop("rk", "pr")
-  }
-
-  private[graft] def inBatchLoserIds(probes: DataFrame, tau: Double): DataFrame = {
+  private[graft] def inBatchLosers(probes: DataFrame, tau: Double): DataFrame = {
     val a = probes.as("a"); val b = cappedWitnesses(probes).as("b")
     a.join(b,
         col("a.cell") === col("b.cell") && col("a.vec_id") > col("b.vec_id"))
       .filter(dot(col("a.embedding"), col("b.embedding"))
         / (col("a.nrm") * col("b.nrm")) >= tau)
-      .select(col("a.vec_id").as("vec_id")).distinct()
+      .groupBy(col("a.vec_id").as("vec_id")).agg(min(col("b.vec_id")).as("dup_of"))
   }
 
-  /** The batch's admitted vectors as a pure plan — (vec_id, embedding,
-    * nrm, cell) with `cell` = the vector's nearest centroid. Split from
-    * [[ingestBatch]] (IngestDedup.survivors' shape) so specs can pin
+  /** One VERDICT row per batch vector as a pure plan — (vec_id,
+    * embedding, nrm, cell, dup_of, reason) with `cell` = the vector's
+    * nearest centroid and a null reason meaning admitted, so the
+    * admitted rows are exactly what the cells store holds. Split from
+    * [[ingestBatch]] (IngestDedup.verdicts' shape) so specs can pin
     * plans and so [[MultimodalIngest]] can compose this membrane with
-    * the text one before any write. */
-  private[graft] def survivors(batch: DataFrame, dir: String, epochId: Long,
-                               tau: Double, nProbe: Int): DataFrame = {
+    * the text one before any write.
+    *
+    * Decided and attributed in one pass: `embed_batch` (an exact copy
+    * of a smaller batch-mate — dup_of = the collapse's min vec_id — or
+    * the smallest tau-near capped witness sharing a probe cell, see
+    * [[inBatchLosers]]) beats `embed_corpus` (the smallest tau-near
+    * admitted owner from the partition-pruned cells); a row the probes
+    * drop — null, wrong-dim or null-element embeddings, or a zero
+    * vector, which score NaN against every centroid — is `malformed`
+    * (dup_of = null: it duplicates nothing).
+    *
+    * Attribution caveat: the witness side is capped per cell at
+    * [[InBatchWitnessCap]] (the flood bound). In a cell crowded past
+    * the cap, a rejected vector's smallest tau-near batch-mate may lie
+    * beyond the cap prefix while a larger one in another probe cell
+    * sits inside it; its `embed_batch` dup_of then names that larger
+    * witness — a batch-mate it is genuinely tau-near, just not the
+    * smallest. Admission is unaffected. */
+  private[graft] def verdicts(batch: DataFrame, dir: String, epochId: Long,
+                              tau: Double, nProbe: Int): DataFrame = {
     val s = batch.sparkSession
     // a crashed requantize must be finished BEFORE the quantizer is
     // read — a half-swapped layout (new centroids, old cells) would
@@ -431,7 +450,24 @@ object EmbedIngest {
     recoverRequant(s, dir)
     val cents = s.read.parquet(s"$dir/centroids")
     val cdim = quantizerDim(s, dir, cents)
-    val nm0 = withNorm(batch).localCheckpoint() // bounded: one micro-batch
+    // exact-dup collapse FIRST (linear, map-side hash): a crawl flood of
+    // byte-identical embeddings would otherwise meet the pairwise tau
+    // stage as one hot cell — m²/2 cosine pairs. Keeping min vec_id per
+    // embedding hash changes no outcome (an exact dup is tau-near its
+    // twin for any tau ≤ 1, so the pairwise rule rejected exactly the
+    // same ids) but makes the pair stage quadratic only in DISTINCT
+    // vectors. nProbe nearest cells per vector — a row-local sort-slice
+    // over the broadcast quantizer array (IvfIndex.topCells: no
+    // batch×centroids row explosion, no vec_id exchange); an empty list
+    // means the probes drop the row
+    val keyed = withNorm(batch)
+      .withColumn("emb_key", md5(concat_ws(",", col("embedding").cast("array<string>"))))
+      .withColumn("first", min(col("vec_id")).over(Window.partitionBy("emb_key")))
+      .crossJoin(broadcast(IvfIndex.centroidArray(cents)))
+      .withColumn("cells", IvfIndex.nearestCells(col("embedding"), col("nrm"), nProbe,
+        rounded = false))
+      .drop("cs", "emb_key")
+      .localCheckpoint() // bounded: one micro-batch
     // MISCONFIGURATION guard, enforced at BATCH level: a quantizer
     // whose dims match nothing in the batch usually means the caller
     // pointed at the wrong index dir — every probe would EXCLUDE every
@@ -443,19 +479,18 @@ object EmbedIngest {
     // batch on every restart, so one all-malformed micro-batch on a
     // low-traffic stream would wedge it permanently. Established
     // corpus ⇒ earlier batches matched ⇒ the dim is right ⇒ this is a
-    // bad BATCH: warn, let every row drop naturally (empty probe
-    // lists), and let [[rejectionLedger]] attribute them `malformed`.
+    // bad BATCH: warn and let every row's verdict read `malformed`.
     // The probe stops at the first matching row — one bounded lookup
     // on the already-checkpointed frame per healthy batch.
-    if (nm0.filter(size(col("embedding")) === cdim).limit(1).isEmpty && !nm0.isEmpty) {
+    if (keyed.filter(size(col("embedding")) === cdim).limit(1).isEmpty && !keyed.isEmpty) {
       // the bring-up throw is OPT-OUT (round-12 ADVICE): foreachBatch
       // replays the same batch on every restart, so if the FIRST
       // micro-batch of a genuinely new stream is all-garbage (not a
       // wrong dir), the strict throw would wedge the stream with no
       // code change available to the operator. Flipping
       // spark.graft.embedIngest.strictBringup=false downgrades
-      // bring-up to the established-corpus behavior: warn, drop the
-      // rows, and let [[rejectionLedger]] attribute them `malformed`.
+      // bring-up to the established-corpus behavior: warn and mark
+      // every row `malformed`.
       // tolerant parse: a malformed value ("0", "yes") must not throw
       // inside foreachBatch — that would BE the replay poison pill this
       // flag exists to avoid; unparseable defaults to strict
@@ -471,30 +506,19 @@ object EmbedIngest {
           s"$cdim — dropping all rows as malformed (not wedging the stream)")
     }
 
-    // exact-dup collapse FIRST (linear, map-side hash): a crawl flood of
-    // byte-identical embeddings would otherwise meet the pairwise tau
-    // stage as one hot cell — m²/2 cosine pairs. Keeping min vec_id per
-    // embedding hash changes no outcome (an exact dup is tau-near its
-    // twin for any tau ≤ 1, so the pairwise rule rejected exactly the
-    // same ids) but makes the pair stage quadratic only in DISTINCT
-    // vectors.
-    val keyedV = nm0.withColumn("emb_key",
-      md5(concat_ws(",", col("embedding").cast("array<string>"))))
-    val firstPerKey = keyedV.groupBy(col("emb_key")).agg(min(col("vec_id")).as("vec_id"))
-    val nm = keyedV.join(firstPerKey, Seq("emb_key", "vec_id")).drop("emb_key")
-
-    // nProbe nearest cells per vector — a row-local sort-slice over the
-    // broadcast quantizer array (IvfIndex.topCells: no batch×centroids
-    // row explosion, no vec_id exchange)
-    val probes = nm.crossJoin(broadcast(IvfIndex.centroidArray(cents)))
+    val probed = keyed.filter(size(col("cells")) > 0)
+    // exact copies lose to the collapse's min vec_id (same embedding,
+    // same probe cells — a malformed row's copies are malformed too)
+    val exactDups = probed.filter(col("vec_id") =!= col("first"))
+      .select(col("vec_id"), lit(1).as("rank"), col("first").as("dup_of"))
+    val probes = probed.filter(col("vec_id") === col("first"))
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(IvfIndex.nearestCells(col("embedding"), col("nrm"), nProbe,
-          rounded = false)).as(Seq("pos", "cell")))
+        posexplode(col("cells")).as(Seq("pos", "cell")))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("cell"), (col("pos") + 1).cast("int").as("pr"))
-      .localCheckpoint() // feeds in-batch pairs, corpus probe, and the write
 
-    val inBatchLosers = inBatchLoserIds(probes, tau)
+    val inBatch = inBatchLosers(probes, tau)
+      .select(col("vec_id"), lit(1).as("rank"), col("dup_of"))
 
     // corpus probe: partition-pruned read of (epoch < N) × touched
     // cells; join on cell, never a corpus shuffle. Touched cells are
@@ -502,100 +526,38 @@ object EmbedIngest {
     // data-presence gate (not fs.exists): an empty first micro-batch
     // leaves an epoch dir holding only _SUCCESS, which must read as
     // "no corpus yet", not UNABLE_TO_INFER_SCHEMA on batch two
-    val corpusLosers =
-      if (!EpochFold.hasDataFiles(s, s"$dir/cells"))
-        s.emptyDataFrame.select(lit(0L).as("vec_id")).limit(0)
+    val corpus =
+      if (!EpochFold.hasDataFiles(s, s"$dir/cells")) IngestDedup.noClaims(s, "vec_id")
       else {
-        val touched = probes.select("cell").distinct()
+        // copies probe their min's cells, so every probed row's cells
+        // are exactly the touched set
+        val touched = probed.select(explode(col("cells"))).distinct()
           .collect().map(_.getLong(0)) // ≤ nCells ids — bounded literal
         val corpus = s.read.parquet(s"$dir/cells")
           .filter(col("epoch") < epochId && col("cell").isin(touched.toSeq: _*))
-          .select(col("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
+          .select(col("cell"), col("vec_id").as("dup_src"),
+            col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
         probes.join(corpus, Seq("cell"))
           .filter(dot(col("embedding"), col("c_emb"))
             / (col("nrm") * col("c_nrm")) >= tau)
-          .select("vec_id").distinct()
+          .select(col("vec_id"), lit(2).as("rank"), col("dup_src").as("dup_of"))
       }
 
-    probes.filter(col("pr") === 1)
-      .join(inBatchLosers.union(corpusLosers).distinct(), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-  }
-
-  /** `(vec_id, dup_of, reason)` attribution for this membrane's
-    * rejections — `vecs` is the stage INPUT, `keep` its output
-    * ([[survivors]]). Post-hoc over the rejected set only, the
-    * [[IngestDedup.rejectionLedger]] pattern: first match wins,
-    * `embed_batch` (the smallest tau-near batch-mate sharing a probe
-    * cell — covers the exact-embedding collapse, cosine 1) then
-    * `embed_corpus` (the smallest tau-near admitted owner from the
-    * partition-pruned cells). The witness side here is UNCAPPED —
-    * sized by the rejection count, not the batch, so the
-    * [[InBatchWitnessCap]] flood bound stays where the full batch
-    * pairs. A dup_of naming a batch-mate that itself lost is resolved
-    * by the caller's cross-membrane chain pass. */
-  private[graft] def rejectionLedger(vecs: DataFrame, dir: String,
-      epochId: Long, keep: DataFrame, tau: Double, nProbe: Int): DataFrame = {
-    val s = vecs.sparkSession
-    val rejected = vecs.select(col("vec_id"))
-      .join(keep.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint() // batch-bounded; drives every probe below
-    import s.implicits._
-    val emptyLedger =
-      Seq.empty[(Long, Option[Long], String)].toDF("vec_id", "dup_of", "reason")
-    if (rejected.isEmpty) return emptyLedger
-
-    val cents = s.read.parquet(s"$dir/centroids")
-    val probes = withNorm(vecs)
-      .crossJoin(broadcast(IvfIndex.centroidArray(cents)))
+    keyed.join(
+        IngestDedup.firstClaim(exactDups.unionByName(inBatch).unionByName(corpus),
+          "vec_id", Seq("embed_batch", "embed_corpus")),
+        Seq("vec_id"), "left")
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(IvfIndex.nearestCells(col("embedding"), col("nrm"), nProbe,
-          rounded = false)).as("cell"))
-      .localCheckpoint() // witness side + probe side below
-    val rejProbes = probes.join(rejected, Seq("vec_id")).localCheckpoint()
-    val inBatch = rejProbes.as("a").join(probes.as("b"),
-        col("a.cell") === col("b.cell") && col("b.vec_id") < col("a.vec_id"))
-      .filter(dot(col("a.embedding"), col("b.embedding"))
-        / (col("a.nrm") * col("b.nrm")) >= tau)
-      .groupBy(col("a.vec_id")).agg(min(col("b.vec_id")).as("dup_of"))
-      .select(col("vec_id"), col("dup_of"), lit("embed_batch").as("reason"))
-    val rem = rejProbes
-      .join(inBatch.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    val corpusAttr =
-      if (!EpochFold.hasDataFiles(s, s"$dir/cells")) emptyLedger
-      else {
-        val touched = rem.select(col("cell")).distinct()
-          .collect().map(_.getLong(0)) // ≤ nCells ids — bounded literal
-        if (touched.isEmpty) emptyLedger
-        else {
-          val corpus = s.read.parquet(s"$dir/cells")
-            .filter(col("epoch") < epochId && col("cell").isin(touched.toSeq: _*))
-            .select(col("cell"), col("vec_id").as("dup_src"),
-              col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-          rem.join(corpus, Seq("cell"))
-            .filter(dot(col("embedding"), col("c_emb"))
-              / (col("nrm") * col("c_nrm")) >= tau)
-            .groupBy(col("vec_id")).agg(min(col("dup_src")).as("dup_of"))
-            .select(col("vec_id"), col("dup_of"),
-              lit("embed_corpus").as("reason"))
-        }
-      }
-    val attributed = inBatch.unionByName(corpusAttr)
-    // a row the pair/corpus rules could not attribute is either
-    // MALFORMED (null/wrong-dim/null-element embedding — naturally
-    // rejected by the NaN-excluding probe, never a dup of anything) or
-    // genuinely unexplained ("unknown" stays the can't-happen guard,
-    // loud in specs)
-    val cdim = quantizerDim(s, dir, cents)
-    val unattributed = rejected
-      .join(attributed.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .join(vecs.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("vec_id"), lit(null).cast("long").as("dup_of"),
-        when(col("embedding").isNull || size(col("embedding")) =!= cdim ||
-          exists(col("embedding"), e => e.isNull), lit("malformed"))
-          .otherwise(lit("unknown")).as("reason"))
-    attributed.unionByName(unattributed)
+        try_element_at(col("cells"), lit(1)).as("cell"), col("dup_of"),
+        when(col("reason").isNotNull, col("reason"))
+          .when(coalesce(size(col("cells")), lit(0)) <= 0, lit("malformed"))
+          .as("reason"))
   }
+
+  /** The admitted rows of a [[verdicts]] frame, as the cells store
+    * holds them: (vec_id, embedding, nrm, cell). */
+  private[graft] def admitted(verdicts: DataFrame): DataFrame =
+    verdicts.filter(col("reason").isNull).drop("dup_of", "reason")
 
   /** Admitted corpus without layout columns. */
   def corpus(spark: SparkSession, dir: String): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -69,7 +70,7 @@ object IngestDedup {
       }
       .start()
 
-  private def readIfExists(s: SparkSession, path: String): Option[DataFrame] =
+  private[stream] def readIfExists(s: SparkSession, path: String): Option[DataFrame] =
     // data-presence gate, not fs.exists: an EMPTY first micro-batch
     // leaves epoch dirs holding only _SUCCESS, and reading a
     // metadata-only tree throws UNABLE_TO_INFER_SCHEMA on the next
@@ -85,7 +86,7 @@ object IngestDedup {
     * skipping corpus dedup entirely would be silent data corruption.
     * (After [[EpochFold.migrateLegacyFlat]] the legacy branch is only
     * reachable for an index read before any `ingestBatch` touched it.) */
-  private def priorEpochs(idx: DataFrame, epochId: Long): DataFrame =
+  private[stream] def priorEpochs(idx: DataFrame, epochId: Long): DataFrame =
     if (idx.columns.contains("epoch")) idx.filter(col("epoch") < epochId) else idx
 
   /** One micro-batch pass; also callable on a plain batch DataFrame
@@ -111,8 +112,9 @@ object IngestDedup {
     // writes land beside their flat files (see EpochFold.migrateLegacyFlat)
     Seq("corpus", "exact_idx", "band_idx")
       .foreach(t => EpochFold.migrateLegacyFlat(s, s"$dir/$t"))
-    val dedupKeep = survivors(batch, dir, epochId)
+    val verdict = verdicts(batch, dir, epochId)
       .localCheckpoint() // consumed by the lm gate, the ledger, and the writes
+    val dedupKeep = verdict.filter(col("reason").isNull).drop("dup_of", "reason")
     val lmRej = lmModelDir.map(m => lmRejects(dedupKeep, m).localCheckpoint())
     val keep = lmRej match {
       case None => dedupKeep
@@ -131,9 +133,8 @@ object IngestDedup {
     keep.drop("bands", "content_key")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/corpus/epoch=$epochId")
     // both indexes carry the owning doc_id alongside the key: probes
-    // prune it away (columnar), but the rejection ledger reads it back
-    // as the dup_of attribution. Indexes written before this column
-    // existed still probe fine and attribute a null dup_of.
+    // read it back as the dup_of attribution. Indexes written before
+    // this column existed still probe fine and attribute a null dup_of.
     keep.select(col("content_key"), col("doc_id"))
       .sortWithinPartitions("content_key")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/exact_idx/epoch=$epochId")
@@ -142,19 +143,21 @@ object IngestDedup {
       .filter(col("key").isNotNull) // shingle-less docs have no signature
       .sortWithinPartitions("key")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/band_idx/epoch=$epochId")
-    // the rejection ledger: WHY each non-survivor was turned away,
-    // committed into this epoch's partition like every other store —
-    // replays overwrite, so cluster accounting stays exactly-once.
-    // Dup attribution runs against the DEDUP survivors (lm-rejected
-    // docs are not dups); lm rejections append as terminal rows
-    // (dup_of = null — a quality drop has no content owner)
-    val dupLedger = rejectionLedger(batch, dir, epochId, dedupKeep)
-    lmRej.map(r => dupLedger.unionByName(
-        r.select(col("doc_id"), lit(null).cast("long").as("dup_of"),
-          lit("lm").as("reason"))))
-      .getOrElse(dupLedger)
+    // the rejection ledger: WHY each non-survivor was turned away — the
+    // verdicts' rejected rows, chains resolved — committed into this
+    // epoch's partition like every other store, so replays overwrite
+    // and cluster accounting stays exactly-once. lm rejections append
+    // as terminal rows (dup_of = null — a quality drop has no content
+    // owner)
+    resolveChains(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
+        .getOrElse(rejections(verdict)))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/ledger/epoch=$epochId")
   }
+
+  /** Ledger rows for lm-rejected doc ids: terminal (dup_of = null). */
+  private[stream] def lmRows(rejected: DataFrame): DataFrame =
+    rejected.select(col("doc_id"), lit(null).cast("long").as("dup_of"),
+      lit("lm").as("reason"))
 
   /** Doc ids in `surv` scoring under the batch gate's
     * 2-bits-per-bigram line against the frozen reference model
@@ -213,62 +216,94 @@ object IngestDedup {
   private[graft] def broadcastKeyLimit(s: SparkSession): Long =
     s.conf.get("spark.graft.ingest.broadcastKeyLimit", BroadcastKeyLimit.toString).toLong
 
-  /** Steps 1-3 as a pure plan: the batch's surviving docs. Split from
+  /** Steps 1-3 as a pure plan: one VERDICT row per batch doc — the
+    * batch's columns plus `content_key`, `bands`, `dup_of` and
+    * `reason`, where a null reason means admitted. Split from
     * [[ingestBatch]] so specs can pin the PLAN shape, not just results.
     *
+    * The verdict is decided and attributed in the same pass: each stage
+    * emits `(doc_id, rank, dup_of)` claims from the probe it already
+    * runs, and the lowest-ranked claim wins ([[firstClaim]]) — the
+    * stage order `exact_batch`, `exact_corpus`, `near_batch`,
+    * `near_corpus`, with the smallest witness within a stage:
+    * `exact_batch` (a smaller batch-mate with identical content),
+    * `exact_corpus` (content already admitted; dup_of = the indexed
+    * owner), `near_batch` (shares a band with a smaller batch-mate;
+    * dup_of = the smallest such mate), `near_corpus` (shares a band with
+    * an admitted doc; dup_of = the smallest owner). A dup_of may name a
+    * batch-mate that itself lost — callers resolve chains
+    * ([[resolveChains]]) before writing the ledger. dup_of is null only
+    * against a pre-owner-column legacy index.
+    *
     * The index sides are corpus-lifetime (unbounded); the batch side is
-    * one micro-batch (bounded). The default SMJ anti/inner joins would
-    * therefore shuffle the ENTIRE index every batch — the per-batch
-    * cost that actually matters at 100 TB. Instead the probes pick a
-    * regime by batch size:
+    * one micro-batch (bounded). The default SMJ joins would therefore
+    * shuffle the ENTIRE index every batch — the per-batch cost that
+    * actually matters at 100 TB. Instead the probes pick a regime by
+    * batch size:
     *   - trickle (≤ [[IsinKeyLimit]] docs): collect the batch's keys
     *     (driver memory bounded by the constant) and push a literal IN
     *     filter into the index scan — with key-sorted epoch files the
     *     row-group stats skip almost all index IO;
     *   - micro-batch (≤ [[BroadcastKeyLimit]]): broadcast the batch's
     *     key set, stream the index map-side (scanned, never shuffled),
-    *     and broadcast the tiny hit set back into the anti join;
+    *     and broadcast the tiny hit set back into the probe join;
     *   - bulk backfill: plain shuffle joins — correct at any size, and
     *     a batch that large amortizes the index shuffle it pays for. */
-  private[graft] def survivors(batch: DataFrame, dir: String, epochId: Long): DataFrame = {
+  private[graft] def verdicts(batch: DataFrame, dir: String, epochId: Long): DataFrame = {
     val s = batch.sparkSession
+    // 1. exact within batch: min doc_id per content wins (deterministic)
     val keyed = batch
       .withColumn("content_key", md5(col("text").cast("binary")))
       .withColumn("bands", Dedup.bandKeys(col("text")))
+      .withColumn("winner", min(col("doc_id")).over(Window.partitionBy("content_key")))
       .localCheckpoint() // small (one micro-batch); read multiple times below
     val batchRows = keyed.count() // cheap: counts the checkpoint blocks
     val isinLimit = isinKeyLimit(s)
     val bcastLimit = broadcastKeyLimit(s)
+    // the trickle IN lists, in one collect: the batch's content keys and
+    // (when the band probe rides trickle too) its band keys. Copies that
+    // lose in-batch carry their winner's keys, so these are exactly the
+    // probed keys (content) or a superset of them (bands: keys of docs
+    // an exact stage removes; the probe join keeps exactness)
+    val (contentLits, bandLits) =
+      if (batchRows > isinLimit) (Nil, Nil)
+      else {
+        val rows = keyed.select(col("content_key"), col("bands.key")).collect()
+        (rows.map(_.getString(0)).distinct.toSeq,
+          if (2 * batchRows > isinLimit) Nil
+          else rows.flatMap(_.getSeq[String](1)).filter(_ != null).distinct.toSeq)
+      }
 
-    // 1. exact within batch: min doc_id per content wins (deterministic)
-    val firstPerContent = keyed.groupBy(col("content_key"))
-      .agg(min(col("doc_id")).as("doc_id"))
-    val exactInBatch = keyed.join(firstPerContent, Seq("content_key", "doc_id"))
+    val winners = keyed.filter(col("doc_id") === col("winner"))
+    val exactBatch = keyed.filter(col("doc_id") =!= col("winner"))
+      .select(col("doc_id"), lit(1).as("rank"), col("winner").as("dup_of"))
 
     // 2. exact vs corpus index (epochs strictly before this one: a
-    // replayed epoch must not see its own half-committed keys)
-    val exactFresh = readIfExists(s, s"$dir/exact_idx") match {
+    // replayed epoch must not see its own half-committed keys). One
+    // left join carries both the fresh docs and the owners they lost to
+    val (exactFresh, exactCorpus) = readIfExists(s, s"$dir/exact_idx") match {
       case Some(idx) =>
         val idxPrior = priorEpochs(idx, epochId)
-        if (batchRows > bcastLimit)
-          exactInBatch.join(idxPrior, Seq("content_key"), "left_anti")
-        else {
-          val batchKeys = exactInBatch.select("content_key").distinct()
-          // no distinct on the hit set: index keys are unique
-          // corpus-wide by construction (a doc sharing a key is never
-          // admitted, so no key is written twice) — a distinct here
-          // would only add a shuffle stage per micro-batch
-          val hits =
-            if (batchRows <= isinLimit) {
-              val lits = batchKeys.collect().map(_.getString(0)).toSeq
-              idxPrior.filter(col("content_key").isin(lits: _*))
-                .select("content_key")
-            } else
-              idxPrior.join(broadcast(batchKeys), Seq("content_key"))
-                .select("content_key")
-          exactInBatch.join(broadcast(hits), Seq("content_key"), "left_anti")
-        }
-      case None => exactInBatch
+          .select(col("content_key"), ownerOf(idx), lit(true).as("hit"))
+        // no distinct on the hit set: index keys are unique corpus-wide
+        // by construction (a doc sharing a key is never admitted, so no
+        // key is written twice) — a distinct here would only add a
+        // shuffle stage per micro-batch
+        val probed =
+          if (batchRows > bcastLimit) winners.join(idxPrior, Seq("content_key"), "left")
+          else {
+            val hits =
+              if (batchRows <= isinLimit)
+                idxPrior.filter(col("content_key").isin(contentLits: _*))
+              else
+                idxPrior.join(broadcast(keyed.select("content_key").distinct()),
+                  Seq("content_key"))
+            winners.join(broadcast(hits), Seq("content_key"), "left")
+          }
+        (probed.filter(col("hit").isNull),
+          probed.filter(col("hit"))
+            .select(col("doc_id"), lit(2).as("rank"), col("dup_of")))
+      case None => (winners, noClaims(s))
     }
 
     // 3a. near-dup within batch: a doc loses iff a SMALLER doc_id in
@@ -279,162 +314,70 @@ object IngestDedup {
     // thousands of docs in ONE bucket)
     val bk = exactFresh.select(col("doc_id"), explode(col("bands")).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .localCheckpoint()
-    val bucketMin = bk.groupBy(col("band"), col("key"))
-      .agg(min(col("doc_id")).as("min_id"))
-    val losers = bk.join(bucketMin, Seq("band", "key"))
+    val nearBatch = bk
+      .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy("band", "key")))
       .filter(col("doc_id") > col("min_id"))
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id"), lit(3).as("rank"), col("min_id").as("dup_of"))
     // 3b. near-dup vs corpus band index (same epoch < N visibility rule,
     // same three probe regimes; band keys are ~2 per doc)
-    val corpusHits = readIfExists(s, s"$dir/band_idx") match {
+    val nearCorpus = readIfExists(s, s"$dir/band_idx") match {
       case Some(idx) =>
         val idxPrior = priorEpochs(idx, epochId)
-        if (2 * batchRows > bcastLimit)
-          // project the probe keys only: keeps the owner column out of
-          // the scan AND out of the join output (doc_id would collide)
-          bk.join(idxPrior.select("band", "key"), Seq("band", "key"))
-            .select("doc_id").distinct()
-        else {
-          val probePairs = bk.select("band", "key").distinct()
-          val pre =
-            if (2 * batchRows <= isinLimit) {
-              // IN on the key alone (a superset — keys are md5s, so a
-              // cross-band collision is negligible IO); the join below
-              // keeps exactness on (band, key)
-              val lits = probePairs.select("key").collect().map(_.getString(0)).toSeq
-              idxPrior.filter(col("key").isin(lits: _*))
-            } else idxPrior
-          // band keys are unique corpus-wide too (sharing any band is
-          // rejection), so the hit set needs no distinct either
-          val bandHits = pre.join(broadcast(probePairs), Seq("band", "key"))
-            .select("band", "key")
-          bk.join(broadcast(bandHits), Seq("band", "key")).select("doc_id").distinct()
-        }
-      case None => s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+          .select(col("band"), col("key"), ownerOf(idx))
+        val hits =
+          if (2 * batchRows > bcastLimit) bk.join(idxPrior, Seq("band", "key"))
+          else if (2 * batchRows <= isinLimit)
+            // IN on the key alone (a superset — keys are md5s, so a
+            // cross-band collision is negligible IO); the join keeps
+            // exactness on (band, key)
+            bk.join(broadcast(idxPrior.filter(col("key").isin(bandLits: _*))),
+              Seq("band", "key"))
+          else {
+            // band keys are unique corpus-wide too (sharing any band is
+            // rejection), so the hit set needs no distinct either
+            val bandHits = idxPrior.join(
+              broadcast(bk.select("band", "key").distinct()), Seq("band", "key"))
+            bk.join(broadcast(bandHits), Seq("band", "key"))
+          }
+        hits.select(col("doc_id"), lit(4).as("rank"), col("dup_of"))
+      case None => noClaims(s)
     }
-    exactFresh.join(losers.union(corpusHits).distinct(), Seq("doc_id"), "left_anti")
+    // one verdict per claimed doc (≤ batch rows): broadcast back onto
+    // the batch unless the batch is bulk-sized
+    val claimed = firstClaim(exactBatch.unionByName(exactCorpus).unionByName(nearBatch)
+      .unionByName(nearCorpus), "doc_id", TextReasons)
+    keyed.drop("winner").join(if (batchRows > bcastLimit) claimed else broadcast(claimed),
+      Seq("doc_id"), "left")
   }
 
-  /** The `(doc_id, dup_of, reason)` rejection rows for one micro-batch
-    * — WHY each non-survivor was turned away, so the streaming corpus
-    * can answer qd6-shaped duplicate-cluster queries ([[clusters]])
-    * without a batch rebuild. Computed POST-HOC over the rejected set
-    * only (batch minus `keep`): [[survivors]]'s plan is untouched, and
-    * the two extra index probes are sized by the REJECTION count, not
-    * the batch — at a steady-state dup rate they are a few pushed-IN
-    * row-group reads.
-    *
-    * Reasons mirror the membrane's stages, first match wins:
-    * `exact_batch` (lost to a smaller batch-mate with identical
-    * content), `exact_corpus` (content already admitted; dup_of = the
-    * indexed owner), `near_batch` (shares a band with a smaller
-    * batch-mate), `near_corpus` (shares a band with an admitted doc).
-    * In-batch chains (doc → batch-mate that itself lost a later
-    * stage) are resolved before the write, so every dup_of names an
-    * ADMITTED doc — cross-batch targets are admitted by construction
-    * (only survivors extend the indexes). dup_of is null only against
-    * a pre-owner-column legacy index. `keep` must be [[survivors]]'
-    * (checkpointed) output WITH its content_key/bands columns — the
-    * ledger reassembles the keyed batch from it. */
-  private[graft] def rejectionLedger(batch: DataFrame, dir: String,
-      epochId: Long, keep: DataFrame): DataFrame = {
-    val s = batch.sparkSession
-    val keyed = batch
-      .withColumn("content_key", md5(col("text").cast("binary")))
-      .withColumn("bands", Dedup.bandKeys(col("text")))
-    val rejected = keyed
-      .join(keep.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint() // bounded by the batch; consumed repeatedly below
-    val nRej = rejected.count()
-    if (nRej == 0)
-      return rejected.select(col("doc_id"),
-        lit(null).cast("long").as("dup_of"), lit("").as("reason"))
+  /** Text-stage ledger reasons, by claim rank (see [[verdicts]]). */
+  private val TextReasons = Seq("exact_batch", "exact_corpus", "near_batch", "near_corpus")
 
-    // every frame below derives from keyed SEVERAL times (winners,
-    // stage-3 input, band explode) — but keyed's lineage re-runs the
-    // md5 + shingle/minhash chain over the whole batch per action.
-    // `keep` is checkpointed by the caller and `rejected` just was, and
-    // together they partition the batch, so reassembling keyed from the
-    // two materializations makes every downstream read recompute-free
-    // (measured: the ledger pass dropped from ~17 s to ~3 s per
-    // 10k-doc batch)
-    val keyedCk = keep.select(col("doc_id"), col("content_key"), col("bands"))
-      .unionByName(rejected.select(col("doc_id"), col("content_key"), col("bands")))
+  /** The owning doc_id column of an index (null before the owner column
+    * existed — such an index still probes, and attributes a null dup_of). */
+  private def ownerOf(idx: DataFrame) =
+    (if (idx.columns.contains("doc_id")) col("doc_id") else lit(null).cast("long"))
+      .as("dup_of")
 
-    // stage 1: lost to a smaller batch-mate with identical content
-    val firstPerContent = keyedCk.groupBy(col("content_key"))
-      .agg(min(col("doc_id")).as("winner"))
-    val exactBatch = rejected.join(firstPerContent, Seq("content_key"))
-      .filter(col("doc_id") =!= col("winner"))
-      .select(col("doc_id"), col("winner").as("dup_of"),
-        lit("exact_batch").as("reason"))
-    // stage 2: content already admitted to the corpus
-    val rem2 = rejected.join(exactBatch.select("doc_id"), Seq("doc_id"), "left_anti")
-    val exactCorpus = rem2.join(
-        ownerHits(s, s"$dir/exact_idx", epochId,
-          rem2.select("content_key"), Seq("content_key"), nRej),
-        Seq("content_key"))
-      .select(col("doc_id"), col("dup_of"), lit("exact_corpus").as("reason"))
-    // stage 3 runs over exactly [[survivors]]'s stage-3 input (all
-    // stage-1/2 survivors, admitted or not) so bucket minima agree
-    val done12 = exactBatch.select("doc_id")
-      .unionByName(exactCorpus.select("doc_id")).localCheckpoint()
-    val stage3 = keyedCk.join(done12, Seq("doc_id"), "left_anti")
-    val bk = stage3.select(col("doc_id"), explode(col("bands")).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .localCheckpoint()
-    val bucketMin = bk.groupBy(col("band"), col("key"))
-      .agg(min(col("doc_id")).as("min_id"))
-    val rem3 = rejected.join(done12, Seq("doc_id"), "left_anti")
-    val nearBatch = bk.join(rem3.select("doc_id"), Seq("doc_id"))
-      .join(bucketMin, Seq("band", "key"))
-      .filter(col("doc_id") > col("min_id"))
-      .groupBy(col("doc_id")).agg(min(col("min_id")).as("dup_of"))
-      .select(col("doc_id"), col("dup_of"), lit("near_batch").as("reason"))
-    // stage 4: shares a band with an admitted corpus doc
-    val rem4 = rem3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti")
-    val bkRem = bk.join(rem4.select("doc_id"), Seq("doc_id"))
-    val nearCorpus = bkRem.join(
-        ownerHits(s, s"$dir/band_idx", epochId,
-          bkRem.select("band", "key"), Seq("band", "key"), 2 * nRej),
-        Seq("band", "key"))
-      .groupBy(col("doc_id")).agg(min(col("dup_of")).as("dup_of"))
-      .select(col("doc_id"), col("dup_of"), lit("near_corpus").as("reason"))
-    val unattributed = rem4
-      .join(nearCorpus.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit(null).cast("long").as("dup_of"),
-        lit("unknown").as("reason")) // can't-happen guard, kept loud in specs
-    resolveChains(exactBatch.unionByName(exactCorpus).unionByName(nearBatch)
-      .unionByName(nearCorpus).unionByName(unattributed))
-  }
+  /** An empty `(doc_id, rank, dup_of)` claim frame. */
+  private[stream] def noClaims(s: SparkSession, id: String = "doc_id"): DataFrame =
+    s.emptyDataFrame.select(lit(0L).as(id), lit(0).as("rank"),
+      lit(null).cast("long").as("dup_of"))
 
-  /** Owners of the probe keys present in the prior-epoch index:
-    * `(cols..., dup_of)`. Same trickle/broadcast regime switch as the
-    * membrane probes, but sized by the probe (= rejection) count. */
-  private def ownerHits(s: SparkSession, path: String, epochId: Long,
-      probe: DataFrame, cols: Seq[String], nKeys: Long): DataFrame =
-    readIfExists(s, path) match {
-      case Some(idx0) =>
-        val idx = priorEpochs(idx0, epochId)
-        val owner = if (idx.columns.contains("doc_id")) col("doc_id")
-                    else lit(null).cast("long")
-        val pre =
-          if (nKeys <= isinKeyLimit(s)) {
-            val kc = cols.last // the key column carries the selectivity
-            val lits = probe.select(kc).distinct()
-              .collect().map(_.getString(0)).toSeq
-            if (lits.isEmpty) idx.limit(0) else idx.filter(col(kc).isin(lits: _*))
-          } else idx
-        val dedupProbe = probe.select(cols.map(col): _*).distinct()
-        val joined =
-          if (nKeys <= broadcastKeyLimit(s)) pre.join(broadcast(dedupProbe), cols)
-          else pre.join(dedupProbe, cols)
-        joined.groupBy(cols.map(col): _*).agg(min(owner).as("dup_of"))
-      case None =>
-        probe.select(cols.map(col): _*).limit(0)
-          .withColumn("dup_of", lit(null).cast("long"))
-    }
+  /** One `(id, dup_of, reason)` row per claimed id from a membrane's
+    * stage claims `(id, rank, dup_of)`: the lowest rank — the earliest
+    * stage that rejected the doc — wins, and within it the smallest
+    * witness; `reasons(rank - 1)` names the stage. */
+  private[stream] def firstClaim(claims: DataFrame, id: String,
+      reasons: Seq[String]): DataFrame =
+    claims.groupBy(col(id)).agg(min(struct(col("rank"), col("dup_of"))).as("v"))
+      .select(col(id), col("v.dup_of").as("dup_of"),
+        element_at(typedLit(reasons), col("v.rank")).as("reason"))
+
+  /** The ledger rows of a verdict frame: its rejected docs. */
+  private[stream] def rejections(verdicts: DataFrame, id: String = "doc_id"): DataFrame =
+    verdicts.filter(col("reason").isNotNull)
+      .select(col(id).as("doc_id"), col("dup_of"), col("reason"))
 
   /** Ledgers at most this large resolve their dup_of chains on the
     * driver (one collect of 3 narrow columns, ≤ ~40 MB) instead of the

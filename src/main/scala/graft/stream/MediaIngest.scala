@@ -1,6 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.batch.Multimodal
@@ -57,13 +58,13 @@ object MediaIngest {
     * matching 64-bit hash) defer that 256×. The width is PINNED per
     * store ([[checkBandBits]]) — probing an index with a different
     * width than it was written with would silently miss every key. */
-  private def bandCol(bits: Int) = expr(
+  private[stream] def bandCol(bits: Int) = expr(
     s"transform(sequence(0, 3), k -> cast(shiftleft(k, $bits) as int) + " +
       s"cast(shiftright(phash, cast($bits * k as int)) & ${(1L << bits) - 1}L as int))")
 
   /** Hash width matching a band width: 4 bands always cover the hash
     * (the radius-3 pigeonhole needs exactly four). */
-  private def hashBits(bandBits: Int) = 4 * bandBits
+  private[stream] def hashBits(bandBits: Int) = 4 * bandBits
 
   /** First toucher pins the store's band width in a marker file; every
     * later writer AND prober must present the same width — a mismatch
@@ -92,32 +93,44 @@ object MediaIngest {
     }
   }
 
-  /** The batch rows that survive the perceptual membrane (all original
-    * columns). `mediaCol` is a string payload (the stub codec
-    * convention of qm1) or a raw BinaryType payload (round-17:
-    * [[graft.functions.PhashExpr]] hashes bytes natively — unsigned
-    * byte intensities, `length()` = byte count — so real image/frame
-    * columns need no transcode; a real deployment feeds decoded block
-    * intensities through the same hash). */
-  private[graft] def survivors(batch: DataFrame, dir: String, epochId: Long,
+  /** One VERDICT row per batch doc (all original columns plus `phash`,
+    * `dup_of` and `reason`; a null reason means admitted). `mediaCol`
+    * is a string payload (the stub codec convention of qm1) or a raw
+    * BinaryType payload (round-17: [[graft.functions.PhashExpr]] hashes
+    * bytes natively — unsigned byte intensities, `length()` = byte
+    * count — so real image/frame columns need no transcode; a real
+    * deployment feeds decoded block intensities through the same hash).
+    *
+    * Decided and attributed in one pass, like [[IngestDedup.verdicts]]:
+    * `media_batch` (an exact-hash copy of a smaller batch-mate — dup_of
+    * = that mate, the collapse's min doc_id — or the smallest batch-mate
+    * inside the Hamming ball) beats `media_corpus` (dup_of = the
+    * smallest admitted owner from the index). A dup_of may name a
+    * batch-mate a LATER membrane rejects — [[MultimodalIngest]] resolves
+    * cross-membrane chains before the write. */
+  private[graft] def verdicts(batch: DataFrame, dir: String, epochId: Long,
       mediaCol: String = "media",
       maxHamming: Int = DefaultMaxHamming,
       bandBits: Int = 8): DataFrame = {
     val s = batch.sparkSession
     checkBandBits(s, dir, bandBits)
-    val ph = Multimodal.phashWide(
-      batch.select(col("doc_id"), col(mediaCol).as("text")), hashBits(bandBits))
-    val keyed = batch.join(ph, Seq("doc_id"), "left")
-      .localCheckpoint() // one micro-batch; probed + filtered below
+    val nBits = hashBits(bandBits)
+    // unhashable payloads (shorter than the block count) carry a null
+    // phash and pass unfiltered. Exact-hash dups collapse to the min
+    // doc_id first (floods of identical payloads never reach pairwise
+    // work); the window groups all null hashes together, harmlessly
+    val keyed = batch
+      .withColumn("phash", when(length(col(mediaCol)) >= nBits,
+        graft.functions.GraftFunctions.phash_blocks(col(mediaCol), nBits)))
+      .withColumn("first", min(col("doc_id")).over(Window.partitionBy("phash")))
+      .localCheckpoint() // one micro-batch; probed + attributed below
     val hashed = keyed.filter(col("phash").isNotNull)
 
-    // 1. exact-hash dups collapse to the min doc_id (floods of
-    // identical payloads never reach pairwise work)
-    val firstPerHash = hashed.groupBy(col("phash")).agg(min(col("doc_id")).as("doc_id"))
-    val exactFresh = hashed.join(firstPerHash, Seq("phash", "doc_id"))
-    val bands = exactFresh.select(col("doc_id"), col("phash"),
-        explode(bandCol(bandBits)).as("bk"))
-      .localCheckpoint() // batch-bounded; feeds in-batch pairs + probe
+    // 1. exact-hash copies lose to the collapse's min doc_id
+    val exactDups = hashed.filter(col("doc_id") =!= col("first"))
+      .select(col("doc_id"), lit(1).as("rank"), col("first").as("dup_of"))
+    val bands = hashed.filter(col("doc_id") === col("first"))
+      .select(col("doc_id"), col("phash"), explode(bandCol(bandBits)).as("bk"))
 
     // 2. in-batch near-dup: distinct hashes pair per band bucket,
     // verified at the exact distance (batch-bounded work)
@@ -125,7 +138,8 @@ object MediaIngest {
     val inBatch = a.join(b, col("a.bk") === col("b.bk")
         && col("b.doc_id") < col("a.doc_id"))
       .filter(expr(s"bit_count(a.phash ^ b.phash) <= $maxHamming"))
-      .select(col("a.doc_id").as("doc_id")).distinct()
+      .select(col("a.doc_id").as("doc_id"), lit(1).as("rank"),
+        col("b.doc_id").as("dup_of"))
 
     // 3. vs corpus: bounded IN pushed to the index scan — constant
     // (≤ 1024 keys) at 8-bit bands; at 16-bit the distinct band set is
@@ -133,111 +147,40 @@ object MediaIngest {
     // skipped and the (still map-side) broadcast band join carries the
     // probe alone, mirroring the text membrane's regime split.
     // Distance is verified map-side either way.
-    val corpusHits = readIfExists(s, s"$dir/media_idx") match {
+    val corpus = IngestDedup.readIfExists(s, s"$dir/media_idx") match {
       case Some(idx0) =>
-        val idx = if (idx0.columns.contains("epoch"))
-          idx0.filter(col("epoch") < epochId) else idx0
-        val batchRows = exactFresh.count()
-        if (batchRows > IngestDedup.broadcastKeyLimit(s))
-          idx.select(col("bk"), col("phash").as("c_phash"))
-            .join(bands, Seq("bk"))
-            .filter(expr(s"bit_count(phash ^ c_phash) <= $maxHamming"))
-            .select(col("doc_id")).distinct()
-        else {
-          // distinct band keys ≤ min(4·batch, 4·2^bits): at 8-bit the
-          // band space itself bounds the IN at 1024 literals for ANY
-          // batch; at 16-bit the IN is only worth pushing while the
-          // batch keeps it under the trickle limit
-          val bkUpper = math.min(4 * batchRows, 4L << bandBits)
-          val pre =
-            if (bkUpper <= IngestDedup.isinKeyLimit(s)) {
-              val bks = bands.select("bk").distinct()
-                .collect().map(_.getInt(0)).toSeq
-              if (bks.isEmpty) idx.limit(0)
-              else idx.filter(col("bk").isin(bks: _*))
-            } else idx
-          pre.select(col("bk"), col("phash").as("c_phash"))
-            .join(broadcast(bands), Seq("bk"))
-            .filter(expr(s"bit_count(phash ^ c_phash) <= $maxHamming"))
-            .select(col("doc_id")).distinct()
-        }
-      case None => s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+        val idx = (if (idx0.columns.contains("epoch"))
+          idx0.filter(col("epoch") < epochId) else idx0)
+          .select(col("bk"), col("phash").as("c_phash"), col("doc_id").as("dup_src"))
+        val batchRows = hashed.filter(col("doc_id") === col("first")).count()
+        val hits =
+          if (batchRows > IngestDedup.broadcastKeyLimit(s)) idx.join(bands, Seq("bk"))
+          else {
+            // distinct band keys ≤ min(4·batch, 4·2^bits): at 8-bit the
+            // band space itself bounds the IN at 1024 literals for ANY
+            // batch; at 16-bit the IN is only worth pushing while the
+            // batch keeps it under the trickle limit. Exact-hash copies
+            // carry their min's bands, so every hashed row's keys are
+            // exactly the probed set
+            val bkUpper = math.min(4 * batchRows, 4L << bandBits)
+            val pre =
+              if (bkUpper <= IngestDedup.isinKeyLimit(s)) {
+                val bks = hashed.select(explode(bandCol(bandBits))).distinct()
+                  .collect().map(_.getInt(0)).toSeq
+                if (bks.isEmpty) idx.limit(0)
+                else idx.filter(col("bk").isin(bks: _*))
+              } else idx
+            pre.join(broadcast(bands), Seq("bk"))
+          }
+        hits.filter(expr(s"bit_count(phash ^ c_phash) <= $maxHamming"))
+          .select(col("doc_id"), lit(2).as("rank"), col("dup_src").as("dup_of"))
+      case None => IngestDedup.noClaims(s)
     }
 
-    val keepIds = exactFresh
-      .join(inBatch.union(corpusHits).distinct(), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"))
-      .union(keyed.filter(col("phash").isNull).select(col("doc_id")))
-    batch.join(keepIds, Seq("doc_id"))
-  }
-
-  /** `(doc_id, dup_of, reason)` attribution for this stage's
-    * rejections — `batch` is the stage INPUT (the text survivors in
-    * the composed pipeline), `keep` its output. Computed POST-HOC over
-    * the rejected set only, like [[IngestDedup.rejectionLedger]]:
-    * [[survivors]]' plan is untouched and the extra work is sized by
-    * the rejection count. First match wins: `media_batch` (the
-    * smallest batch-mate inside the Hamming ball — covers the
-    * exact-hash collapse, distance 0) then `media_corpus` (the
-    * smallest admitted owner from the index; its probe IN is bounded
-    * by the REJECTED band set, ≤ min(4·rejections, 4·2^bits) literals,
-    * skipped past the trickle limit like [[survivors]]' probe). A
-    * dup_of may name a batch-mate a LATER membrane rejects —
-    * [[MultimodalIngest]] resolves cross-membrane chains before the
-    * write. */
-  private[graft] def rejectionLedger(batch: DataFrame, dir: String,
-      epochId: Long, keep: DataFrame, mediaCol: String = "media",
-      maxHamming: Int = DefaultMaxHamming, bandBits: Int = 8): DataFrame = {
-    val s = batch.sparkSession
-    val rejected = batch.select(col("doc_id"))
-      .join(keep.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint() // batch-bounded; drives every probe below
-    import s.implicits._
-    val emptyLedger =
-      Seq.empty[(Long, Option[Long], String)].toDF("doc_id", "dup_of", "reason")
-    if (rejected.isEmpty) return emptyLedger
-
-    val bands = Multimodal.phashWide(
-        batch.select(col("doc_id"), col(mediaCol).as("text")), hashBits(bandBits))
-      .select(col("doc_id"), col("phash"), explode(bandCol(bandBits)).as("bk"))
-      .localCheckpoint() // witness side + probe side below
-    val rejBands = bands.join(rejected, Seq("doc_id")).localCheckpoint()
-    // in-batch: smallest batch-mate within the Hamming ball (an
-    // unhashable payload is never rejected, so every rejected doc has
-    // band rows here)
-    val inBatch = rejBands.as("a").join(bands.as("b"),
-        col("a.bk") === col("b.bk") && col("b.doc_id") < col("a.doc_id"))
-      .filter(expr(s"bit_count(a.phash ^ b.phash) <= $maxHamming"))
-      .groupBy(col("a.doc_id")).agg(min(col("b.doc_id")).as("dup_of"))
-      .select(col("doc_id"), col("dup_of"), lit("media_batch").as("reason"))
-    val rem = rejBands
-      .join(inBatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val corpusAttr = readIfExists(s, s"$dir/media_idx") match {
-      case Some(idx0) =>
-        val idx = if (idx0.columns.contains("epoch"))
-          idx0.filter(col("epoch") < epochId) else idx0
-        val nRej = rejected.count()
-        val pre =
-          if (math.min(4 * nRej, 4L << bandBits) <= IngestDedup.isinKeyLimit(s)) {
-            val bks = rem.select(col("bk")).distinct()
-              .collect().map(_.getInt(0)).toSeq
-            if (bks.isEmpty) idx.limit(0)
-            else idx.filter(col("bk").isin(bks: _*))
-          } else idx
-        pre.select(col("bk"), col("phash").as("c_phash"),
-            col("doc_id").as("dup_src"))
-          .join(broadcast(rem), Seq("bk"))
-          .filter(expr(s"bit_count(phash ^ c_phash) <= $maxHamming"))
-          .groupBy(col("doc_id")).agg(min(col("dup_src")).as("dup_of"))
-          .select(col("doc_id"), col("dup_of"), lit("media_corpus").as("reason"))
-      case None => emptyLedger
-    }
-    val attributed = inBatch.unionByName(corpusAttr)
-    val unattributed = rejected
-      .join(attributed.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit(null).cast("long").as("dup_of"),
-        lit("unknown").as("reason")) // can't-happen guard, loud in specs
-    attributed.unionByName(unattributed)
+    keyed.drop("first").join(
+      IngestDedup.firstClaim(exactDups.unionByName(inBatch).unionByName(corpus),
+        "doc_id", Seq("media_batch", "media_corpus")),
+      Seq("doc_id"), "left")
   }
 
   /** The index rows for a set of ADMITTED docs — one (bk, phash,
@@ -260,7 +203,8 @@ object MediaIngest {
   def ingestBatch(batch: DataFrame, dir: String, epochId: Long,
       mediaCol: String = "media",
       maxHamming: Int = DefaultMaxHamming, bandBits: Int = 8): Unit = {
-    val keep = survivors(batch, dir, epochId, mediaCol, maxHamming, bandBits)
+    val keep = verdicts(batch, dir, epochId, mediaCol, maxHamming, bandBits)
+      .filter(col("reason").isNull).drop("phash", "dup_of", "reason")
       .localCheckpoint()
     keep.write.mode(SaveMode.Overwrite).parquet(s"$dir/corpus/epoch=$epochId")
     indexRows(keep, mediaCol, bandBits)
@@ -276,7 +220,4 @@ object MediaIngest {
       EpochFold.fold(s, s"$dir/media_idx", upTo, targetBytes, Seq("bk"))
       EpochFold.fold(s, s"$dir/corpus", upTo, targetBytes)
     }
-
-  private def readIfExists(s: SparkSession, path: String): Option[DataFrame] =
-    if (EpochFold.hasDataFiles(s, path)) Some(s.read.parquet(path)) else None
 }

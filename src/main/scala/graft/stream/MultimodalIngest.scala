@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   *   1. text: exact (content hash) + near-dup (MinHash/LSH bands)
   *      against batch-mates and the accumulated corpus
-  *      ([[IngestDedup.survivors]]);
+  *      ([[IngestDedup.verdicts]]);
   *   1a. quality (when a frozen LM model dir is supplied): dedup
   *      survivors under the reference model's 2-bits-per-bigram line
   *      are rejected with ledger reason `lm`
@@ -18,10 +18,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   1b. media (when the batch carries a `media` payload column):
   *      perceptual near-dup — qm3's 32-bit average-hash within
   *      Hamming distance 3, banded candidates, constant-bounded index
-  *      probe ([[MediaIngest.survivors]]) — over the text survivors;
+  *      probe ([[MediaIngest.verdicts]]) — over the text survivors;
   *   2. embedding: cosine-at-tau against batch-mates and the
   *      accumulated corpus over the IVF cell layout
-  *      ([[EmbedIngest.survivors]]), evaluated on the earlier stages'
+  *      ([[EmbedIngest.verdicts]]), evaluated on the earlier stages'
   *      survivors — a document is admitted iff it passes ALL.
   *
   * The two membranes share ONE epoch id (the foreachBatch batch id) and
@@ -161,12 +161,15 @@ object MultimodalIngest {
     Seq("corpus", "exact_idx", "band_idx")
       .foreach(t => EpochFold.migrateLegacyFlat(s, s"$dir/text/$t"))
 
-    val nIn = batch.count()
     val hasMedia = batch.columns.contains("media")
-    // stage 1 — text membrane (cheap hash work first, so the later
-    // stages only ever see text-novel docs)
-    val dedupKeep = IngestDedup.survivors(batch, s"$dir/text", epochId)
-      .localCheckpoint() // bounded (one micro-batch); feeds the gate + ledger
+    // each stage returns one VERDICT row per input doc — decided and
+    // attributed by the same probes — and is checkpointed once: the
+    // next stage, the ledger and the metrics all read that one
+    // materialization. Stage 1 — text membrane (cheap hash work first,
+    // so the later stages only ever see text-novel docs)
+    val textV = IngestDedup.verdicts(batch, s"$dir/text", epochId)
+      .localCheckpoint() // bounded (one micro-batch)
+    val dedupKeep = textV.filter(col("reason").isNull).drop("dup_of", "reason")
     // stage 1a — frozen-LM quality gate over the dedup survivors
     // (quality scored AT ADMISSION; after dedup so the admitted set
     // equals the batch pipeline's — IngestDedup.ingestBatch's contract
@@ -182,65 +185,61 @@ object MultimodalIngest {
     }
     // stage 1b — perceptual membrane over the text survivors (only
     // when the batch carries a media payload column)
-    val mediaKeep =
-      if (hasMedia)
-        MediaIngest.survivors(textKeep, s"$dir/media", epochId,
-            bandBits = mediaBandBits)
-          .localCheckpoint()
-      else textKeep
+    val mediaV = if (hasMedia) Some(MediaIngest.verdicts(textKeep, s"$dir/media",
+        epochId, bandBits = mediaBandBits).localCheckpoint()) else None
+    val mediaKeep = mediaV.map(_.filter(col("reason").isNull)
+        .drop("phash", "dup_of", "reason")).getOrElse(textKeep)
     // stage 2 — embedding membrane over the earlier survivors; its
-    // output IS the admitted set (embedKeep ⊆ mediaKeep ⊆ textKeep)
-    val embedKeep = EmbedIngest.survivors(
+    // admitted rows are the cells store's rows
+    val embedV = EmbedIngest.verdicts(
         mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
         s"$dir/embed", epochId, tau, nProbe)
-      .localCheckpoint() // feeds the cells write and the id filter below
+      .localCheckpoint()
+    // the admitted documents, materialized once for the four writes below
     val keep = mediaKeep.join(
-      broadcast(embedKeep.select(col("vec_id").as("doc_id"))), Seq("doc_id"))
+        broadcast(EmbedIngest.admitted(embedV).select(col("vec_id").as("doc_id"))),
+        Seq("doc_id"))
+      .localCheckpoint()
 
-    // the per-doc rejection ledger, spanning ALL membranes: each
-    // stage attributes its own rejections post-hoc (sized by the
-    // rejection count, not the batch), then dup_of chains are resolved
-    // ACROSS membranes — a text loser whose batch winner the embedding
-    // stage later rejects must point at that winner's terminal
-    // admitted target, so every dup_of names an ADMITTED doc and
-    // [[clusters]] can roll the composite up without a batch rebuild.
-    // Committed into this epoch's partition like every store — replays
-    // overwrite, exactly-once.
-    val dupLedger =
-      IngestDedup.rejectionLedger(batch, s"$dir/text", epochId, dedupKeep)
-    // lm rejections are terminal rows (dup_of = null — a quality drop
-    // has no content owner); a dup chain MAY therefore end at an
-    // lm-rejected doc, the one documented exception to dup_of naming
-    // an admitted doc (the content's owner was dropped for quality —
-    // that cluster simply has no admitted member)
-    val textLedger = lmRej.map(r => dupLedger.unionByName(
-        r.select(col("doc_id"), lit(null).cast("long").as("dup_of"),
-          lit("lm").as("reason"))))
-      .getOrElse(dupLedger)
-    val mediaLedger =
-      if (hasMedia)
-        MediaIngest.rejectionLedger(textKeep, s"$dir/media", epochId, mediaKeep,
-          bandBits = mediaBandBits)
-      else textLedger.limit(0)
-    val embedLedger = EmbedIngest.rejectionLedger(
-        mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
-        s"$dir/embed", epochId, embedKeep, tau, nProbe)
-      .withColumnRenamed("vec_id", "doc_id")
-    IngestDedup.resolveChains(
-        textLedger.unionByName(mediaLedger).unionByName(embedLedger))
+    // the per-doc rejection ledger, spanning ALL membranes: the union of
+    // every stage's rejected verdict rows, dup_of chains resolved ACROSS
+    // membranes — a text loser whose batch winner the embedding stage
+    // later rejects must point at that winner's terminal admitted
+    // target, so every dup_of names an ADMITTED doc and [[clusters]]
+    // can roll the composite up without a batch rebuild. lm rejections
+    // are terminal rows (dup_of = null — a quality drop has no content
+    // owner); a dup chain MAY therefore end at an lm-rejected doc, the
+    // one documented exception to dup_of naming an admitted doc (the
+    // content's owner was dropped for quality — that cluster simply has
+    // no admitted member). Committed into this epoch's partition like
+    // every store — replays overwrite, exactly-once.
+    val stageRows = Seq(IngestDedup.rejections(textV)) ++
+      lmRej.map(IngestDedup.lmRows) ++ mediaV.map(IngestDedup.rejections(_)) :+
+      IngestDedup.rejections(embedV, "vec_id")
+    IngestDedup.resolveChains(stageRows.reduce(_ unionByName _))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/ledger/epoch=$epochId")
 
-    // per-batch observability: which membrane rejected how much. The
-    // counts are near-free (the frames are already checkpointed) and
-    // the row commits into its own epoch partition like every store —
+    // per-batch observability: which membrane rejected how much — one
+    // aggregate over the checkpointed verdicts (every batch doc has one
+    // text verdict; a stage's rejections are its non-null reasons). The
+    // row commits into its own epoch partition like every store —
     // replays overwrite, so the ledger is exactly-once too.
-    val (nDedup, nText, nMedia, nAdmitted) =
-      (dedupKeep.count(), textKeep.count(), mediaKeep.count(), embedKeep.count())
+    def tally(stage: Int, v: DataFrame) = v.select(lit(stage).as("stage"), col("reason"))
+    val tallies = (Seq(tally(0, textV)) ++
+        lmRej.map(r => tally(1, r.select(lit("lm").as("reason")))) ++
+        mediaV.map(tally(2, _)) :+ tally(3, embedV))
+      .reduce(_ unionByName _)
+    def n(p: org.apache.spark.sql.Column) = count(when(p, lit(1)))
+    val rejected = col("reason").isNotNull
+    val row = tallies.agg(n(col("stage") === 0), n(col("stage") === 0 && rejected),
+        n(col("stage") === 1), n(col("stage") === 2 && rejected),
+        n(col("stage") === 3 && rejected), n(col("stage") === 3 && !rejected))
+      .head()
     import s.implicits._
     // batch_id is a DATA column (the epoch partition label moves when
     // the ledger folds; attribution must survive the fold)
-    Seq((epochId, nIn, nIn - nDedup, nDedup - nText, nText - nMedia,
-        nMedia - nAdmitted, nAdmitted))
+    Seq((epochId, row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3),
+        row.getLong(4), row.getLong(5)))
       .toDF("batch_id", "n_in", "n_text_rejected", "n_lm_rejected",
         "n_media_rejected", "n_embed_rejected", "n_admitted")
       .coalesce(1)
@@ -251,7 +250,7 @@ object MultimodalIngest {
     keep.drop("bands", "content_key")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/text/corpus/epoch=$epochId")
     // owner column alongside the key, like IngestDedup's indexes —
-    // probes prune it, rejection attribution reads it
+    // the probes read it back as the dup_of attribution
     keep.select(col("content_key"), col("doc_id"))
       .sortWithinPartitions("content_key")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/text/exact_idx/epoch=$epochId")
@@ -260,7 +259,7 @@ object MultimodalIngest {
       .filter(col("key").isNotNull)
       .sortWithinPartitions("key")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/text/band_idx/epoch=$epochId")
-    embedKeep
+    EmbedIngest.admitted(embedV)
       .write.mode(SaveMode.Overwrite).partitionBy("cell")
       .parquet(s"$dir/embed/cells/epoch=$epochId")
     // perceptual index rows for FULLY-admitted docs only, so the media

@@ -537,7 +537,7 @@ object Sinks {
   /** The batch rows whose logical key is absent from the index, for
     * batches of more than `isinKeyLimit` keys: the index probe is a
     * broadcast or sort-merge join (the regimes and `epoch < N`
-    * visibility of [[IngestDedup.survivors]]). */
+    * visibility of [[IngestDedup.verdicts]]). */
   private def csvDedupSurvivors(fresh: DataFrame, path: String, epochId: Long): DataFrame = {
     val spark = fresh.sparkSession
     val keyed = fresh.withColumn("nf_key", nfKey)

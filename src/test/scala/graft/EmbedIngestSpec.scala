@@ -129,9 +129,9 @@ class EmbedIngestSpec extends SparkSpec
       (3L, null.asInstanceOf[Seq[Float]])).toDF("vec_id", "embedding")
     EmbedIngest.ingestBatch(mixed, dir, epochId = 0, tau = 0.99)
     assert(ids(dir) == Seq(1L), "healthy row admitted, stray rows dropped")
-    val keep = EmbedIngest.survivors(mixed, dir, epochId = 1, tau = 0.99, nProbe = 4)
-    val led = EmbedIngest.rejectionLedger(mixed, dir, 1, keep, tau = 0.99, nProbe = 4)
-      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    val led = EmbedIngest.verdicts(mixed, dir, epochId = 1, tau = 0.99, nProbe = 4)
+      .filter(org.apache.spark.sql.functions.col("reason").isNotNull)
+      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[String]("reason")).toMap
     assert(led(2L) == "malformed" && led(3L) == "malformed", led.toString)
     assert(led(1L) == "embed_corpus", led.toString) // dup of its epoch-0 self
   }
@@ -216,7 +216,7 @@ class EmbedIngestSpec extends SparkSpec
     assert(EmbedIngest.cappedWitnesses(probes).count() ===
       EmbedIngest.InBatchWitnessCap.toLong,
       "pair space must be rows × cap, not rows²")
-    assert(EmbedIngest.inBatchLoserIds(probes, 0.99).count() === (n - 1).toLong,
+    assert(EmbedIngest.inBatchLosers(probes, 0.99).count() === (n - 1).toLong,
       "flood rejection is lossless under the one-sided cap")
 
     // end-to-end through the real ingest path (cap binding), replay

@@ -188,7 +188,7 @@ class IngestDedupSpec extends SparkSpec
       Seq((1L, base), (2L, other)).toDF("doc_id", "text"), s"$dir/out", epochId = 0)
     IngestDedup.ingestBatch(
       Seq((3L, uniq("px"))).toDF("doc_id", "text"), s"$dir/out", epochId = 1)
-    val plan = IngestDedup.survivors(
+    val plan = IngestDedup.verdicts(
         Seq((9L, base)).toDF("doc_id", "text"), s"$dir/out", epochId = 2)
       .queryExecution.executedPlan
     // the corpus-lifetime index must never be shuffled by a probe: every

@@ -72,9 +72,9 @@ class ProbeRegimeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def run(dir: String): (Seq[Long], SparkPlan) = {
-    val df = IngestDedup.survivors(
+    val df = IngestDedup.verdicts(
       probeBatch.toDF("doc_id", "text"), dir, epochId = 2)
-    (df.select("doc_id").as[Long].collect().sorted.toSeq,
+    (df.filter(df("reason").isNull).select("doc_id").as[Long].collect().sorted.toSeq,
       df.queryExecution.executedPlan)
   }
 
