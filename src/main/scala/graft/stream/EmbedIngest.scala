@@ -467,7 +467,7 @@ object EmbedIngest {
       .withColumn("cells", IvfIndex.nearestCells(col("embedding"), col("nrm"), nProbe,
         rounded = false))
       .drop("cs", "emb_key")
-      .localCheckpoint() // bounded: one micro-batch
+      .localCheckpoint(eager = false) // bounded: one micro-batch; filled by the guard
     // MISCONFIGURATION guard, enforced at BATCH level: a quantizer
     // whose dims match nothing in the batch usually means the caller
     // pointed at the wrong index dir — every probe would EXCLUDE every
@@ -480,9 +480,10 @@ object EmbedIngest {
     // low-traffic stream would wedge it permanently. Established
     // corpus ⇒ earlier batches matched ⇒ the dim is right ⇒ this is a
     // bad BATCH: warn and let every row's verdict read `malformed`.
-    // The probe stops at the first matching row — one bounded lookup
-    // on the already-checkpointed frame per healthy batch.
-    if (keyed.filter(size(col("embedding")) === cdim).limit(1).isEmpty && !keyed.isEmpty) {
+    // One job over the whole batch, which also fills the checkpoint:
+    // the distinct values of the dim-match flag (at most three).
+    val dimMatch = Sinks.distinctUpTo(keyed.select(size(col("embedding")) === cdim), 3)
+    if (!dimMatch.contains(true) && dimMatch.nonEmpty) {
       // the bring-up throw is OPT-OUT (round-12 ADVICE): foreachBatch
       // replays the same batch on every restart, so if the FIRST
       // micro-batch of a genuinely new stream is all-garbage (not a
@@ -531,10 +532,10 @@ object EmbedIngest {
       else {
         // copies probe their min's cells, so every probed row's cells
         // are exactly the touched set
-        val touched = probed.select(explode(col("cells"))).distinct()
-          .collect().map(_.getLong(0)) // ≤ nCells ids — bounded literal
+        val touched = Sinks.distinctUpTo(probed.select(explode(col("cells"))),
+          Int.MaxValue).toSeq // ≤ nCells ids — bounded literal
         val corpus = s.read.parquet(s"$dir/cells")
-          .filter(col("epoch") < epochId && col("cell").isin(touched.toSeq: _*))
+          .filter(col("epoch") < epochId && col("cell").isin(touched: _*))
           .select(col("cell"), col("vec_id").as("dup_src"),
             col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
         probes.join(corpus, Seq("cell"))

@@ -113,7 +113,7 @@ object IngestDedup {
     Seq("corpus", "exact_idx", "band_idx")
       .foreach(t => EpochFold.migrateLegacyFlat(s, s"$dir/$t"))
     val verdict = verdicts(batch, dir, epochId)
-      .localCheckpoint() // consumed by the lm gate, the ledger, and the writes
+      .localCheckpoint(eager = false) // filled by the lm gate or the first write
     val dedupKeep = verdict.filter(col("reason").isNull).drop("dup_of", "reason")
     val lmRej = lmModelDir.map(m => lmRejects(dedupKeep, m).localCheckpoint())
     val keep = lmRej match {
@@ -256,8 +256,10 @@ object IngestDedup {
       .withColumn("content_key", md5(col("text").cast("binary")))
       .withColumn("bands", Dedup.bandKeys(col("text")))
       .withColumn("winner", min(col("doc_id")).over(Window.partitionBy("content_key")))
-      .localCheckpoint() // small (one micro-batch); read multiple times below
-    val batchRows = keyed.count() // cheap: counts the checkpoint blocks
+      .localCheckpoint(eager = false) // small (one micro-batch); read multiple times below
+    // one job, which also fills the checkpoint (Dataset.count would add
+    // an aggregate exchange and a second job)
+    val batchRows = keyed.rdd.count()
     val isinLimit = isinKeyLimit(s)
     val bcastLimit = broadcastKeyLimit(s)
     // the trickle IN lists, in one collect: the batch's content keys and
@@ -400,8 +402,8 @@ object IngestDedup {
   private[stream] def resolveChains(
       rej: DataFrame,
       driverLimit: Long = ChainResolveDriverLimit): DataFrame = {
-    val cur0 = rej.localCheckpoint()
-    if (cur0.count() <= driverLimit) {
+    val cur0 = rej.localCheckpoint(eager = false) // filled by the count
+    if (cur0.rdd.count() <= driverLimit) {
       val rows = cur0.select(col("doc_id"), col("dup_of"), col("reason")).collect()
       val dupOf = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
       rows.foreach(r => dupOf.put(r.getLong(0),

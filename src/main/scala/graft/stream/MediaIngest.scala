@@ -123,7 +123,7 @@ object MediaIngest {
       .withColumn("phash", when(length(col(mediaCol)) >= nBits,
         graft.functions.GraftFunctions.phash_blocks(col(mediaCol), nBits)))
       .withColumn("first", min(col("doc_id")).over(Window.partitionBy("phash")))
-      .localCheckpoint() // one micro-batch; probed + attributed below
+      .localCheckpoint(eager = false) // one micro-batch; probed + attributed below
     val hashed = keyed.filter(col("phash").isNotNull)
 
     // 1. exact-hash copies lose to the collapse's min doc_id
@@ -152,7 +152,7 @@ object MediaIngest {
         val idx = (if (idx0.columns.contains("epoch"))
           idx0.filter(col("epoch") < epochId) else idx0)
           .select(col("bk"), col("phash").as("c_phash"), col("doc_id").as("dup_src"))
-        val batchRows = hashed.filter(col("doc_id") === col("first")).count()
+        val batchRows = hashed.filter(col("doc_id") === col("first")).rdd.count()
         val hits =
           if (batchRows > IngestDedup.broadcastKeyLimit(s)) idx.join(bands, Seq("bk"))
           else {
@@ -165,8 +165,8 @@ object MediaIngest {
             val bkUpper = math.min(4 * batchRows, 4L << bandBits)
             val pre =
               if (bkUpper <= IngestDedup.isinKeyLimit(s)) {
-                val bks = hashed.select(explode(bandCol(bandBits))).distinct()
-                  .collect().map(_.getInt(0)).toSeq
+                val bks = Sinks.distinctUpTo(hashed.select(explode(bandCol(bandBits))),
+                  Int.MaxValue).toSeq
                 if (bks.isEmpty) idx.limit(0)
                 else idx.filter(col("bk").isin(bks: _*))
               } else idx
@@ -205,7 +205,7 @@ object MediaIngest {
       maxHamming: Int = DefaultMaxHamming, bandBits: Int = 8): Unit = {
     val keep = verdicts(batch, dir, epochId, mediaCol, maxHamming, bandBits)
       .filter(col("reason").isNull).drop("phash", "dup_of", "reason")
-      .localCheckpoint()
+      .localCheckpoint(eager = false) // filled by the first write
     keep.write.mode(SaveMode.Overwrite).parquet(s"$dir/corpus/epoch=$epochId")
     indexRows(keep, mediaCol, bandBits)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/media_idx/epoch=$epochId")

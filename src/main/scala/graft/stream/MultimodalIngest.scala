@@ -168,7 +168,7 @@ object MultimodalIngest {
     // materialization. Stage 1 — text membrane (cheap hash work first,
     // so the later stages only ever see text-novel docs)
     val textV = IngestDedup.verdicts(batch, s"$dir/text", epochId)
-      .localCheckpoint() // bounded (one micro-batch)
+      .localCheckpoint(eager = false) // bounded (one micro-batch)
     val dedupKeep = textV.filter(col("reason").isNull).drop("dup_of", "reason")
     // stage 1a — frozen-LM quality gate over the dedup survivors
     // (quality scored AT ADMISSION; after dedup so the admitted set
@@ -186,7 +186,7 @@ object MultimodalIngest {
     // stage 1b — perceptual membrane over the text survivors (only
     // when the batch carries a media payload column)
     val mediaV = if (hasMedia) Some(MediaIngest.verdicts(textKeep, s"$dir/media",
-        epochId, bandBits = mediaBandBits).localCheckpoint()) else None
+        epochId, bandBits = mediaBandBits).localCheckpoint(eager = false)) else None
     val mediaKeep = mediaV.map(_.filter(col("reason").isNull)
         .drop("phash", "dup_of", "reason")).getOrElse(textKeep)
     // stage 2 — embedding membrane over the earlier survivors; its
@@ -194,12 +194,12 @@ object MultimodalIngest {
     val embedV = EmbedIngest.verdicts(
         mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
         s"$dir/embed", epochId, tau, nProbe)
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     // the admitted documents, materialized once for the four writes below
     val keep = mediaKeep.join(
         broadcast(EmbedIngest.admitted(embedV).select(col("vec_id").as("doc_id"))),
         Seq("doc_id"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
 
     // the per-doc rejection ledger, spanning ALL membranes: the union of
     // every stage's rejected verdict rows, dup_of chains resolved ACROSS

@@ -196,7 +196,7 @@ object Sinks {
     * at most `cap` of them and the driver merges task results into one
     * set as they arrive, capped again: one job, no shuffle, and the
     * driver holds at most `cap` values besides a task result in flight. */
-  private def distinctUpTo(df: DataFrame, cap: Int): collection.Set[Any] = {
+  private[stream] def distinctUpTo(df: DataFrame, cap: Int): collection.Set[Any] = {
     def add(s: mutable.HashSet[Any], v: Any) = { if (s.size < cap) s += v; s }
     df.rdd.map(_.get(0)).aggregate(mutable.HashSet.empty[Any])(add, _.foldLeft(_)(add))
   }
