@@ -347,13 +347,11 @@ object IngestDedup {
     // one verdict per claimed doc (≤ batch rows): broadcast back onto
     // the batch unless the batch is bulk-sized
     val claimed = firstClaim(exactBatch.unionByName(exactCorpus).unionByName(nearBatch)
-      .unionByName(nearCorpus), "doc_id", TextReasons)
+      .unionByName(nearCorpus), "doc_id",
+      Seq("exact_batch", "exact_corpus", "near_batch", "near_corpus"))
     keyed.drop("winner").join(if (batchRows > bcastLimit) claimed else broadcast(claimed),
       Seq("doc_id"), "left")
   }
-
-  /** Text-stage ledger reasons, by claim rank (see [[verdicts]]). */
-  private val TextReasons = Seq("exact_batch", "exact_corpus", "near_batch", "near_corpus")
 
   /** The owning doc_id column of an index (null before the owner column
     * existed — such an index still probes, and attributes a null dup_of). */
