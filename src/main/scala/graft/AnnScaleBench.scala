@@ -21,7 +21,7 @@ import graft.functions.GraftFunctions
   *     sample exactly like qs5's 1%-sliver design.
   *   - **planted-twin hit rate** for ~200 out-of-corpus queries: each
   *     twin is a base vector nudged by ±ε·‖v‖/√d per coordinate
-  *     (IvfScaleBench's seed-free construction, cos ≈ 0.949), NOT
+  *     ([[plantTwins]], cos ≈ 0.949; IvfScaleBench plants the same), NOT
   *     inserted into the index; its true nearest neighbor is its base
   *     with near certainty (cross-replica cosines decorrelate to the
   *     random baseline — ScaleGen's isometry note). `twin@1` = the
@@ -39,31 +39,42 @@ object AnnScaleBench {
 
   private val Dim = 64
   private val K = 10
-  /** cos ≈ 1/√(1+ε²) ≈ 0.9487 at ε = 1/3 — IvfScaleBench's pin. */
+  /** Perturbation scale: cos ≈ 1/√(1+ε²) ≈ 0.9487 at ε = 1/3. */
   private val Eps = 1.0 / 3.0
 
-  private def withNrm(df: DataFrame): DataFrame =
+  private[graft] def withNrm(df: DataFrame): DataFrame =
     df.withColumn("nrm",
       sqrt(GraftFunctions.vec_dot(col("embedding"), col("embedding"))))
+
+  /** `df`'s embeddings drifted along coordinate 0 by `bias`·‖v‖. */
+  private def drifted(df: DataFrame, bias: Float): DataFrame =
+    withNrm(df).select(col("vec_id"),
+      concat(array((element_at(col("embedding"), 1) +
+          lit(bias) * col("nrm").cast("float")).cast("float")),
+        org.apache.spark.sql.functions.slice(col("embedding"), 2, Dim - 1))
+        .as("embedding"))
 
   /** Recursive local delete for the mutable-arm index dirs (the aged
     * index and the handoff membrane must start each RUN fresh). Local
     * java.io is fine here — the rungs live under a local scale dir by
-    * contract, like [[main]]'s dirBytes walker. */
+    * contract, like [[run]]'s dirBytes walker. */
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(rmTree))
     f.delete()
     ()
   }
 
-  /** IvfScaleBench.plantTwins, re-stated for the QUERY side: the twin
-    * keeps the base's id + plantOffset so the expected neighbor is
-    * recoverable by subtraction. Seed-free (hash-parity signs).
-    * private[graft] so AnnRecallSpec pins the fixture-scale floor with
-    * the same construction the rung bench measures. */
+  /** Deterministic dup-grade twins: for each base (`vec_id` ≡ `residue`
+    * mod `baseMod`) a copy at `plantOffset + vec_id`, so the expected
+    * neighbor is recoverable by subtraction, whose every coordinate is
+    * nudged by ±ε·‖v‖/√d, the sign drawn from `hash(vec_id, j)` parity —
+    * seed-free, so reruns plant the same twins. Planted pair cosine
+    * concentrates at 1/√(1+ε²). `emb` carries `nrm` ([[withNrm]]).
+    * AnnRecallSpec pins the fixture-scale floor with the same
+    * construction the rung benches measure. */
   private[graft] def plantTwins(emb: DataFrame, baseMod: Long,
-      plantOffset: Long, eps: Double = Eps): DataFrame = {
-    val bases = emb.filter(pmod(col("vec_id"), lit(baseMod)) === 3)
+      plantOffset: Long, eps: Double = Eps, residue: Int = 3): DataFrame = {
+    val bases = emb.filter(pmod(col("vec_id"), lit(baseMod)) === residue)
     bases.select(
       (col("vec_id") + lit(plantOffset)).as("vec_id"),
       array((0 until Dim).map { j =>
@@ -74,28 +85,11 @@ object AnnScaleBench {
       }: _*).as("embedding"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
-    val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
-      .split(",").map(_.trim.toInt).toSeq.sorted
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime()
-      val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val srcDir = Bench.sfDir()
+    val outRoot = Bench.scaleDir
+    val scales = Bench.scales("1,3,10")
+    val reps = Bench.benchReps(2)
 
     // opt-in extra arms (SPARK_GRAFT_ANN_ARMS=aged,handoff): the aging
     // audit mutates ONE index dir across rungs and the handoff arm
@@ -120,14 +114,14 @@ object AnnScaleBench {
 
       val nCells = math.ceil(math.sqrt(nVecs.toDouble)).toInt
       val idxDir = s"$dir/ivf_sqrtn"
-      val (tBuild, _) = time {
+      val (tBuild, _) = Bench.timed {
         IvfIndex.build(Tables.embeddings(spark, dir), idxDir, nCells)
       }
       // the multi-assignment lever: same quantizer, every vector stored
       // in its 2 nearest cells — 2×p chances for a query to meet its
       // neighbor, at 2× cells storage (IvfIndex.build's scaladoc trade)
       val idx2Dir = s"$dir/ivf_sqrtn_q2"
-      val (tBuild2, _) = time {
+      val (tBuild2, _) = Bench.timed {
         IvfIndex.build(Tables.embeddings(spark, dir), idx2Dir, nCells, assign = 2)
       }
       // the int8 storage lever at the SAME q=2 layout: cells carry
@@ -135,7 +129,7 @@ object AnnScaleBench {
       // integer-dot funnel + RescoreCap float rescore must keep the
       // twin/recall numbers of the float q2 arm (VERDICT r11 ask #2)
       val idx8Dir = s"$dir/ivf_sqrtn_q2i8"
-      val (tBuild8, _) = time {
+      val (tBuild8, _) = Bench.timed {
         IvfIndex.build(Tables.embeddings(spark, dir), idx8Dir, nCells,
           assign = 2, int8 = true)
       }
@@ -170,10 +164,7 @@ object AnnScaleBench {
       // other); `run` is the search under measurement
       def searchArm(run: org.apache.spark.sql.DataFrame
           => org.apache.spark.sql.DataFrame): String = {
-        var rows = -1L
-        val ts = (1 to math.max(1, reps)).map { _ =>
-          time { rows = run(sampleQ).queryExecution.toRdd.count() }._1
-        }
+        val ts = Bench.timeReps(s"search at x$n", reps)(Bench.execute(run(sampleQ))).map(_._2)
         val found = run(sampleQ).select(col("qid"), col("neighbor_id"))
         // recall@k: intersection size per query / k, averaged over the
         // sample (queries whose exact list is shorter than k — only
@@ -189,8 +180,8 @@ object AnnScaleBench {
           .filter(col("neighbor_id") === col("expected"))
         val twinAt1 = twinFound.filter(col("rank") === 1).count()
         val twinAtK = twinFound.count()
-        s"""{"cold":${d3(ts.head)},"steady":${d3(ts.min)},""" +
-          s""""recall_at_$K":${d3(recallAtK)},""" +
+        s"""{"cold":${Bench.num(ts.head)},"steady":${Bench.num(ts.min)},""" +
+          s""""recall_at_$K":${Bench.num(recallAtK)},""" +
           s""""twin_at_1":$twinAt1,"twin_at_$K":$twinAtK}"""
       }
 
@@ -242,15 +233,15 @@ object AnnScaleBench {
         extraArms ++= s""","aged_p$p8":${searchArm(qs =>
           IvfIndex.search(spark, agedDir, qs, K, p8))}"""
         extraArms ++= s""","aged_occ_max":${occ.getLong(0)},""" +
-          s""""aged_occ_avg":${d3(occ.getDouble(1))},""" +
-          s""""aged_frac":${d3((n - firstRung).toDouble / n)}"""
+          s""""aged_occ_avg":${Bench.num(occ.getDouble(1))},""" +
+          s""""aged_frac":${Bench.num((n - firstRung).toDouble / n)}"""
         if (n == scales.last) {
           // the cadence answer: price the rebuild, prove recall returns
-          val (tRb, _) = time {
+          val (tRb, _) = Bench.timed {
             IvfIndex.rebuild(spark, agedDir,
               Tables.embeddings(spark, dir).select("vec_id", "embedding"))
           }
-          extraArms ++= s""","rebuild_sec":${d3(tRb)},"rebuilt_p$p8":${
+          extraArms ++= s""","rebuild_sec":${Bench.num(tRb)},"rebuilt_p$p8":${
             searchArm(qs => IvfIndex.search(spark, agedDir, qs, K, p8))}"""
         }
       }
@@ -277,39 +268,32 @@ object AnnScaleBench {
         val half = embAll.filter(pmod(col("vec_id"), lit(2)) === 0)
         val cH = math.ceil(math.sqrt(half.count().toDouble)).toInt
         IvfIndex.build(half, skewDir, cH)
-        val drifted = (1 to 3).map { e =>
-          val sl = embAll.filter(pmod(col("vec_id"), lit(8)) === lit(2 * e - 1))
-          withNrm(sl).select(col("vec_id"),
-            concat(array((element_at(col("embedding"), 1) +
-                lit(0.5f * e) * col("nrm").cast("float")).cast("float")),
-              org.apache.spark.sql.functions.slice(col("embedding"), 2, Dim - 1))
-              .as("embedding"))
+        val slices = (1 to 3).map { e =>
+          drifted(embAll.filter(pmod(col("vec_id"), lit(8)) === lit(2 * e - 1)), 0.5f * e)
             .localCheckpoint()
         }
-        drifted.foreach(dlt => IvfIndex.appendBatch(spark, skewDir, dlt))
-        val corpusNow = (half +: drifted).reduce(_ unionByName _)
+        slices.foreach(dlt => IvfIndex.appendBatch(spark, skewDir, dlt))
+        val corpusNow = (half +: slices).reduce(_ unionByName _)
         val occ = spark.read.parquet(IvfIndex.cellsPath(spark, skewDir))
           .groupBy(col("cell")).agg(count(lit(1)).as("m"))
           .agg(max(col("m")), sum(col("m"))).head
         val occRatio = occ.getLong(0).toDouble / (occ.getLong(1).toDouble / cH)
-        val (tAged, _) = time {
-          IvfIndex.search(spark, skewDir, sampleQ, K, p8)
-            .queryExecution.toRdd.count()
+        val (tAged, _) = Bench.timed {
+          Bench.execute(IvfIndex.search(spark, skewDir, sampleQ, K, p8))
         }
         val grownDue = IvfIndex.rebuildIfGrown(spark, skewDir, corpusNow,
           factor = 2.0, skewFactor = 0)
-        val (tTrig, skewDue) = time {
+        val (tTrig, skewDue) = Bench.timed {
           IvfIndex.rebuildIfGrown(spark, skewDir, corpusNow, factor = 2.0)
         }
-        val (tRe, _) = time {
-          IvfIndex.search(spark, skewDir, sampleQ, K, p8)
-            .queryExecution.toRdd.count()
+        val (tRe, _) = Bench.timed {
+          Bench.execute(IvfIndex.search(spark, skewDir, sampleQ, K, p8))
         }
         extraArms ++= s""","skewidx":{"grown_due":$grownDue,""" +
-          s""""skew_due":$skewDue,"occ_ratio":${d3(occRatio)},""" +
-          s""""growth":${d3(occ.getLong(1).toDouble / half.count())},""" +
-          s""""search_aged_sec":${d3(tAged)},"trigger_and_rebuild_sec":${d3(tTrig)},""" +
-          s""""search_rebuilt_sec":${d3(tRe)}}"""
+          s""""skew_due":$skewDue,"occ_ratio":${Bench.num(occRatio)},""" +
+          s""""growth":${Bench.num(occ.getLong(1).toDouble / half.count())},""" +
+          s""""search_aged_sec":${Bench.num(tAged)},"trigger_and_rebuild_sec":${Bench.num(tTrig)},""" +
+          s""""search_rebuilt_sec":${Bench.num(tRe)}}"""
       }
 
       // ---- `semsweep` arm (round-16: the semantic-decontam eval-side
@@ -323,14 +307,7 @@ object AnnScaleBench {
       if (armsWanted("semsweep") && n == scales.last) {
         val emb0 = Tables.embeddings(spark, dir).select("vec_id", "embedding")
         val twinOffS = plantOffset * 100
-        val twins = withNrm(emb0.filter(pmod(col("vec_id"), lit(25)) === 0))
-          .select((col("vec_id") + lit(twinOffS)).as("vec_id"),
-            array((0 until Dim).map { j =>
-              (element_at(col("embedding"), j + 1) +
-                (pmod(hash(col("vec_id"), lit(j)), lit(2)) * 2 - 1).cast("float") *
-                  lit(0.25f) * (col("nrm") / lit(math.sqrt(Dim.toDouble))).cast("float"))
-                .cast("float")
-            }: _*).as("embedding"))
+        val twins = plantTwins(withNrm(emb0), 25, twinOffS, eps = 0.25, residue = 0)
         val enm2 = withNrm(emb0.unionByName(twins)).localCheckpoint()
         val scents = enm2.filter(pmod(col("vec_id"), lit(100)) === 7)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"),
@@ -339,16 +316,12 @@ object AnnScaleBench {
           col("vec_id") < twinOffS
         val nTwinS = twins.count()
         val sweep = Seq(1, 3, Dedup.ProbeCells, 10).distinct.map { pp =>
-          var hits = -1L
-          val ts = (1 to math.max(1, reps)).map { _ =>
-            time {
-              hits = graft.batch.Dedup.semanticPairs(enm2, isEvalS, scents, pp)
-                .filter(col("vec_id") >= twinOffS &&
-                  col("eid") === col("vec_id") - twinOffS)
-                .count()
-            }._1
-          }
-          s""""p$pp":{"planted_hits":$hits,"steady":${d3(ts.min)}}"""
+          val runs = Bench.timeReps(s"semsweep p$pp", reps)(
+            graft.batch.Dedup.semanticPairs(enm2, isEvalS, scents, pp)
+              .filter(col("vec_id") >= twinOffS &&
+                col("eid") === col("vec_id") - twinOffS)
+              .count())
+          s""""p$pp":{"planted_hits":${runs.last._1},"steady":${Bench.num(runs.map(_._2).min)}}"""
         }
         extraArms ++= s""","semsweep":{"n_twins":$nTwinS,${sweep.mkString(",")}}"""
       }
@@ -385,9 +358,8 @@ object AnnScaleBench {
         // p5-once-then-p15-once reads as "wider probes are faster"
         def timedHits(p: Int, flt: Option[org.apache.spark.sql.Column])
             : (Double, Long) = {
-          var h = 0L
-          val ts = (1 to math.max(1, reps)).map(_ => time { h = hitsAt(p, flt) }._1)
-          (ts.min, h)
+          val runs = Bench.timeReps(s"filtered p$p", reps)(hitsAt(p, flt))
+          (runs.map(_._2).min, runs.last._1)
         }
         val pF = Dedup.ProbeCells
         val (tP, hP) = timedHits(pF, Some(col("label") === 3))
@@ -395,7 +367,7 @@ object AnnScaleBench {
         val hU = hitsAt(pF, None)
         extraArms ++= s""","filtered":{"n_twins":$nTF,"p${pF}":$hP,""" +
           s""""p${3 * pF}":$h3P,"unfiltered_p$pF":$hU,""" +
-          s""""p${pF}_steady_sec":${d3(tP)},"p${3 * pF}_steady_sec":${d3(t3P)}}"""
+          s""""p${pF}_steady_sec":${Bench.num(tP)},"p${3 * pF}_steady_sec":${Bench.num(t3P)}}"""
       }
 
       // ---- `selsweep` arm (VERDICT r13 ask #4): the p-first rule's
@@ -426,21 +398,18 @@ object AnnScaleBench {
           val twinS = plantTwins(matched, bmS, plantOffset).localCheckpoint()
           val nT = twinS.count()
           def idxHits(p: Int): (Double, Long) = {
-            var h = 0L
-            val ts = (1 to math.max(1, reps)).map(_ => time {
-              h = IvfIndex.search(spark, idxFDir, twinS, K, p, Some(pred))
+            val runs = Bench.timeReps(s"selsweep $tag p$p", reps)(
+              IvfIndex.search(spark, idxFDir, twinS, K, p, Some(pred))
                 .withColumn("expected", col("qid") - lit(plantOffset))
                 .filter(col("neighbor_id") === col("expected") && col("rank") === 1)
-                .count()
-            }._1)
-            (ts.min, h)
+                .count())
+            (runs.map(_._2).min, runs.last._1)
           }
           // the fallback: score every matching row against the (tiny,
           // broadcast) query batch — no probe stage, exact over the
           // filter; same triple shape + GroupTopK as the index path
           def bruteHits(): (Double, Long) = {
-            var h = 0L
-            val ts = (1 to math.max(1, reps)).map(_ => time {
+            val runs = Bench.timeReps(s"selsweep $tag brute", reps) {
               val q = withNrm(twinS).select(col("vec_id").as("qid"),
                 col("embedding").as("qe"), col("nrm").as("qn"))
               val cand = matched.crossJoin(broadcast(q))
@@ -449,13 +418,13 @@ object AnnScaleBench {
                     / (col("qn") * col("nrm")), 6))
                 .select(col("qid").cast("long"), col("vec_id").cast("long"),
                   col("rcos").cast("double"))
-              h = graft.plans.GroupTopK.topK(cand, Seq("qid"),
+              graft.plans.GroupTopK.topK(cand, Seq("qid"),
                   Seq(col("rcos").desc, col("vec_id").asc), K)
                 .withColumn("expected", col("qid") - lit(plantOffset))
                 .filter(col("rank") === 1 && col("vec_id") === col("expected"))
                 .count()
-            }._1)
-            (ts.min, h)
+            }
+            (runs.map(_._2).min, runs.last._1)
           }
           val (tP1, hP1) = idxHits(pS)
           val (tP3, hP3) = idxHits(3 * pS)
@@ -463,9 +432,9 @@ object AnnScaleBench {
           val (tB, hB) = bruteHits()
           s""""$tag":{"n_match":$nm,"n_twins":$nT,""" +
             s""""p$pS":$hP1,"p${3 * pS}":$hP3,"p${9 * pS}":$hP9,""" +
-            s""""p${pS}_sec":${d3(tP1)},"p${3 * pS}_sec":${d3(tP3)},""" +
-            s""""p${9 * pS}_sec":${d3(tP9)},""" +
-            s""""brute":$hB,"brute_sec":${d3(tB)}}"""
+            s""""p${pS}_sec":${Bench.num(tP1)},"p${3 * pS}_sec":${Bench.num(tP3)},""" +
+            s""""p${9 * pS}_sec":${Bench.num(tP9)},""" +
+            s""""brute":$hB,"brute_sec":${Bench.num(tB)}}"""
         }
         extraArms ++= s""","selsweep":{${sweep.mkString(",")}}"""
       }
@@ -510,14 +479,9 @@ object AnnScaleBench {
             if (f.exists) rmTree(f)
             def slice(e: Int) = {
               val raw = embAll.filter(pmod(col("vec_id"), lit(nE)) === e)
-              if (!drift || e == 0) raw
-              else withNrm(raw).select(col("vec_id"),
-                // bias coordinate 0 by e·0.08·‖v‖ — deterministic,
-                // twins planted FROM the drifted vectors drift with it
-                concat(array((element_at(col("embedding"), 1) +
-                    lit(e * 0.08f) * col("nrm").cast("float")).cast("float")),
-                  org.apache.spark.sql.functions.slice(col("embedding"), 2, Dim - 1))
-                  .as("embedding"))
+              // bias coordinate 0 by e·0.08·‖v‖ — deterministic, twins
+              // planted FROM the drifted vectors drift with it
+              if (!drift || e == 0) raw else drifted(raw, e * 0.08f)
             }
             val s0 = withNrm(slice(0)).localCheckpoint()
             val c0 = math.ceil(math.sqrt(s0.count().toDouble)).toInt
@@ -530,7 +494,7 @@ object AnnScaleBench {
             for (e <- 0 until nE) {
               // the start() maintenance cadence, mirrored synchronously
               if (requantEvery > 0 && e > 0 && e % requantEvery == 0)
-                requantSecs += time {
+                requantSecs += Bench.timed {
                   graft.stream.EmbedIngest.requantize(spark, memDir,
                     nCells = 0, upTo = e.toLong)
                 }._1
@@ -543,7 +507,7 @@ object AnnScaleBench {
                     .map(r => (r.getLong(0), r.getLong(0) - twinOff, e))
                   slice(e).unionByName(twinEmb.select("vec_id", "embedding"))
                 }
-              qSecs(e * 4 / nE) += time {
+              qSecs(e * 4 / nE) += Bench.timed {
                 graft.stream.EmbedIngest.ingestBatch(batch, memDir, e.toLong)
               }._1
             }
@@ -566,8 +530,8 @@ object AnnScaleBench {
             val cellsNow = spark.read.parquet(s"$memDir/cells")
             val nCellsNow = cellsNow.select(col("cell")).distinct().count()
             s""""$cfgTag":{"n_planted":${planted.size},"quartiles":[$perQ],""" +
-              s""""q_ingest_secs":[${qSecs.map(d3).mkString(",")}],""" +
-              s""""requant_secs":${d3(requantSecs)},"n_cells":$nCellsNow}"""
+              s""""q_ingest_secs":[${qSecs.map(Bench.num(_)).mkString(",")}],""" +
+              s""""requant_secs":${Bench.num(requantSecs)},"n_cells":$nCellsNow}"""
         }
         extraArms ++= s""","${if (drift) "driftmembrane" else "agedmembrane"}":{${cfgs.mkString(",")}}"""
       }
@@ -589,12 +553,7 @@ object AnnScaleBench {
         val embAll = Tables.embeddings(spark, dir).select("vec_id", "embedding")
         def slice(e: Int) = {
           val raw = embAll.filter(pmod(col("vec_id"), lit(nE)) === e)
-          if (e == 0) raw
-          else withNrm(raw).select(col("vec_id"),
-            concat(array((element_at(col("embedding"), 1) +
-                lit(e * 0.08f) * col("nrm").cast("float")).cast("float")),
-              org.apache.spark.sql.functions.slice(col("embedding"), 2, Dim - 1))
-              .as("embedding"))
+          if (e == 0) raw else drifted(raw, e * 0.08f)
         }
         // the tau stage's candidate volume for this batch against the
         // committed layout — the same nProbe=4 row-local probe
@@ -629,7 +588,7 @@ object AnnScaleBench {
             var nRequants = 0
             for (e <- 0 until nE) {
               if (trigger && e > 0) {
-                val (secs, fired) = time {
+                val (secs, fired) = Bench.timed {
                   graft.stream.EmbedIngest.requantizeIfSkewed(
                     spark, memDir, upTo = e.toLong, factor = 3.0)
                 }
@@ -638,7 +597,7 @@ object AnnScaleBench {
               }
               val batch = slice(e).localCheckpoint()
               qCand(e * 4 / nE) += candRows(batch, memDir)
-              qSecs(e * 4 / nE) += time {
+              qSecs(e * 4 / nE) += Bench.timed {
                 graft.stream.EmbedIngest.ingestBatch(batch, memDir, e.toLong)
               }._1
             }
@@ -649,10 +608,10 @@ object AnnScaleBench {
             val skew = occFinal.getLong(1).toDouble /
               (occFinal.getLong(2).toDouble / occFinal.getLong(0))
             s""""$cfgTag":{"q_cand":[${qCand.mkString(",")}],""" +
-              s""""q_ingest_secs":[${qSecs.map(d3).mkString(",")}],""" +
-              s""""check_secs":${d3(checkSecs)},""" +
-              s""""requant_secs":${d3(requantSecs)},"n_requants":$nRequants,""" +
-              s""""n_cells":${occFinal.getLong(0)},"skew_final":${d3(skew)}}"""
+              s""""q_ingest_secs":[${qSecs.map(Bench.num(_)).mkString(",")}],""" +
+              s""""check_secs":${Bench.num(checkSecs)},""" +
+              s""""requant_secs":${Bench.num(requantSecs)},"n_requants":$nRequants,""" +
+              s""""n_cells":${occFinal.getLong(0)},"skew_final":${Bench.num(skew)}}"""
         }
         extraArms ++= s""","driftcost":{${cfgs.mkString(",")}}"""
       }
@@ -671,7 +630,7 @@ object AnnScaleBench {
         graft.stream.EmbedIngest.init(spark, memDir,
           IvfIndex.sampleCentroids(embRaw, nCells))
         val nB = 16
-        val (tIngest, _) = time {
+        val (tIngest, _) = Bench.timed {
           (0 until nB).foreach { e =>
             graft.stream.EmbedIngest.ingestBatch(
               Tables.embeddings(spark, dir)
@@ -685,7 +644,7 @@ object AnnScaleBench {
         val nAdm = admitted.count()
         val srvDir = s"$dir/serving_from_membrane_r13"
         val cSrv = math.ceil(math.sqrt(nAdm.toDouble)).toInt
-        val (tSrv, _) = time {
+        val (tSrv, _) = Bench.timed {
           IvfIndex.build(admitted, srvDir, cSrv, assign = 2, int8 = true)
         }
         val twinAdm = plantTwins(withNrm(admitted), baseMod, plantOffset)
@@ -704,33 +663,32 @@ object AnnScaleBench {
         // missing compaction — measure that claim: fold the epochs on
         // the operator cadence, rebuild the serving index from the
         // compacted corpus, and require identical twin recall
-        val (tCompact, _) = time {
+        val (tCompact, _) = Bench.timed {
           graft.stream.EmbedIngest.compactCells(spark, memDir, upTo = nB.toLong)
         }
         val admittedC = graft.stream.EmbedIngest.corpus(spark, memDir)
           .localCheckpoint()
         val srvDirC = s"$dir/serving_from_membrane_compact_r13"
-        val (tSrvC, _) = time {
+        val (tSrvC, _) = Bench.timed {
           IvfIndex.build(admittedC, srvDirC, cSrv, assign = 2, int8 = true)
         }
         val (c1, ck) = twinHits(srvDirC, admittedC)
         extraArms ++= s""","handoff":{"n_admitted":$nAdm,"n_cells":$cSrv,""" +
-          s""""ingest_sec":${d3(tIngest)},"build_sec":${d3(tSrv)},""" +
-          s""""compact_sec":${d3(tCompact)},"build_compacted_sec":${d3(tSrvC)},""" +
+          s""""ingest_sec":${Bench.num(tIngest)},"build_sec":${Bench.num(tSrv)},""" +
+          s""""compact_sec":${Bench.num(tCompact)},"build_compacted_sec":${Bench.num(tSrvC)},""" +
           s""""n_twins":$nTwinAdm,"twin_at_1":$h1,"twin_at_$K":$hk,""" +
           s""""compact_twin_at_1":$c1,"compact_twin_at_$K":$ck,""" +
           s""""direct_twin_at_1":$d1,"direct_twin_at_$K":$dk}"""
       }
 
       s""""x$n":{"n_vecs":$nVecs,"n_cells":$nCells,"n_queries":$nQ,""" +
-        s""""n_twins":$nTwin,"build":${d3(tBuild)},"build_q2":${d3(tBuild2)},""" +
-        s""""build_q2i8":${d3(tBuild8)},"cells_bytes_f32":$bytesF32,""" +
+        s""""n_twins":$nTwin,"build":${Bench.num(tBuild)},"build_q2":${Bench.num(tBuild2)},""" +
+        s""""build_q2i8":${Bench.num(tBuild8)},"cells_bytes_f32":$bytesF32,""" +
         s""""cells_bytes_i8":$bytesI8,$arms${extraArms.toString}}"""
     }
 
     println(s"""{"metric":"ann_search_recall","value":$K,"unit":"k",""" +
       s""""scales":"${scales.mkString(",")}","src":"$srcDir",""" +
       s""""rungs":{${rungs.mkString(",")}}}""")
-    spark.stop()
   }
 }

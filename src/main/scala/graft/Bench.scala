@@ -1,83 +1,264 @@
 package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The measurement harness. `runMain graft.Bench` with no arguments is
+  * the bench contract: every SparkEntry query, cold and steady, one
+  * JSON line. `runMain graft.Bench <mode> [args]` runs one of [[modes]]
+  * instead. Every mode runs in the one [[session]] and shares the
+  * timing, warm-up, unpersist, profiling and JSON helpers below. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
   /** A query that threw in a timed rep. The bench fails naming it
     * instead of recording the throw as a (fast) time. */
   final class QueryFailed(val query: String, cause: Throwable)
       extends RuntimeException(s"query $query failed: $cause", cause)
 
-  /** `body` run and timed `reps` times (at least once): each rep's
-    * result and seconds. A rep that throws fails with [[QueryFailed]]. */
-  def timeReps[A](query: String, reps: Int)(body: => A): Seq[(A, Double)] =
-    (1 to math.max(1, reps)).map { _ =>
-      val t0 = System.nanoTime()
-      val r = try body catch { case NonFatal(e) => throw new QueryFailed(query, e) }
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+  /** An unknown mode or query name: the harness stops before any
+    * query runs, naming what it did not know. */
+  final class UsageError(msg: String) extends IllegalArgumentException(msg)
 
-  /** Run a bench main's body; a failed query stops the session and
-    * exits non-zero, naming the query on stderr. */
-  def failLoudly[A](spark: SparkSession)(body: => A): A =
-    try body catch {
-      case f: QueryFailed =>
-        System.err.println(s"graft bench: ${f.getMessage}")
-        f.printStackTrace()
-        spark.stop()
-        sys.exit(1)
-    }
-
-  /** Each query's (cold, steady) seconds over `reps` timed reps on
-    * `sfDir`, each query first run untimed on `warmDir` (a warm-up
-    * failure is ignored: the timed rep then fails on its own). */
-  def measure(spark: SparkSession, queries: Map[String, (SparkSession, String) => DataFrame],
-      sfDir: String, warmDir: Option[String], reps: Int): Map[String, (Double, Double)] =
-    queries.map { case (name, fn) =>
-      // scope the post-query unpersist to blocks THIS query created:
-      // unpersisting a shared localCheckpoint would truncate its
-      // lineage unrecoverably for every later query that reuses it
-      val preExisting = spark.sparkContext.getPersistentRDDs.keySet
-      warmDir.foreach { d =>
-        try { fn(spark, d).queryExecution.toRdd.count() }
-        catch { case NonFatal(_) => () }
-      }
-      // execute the FULL physical plan (a plain count() would let
-      // Catalyst prune projection-only work down to a bare scan)
-      val times = timeReps(name, reps)(fn(spark, sfDir).queryExecution.toRdd.count()).map(_._2)
-      // drop this query's persisted blocks before moving on: every
-      // fn(...) call builds a FRESH DataFrame, so each warmup + rep
-      // leaves its own localCheckpoint blocks behind (nothing frees
-      // them until the ContextCleaner's GC cycle) — across ~90 queries
-      // the block manager fills, later queries pay eviction + GC that
-      // an isolated run never sees, and the steady totals drift ~10%
-      // above the sum of per-query minima. Unpersisting between
-      // queries is bench hygiene only: each timed rep still pays its
-      // own checkpoint materialization inside the measured window.
-      spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !preExisting(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      name -> ((times.head, times.min))
-    }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The harness session: `SPARK_GRAFT_CPUS` local cores (default: the
+    * processors the JVM sees), as many shuffle partitions, the UTC
+    * session zone the oracle run uses, and AQE coalescing post-shuffle
+    * partitions to target SIZE instead of keeping cpus-many tiny tasks
+    * (the small-SF fixed-overhead killer; harmless at scale, where
+    * partitions are size-bound anyway). */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      String.valueOf(Runtime.getRuntime.availableProcessors()))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE coalesce post-shuffle partitions to target SIZE instead
-      // of keeping cpus-many tiny tasks (small-SF fixed-overhead killer;
-      // harmless at scale where partitions are size-bound anyway)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT/codegen + parquet footers, so the first timed
-    // query doesn't absorb JVM startup
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try SparkEntry.queries.get("q1_agg").foreach(_(spark, sfDir).count())
-    catch { case _: Throwable => () }
+    spark
+  }
+
+  /** `body`'s seconds and result. */
+  def timed[A](body: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    val a = body
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
+
+  /** `body` run and timed `reps` times (at least once): each rep's
+    * result and seconds. A rep that throws fails with [[QueryFailed]]. */
+  def timeReps[A](query: String, reps: Int)(body: => A): Seq[(A, Double)] =
+    (1 to math.max(1, reps)).map { _ =>
+      val (secs, r) = timed(try body catch { case NonFatal(e) => throw new QueryFailed(query, e) })
+      (r, secs)
+    }
+
+  /** An untimed warm-up run: a failure is ignored (the timed rep then
+    * fails on its own); a fatal error (OOM, interrupt) still stops. */
+  def warm(body: => Any): Unit =
+    try { body; () } catch { case NonFatal(_) => () }
+
+  /** Execute the FULL physical plan: a plain count() would let Catalyst
+    * prune projection-only work down to a bare scan. */
+  def execute(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** `body`, then unpersist the blocks it persisted. Scoped to blocks
+    * created inside `body`: unpersisting a shared localCheckpoint would
+    * truncate its lineage unrecoverably for every later query that
+    * reuses it. Every query call builds a FRESH DataFrame, so each
+    * warm-up and rep leaves its own localCheckpoint blocks behind, and
+    * nothing frees them until the ContextCleaner's GC cycle; across ~90
+    * queries the block manager fills and later queries pay eviction and
+    * GC that an isolated run never sees (the steady totals drifted ~10%
+    * above the sum of per-query minima). Each timed rep still pays its
+    * own checkpoint materialization inside the measured window. */
+  def unpersistingNew[A](spark: SparkSession)(body: => A): A = {
+    val preExisting = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !preExisting(id) }
+      .values.foreach(_.unpersist(blocking = true))
+  }
+
+  /** Each query's (cold, steady) seconds over `reps` timed reps on
+    * `sfDir`, each query first run untimed on `warmDir`. */
+  def measure(spark: SparkSession, queries: Map[String, Query],
+      sfDir: String, warmDir: Option[String], reps: Int): Map[String, (Double, Double)] =
+    queries.map { case (name, fn) =>
+      val times = unpersistingNew(spark) {
+        warmDir.foreach(d => warm(execute(fn(spark, d))))
+        timeReps(name, reps)(execute(fn(spark, sfDir))).map(_._2)
+      }
+      name -> ((times.head, times.min))
+    }
+
+  /** Locale-safe JSON number: the f"" interpolator formats with the JVM
+    * default locale, so under e.g. de_DE "%.3f" emits a comma decimal
+    * and the line stops being JSON. */
+  def num(v: Double, decimals: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+
+  /** JSON string: backslash, quote and ALL control chars (< 0x20)
+    * escaped. A tab or CR in oracle SQL, or any char in a corpus token,
+    * would otherwise break the reader's json.load. */
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
+
+  /** Fitted scaling exponent e = ln(t_hi / t_lo) / ln(scale_hi / scale_lo). */
+  def exponent(tLo: Double, tHi: Double, lo: Double, hi: Double): Double =
+    math.log(tHi / tLo) / math.log(hi / lo)
+
+  private[graft] def sfDir(default: String = "/root/testdata/sf0.1"): String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", default)
+  private[graft] def benchReps(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(default)
+  /** The `SPARK_GRAFT_SCALES` rungs, ascending. */
+  private[graft] def scales(default: String): Seq[Int] =
+    sys.env.getOrElse("SPARK_GRAFT_SCALES", default).split(",").map(_.trim.toInt).toSeq.sorted
+  private[graft] def scaleDir: String = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
+
+  /** The named queries, in argument order. Fails before any of them
+    * runs, naming every unknown name. */
+  def lookup(names: Seq[String], queries: Map[String, Query]): Seq[(String, Query)] = {
+    val unknown = names.filterNot(queries.contains)
+    if (unknown.nonEmpty)
+      throw new UsageError(s"unknown queries: ${unknown.mkString(", ")}")
+    names.map(n => n -> queries(n))
+  }
+
+  /** `[reps] name...`: the leading rep count (or `default`) and the
+    * named queries. */
+  private def repsAndQueries(args: Seq[String], default: Int,
+      queries: Map[String, Query]): (Int, Seq[(String, Query)]) =
+    args.headOption.flatMap(_.toIntOption) match {
+      case Some(r) => (r, lookup(args.tail, queries))
+      case None    => (default, lookup(args, queries))
+    }
+
+  /** One Spark job of a profiled run: its wall window, task count,
+    * summed executor-run ms, shuffle read/write and input bytes, and
+    * the graft call sites that scheduled its stages. */
+  final case class JobRow(id: Int, start: Long, var end: Long = 0L,
+      var nTasks: Int = 0, var runMs: Long = 0L, var shufR: Long = 0L,
+      var shufW: Long = 0L, var inB: Long = 0L, var site: String = "")
+
+  /** Local property marking the listener-drain job [[jobsOf]] runs. */
+  private[graft] val DrainKey = "graft.bench.drain"
+
+  /** The Spark jobs `body` starts, in start order. A marker job run
+    * after `body` drains the listener bus: its start event arrives after
+    * every event `body` posted, so no job or stage is read half-seen. */
+  def jobsOf(spark: SparkSession)(body: => Unit): Seq[JobRow] = {
+    val jobs = mutable.LinkedHashMap[Int, JobRow]()
+    val stageToJob = mutable.HashMap[Int, Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        if (Option(e.properties).exists(_.getProperty(DrainKey) != null)) drained.countDown()
+        else {
+          jobs(e.jobId) = JobRow(e.jobId, e.time)
+          e.stageIds.foreach(s => stageToJob(s) = e.jobId)
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
+        jobs.get(e.jobId).foreach(_.end = e.time)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = jobs.synchronized {
+        val si = e.stageInfo
+        for (j <- stageToJob.get(si.stageId); r <- jobs.get(j)) {
+          r.nTasks += si.numTasks
+          r.runMs += si.taskMetrics.executorRunTime
+          r.shufR += si.taskMetrics.shuffleReadMetrics.totalBytesRead
+          r.shufW += si.taskMetrics.shuffleWriteMetrics.bytesWritten
+          r.inB += si.taskMetrics.inputMetrics.bytesRead
+          // first library frame in the long call site: which line
+          // scheduled this work (the stage NAME is often the AQE or
+          // broadcast thread pool, useless for attribution)
+          val g = si.details.linesIterator
+            .find(l => l.contains("graft.") && !l.contains("graft.Bench"))
+            .map(_.trim.replaceAll("^at ", "")).getOrElse(si.name)
+          if (!r.site.contains(g)) r.site =
+            (if (r.site.isEmpty) "" else r.site + " | ") + g
+        }
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(DrainKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(DrainKey, null)
+      require(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
+    } finally sc.removeSparkListener(listener)
+    jobs.synchronized(jobs.values.toVector)
+  }
+
+  /** The modes, by name. Each takes the session and the arguments after
+    * the mode name; an unknown name fails listing them. */
+  val modes: Seq[(String, (SparkSession, Seq[String]) => Unit)] = Seq(
+    ("time", time(_, _)),
+    ("profile", profile(_, _)),
+    ("ab", ab(_, _)),
+    ("plan", plan(_, _)),
+    ("expr", ExprProbe.run),
+    ("gen", ScaleGen.run),
+    ("scale", ScaleBench.run),
+    ("ann", AnnScaleBench.run),
+    ("ivf", IvfScaleBench.run),
+    ("media", MediaScaleBench.run),
+    ("stream", StreamBench.run),
+    ("ingest", IngestBench.run),
+    ("ledger", LedgerBench.run),
+    ("bpe", BpeBench.run),
+    ("versionbump", VersionBumpBench.run),
+    ("topk", TopKBench.run))
+
+  def mode(name: String): (SparkSession, Seq[String]) => Unit =
+    modes.find(_._1 == name).map(_._2).getOrElse(throw new UsageError(
+      s"unknown mode '$name'; modes: ${modes.map(_._1).mkString(", ")}"))
+
+  def main(args: Array[String]): Unit = {
+    val run = try args.headOption.fold[(SparkSession, Seq[String]) => Unit](contract)(mode)
+      catch { case u: UsageError => System.err.println(s"graft bench: ${u.getMessage}"); sys.exit(1) }
+    val spark = session()
+    val failed = try {
+      // untimed warm-up: JIT/codegen, so the first timed query doesn't
+      // absorb JVM startup
+      spark.range(1000000L).selectExpr("sum(id)").collect()
+      run(spark, args.toSeq.drop(1))
+      false
+    } catch {
+      case f: QueryFailed =>
+        System.err.println(s"graft bench: ${f.getMessage}")
+        f.printStackTrace()
+        true
+      case u: UsageError =>
+        System.err.println(s"graft bench: ${u.getMessage}")
+        true
+    } finally spark.stop()
+    if (failed) sys.exit(1)
+  }
+
+  /** The bench contract: every SparkEntry query on `SPARK_GRAFT_SF_DIR`,
+    * one JSON line whose summary keys close the line. */
+  private def contract(spark: SparkSession, args: Seq[String]): Unit = {
+    val sfDir = this.sfDir()
+    // parquet footers and the first query's codegen off the clock
+    warm(SparkEntry.queries.get("q1_agg").foreach(_(spark, sfDir).count()))
     // per-query warmup fixture: the smallest SF sibling. Running each
     // query there first compiles the SAME generated code (the codegen
     // cache is keyed by source text) and JITs its operators, so the
@@ -94,7 +275,7 @@ object Bench {
     // JSON tail so the driver artifact carries them without hand
     // calibration. SPARK_GRAFT_BENCH_REPS=1 restores the old
     // single-shot contract (cold == steady in that case).
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(2)
+    val reps = benchReps(2)
     // validate the anchor names BEFORE the multi-minute measurement
     // loop — a renamed anchor must fail loudly without discarding a
     // full measured run. The steady PINS live here IN CODE (round-12
@@ -106,7 +287,7 @@ object Bench {
     // the same run (contention is bursty and IO-shaped).
     // Round-14 re-pin investigation (r13 ask #6): three rounds of
     // drift 1.19–1.57 plus a full morning of 1.27–1.3× re-measures
-    // (two min-of-5 TimeQuery runs + a full bench) suggested the IO
+    // (two min-of-5 `time` runs + a full bench) suggested the IO
     // floor had moved — then the SAME DAY's afternoon bench landed on
     // the historical band exactly (qd8 0.855, qt3 0.290, qm2 0.155 —
     // drift 1.00 against these pins). Conclusion recorded in
@@ -122,11 +303,7 @@ object Bench {
     require(anchorNames.forall(SparkEntry.queries.contains),
       s"anchor queries missing from SparkEntry.queries: " +
         anchorNames.filterNot(SparkEntry.queries.contains).mkString(", "))
-    val results = failLoudly(spark)(measure(spark, SparkEntry.queries, sfDir, warmDir, reps))
-    // explicit-ROOT-locale formatting: the f"" interpolator uses the
-    // JVM default locale, so under e.g. de_DE "%.3f" emits a comma
-    // decimal and the metric line stops being JSON
-    def d3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val results = measure(spark, SparkEntry.queries, sfDir, warmDir, reps)
     // TRUNCATION-PROOF artifact layout (round-12 ask #5): the driver
     // records only the LAST ~2000 chars of output, and at 92+ queries
     // two full per-query maps (~3.7k chars) pushed 17 entries AND
@@ -140,9 +317,9 @@ object Bench {
     val reported = (results.toSeq.sortBy(-_._2._1).take(25).map(_._1) ++
       anchorNames).distinct.toSet
     val ordered = results.toSeq.filter(r => reported(r._1)).sortBy(-_._2._1)
-    val qs = ordered.map { case (k, (cold, _)) => s""""$k":${d3(cold)}""" }
+    val qs = ordered.map { case (k, (cold, _)) => s""""$k":${num(cold)}""" }
       .mkString("{", ",", "}")
-    val qsSteady = ordered.map { case (k, (_, st)) => s""""$k":${d3(st)}""" }
+    val qsSteady = ordered.map { case (k, (_, st)) => s""""$k":${num(st)}""" }
       .mkString("{", ",", "}")
     val total = results.values.map(_._1).sum
     val steady = results.values.map(_._2).sum
@@ -157,13 +334,125 @@ object Bench {
     // per-element leading commas: an empty list can never leave a
     // trailing comma (invalid JSON for every BENCH_r*.json reader)
     val anchors = anchorPins
-      .map { case (n, _) => s""","anchor_$n":${d3(results(n)._2)}""" }.mkString
+      .map { case (n, _) => s""","anchor_$n":${num(results(n)._2)}""" }.mkString
     val drift = anchorPins.map { case (n, pin) => results(n)._2 / pin }.max
     println(s"""{"queries":$qs,"queries_steady":$qsSteady,""" +
       s""""metric":"total","unit":"sec","sf":"$sfDir",""" +
       s""""n_queries":${results.size},"n_reported":${ordered.size},""" +
-      s""""value":${d3(total)},"total_sec":${d3(total)},"steady_sec":${d3(steady)}""" +
-      anchors + s""","anchor_drift":${d3(drift)}}""")
-    spark.stop()
+      s""""value":${num(total)},"total_sec":${num(total)},"steady_sec":${num(steady)}""" +
+      anchors + s""","anchor_drift":${num(drift)}}""")
+  }
+
+  /** `time [reps] name...`: named queries in isolation, `reps` (default
+    * 3) timed runs each, one line per query with every rep's seconds, so
+    * plan-compile (rep 1) and steady-state (rep 2+) costs separate.
+    * `SPARK_GRAFT_SET="k=v;k=v"` sets session confs first, so a
+    * conf-gated route can be compared INSIDE one JVM. */
+  def time(spark: SparkSession, args: Seq[String],
+      queries: Map[String, Query] = SparkEntry.queries): Unit = {
+    val (reps, named) = repsAndQueries(args, 3, queries)
+    sys.env.get("SPARK_GRAFT_SET").foreach(_.split(";").filter(_.contains("="))
+      .foreach { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        spark.conf.set(k.trim, v.trim)
+      })
+    val dir = sfDir()
+    for ((name, fn) <- named) {
+      val ts = unpersistingNew(spark)(timeReps(name, reps)(execute(fn(spark, dir)))).map(_._2)
+      println(s"[time] $name reps=${ts.map(num(_, 2)).mkString(",")} min=${num(ts.min, 2)}")
+    }
+  }
+
+  /** `profile [reps] name...`: per-JOB profile of one rep of each named
+    * query after `reps` (default 2) untimed warm-ups. The composed
+    * queries run 10-20 sequential Spark jobs (checkpoints, broadcasts,
+    * AQE stages), and one wall number cannot say which of them the time
+    * goes to; this prints, per job: wall ms, the driver gap before it,
+    * task count, executor-run ms, shuffle write/read and input KB, and
+    * the scheduling call site. */
+  def profile(spark: SparkSession, args: Seq[String],
+      queries: Map[String, Query] = SparkEntry.queries): Unit = {
+    val (warmups, named) = repsAndQueries(args, 2, queries)
+    val dir = sfDir()
+    for ((name, fn) <- named) {
+      // warm-up checkpoint blocks dropped so the profiled rep is clean
+      unpersistingNew(spark)((1 to warmups).foreach(_ => warm(execute(fn(spark, dir)))))
+      var wall = 0.0
+      val jobs = unpersistingNew(spark)(jobsOf(spark) {
+        wall = timeReps(name, 1)(execute(fn(spark, dir))).head._2 * 1e3
+      })
+      println(s"\n=== $name profiled rep: wall ${num(wall, 0)} ms, ${jobs.size} jobs ===")
+      var prevEnd = 0L
+      jobs.foreach { r =>
+        val gap = if (prevEnd == 0) 0 else r.start - prevEnd
+        prevEnd = math.max(prevEnd, r.end)
+        println(f"[job ${r.id}%3d] wall ${r.end - r.start}%5d ms (gap $gap%4d) " +
+          f"tasks ${r.nTasks}%4d run ${r.runMs}%6d ms " +
+          f"shufW ${r.shufW / 1024}%6d KB shufR ${r.shufR / 1024}%6d KB in ${r.inB / 1024}%6d KB  ${r.site}")
+      }
+      val jsum = jobs.map(r => r.end - r.start).sum
+      println(s"[sum] job wall $jsum ms vs rep wall ${num(wall, 0)} ms " +
+        s"(driver gaps = ${num(wall - jsum, 0)})")
+    }
+  }
+
+  /** `ab [reps] name...`: in-JVM A/B of a conf-gated route. Alternates
+    * `SPARK_GRAFT_AB="key=a|b"` between its two values ACROSS
+    * INTERLEAVED REPS (default 4) of each query, so slot drift — which
+    * on a contended host swings anchors 1.0×–4.9× of pin within an
+    * hour — hits both arms equally. Cross-JVM before/after pairs cannot
+    * tell a 20% win from slot weather; interleaved min-of-N can. */
+  def ab(spark: SparkSession, args: Seq[String],
+      queries: Map[String, Query] = SparkEntry.queries): Unit = {
+    val (key, arms) = sys.env.getOrElse("SPARK_GRAFT_AB",
+      "graft.components.driverLimit=1000000|0").split("=", 2) match {
+      case Array(k, vs) if vs.contains("|") => (k, vs.split("\\|", 2).toSeq)
+      case _ => throw new UsageError("SPARK_GRAFT_AB must read key=a|b")
+    }
+    val (reps, named) = repsAndQueries(args, 4, queries)
+    val dir = sfDir()
+    val before = spark.conf.getOption(key)
+    try for ((name, fn) <- named) {
+      // one unmeasured warm-up per arm so codegen/JIT is paid up front
+      arms.foreach { v =>
+        spark.conf.set(key, v)
+        unpersistingNew(spark)(warm(execute(fn(spark, dir))))
+      }
+      val times = arms.map(_ => mutable.ListBuffer[Double]())
+      for (_ <- 1 to reps; (v, i) <- arms.zipWithIndex) {
+        spark.conf.set(key, v)
+        times(i) += unpersistingNew(spark)(timeReps(name, 1)(execute(fn(spark, dir)))).head._2
+      }
+      def fmt(l: Seq[Double]) = l.map(num(_, 2)).mkString(",") +
+        s" min=${num(l.min, 2)} med=${num(l.sorted.apply(l.size / 2), 2)}"
+      println(s"[ab] $name  " +
+        arms.zip(times).map { case (v, t) => s"$key=$v: ${fmt(t.toSeq)}" }.mkString("  |  "))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Library-internal stages whose plans are invisible in the full
+    * query explain (they sit behind a localCheckpoint boundary, which
+    * truncates the physical plan to a LogicalRDD scan), named so
+    * before/after plan evidence can be captured for them directly. */
+  private val planStages: Map[String, Query] = Map(
+    "minhash_sigs_agg" -> ((s, d) => batch.Dedup.minhashSigsOfAgg(Tables.documents(s, d))),
+    "minhash_sigs_expr" -> ((s, d) => batch.Dedup.minhashSigsOf(Tables.documents(s, d))))
+
+  /** `plan [name...]`: `.explain("formatted")` of queries or
+    * [[planStages]] on `SPARK_GRAFT_SF_DIR` (default sf0.01), to audit
+    * physical plans for scale hazards: filter/projection pushdown into
+    * the parquet scan, broadcast vs shuffle joins, whole-stage codegen
+    * spans, exchange reuse. No names = a default set. */
+  def plan(spark: SparkSession, args: Seq[String],
+      queries: Map[String, Query] = SparkEntry.queries): Unit = {
+    val names = if (args.nonEmpty) args
+      else Seq("q1_agg", "q3_join3", "q4_semi", "q7_theta", "q8_asof",
+        "q29_asof_native", "q12_window_frame", "qd2_minhash_lsh",
+        "qs1_knn_bruteforce", "qst2_sessions")
+    val dir = sfDir("/root/testdata/sf0.01")
+    for ((n, fn) <- lookup(names, queries ++ planStages)) {
+      println(s"\n=================== $n ===================")
+      fn(spark, dir).explain("formatted")
+    }
   }
 }

@@ -22,22 +22,10 @@ import org.apache.spark.sql.functions._
   * 5.15 s — days at 32k merges). One JSON line per the Bench
   * contract. */
 object BpeBench {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     val sizes = sys.env.getOrElse("SPARK_GRAFT_BPE_VOCABS", "10000,100000,500000")
       .split(",").map(_.trim.toInt).toSeq
     val deepMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_DEEP", "2000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def d3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def d4(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val rows = sizes.map { n =>
       // one row per distinct word; substring of md5 keeps words 8 chars
       // (hex → the clean charset) and collisions only shrink the vocab
@@ -45,45 +33,38 @@ object BpeBench {
       val docs = spark.range(n.toLong)
         .select(substring(md5(col("id").cast("string")), 1, 8).as("text"))
         .localCheckpoint()
-      val t0 = System.nanoTime()
-      val (refMerges, refVocab) = graft.batch.TextOps.bpeTrain(docs, 12)
-      val nVocab = refVocab.count()
-      val refSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val (fastMerges, _) = graft.batch.TextOps.bpeTrainFast(docs, 12)
-      val fastSecs = (System.nanoTime() - t1) / 1e9
+      val (refSecs, (refMerges, nVocab)) = Bench.timed {
+        val (merges, vocab) = graft.batch.TextOps.bpeTrain(docs, 12)
+        (merges, vocab.count())
+      }
+      val (fastSecs, (fastMerges, _)) = Bench.timed(graft.batch.TextOps.bpeTrainFast(docs, 12))
       require(fastMerges == refMerges,
         s"fast/ref merge sequences diverged at vocab $n") // the bench IS an equivalence run
       s""""v$n":{"n_vocab":$nVocab,"merges":${refMerges.length},""" +
-        s""""ref_secs":${d3(refSecs)},"ref_secs_per_round":${d3(refSecs / 12)},""" +
-        s""""fast_secs":${d3(fastSecs)},"fast_secs_per_round":${d4(fastSecs / 12)}}"""
+        s""""ref_secs":${Bench.num(refSecs)},"ref_secs_per_round":${Bench.num(refSecs / 12)},""" +
+        s""""fast_secs":${Bench.num(fastSecs)},"fast_secs_per_round":${Bench.num(fastSecs / 12, 4)}}"""
     }
     // the production shape: deep merge schedule, fast trainer only
     val deepN = sizes.max
     val deepDocs = spark.range(deepN.toLong)
       .select(substring(md5(col("id").cast("string")), 1, 8).as("text"))
       .localCheckpoint()
-    val t2 = System.nanoTime()
-    val (deepM, _) = graft.batch.TextOps.bpeTrainFast(deepDocs, deepMerges)
-    val deepSecs = (System.nanoTime() - t2) / 1e9
+    val (deepSecs, (deepM, _)) = Bench.timed(graft.batch.TextOps.bpeTrainFast(deepDocs, deepMerges))
     val deep = s""""deep":{"n_vocab":$deepN,"merges":${deepM.length},""" +
-      s""""fast_secs":${d3(deepSecs)},"fast_secs_per_round":${d4(deepSecs / math.max(1, deepM.length))}}"""
+      s""""fast_secs":${Bench.num(deepSecs)},"fast_secs_per_round":${Bench.num(deepSecs / math.max(1, deepM.length), 4)}}"""
     // the APPLY side at the same depth (round-15 verdict #1): replay
     // the deep model over the full word set with the one-expression
     // encoder — the throughput a tokenization pass pays per word. The
     // chained reference form cannot run here (deepMerges plan nodes).
     val deepWords = deepDocs.select(col("text").as("w")).localCheckpoint()
     val nWords = deepWords.count()
-    val t3 = System.nanoTime()
-    val nSyms = graft.batch.TextOps
+    val (applySecs, nSyms) = Bench.timed(graft.batch.TextOps
       .bpeApply(deepWords, deepM.map(m => (m._1, m._2, m._3)))
-      .select(sum(size(col("syms")))).head().getLong(0)
-    val applySecs = (System.nanoTime() - t3) / 1e9
+      .select(sum(size(col("syms")))).head().getLong(0))
     val apply = s""""apply":{"n_words":$nWords,"merges":${deepM.length},""" +
-      s""""n_syms":$nSyms,"secs":${d3(applySecs)},""" +
-      s""""words_per_sec":${d3(nWords / math.max(1e-9, applySecs))}}"""
+      s""""n_syms":$nSyms,"secs":${Bench.num(applySecs)},""" +
+      s""""words_per_sec":${Bench.num(nWords / math.max(1e-9, applySecs))}}"""
     println(s"""{"metric":"bpe_train_vocab_secs","value":${sizes.max},""" +
       s""""unit":"words","rungs":{${(rows :+ deep :+ apply).mkString(",")}}}""")
-    spark.stop()
   }
 }

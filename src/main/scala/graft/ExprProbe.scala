@@ -7,28 +7,15 @@ import org.apache.spark.sql.functions._
   * expressions). Times a noop-style full evaluation of the documents
   * scan with each signal column added cumulatively, min of 3 reps, so
   * the marginal cost of every expression is visible in isolation.
-  * `sbt "runMain graft.ExprProbe"` */
+  * `sbt "runMain graft.Bench expr"` */
 object ExprProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    val docs = Tables.spread(Tables.documents(spark, sfDir)).localCheckpoint()
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val docs = Tables.spread(Tables.documents(spark, Bench.sfDir())).localCheckpoint()
 
     def time(name: String)(df: => DataFrame): Unit = {
       val mk = df
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e3 // µs
-      }
-      println(f"[expr] $name%-28s min ${ts.min / 1e3}%8.1f ms  reps ${ts.map(t => f"${t / 1e3}%.0f").mkString(",")}")
+      val ms = Bench.timeReps(name, 3)(Bench.execute(mk)).map(_._2 * 1e3)
+      println(f"[expr] $name%-28s min ${Bench.num(ms.min, 1)}%8s ms  reps ${ms.map(Bench.num(_, 0)).mkString(",")}")
     }
 
     val base = docs.select(col("doc_id"), col("text"))
@@ -59,6 +46,5 @@ object ExprProbe {
       .withColumn("fps", graft.functions.GraftFunctions.span_fps(col("text"), 32, 1)))
     time("+minhash_sigs(native)")(base
       .withColumn("mh", graft.functions.GraftFunctions.minhash_sigs(col("text"))))
-    spark.stop()
   }
 }

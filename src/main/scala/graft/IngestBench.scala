@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Throughput of the dedup-at-ingest path (stream.IngestDedup): N
@@ -24,37 +24,10 @@ import org.apache.spark.sql.functions._
   * Prints one JSON line with docs/sec and the dedup ratio achieved.
   */
 object IngestBench {
-
-  /** Locale-safe numeric JSON fragment — the f"" interpolator formats
-    * with the JVM default locale, so "%.1f" under a comma-decimal
-    * locale would break the driver's JSON parse. */
-  private def jd(v: Double, decimals: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
-
-  /** JSON string escape (Verify's q(): quote, backslash, control
-    * chars) — a corpus token interpolated raw could carry any of them. */
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => "\\u%04x".format(c.toInt)
-    case c => c.toString
-  } + "\""
-
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     val nDocs = sys.env.getOrElse("GRAFT_INGEST_DOCS", "100000").toLong
     val nBatches = sys.env.getOrElse("GRAFT_INGEST_BATCHES", "10").toInt
     val mode = sys.env.getOrElse("GRAFT_INGEST_MODE", "default")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest_bench").toString
     // deterministic text: 30 group-seeded tokens (shared shingle window)
@@ -74,16 +47,18 @@ object IngestBench {
       .withColumnRenamed("id", "doc_id")
 
     val batchSize = math.max(1L, nDocs / nBatches)
-    def ingestAll(toDir: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { b =>
-        // last batch takes the division remainder so every doc ingests
-        val hi = if (b == nBatches - 1) nDocs else (b + 1) * batchSize
-        stream.IngestDedup.ingestBatch(
-          docs.filter(col("doc_id") >= b * batchSize && col("doc_id") < hi),
-          toDir, epochId = b)
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
+    /** Batch b of `df`; the last batch takes the division remainder so
+      * every doc ingests. */
+    def batchOf(df: DataFrame, b: Int): DataFrame = {
+      val hi = if (b == nBatches - 1) nDocs else (b + 1) * batchSize
+      df.filter(col("doc_id") >= b * batchSize && col("doc_id") < hi)
+    }
+    /** Every batch through the text membrane into `toDir`: seconds and
+      * the corpus size kept. */
+    def ingestAll(toDir: String, lmModelDir: Option[String] = None): (Double, Long) = {
+      val (secs, _) = Bench.timed((0 until nBatches).foreach { b =>
+        stream.IngestDedup.ingestBatch(batchOf(docs, b), toDir, epochId = b, lmModelDir = lmModelDir)
+      })
       (secs, spark.read.parquet(s"$toDir/corpus").count())
     }
 
@@ -146,37 +121,26 @@ object IngestBench {
       var lastTick = -1
       var statsSecs = 0.0
       val batchSecs = Array.ofDim[Double](nBatches)
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { b =>
+      val (secs, _) = Bench.timed((0 until nBatches).foreach { b =>
         if (compactEvery > 0 && b > 0 && b % compactEvery == 0) {
-          val tc = System.nanoTime()
-          stream.MultimodalIngest.compact(spark, mmDir, upTo = b)
-          compactSecs += (System.nanoTime() - tc) / 1e9
+          compactSecs += Bench.timed(stream.MultimodalIngest.compact(spark, mmDir, upTo = b))._1
           compactions += 1
         }
         if (requantEvery > 0 && b > 0 && b % requantEvery == 0) {
-          val tt = System.nanoTime()
           // auto-sized (0): C = max(current, ⌈√corpus⌉) per tick — the
           // √N rule; a pinned C makes per-batch probe cost grow
           // linearly with the corpus (the 1M-doc run's quartile slide)
-          stream.MultimodalIngest.requantize(spark, mmDir, nCells = 0, upTo = b)
-          tickSecs += (System.nanoTime() - tt) / 1e9
+          tickSecs += Bench.timed(
+            stream.MultimodalIngest.requantize(spark, mmDir, nCells = 0, upTo = b))._1
           ticks += 1
           lastTick = b
         }
-        val tb = System.nanoTime()
-        val hi = if (b == nBatches - 1) nDocs else (b + 1) * batchSize
-        stream.MultimodalIngest.ingestBatch(
-          mmDocs.filter(col("doc_id") >= b * batchSize && col("doc_id") < hi),
-          mmDir, epochId = b, tau = 0.99)
-        if (statsOn) {
-          val ts = System.nanoTime()
-          stream.MultimodalIngest.foldStats(spark, mmDir, b)
-          statsSecs += (System.nanoTime() - ts) / 1e9
-        }
-        batchSecs(b) = (System.nanoTime() - tb) / 1e9
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
+        batchSecs(b) = Bench.timed {
+          stream.MultimodalIngest.ingestBatch(batchOf(mmDocs, b), mmDir, epochId = b, tau = 0.99)
+          if (statsOn)
+            statsSecs += Bench.timed(stream.MultimodalIngest.foldStats(spark, mmDir, b))._1
+        }._1
+      })
       val kept = stream.MultimodalIngest.corpus(spark, mmDir).count()
       val expectedKept = if (withMedia) nDocs / 5 + 1 else nDocs * 2 / 5
 
@@ -186,14 +150,12 @@ object IngestBench {
       // embed-dup v3 all resolve there — three membranes, one root),
       // and the v4s are nGroups singletons without media or ONE
       // nGroups-sized perceptual cluster rooted at doc 4 with it.
-      val tCl0 = System.nanoTime()
-      val cl = stream.MultimodalIngest.clusters(spark, mmDir)
+      val (clSecs, cl) = Bench.timed(stream.MultimodalIngest.clusters(spark, mmDir)
         .groupBy(col("cluster_size")).agg(
           countDistinct(col("cluster_id")).as("n_clusters"),
           count(lit(1)).as("n_members"))
         .collect().map(r => r.getAs[Long]("cluster_size") ->
-          (r.getAs[Long]("n_clusters"), r.getAs[Long]("n_members"))).toMap
-      val clSecs = (System.nanoTime() - tCl0) / 1e9
+          (r.getAs[Long]("n_clusters"), r.getAs[Long]("n_members"))).toMap)
       val nGroups = nDocs / 5
       require(cl.values.map(_._2).sum == nDocs,
         s"cluster membership ${cl.values.map(_._2).sum} != ingested $nDocs")
@@ -221,7 +183,7 @@ object IngestBench {
         // headOption: a stats-on run whose admitted docs have no tokens
         // leaves the merged MG sketch empty — (0) would throw here
         val topTok = mg.limit(1).collect().headOption.map(_.getString(0)).getOrElse("")
-        s""","stats_secs":${jd(statsSecs, 1)},"stats_docs":${t.getAs[Long]("n_docs")},"stats_est_distinct":${t.getAs[Long]("est_distinct_content")},"stats_top_tok":${jq(topTok)}"""
+        s""","stats_secs":${Bench.num(statsSecs, 1)},"stats_docs":${t.getAs[Long]("n_docs")},"stats_est_distinct":${t.getAs[Long]("est_distinct_content")},"stats_top_tok":${Bench.str(topTok)}"""
       }
       // flat-cost evidence: per-quartile ingest rate over the batch
       // sequence (compaction/requant/stats ticks excluded — batchSecs
@@ -234,7 +196,7 @@ object IngestBench {
         val qDocs = (if (qi == 3) nDocs else hiB * batchSize) - loB * batchSize
         if (qSecs == 0) 0.0 else qDocs / qSecs
       }
-      println(s"""{"metric":"multimodal_ingest_docs_per_sec","value":${jd(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":$expectedKept,"media":${if (withMedia) 1 else 0},"media_rejected":$nMediaRej,"secs":${jd(secs, 1)},"cluster_secs":${jd(clSecs, 1)},"n_clusters":${cl.values.map(_._1).sum},"q_docs_per_sec":[${quartileRates.map(jd(_, 1)).mkString(",")}],"compact_every":$compactEvery,"compactions":$compactions,"compact_secs_per_tick":${jd(if (compactions == 0) 0.0 else compactSecs / compactions, 2)},"requant_every":$requantEvery,"requant_ticks":$ticks,"requant_secs_per_tick":${jd(if (ticks == 0) 0.0 else tickSecs / ticks, 2)},"post_requant_docs_per_sec":${jd(postRate, 1)}$statsJson}""")
+      println(s"""{"metric":"multimodal_ingest_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":$expectedKept,"media":${if (withMedia) 1 else 0},"media_rejected":$nMediaRej,"secs":${Bench.num(secs, 1)},"cluster_secs":${Bench.num(clSecs, 1)},"n_clusters":${cl.values.map(_._1).sum},"q_docs_per_sec":[${quartileRates.map(Bench.num(_, 1)).mkString(",")}],"compact_every":$compactEvery,"compactions":$compactions,"compact_secs_per_tick":${Bench.num(if (compactions == 0) 0.0 else compactSecs / compactions, 2)},"requant_every":$requantEvery,"requant_ticks":$ticks,"requant_secs_per_tick":${Bench.num(if (ticks == 0) 0.0 else tickSecs / ticks, 2)},"post_requant_docs_per_sec":${Bench.num(postRate, 1)}$statsJson}""")
     } else if (mode == "lm") {
       // the LM/quality membrane priced (round-16 verdict #2): same
       // dedup structure, plus a planted quality structure — the frozen
@@ -247,27 +209,17 @@ object IngestBench {
       val refDocs = docs.filter(vD === 0 || vD === 4)
         .select(col("doc_id"), col("text"))
       val modelDir = s"$dir/lm_model"
-      val tTr = System.nanoTime()
-      batch.TextOps.saveLm(spark, modelDir,
-        batch.TextOps.lmTrain((0 until 8).map(_ => refDocs).reduce(_ union _)))
-      val trainSecs = (System.nanoTime() - tTr) / 1e9
+      val (trainSecs, _) = Bench.timed(batch.TextOps.saveLm(spark, modelDir,
+        batch.TextOps.lmTrain((0 until 8).map(_ => refDocs).reduce(_ union _))))
       val lmDir = s"$dir/lm"
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { b =>
-        val hi = if (b == nBatches - 1) nDocs else (b + 1) * batchSize
-        stream.IngestDedup.ingestBatch(
-          docs.filter(col("doc_id") >= b * batchSize && col("doc_id") < hi),
-          lmDir, epochId = b, lmModelDir = Some(modelDir))
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val kept = spark.read.parquet(s"$lmDir/corpus").count()
+      val (secs, kept) = ingestAll(lmDir, Some(modelDir))
       require(kept == nDocs * 2 / 5,
         s"lm-gated ingest kept $kept, expected ${nDocs * 2 / 5}")
       val lmRej = stream.IngestDedup.ledger(spark, lmDir)
         .filter(col("reason") === "lm").count()
       require(lmRej == nDocs / 5,
         s"lm rejections $lmRej, expected ${nDocs / 5} (every v3 doc)")
-      println(s"""{"metric":"ingest_lm_docs_per_sec","value":${jd(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 2 / 5},"lm_rejected":$lmRej,"train_secs":${jd(trainSecs, 1)},"secs":${jd(secs, 1)}}""")
+      println(s"""{"metric":"ingest_lm_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 2 / 5},"lm_rejected":$lmRej,"train_secs":${Bench.num(trainSecs, 1)},"secs":${Bench.num(secs, 1)}}""")
     } else if (mode == "regimes") {
       // force each probe regime over the identical workload; the limits
       // are read per batch, so setting them before a run is enough
@@ -282,13 +234,12 @@ object IngestBench {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         val (secs, kept) = ingestAll(s"$dir/$name")
         require(kept == nDocs * 3 / 5, s"$name regime kept $kept, expected ${nDocs * 3 / 5}")
-        s""""$name":${jd(nDocs / secs, 1)}"""
+        s""""$name":${Bench.num(nDocs / secs, 1)}"""
       }
       println(s"""{"metric":"ingest_regime_docs_per_sec",${rates.mkString(",")},"docs":$nDocs,"batches":$nBatches}""")
     } else {
       val (secs, kept) = ingestAll(dir)
-      println(s"""{"metric":"ingest_docs_per_sec","value":${jd(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 3 / 5},"secs":${jd(secs, 1)}}""")
+      println(s"""{"metric":"ingest_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 3 / 5},"secs":${Bench.num(secs, 1)}}""")
     }
-    spark.stop()
   }
 }

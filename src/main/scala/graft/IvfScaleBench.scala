@@ -37,7 +37,7 @@ import graft.functions.GraftFunctions
   *     scale 1), so the audit costs sample², never corpus².
   *   - **Dup-grade pairs** (cos ≈ 0.95): the pairs an actual dedup
   *     exists to catch, absent from the random fixture, so the bench
-  *     PLANTS them — [[plantTwins]] adds a deterministic ±ε/√d
+  *     PLANTS them — [[AnnScaleBench.plantTwins]] adds a deterministic ±ε/√d
   *     perturbation twin for ~200 spread bases per rung (cos(v, twin)
   *     ≈ 1/√(1+ε²) ≈ 0.949, band 9) and the audit reports the
   *     fraction of planted pairs each arm's candidate generation
@@ -52,14 +52,7 @@ import graft.functions.GraftFunctions
   * BASELINE.md records the run and the per-rung diagnosis.
   */
 object IvfScaleBench {
-
-  private val Dim = 64
-  /** Perturbation scale: cos ≈ 1/√(1+ε²) ≈ 0.9487 at ε = 1/3. */
-  private val Eps = 1.0 / 3.0
-
-  private def withNrm(df: DataFrame): DataFrame =
-    df.withColumn("nrm",
-      sqrt(GraftFunctions.vec_dot(col("embedding"), col("embedding"))))
+  import AnnScaleBench.{plantTwins, withNrm}
 
   /** Exact rcos ≥ tau all-pairs over the bounded sample — qd5's
     * computation with the sample modulus a parameter; planted twins
@@ -76,52 +69,16 @@ object IvfScaleBench {
       .select(col("id_a"), col("id_b"), col("rcos"))
   }
 
-  /** Deterministic dup-grade twins: for each base (spread by modulus,
-    * ~200 per rung) emit a copy at `plantOffset + vec_id` whose every
-    * coordinate is nudged by ±ε·‖v‖/√d, the sign drawn from
-    * `hash(vec_id, j)` parity — seed-free, so reruns plant the same
-    * twins. Planted pair cosine concentrates at 1/√(1+ε²). */
-  private def plantTwins(emb: DataFrame, baseMod: Long,
-      plantOffset: Long): DataFrame = {
-    val bases = emb.filter(pmod(col("vec_id"), lit(baseMod)) === 3)
-    bases.select(
-      (col("vec_id") + lit(plantOffset)).as("vec_id"),
-      array((0 until Dim).map { j =>
-        (element_at(col("embedding"), j + 1) +
-          (pmod(hash(col("vec_id"), lit(j)), lit(2)) * 2 - 1).cast("float") *
-            lit(Eps.toFloat) * (col("nrm") / lit(math.sqrt(Dim.toDouble))).cast("float"))
-          .cast("float")
-      }: _*).as("embedding"))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
-    val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
-      .split(",").map(_.trim.toInt).toSeq.sorted
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val srcDir = Bench.sfDir()
+    val scales = Bench.scales("1,3,10")
+    val reps = Bench.benchReps(2)
     val armNames = sys.env.getOrElse("SPARK_GRAFT_IVF_ARMS", "ivf,fix,dup")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val tau = 0.4
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime()
-      val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
     val rungs = scales.map { n =>
-      val dir = s"$outRoot/x$n"
+      val dir = s"${Bench.scaleDir}/x$n"
       ScaleGen.amplify(spark, srcDir, dir, n)
 
       val embRaw = withNrm(
@@ -144,24 +101,22 @@ object IvfScaleBench {
       // index built BEFORE the twins arrive — the realistic order
       // (quantizer persisted, queries keep coming); centroids are a
       // deterministic md5 sample so the build is rerun-stable
-      val (tBuild, _) = time {
+      val (tBuild, _) = Bench.timed {
         IvfIndex.build(Tables.embeddings(spark, dir), idxDir, nCells)
       }
-      val ivfCents = spark.read.parquet(s"$idxDir/centroids").localCheckpoint()
+      val ivfCents = spark.read.parquet(IvfIndex.centroidsPath(spark, idxDir)).localCheckpoint()
       val fixCents = embRaw.filter(pmod(col("vec_id"), lit(100)) === 7)
         .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"))
         .localCheckpoint()
 
       val exact = exactPairs(embRaw, 2 * n, tau, plantOffset).localCheckpoint()
 
-      def arm(cents: DataFrame, cap: Int, armTau: Double, probes: Int,
+      def arm(name: String, cents: DataFrame, cap: Int, armTau: Double, probes: Int,
           scorer: (DataFrame, DataFrame, Double, Int, Int) => DataFrame)
           : (Long, Double, Double, Long, Long, Long, Long) = {
-        var rows = -1L
-        val ts = (1 to math.max(1, reps)).map { _ =>
-          time { rows = scorer(emb, cents, armTau, cap, probes)
-            .queryExecution.toRdd.count() }._1
-        }
+        val runs = Bench.timeReps(s"$name at x$n", reps)(
+          Bench.execute(scorer(emb, cents, armTau, cap, probes)))
+        val (rows, ts) = (runs.last._1, runs.map(_._2))
         val found = scorer(emb, cents, armTau, cap, probes)
           .select(col("id_a").as("f_a"), col("id_b").as("f_b"))
           .localCheckpoint()
@@ -209,31 +164,28 @@ object IvfScaleBench {
         ("dup8", ivfCents, dupCap, 0.9, 1, i8))
         .filter(a => armNames.contains(a._1))
       val ran = armDefs.map { case (nm, cents, cap, t, p, f) =>
-        nm -> arm(cents, cap, t, p, f)
+        nm -> arm(nm, cents, cap, t, p, f)
       }
 
       def armJson(a: (Long, Double, Double, Long, Long, Long, Long)): String =
-        s"""{"rows":${a._1},"cold":${d3(a._2)},"steady":${d3(a._3)},""" +
+        s"""{"rows":${a._1},"cold":${Bench.num(a._2)},"steady":${Bench.num(a._3)},""" +
           s""""b4_exact":${a._4},"b4_found":${a._5},""" +
           s""""planted":${a._6},"planted_found":${a._7}}"""
 
-      (n, s""""x$n":{"n_vecs":$nVecs,"n_cells":$nCells,"ivf_cap":$ivfCap,"build":${d3(tBuild)},""" +
+      (n, s""""x$n":{"n_vecs":$nVecs,"n_cells":$nCells,"ivf_cap":$ivfCap,"build":${Bench.num(tBuild)},""" +
         ran.map { case (nm, a) => s""""$nm":${armJson(a)}""" }.mkString(",") + "}",
         ran.toMap.view.mapValues(_._3).toMap)
     }
 
-    val lo = scales.head.toDouble
-    val hi = scales.last.toDouble
     def expFor(armNm: String): Option[Double] =
       for {
         tHi <- rungs.last._3.get(armNm)
         tLo <- rungs.head._3.get(armNm)
-      } yield math.log(tHi / tLo) / math.log(hi / lo)
+      } yield Bench.exponent(tLo, tHi, scales.head, scales.last)
     val expJson = Seq("ivf", "fix", "dup").flatMap(nm =>
-      expFor(nm).map(e => s""""${nm}_exponent":${d3(e)}""")).mkString(",")
+      expFor(nm).map(e => s""""${nm}_exponent":${Bench.num(e)}""")).mkString(",")
 
-    println(s"""{"metric":"ivf_dedup_exponent","value":${d3(
+    println(s"""{"metric":"ivf_dedup_exponent","value":${Bench.num(
       expFor(armNames.head).getOrElse(Double.NaN))},"unit":"exponent",$expJson,"scales":"${scales.mkString(",")}","src":"$srcDir","rungs":{${rungs.map(_._2).mkString(",")}}}""")
-    spark.stop()
   }
 }

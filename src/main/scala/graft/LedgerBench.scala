@@ -22,26 +22,15 @@ import org.apache.spark.sql.functions._
   * cost does not depend on text, only on member/changed counts). One
   * JSON line per the Bench contract. */
 object LedgerBench {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     val baseN = sys.env.get("SPARK_GRAFT_LEDGER_BASE").flatMap(_.toLongOption)
       .getOrElse(54000L) // sf0.1's corpus-side doc count, the x1 anchor
-    val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,10,30")
-      .split(",").map(_.trim.toInt).toSeq.sorted
+    val scales = Bench.scales("1,10,30")
     val nVersions = sys.env.get("SPARK_GRAFT_LEDGER_VERSIONS")
       .flatMap(_.toIntOption).getOrElse(5)
     require(nVersions >= 5,
       "LedgerBench needs ≥ 5 versions: v3 prices the diff shape and v5 the compaction")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.graft.ledgerCompactEvery", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def d3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    spark.conf.set("spark.graft.ledgerCompactEvery", "4")
 
     /** Version v's membership at rung scale s: the base corpus plus
       * 5%·(v−1) appended docs, in (id div 3) clusters; each version
@@ -62,26 +51,19 @@ object LedgerBench {
       val dir = java.nio.file.Files.createTempDirectory(s"ledger_x$s").toString
       val secs = (1 to nVersions).map { v =>
         val m = membersAt(n, v).localCheckpoint() // gen cost off the clock
-        val t0 = System.nanoTime()
-        graft.batch.SplitLedger.assign(spark, dir, m)
-          .queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
+        Bench.timed(Bench.execute(graft.batch.SplitLedger.assign(spark, dir, m)))._1
       }
       val vs = secs.zipWithIndex
-        .map { case (t, i) => s""""v${i + 1}":${d3(t)}""" }.mkString(",")
+        .map { case (t, i) => s""""v${i + 1}":${Bench.num(t)}""" }.mkString(",")
       (s, secs, s""""x$s":{"n":$n,$vs}""")
     }
-    def expOf(pick: Seq[Double] => Double): Double = {
-      val lo = rungs.head; val hi = rungs.last
-      math.log(pick(hi._2) / pick(lo._2)) /
-        math.log(rungs.last._1.toDouble / rungs.head._1)
-    }
+    def expOf(pick: Seq[Double] => Double): Double =
+      Bench.exponent(pick(rungs.head._2), pick(rungs.last._2), rungs.head._1, rungs.last._1)
     val diffExp = expOf(_(2))      // v3: a plain diff version
     val compactExp = expOf(_(4))   // v5: the cadence's full rewrite
-    println(s"""{"metric":"ledger_assign_secs","value":${d3(rungs.last._2.sum)},""" +
+    println(s"""{"metric":"ledger_assign_secs","value":${Bench.num(rungs.last._2.sum)},""" +
       s""""unit":"sec","scales":"${scales.mkString(",")}","versions":$nVersions,""" +
-      s""""diff_exponent":${d3(diffExp)},"compact_exponent":${d3(compactExp)},""" +
+      s""""diff_exponent":${Bench.num(diffExp)},"compact_exponent":${Bench.num(compactExp)},""" +
       s""""rungs":{${rungs.map(_._3).mkString(",")}}}""")
-    spark.stop()
   }
 }

@@ -54,43 +54,22 @@ object MediaScaleBench {
           .as("phash"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
-    val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
-      .split(",").map(_.trim.toInt).toSeq.sorted
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime()
-      val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val srcDir = Bench.sfDir()
+    val scales = Bench.scales("1,3,10")
+    val reps = Bench.benchReps(2)
 
     val rungs = scales.map { n =>
-      val dir = s"$outRoot/x$n"
+      val dir = s"${Bench.scaleDir}/x$n"
       ScaleGen.amplify(spark, srcDir, dir, n)
       val docs = Tables.spread(Tables.documents(spark, dir)).localCheckpoint()
 
-      def timedRows(df: => DataFrame): (Long, Double, Double) = {
-        var rows = -1L
-        val ts = (1 to math.max(1, reps)).map { _ =>
-          time { rows = df.queryExecution.toRdd.count() }._1
-        }
-        (rows, ts.head, ts.min)
+      def timedRows(arm: String)(df: => DataFrame): (Long, Double, Double) = {
+        val runs = Bench.timeReps(s"$arm at x$n", reps)(Bench.execute(df))
+        (runs.last._1, runs.head._2, runs.map(_._2).min)
       }
-      val nw = timedRows(Multimodal.videoFrameDup(docs))
-      val wd = timedRows(Multimodal.videoFrameDupWide(docs))
+      val nw = timedRows("narrow")(Multimodal.videoFrameDup(docs))
+      val wd = timedRows("wide")(Multimodal.videoFrameDupWide(docs))
       // third arm — the residual dial after width: the same wide
       // regime with the DISTINCT-hash bucket cap swept up (default
       // 1024). 16-bit mean occupancy stays far under any cap, so what
@@ -98,7 +77,7 @@ object MediaScaleBench {
       // recovering them (bucket-local cost is m², so the bill is
       // hot-bucket-bounded, not corpus-bounded).
       val sweepCap = sys.env.getOrElse("SPARK_GRAFT_MEDIA_CAP2", "1024").toInt
-      val wo = timedRows(Multimodal.videoFrameDupWide(docs, sweepCap))
+      val wo = timedRows(s"wide_cap$sweepCap")(Multimodal.videoFrameDupWide(docs, sweepCap))
 
       // planted completeness over each width's real frame-hash corpus
       def plantedRecall(ph0: DataFrame, bits: Int, bandBits: Int,
@@ -132,7 +111,7 @@ object MediaScaleBench {
 
       def armJson(a: (Long, Double, Double), p: Long, f: Long,
           extra: String = ""): String =
-        s"""{"rows":${a._1},"cold":${d3(a._2)},"steady":${d3(a._3)},""" +
+        s"""{"rows":${a._1},"cold":${Bench.num(a._2)},"steady":${Bench.num(a._3)},""" +
           s""""planted":$p,"planted_found":$f$extra}"""
 
       (n, s""""x$n":{"narrow":${armJson(nw, p8, f8, s""","hot_bucket":$hot8""")},""" +
@@ -140,13 +119,10 @@ object MediaScaleBench {
         s""""wide_cap$sweepCap":${armJson(wo, po, fo)}}""", nw._3, wd._3, nw._1, wd._1)
     }
 
-    val lo = scales.head.toDouble
-    val hi = scales.last.toDouble
     def expOf(f: ((Int, String, Double, Double, Long, Long)) => Double): Double =
-      math.log(f(rungs.last) / f(rungs.head)) / math.log(hi / lo)
+      Bench.exponent(f(rungs.head), f(rungs.last), scales.head, scales.last)
 
-    println(s"""{"metric":"media_band_exponent","value":${d3(expOf(_._4))},"unit":"exponent","narrow_exponent":${d3(expOf(_._3))},"narrow_rows_exponent":${d3(
-      expOf(_._5.toDouble))},"wide_rows_exponent":${d3(expOf(_._6.toDouble))},"scales":"${scales.mkString(",")}","src":"$srcDir","rungs":{${rungs.map(_._2).mkString(",")}}}""")
-    spark.stop()
+    println(s"""{"metric":"media_band_exponent","value":${Bench.num(expOf(_._4))},"unit":"exponent","narrow_exponent":${Bench.num(expOf(_._3))},"narrow_rows_exponent":${Bench.num(
+      expOf(_._5.toDouble))},"wide_rows_exponent":${Bench.num(expOf(_._6.toDouble))},"scales":"${scales.mkString(",")}","src":"$srcDir","rungs":{${rungs.map(_._2).mkString(",")}}}""")
   }
 }

@@ -31,23 +31,14 @@ object ScaleBench {
       "qc1_curation", "qc2_multimodal_curation", "qd13_cell_neardup",
       "qd6_dup_clusters", "qm4_video_framedup"))
 
-  def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale")
-    val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
-      .split(",").map(_.trim.toInt).toSeq.sorted
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val srcDir = Bench.sfDir()
+    val scales = Bench.scales("1,3,10")
+    val reps = Bench.benchReps(3)
+    val named = Bench.lookup(Queries, SparkEntry.queries)
 
     val dirs = scales.map { n =>
-      val dir = s"$outRoot/x$n"
+      val dir = s"${Bench.scaleDir}/x$n"
       ScaleGen.amplify(spark, srcDir, dir, n)
       n -> dir
     }
@@ -55,44 +46,29 @@ object ScaleBench {
     // JIT/codegen warmup on the smallest rung so rung order doesn't
     // masquerade as scaling
     val warmDir = dirs.head._2
-    Queries.foreach { q =>
-      try SparkEntry.queries(q)(spark, warmDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
-    }
+    named.foreach { case (_, fn) => Bench.warm(Bench.execute(fn(spark, warmDir))) }
 
     // rows, cold, steady per (query, rung)
     val results: Seq[(String, Int, Long, Double, Double)] =
-      Bench.failLoudly(spark) {
-        for ((n, dir) <- dirs; q <- Queries) yield {
-          val runs = Bench.timeReps(s"$q at x$n", reps)(
-            SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count())
-          val times = runs.map(_._2)
-          (q, n, runs.last._1, times.head, times.min)
-        }
+      for ((n, dir) <- dirs; (q, fn) <- named) yield {
+        val runs = Bench.timeReps(s"$q at x$n", reps)(Bench.execute(fn(spark, dir)))
+        val times = runs.map(_._2)
+        (q, n, runs.last._1, times.head, times.min)
       }
 
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-    val lo = scales.head.toDouble
-    val hi = scales.last.toDouble
-    val perQuery = Queries.map { q =>
+    def exponentOf(q: String): Double = {
       val rs = results.filter(_._1 == q)
-      val tLo = rs.find(_._2 == scales.head).get._5
-      val tHi = rs.find(_._2 == scales.last).get._5
-      val exp = math.log(tHi / tLo) / math.log(hi / lo)
-      val rungs = rs.map { case (_, n, rows, cold, steady) =>
-        s""""x$n":{"rows":$rows,"cold":${d3(cold)},"steady":${d3(steady)}}"""
+      Bench.exponent(rs.find(_._2 == scales.head).get._5, rs.find(_._2 == scales.last).get._5,
+        scales.head, scales.last)
+    }
+    val perQuery = Queries.map { q =>
+      val rungs = results.filter(_._1 == q).map { case (_, n, rows, cold, steady) =>
+        s""""x$n":{"rows":$rows,"cold":${Bench.num(cold)},"steady":${Bench.num(steady)}}"""
       }.mkString(",")
-      s""""$q":{$rungs,"exponent":${d3(exp)}}"""
+      s""""$q":{$rungs,"exponent":${Bench.num(exponentOf(q))}}"""
     }.mkString("{", ",", "}")
 
-    println(s"""{"metric":"scale_exponent_max","value":${d3(
-      Queries.map { q =>
-        val rs = results.filter(_._1 == q)
-        math.log(rs.find(_._2 == scales.last).get._5 /
-          rs.find(_._2 == scales.head).get._5) / math.log(hi / lo)
-      }.max)},"unit":"exponent","scales":"${scales.mkString(",")}","src":"$srcDir","queries":$perQuery}""")
-    spark.stop()
+    println(s"""{"metric":"scale_exponent_max","value":${Bench.num(Queries.map(exponentOf).max)},""" +
+      s""""unit":"exponent","scales":"${scales.mkString(",")}","src":"$srcDir","queries":$perQuery}""")
   }
 }

@@ -43,25 +43,17 @@ import org.apache.spark.sql.functions._
   */
 object ScaleGen {
 
-  /** Standalone rung generation: `runMain graft.ScaleGen <srcDir>
+  /** Standalone rung generation: `runMain graft.Bench gen <srcDir>
     * <outDir> <replicas>` amplifies the FULL fixture surface —
     * documents/embeddings (isomorphic bijection/isometry) AND the
     * relational tables (join-closed key-offset replicas) — so the
     * entire oracle query set can run at a scale rung, not just the
     * document family. */
-  def main(args: Array[String]): Unit = {
-    val Array(srcDir, outDir, replicas) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    amplify(spark, srcDir, outDir, replicas.toInt)
-    amplifyRelational(spark, srcDir, outDir, replicas.toInt)
-    spark.stop()
+  def run(spark: SparkSession, args: Seq[String]): Unit = args match {
+    case Seq(srcDir, outDir, replicas, _*) =>
+      amplify(spark, srcDir, outDir, replicas.toInt)
+      amplifyRelational(spark, srcDir, outDir, replicas.toInt)
+    case _ => throw new Bench.UsageError("gen takes <srcDir> <outDir> <replicas>")
   }
 
   private[graft] val Letters = "abcdefghijklmnopqrstuvwxyz"

@@ -22,7 +22,7 @@ import graft.stream.{Sinks, StateMachine}
   * per second on one node; divide by 2 for the equivalent number of
   * stations served at the reference's own cadence.
   *
-  * `sbt "runMain graft.StreamBench [nObs] [nStations] [rocksdb]
+  * `sbt "runMain graft.Bench stream [nObs] [nStations] [rocksdb]
   * [dimjoin|eventtime|tws] [recover]"` — prints one JSON line. The
   * optional `rocksdb` arg runs the same load on the RocksDB state
   * store (the large-state production config); `dimjoin` routes the
@@ -51,22 +51,13 @@ import graft.stream.{Sinks, StateMachine}
   * (StreamingSpec's restart scenario, at 5000× the scale).
   */
 object StreamBench {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 200000
     val stations = if (args.length > 1) args(1).toInt else 200
     val rocksdb = args.contains("rocksdb")
     val eventtime = args.contains("eventtime")
     val tws = args.contains("tws")
     val dimjoin = args.contains("dimjoin") || eventtime || tws
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors())).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     if (rocksdb) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
@@ -109,10 +100,6 @@ object StreamBench {
     lazy val dimMults = Seq(("AAA", 2L)).toDF("parte", "multiplier")
     lazy val dimRecs = Seq.empty[(String, Long, Int, Long)]
       .toDF("record_id", "produced", "status_id", "planned")
-    // explicit-ROOT-locale formatting keeps the line valid JSON under
-    // comma-decimal default locales
-    def jd(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
 
     if (recover) {
       require(useFiles,
@@ -150,7 +137,7 @@ object StreamBench {
         s"load drained before the kill (${dataBatches(q1)} of ${nFiles / maxFiles} " +
           "batches done) — raise n or lower killAfter; this run proves nothing")
       q1.stop() // in-flight batch dies uncommitted — the crash
-      try q1.awaitTermination() catch { case _: Throwable => () }
+      scala.util.Try(q1.awaitTermination())
       // the kill must land MID-RUN or the "recovery" measures an empty
       // restart and the SLA is vacuous (records_diff==0 would pass
       // trivially). stop() is COOPERATIVE — batches can commit between
@@ -198,8 +185,7 @@ object StreamBench {
         s"recovered output differs from uninterrupted run: records=$recDiff histories=$histDiff")
       val nRecords = spark.read.parquet(s"$outDir/production_records").count()
       val host2 = if (tws) "tws-eventtime" else "fmgws-eventtime"
-      println(s"""{"metric":"stream_recovery_sec","value":${jd(recoverySec, 2)},"unit":"sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"$host2","batches_before_kill":$batchesBeforeKill,"recovery_first_batch_sec":${jd(recoverySec, 2)},"recovered_drain_sec":${jd(drainSec, 2)},"uninterrupted_sec":${jd(refSec, 2)},"records":$nRecords,"records_diff":$recDiff,"histories_diff":$histDiff}""")
-      spark.stop()
+      println(s"""{"metric":"stream_recovery_sec","value":${Bench.num(recoverySec, 2)},"unit":"sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"$host2","batches_before_kill":$batchesBeforeKill,"recovery_first_batch_sec":${Bench.num(recoverySec, 2)},"recovered_drain_sec":${Bench.num(drainSec, 2)},"uninterrupted_sec":${Bench.num(refSec, 2)},"records":$nRecords,"records_diff":$recDiff,"histories_diff":$histDiff}""")
       return
     }
 
@@ -260,7 +246,6 @@ object StreamBench {
     val records = spark.read.parquet(s"$outDir/production_records").count()
     val host = if (tws) "tws-eventtime" else if (eventtime) "fmgws-eventtime"
       else if (dimjoin) "dimjoin" else "map"
-    println(s"""{"metric":"stream_obs_per_sec","value":${jd(rate, 0)},"unit":"obs/sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"$host","wall_sec":${jd(sec, 2)},"records":$records,"state_rows":$stateRows,"state_bytes":$stateBytes,"equiv_stations_at_reference_cadence":${(rate / 2).toLong}}""")
-    spark.stop()
+    println(s"""{"metric":"stream_obs_per_sec","value":${Bench.num(rate, 0)},"unit":"obs/sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"$host","wall_sec":${Bench.num(sec, 2)},"records":$records,"state_rows":$stateRows,"state_bytes":$stateBytes,"equiv_stations_at_reference_cadence":${(rate / 2).toLong}}""")
   }
 }

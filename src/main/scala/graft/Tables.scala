@@ -74,7 +74,7 @@ object Tables {
 
   def spread(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    // conf override: lets ABRoute A/B the fan-out width in-JVM
+    // conf override: lets `graft.Bench ab` A/B the fan-out width in-JVM
     // (OPTIMIZATION_r17.md "spread width")
     val target = s.conf.getOption("graft.spread.partitions").map(_.toInt)
       .getOrElse(sizedWidth(df))

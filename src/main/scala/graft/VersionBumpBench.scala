@@ -14,18 +14,8 @@ import org.apache.spark.sql.functions._
   * actual wall clock and the report's rejection counts at fixture
   * scale. One JSON line per the Bench contract. */
 object VersionBumpBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def d3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    val sfDir = Bench.sfDir()
     val root = java.nio.file.Files.createTempDirectory("vbump").toString
     val p = graft.batch.Curation.Params(splitLedgerDir = Some(s"$root/ledger"))
     val all = Tables.spread(Tables.documents(spark, sfDir)).localCheckpoint()
@@ -36,14 +26,10 @@ object VersionBumpBench {
     val fresh = corpus.filter(pmod(col("doc_id"), lit(3)) === 1)
     val recrawl = prior.filter(pmod(col("doc_id"), lit(5)) === 0)
       .withColumn("doc_id", col("doc_id") + lit(10000000L))
-    val t0 = System.nanoTime()
-    graft.batch.Curation.curateToShards(prior, ev, s"$root/v1", 4, p)
-    val v1Secs = (System.nanoTime() - t0) / 1e9
+    val (v1Secs, _) = Bench.timed(graft.batch.Curation.curateToShards(prior, ev, s"$root/v1", 4, p))
     val newSlice = fresh.unionByName(recrawl).localCheckpoint()
-    val t1 = System.nanoTime()
-    val rep = graft.batch.Curation
-      .versionBump(prior, newSlice, ev, s"$root/v2", 4, p).head()
-    val bumpSecs = (System.nanoTime() - t1) / 1e9
+    val (bumpSecs, rep) = Bench.timed(graft.batch.Curation
+      .versionBump(prior, newSlice, ev, s"$root/v2", 4, p).head())
     // the sigStore arm: identical bump, but the prior side reads its
     // persisted signature table instead of re-minhashing — the
     // recurring pipeline's steady state
@@ -51,10 +37,8 @@ object VersionBumpBench {
     graft.batch.Curation.curateToShards(prior, ev, s"$root/v1b", 4, p2)
     graft.batch.Dedup.saveSigs(spark, s"$root/sigs", 1L,
       graft.batch.Dedup.minhashSigsOf(prior))
-    val t2 = System.nanoTime()
-    val rep2 = graft.batch.Curation.versionBump(prior, newSlice, ev,
-      s"$root/v2b", 4, p2, Some(s"$root/sigs")).head()
-    val storedSecs = (System.nanoTime() - t2) / 1e9
+    val (storedSecs, rep2) = Bench.timed(graft.batch.Curation.versionBump(prior, newSlice, ev,
+      s"$root/v2b", 4, p2, Some(s"$root/sigs")).head())
     require(rep2.getLong(2) == rep.getLong(2),
       "stored-signature bump must reject the identical set")
     // the SignalStore arm (round-17, verdict #4): v1 persists the whole
@@ -66,13 +50,9 @@ object VersionBumpBench {
     val p3 = graft.batch.Curation.Params(
       splitLedgerDir = Some(s"$root/ledger3"),
       signalStoreDir = Some(s"$root/signals"))
-    val t3v1 = System.nanoTime()
-    graft.batch.Curation.curateToShards(prior, ev, s"$root/v1c", 4, p3)
-    val v1StoreSecs = (System.nanoTime() - t3v1) / 1e9
-    val t3 = System.nanoTime()
-    val rep3 = graft.batch.Curation.versionBump(prior, newSlice, ev,
-      s"$root/v2c", 4, p3).head()
-    val storeSecs = (System.nanoTime() - t3) / 1e9
+    val (v1StoreSecs, _) = Bench.timed(graft.batch.Curation.curateToShards(prior, ev, s"$root/v1c", 4, p3))
+    val (storeSecs, rep3) = Bench.timed(graft.batch.Curation.versionBump(prior, newSlice, ev,
+      s"$root/v2c", 4, p3).head())
     require(rep3.getLong(2) == rep.getLong(2) &&
         rep3.getLong(3) == rep.getLong(3),
       "signal-store bump must reject and admit the identical sets")
@@ -83,14 +63,13 @@ object VersionBumpBench {
     require(shardRows(s"$root/v2c").exceptAll(shardRows(s"$root/v2")).isEmpty &&
         shardRows(s"$root/v2").exceptAll(shardRows(s"$root/v2c")).isEmpty,
       "signal-store bump must land the identical shard layout")
-    println(s"""{"metric":"version_bump_secs","value":${d3(bumpSecs)},""" +
-      s""""unit":"sec","sf":"$sfDir","v1_secs":${d3(v1Secs)},""" +
-      s""""bump_stored_sigs_secs":${d3(storedSecs)},""" +
-      s""""v1_signal_store_secs":${d3(v1StoreSecs)},""" +
-      s""""bump_signal_store_secs":${d3(storeSecs)},""" +
+    println(s"""{"metric":"version_bump_secs","value":${Bench.num(bumpSecs)},""" +
+      s""""unit":"sec","sf":"$sfDir","v1_secs":${Bench.num(v1Secs)},""" +
+      s""""bump_stored_sigs_secs":${Bench.num(storedSecs)},""" +
+      s""""v1_signal_store_secs":${Bench.num(v1StoreSecs)},""" +
+      s""""bump_signal_store_secs":${Bench.num(storeSecs)},""" +
       s""""ledger_version":${rep.getLong(0)},"n_new":${rep.getLong(1)},""" +
       s""""n_rejected":${rep.getLong(2)},"n_admitted":${rep.getLong(3)},""" +
       s""""n_recrawl":${recrawl.count()}}""")
-    spark.stop()
   }
 }

@@ -101,7 +101,7 @@ object IvfIndex {
   private[graft] def nearestCells(emb: Column, nrm: Column, p: Int,
       rounded: Boolean): Column =
     // GRAFT_PROBE_HOF=1 routes through the HOF twin — the same-slot A/B
-    // lever TimeQuery uses to price the native probe without a rebuild
+    // lever `graft.Bench time` uses to price the native probe without a rebuild
     if (sys.env.contains("GRAFT_PROBE_HOF"))
       transform(topCells(emb, nrm, p, rounded), c => c.getField("cid"))
     else

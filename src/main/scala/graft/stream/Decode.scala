@@ -33,7 +33,7 @@ object Decode {
     * expressions + explode — no shuffle, no streaming aggregation), so
     * `flatMapGroupsWithState` can legally and efficiently follow it;
     * the cross-side counter sum happens inside the state function
-    * (StateMachine.combine). */
+    * (StateMachine.combineEnriched). */
   def decodeSnapshots(spark: SparkSession, snapshots: DataFrame,
       configs: Seq[StationSideConfig]): Dataset[PartObservation] = {
     import spark.implicits._
@@ -77,7 +77,7 @@ object Decode {
 
     // A1 combinar_listas: per (station, ts, parte) — sum counters,
     // deterministic max tiempo / min original BY VALUE (identical to
-    // StateMachine.combine, so batch backfills match streaming runs)
+    // StateMachine.combineEnriched, so batch backfills match streaming runs)
     candidates
       .groupBy(col("station"), col("ts"), col("parte"))
       .agg(sum(col("contador")).as("contador"),

@@ -392,18 +392,10 @@ object StateMachine {
     * function: same-part observations at the SAME tick (e.g. both LH
     * and RH sides) sum their counters; deterministic max tiempo / min
     * original replace the reference's order-dependent last/first.
-    * Already-combined inputs (one row per ts) pass through unchanged. */
-  def combine(rows: Vector[PartObservation]): Vector[PartObservation] =
-    rows.groupBy(_.ts).toVector.sortBy(_._1.getTime).map { case (_, group) =>
-      group.head.copy(
-        contador = group.map(_.contador).sum,
-        tiempo = group.map(_.tiempo).max,
-        original = group.map(_.original).min)
-    }
-
-  /** [[combine]] over enriched rows. Same-key same-ts observations
-    * share every lookup field (same (station, parte, ts) → same rid and
-    * dims), so the head's enrichment carries over unchanged. */
+    * Already-combined inputs (one row per ts) pass through unchanged.
+    * Same-key same-ts observations share every lookup field (same
+    * (station, parte, ts) → same rid and dims), so the head's
+    * enrichment carries over unchanged. */
   private[stream] def combineEnriched(rows: Vector[ObsEnriched]): Vector[ObsEnriched] =
     rows.groupBy(_.ts).toVector.sortBy(_._1.getTime).map { case (_, group) =>
       group.head.copy(

@@ -1,9 +1,14 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Failures are loud in the bench harness: a query that throws fails
-  * the bench by name, never reads as a timing. */
+  * the bench by name, never reads as a timing, and a misspelt mode or
+  * query name stops the harness before anything runs. */
 class BenchSpec extends SparkSpec {
 
   test("a query that throws fails the bench, naming the query") {
@@ -25,5 +30,79 @@ class BenchSpec extends SparkSpec {
     val runs = Bench.timeReps("q", 0) { n += 1; n }
     assert(runs.map(_._1) == Seq(1) && runs.forall(_._2 >= 0.0))
     intercept[Bench.QueryFailed](Bench.timeReps("q", 3)(sys.error("x")))
+  }
+
+  private type Mode = (SparkSession, Seq[String], Map[String, Bench.Query]) => Unit
+  private val queryModes: Seq[(String, Mode)] = Seq(
+    ("time", Bench.time), ("profile", Bench.profile), ("ab", Bench.ab), ("plan", Bench.plan))
+
+  /** What `body` prints, line by line. */
+  private def printed(body: => Unit): Seq[String] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(body)
+    out.toString("UTF-8").linesIterator.toSeq
+  }
+
+  test("unknown query names fail before any query runs, naming every one") {
+    val runs = new AtomicInteger()
+    val counted: Bench.Query = (s, _) => { runs.incrementAndGet(); s.range(10).toDF() }
+    for ((mode, run) <- queryModes) {
+      val e = intercept[Bench.UsageError] {
+        run(spark, Seq("1", "q_known", "q_typo", "q_gone"), Map("q_known" -> counted))
+      }
+      assert(e.getMessage.contains("q_typo") && e.getMessage.contains("q_gone"), mode)
+      assert(!e.getMessage.contains("q_known"), mode)
+    }
+    assert(runs.get == 0, "a query ran before the unknown names failed")
+  }
+
+  test("an unknown mode fails listing the modes; every listed mode resolves") {
+    val e = intercept[Bench.UsageError](Bench.mode("tiem"))
+    assert(e.getMessage.contains("tiem"))
+    for ((name, _) <- Bench.modes) {
+      assert(e.getMessage.contains(name))
+      Bench.mode(name)
+    }
+    assert(Bench.modes.map(_._1).toSet == Set("time", "profile", "ab", "plan", "expr",
+      "gen", "scale", "ann", "ivf", "media", "stream", "ingest", "ledger", "bpe",
+      "versionbump", "topk"))
+  }
+
+  test("time, profile and ab print one record per query of an injected map") {
+    val queries: Map[String, Bench.Query] = Map(
+      "q_a" -> ((s, _) => s.range(100).toDF()),
+      "q_b" -> ((s, _) => s.range(0, 1000, 1, 4).groupBy(col("id") % 7).count()))
+    val records = Seq(
+      ("time", "[time] ", (a: Seq[String]) => Bench.time(spark, a, queries)),
+      ("profile", "=== ", (a: Seq[String]) => Bench.profile(spark, a, queries)),
+      ("ab", "[ab] ", (a: Seq[String]) => Bench.ab(spark, a, queries)))
+    for ((mode, prefix, run) <- records) {
+      val lines = printed(run(Seq("1", "q_a", "q_b"))).filter(_.startsWith(prefix))
+      assert(lines.size == 2 && lines.head.startsWith(s"${prefix}q_a ") &&
+        lines(1).startsWith(s"${prefix}q_b "), s"$mode printed:\n${lines.mkString("\n")}")
+    }
+    assert(spark.conf.getOption("graft.components.driverLimit").isEmpty,
+      "ab must leave the session conf it flips as it found it")
+  }
+
+  test("profile's job count equals an independent listener's") {
+    val queries: Map[String, Bench.Query] = Map(
+      "q_jobs" -> ((s, _) => s.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+        .join(s.range(0, 7).toDF("k"), "k")))
+    val started = new AtomicInteger()
+    val independent = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty(Bench.DrainKey) == null))
+          started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(independent)
+    // no warm-ups: every job the mode starts belongs to the profiled rep
+    val lines = try printed(Bench.profile(spark, Seq("0", "q_jobs"), queries))
+      finally spark.sparkContext.removeSparkListener(independent)
+    val header = """=== q_jobs profiled rep: wall \d+ ms, (\d+) jobs ===""".r
+    val reported = lines.collectFirst { case header(n) => n.toInt }
+    assert(reported.contains(started.get), s"profile printed:\n${lines.mkString("\n")}")
+    assert(started.get > 1, "the profiled query must run more than one job")
+    assert(lines.count(_.startsWith("[job ")) == started.get)
   }
 }
