@@ -74,6 +74,7 @@ object AnnScaleBench {
     * construction the rung benches measure. */
   private[graft] def plantTwins(emb: DataFrame, baseMod: Long,
       plantOffset: Long, eps: Double = Eps, residue: Int = 3): DataFrame = {
+    require(residue < baseMod, s"no vec_id % $baseMod is $residue: no twin would be planted")
     val bases = emb.filter(pmod(col("vec_id"), lit(baseMod)) === residue)
     bases.select(
       (col("vec_id") + lit(plantOffset)).as("vec_id"),
@@ -84,6 +85,11 @@ object AnnScaleBench {
           .cast("float")
       }: _*).as("embedding"))
   }
+
+  /** The modulus picking about 200 of `nVecs` vectors as twin bases
+    * (`vec_id % m == 3`, [[plantTwins]]'s default residue) and as sample
+    * queries (`== 1`); at least 4, so a small rung plants twins too. */
+  private[graft] def twinBaseMod(nVecs: Long): Long = math.max(4L, nVecs / 200)
 
   def run(spark: SparkSession, args: Seq[String]): Unit = {
     val srcDir = Bench.sfDir()
@@ -110,7 +116,7 @@ object AnnScaleBench {
       val nVecs = embRaw.count()
       val maxId = embRaw.agg(max(col("vec_id"))).head.getLong(0)
       val plantOffset = (maxId / 100 + 1) * 100
-      val baseMod = math.max(1L, nVecs / 200)
+      val baseMod = twinBaseMod(nVecs)
 
       val nCells = math.ceil(math.sqrt(nVecs.toDouble)).toInt
       val idxDir = s"$dir/ivf_sqrtn"
@@ -341,10 +347,7 @@ object AnnScaleBench {
         val l3 = withNrm(Tables.embeddings(spark, dir)
           .filter(col("label") === 3).select("vec_id", "embedding"))
           .localCheckpoint()
-        // floor 4: plantTwins keeps vec_id % baseMod == 3, which is
-        // unsatisfiable below 4 (the x1 rung's label-3 count / 200
-        // rounds to 1 → zero twins, a vacuous arm)
-        val bmF = math.max(4L, l3.count() / 200)
+        val bmF = twinBaseMod(l3.count())
         val twinF = plantTwins(l3, bmF, plantOffset).localCheckpoint()
         val nTF = twinF.count()
         def hitsAt(p: Int, flt: Option[org.apache.spark.sql.Column]): Long =
@@ -394,7 +397,7 @@ object AnnScaleBench {
           val matched = withNrm(Tables.embeddings(spark, dir).filter(pred)
             .select("vec_id", "embedding")).localCheckpoint()
           val nm = matched.count()
-          val bmS = math.max(4L, nm / 200)
+          val bmS = twinBaseMod(nm)
           val twinS = plantTwins(matched, bmS, plantOffset).localCheckpoint()
           val nT = twinS.count()
           def idxHits(p: Int): (Double, Long) = {

@@ -52,7 +52,7 @@ import graft.functions.GraftFunctions
   * BASELINE.md records the run and the per-rung diagnosis.
   */
 object IvfScaleBench {
-  import AnnScaleBench.{plantTwins, withNrm}
+  import AnnScaleBench.{plantTwins, twinBaseMod, withNrm}
 
   /** Exact rcos ≥ tau all-pairs over the bounded sample — qd5's
     * computation with the sample modulus a parameter; planted twins
@@ -86,7 +86,7 @@ object IvfScaleBench {
       val nVecs = embRaw.count()
       val maxId = embRaw.agg(max(col("vec_id"))).head.getLong(0)
       val plantOffset = (maxId / 100 + 1) * 100
-      val baseMod = math.max(1L, nVecs / 200)
+      val baseMod = twinBaseMod(nVecs)
       val twins = withNrm(plantTwins(embRaw, baseMod, plantOffset))
       val plantedPairs = twins.select(
         (col("vec_id") - lit(plantOffset)).as("p_a"), col("vec_id").as("p_b"))

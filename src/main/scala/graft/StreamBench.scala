@@ -25,7 +25,8 @@ import graft.stream.{Sinks, StateMachine}
   * `sbt "runMain graft.Bench stream [nObs] [nStations] [rocksdb]
   * [dimjoin|eventtime|tws] [recover]"` — prints one JSON line. The
   * optional `rocksdb` arg runs the same load on the RocksDB state
-  * store (the large-state production config); `dimjoin` routes the
+  * store (the large-state production config; `tws` selects it too, as
+  * `transformWithState` needs it); `dimjoin` routes the
   * dimension lookups through the stream-static-join path
   * (`StateMachine.withDimTables`, the scale configuration) instead of
   * the in-memory snapshot maps; `eventtime` / `tws` run the dim-join
@@ -54,9 +55,10 @@ object StreamBench {
   def run(spark: SparkSession, args: Seq[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 200000
     val stations = if (args.length > 1) args(1).toInt else 200
-    val rocksdb = args.contains("rocksdb")
     val eventtime = args.contains("eventtime")
     val tws = args.contains("tws")
+    // transformWithState runs only on the RocksDB state store
+    val rocksdb = args.contains("rocksdb") || tws
     val dimjoin = args.contains("dimjoin") || eventtime || tws
     if (rocksdb) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -220,8 +222,8 @@ object StreamBench {
           timeoutMs = 0)
       actions.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.ActionRow], _: Long) =>
-          Sinks.applyActions(batch, outDir)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.ActionRow], id: Long) =>
+          Sinks.applyActions(batch, outDir, epochId = id)
         }.start()
     } else {
       val machine = new StateMachine(

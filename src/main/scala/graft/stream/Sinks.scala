@@ -2,16 +2,27 @@ package graft.stream
 
 import scala.collection.mutable
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
-  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  GenericInternalRow, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SQLExecution}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model._
@@ -22,8 +33,14 @@ import graft.model._
   * MERGE-by-rewrite on parquet: union the batch with the current table,
   * keep the newest version per key, atomically swap directories. On a
   * real deployment this is one `DeltaTable.merge` per micro-batch — the
-  * call sites are shaped for that swap. Everything here is declarative;
-  * no driver-side row loops.
+  * call sites are shaped for that swap.
+  *
+  * The sinks are declarative Spark plans, with one bounded exception:
+  * a small [[applyActions]] epoch (an epoch id and at most
+  * `isinKeyLimit` action rows) is collected once and applied on the
+  * driver — a merge of a few dozen rows into one partition, with
+  * Spark's own parquet reader and writer — because at that size each
+  * Spark job's scheduling and file commit cost far more than the work.
   */
 object Sinks {
 
@@ -117,6 +134,46 @@ object Sinks {
     else fs.listStatus(root).toSeq.map(_.getPath.getName)
       .filterNot(n => n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
 
+  /** The data files directly under `dir` (none if it does not exist). */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** Refuses a table under `root` in another layout (flat files or other
+    * partitions), then lets the layout pin its parameters. */
+  private def requireLayout(fs: FileSystem, root: Path, layout: Layout): Unit = {
+    val foreign = dataEntries(fs, root).filterNot(_.startsWith(layout.column + "="))
+    require(foreign.isEmpty,
+      s"table at $root is not in the ${layout.column}= layout " +
+        s"(e.g. ${foreign.take(3).mkString(", ")}); run Sinks.migrateLayout " +
+        s"once to adopt it")
+    layout.pin(fs, root)
+  }
+
+  /** The directory of partition value `v`; null and "" land in Hive's
+    * default partition, as on a Spark write. */
+  private def partitionDir(root: Path, layout: Layout, v: Any): Path = {
+    val s = if (v == null || v == "") ExternalCatalogUtils.DEFAULT_PARTITION_NAME else v.toString
+    new Path(root, ExternalCatalogUtils.getPartitionPathString(layout.column, s))
+  }
+
+  /** Refuses a batch whose column names or types differ from those in
+    * the footer of one data file in partition `dir`. */
+  private def requireSchema(fs: FileSystem, dir: Path, batch: StructType,
+      layout: Layout): Unit =
+    dataFiles(fs, dir).headOption.foreach { file =>
+      val shape = (s: StructType) => s.fields.toSeq.filter(_.name != layout.column)
+        .map(f => f.name.toLowerCase -> f.dataType.catalogString).toSet
+      val table = footerSchema(file.getPath, fs.getConf)
+      require(shape(table) == shape(batch),
+        s"batch columns ${shape(batch).toSeq.sorted.mkString(", ")} differ from the " +
+          s"table's ${shape(table).toSeq.sorted.mkString(", ")} at ${dir.getParent}; an " +
+          "upsert batch must carry the table's full schema")
+    }
+
   /** Keyed upsert into a table laid out by `layout`: newest row per key
     * wins, ordered by `version` (ties broken by later columns). Each
     * batch reads only the partitions its keys map to, with the batch's
@@ -138,31 +195,14 @@ object Sinks {
     val spark = batch.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val foreign = dataEntries(fs, root).filterNot(_.startsWith(layout.column + "="))
-    require(foreign.isEmpty,
-      s"table at $path is not in the ${layout.column}= layout " +
-        s"(e.g. ${foreign.take(3).mkString(", ")}); run Sinks.migrateLayout " +
-        s"once to adopt it")
-    layout.pin(fs, root)
+    requireLayout(fs, root, layout)
     val b = batch.withColumn(layout.column, layout.value)
     // the batch's partition values: bounded by the layout, not by the
-    // batch; null and "" land in Hive's default partition, as on write
+    // batch
     val present = distinctUpTo(b.select(layout.column), Int.MaxValue).toSeq
-      .map(v => if (v == null || v == "") ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else v.toString)
-      .map(v => new Path(root, ExternalCatalogUtils.getPartitionPathString(layout.column, v)))
+      .map(partitionDir(root, layout, _))
       .filter(p => EpochFold.hasDataFiles(spark, p.toString))
-    present.headOption.foreach { p =>
-      val file = fs.listStatus(p).map(_.getPath)
-        .find(f => !f.getName.startsWith("_") && !f.getName.startsWith(".")).get
-      val shape = (s: StructType) => s.fields.toSeq.filter(_.name != layout.column)
-        .map(f => f.name.toLowerCase -> f.dataType.catalogString).toSet
-      val table = footerSchema(file, spark.sparkContext.hadoopConfiguration)
-      require(shape(table) == shape(b.schema),
-        s"batch columns ${shape(b.schema).toSeq.sorted.mkString(", ")} differ from the " +
-          s"table's ${shape(table).toSeq.sorted.mkString(", ")} at $path; an upsert " +
-          "batch must carry the table's full schema")
-    }
+    present.headOption.foreach(p => requireSchema(fs, p, b.schema, layout))
     val merged =
       if (present.isEmpty) b
       else spark.read.schema(b.schema).option("basePath", path)
@@ -211,6 +251,133 @@ object Sinks {
         .map(DataType.fromJson(_).asInstanceOf[StructType])
         .getOrElse(new ParquetToSparkSchemaConverter().convert(meta.getSchema))
     } finally in.close()
+  }
+
+  /** Up to `cap` rows of `df` and the distinct values of its column
+    * `tag`, in one job: each task keeps at most `cap` rows and the
+    * driver merges task results as they arrive, capped again. */
+  private def rowsUpTo(df: DataFrame, cap: Int, tag: String)
+      : (mutable.ArrayBuffer[Row], mutable.HashSet[Any]) = {
+    val i = df.schema.fieldIndex(tag)
+    type Acc = (mutable.ArrayBuffer[Row], mutable.HashSet[Any])
+    def add(a: Acc, r: Row): Acc = { if (a._1.size < cap) a._1 += r; a._2 += r.get(i); a }
+    def merge(a: Acc, b: Acc): Acc = { b._1.foreach(add(a, _)); a._2 ++= b._2; a }
+    df.rdd.aggregate((mutable.ArrayBuffer.empty[Row], mutable.HashSet.empty[Any]))(add, merge)
+  }
+
+  /** `limit + 1` as a collect cap (one row past the limit tells a batch
+    * over it from one at it); a negative limit collects nothing. */
+  private def capOf(limit: Long): Int =
+    if (limit < 0) 0 else (math.min(limit, Int.MaxValue - 1L) + 1).toInt
+
+  /** The rows of a frame over a driver-held batch: the optimizer folds
+    * its filters and projections into one local relation, so computing
+    * it runs no job. */
+  private def localRows(df: DataFrame): Array[InternalRow] =
+    df.queryExecution.executedPlan.executeCollect()
+
+  private def nullable(s: StructType): StructType = StructType(s.map(_.copy(nullable = true)))
+
+  /** Reads parquet `files` on the driver with the function a Spark scan
+    * task runs (`ParquetFileFormat.buildReaderWithPartitionValues`,
+    * rows not batches), `filters` pushed into it; no job. Rows hold the
+    * `requiredSchema` columns, copied out of the reader's buffers. */
+  private def readParquet(spark: SparkSession, files: Seq[FileStatus], dataSchema: StructType,
+      requiredSchema: StructType, filters: Seq[Filter] = Nil): Seq[InternalRow] =
+    if (files.isEmpty) Nil
+    else {
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
+        new StructType(), requiredSchema, filters,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+      files.flatMap(f => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
+        0L, f.getLen, modificationTime = f.getModificationTime, fileSize = f.getLen))
+        .map(_.copy()))
+    }
+
+  /** Writes `rows` to the parquet file `file` on the driver through
+    * parquet-hadoop with Spark's `ParquetWriteSupport`, configured from
+    * the session as a Spark write is, so the footer carries Spark's
+    * schema metadata; no job. */
+  private def writeParquet(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
+      file: Path): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val out = factory.newInstance(file.toString, schema,
+      new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
+    try rows.foreach(out.write) finally out.close()
+  }
+
+  /** A driver-written data file of epoch `epochId`: unique per attempt,
+    * so installing it never overwrites a file a reader may still see. */
+  private def epochFile(dir: Path, epochId: Long): Path =
+    new Path(dir, s"part-e$epochId-${java.util.UUID.randomUUID()}.parquet")
+
+  /** [[upsertParquetPartitioned]] of a driver-held batch, applied on the
+    * driver with the same refusals: for each partition the batch
+    * touches, read its files, merge newest-per-key, write the result
+    * as one epoch file, install it, then remove the files it
+    * superseded. Until the removal a reader sees both (a key twice);
+    * a crash there is harmless, since the next merge of the partition
+    * reads them all and keeps the newest row per key. */
+  private def upsertOnDriver(batch: DataFrame, path: String, keys: Seq[String],
+      version: Seq[String], layout: Layout, epochId: Long): Unit = {
+    val b = batch.withColumn(layout.column, layout.value)
+    val rows = localRows(b)
+    if (rows.isEmpty) return
+    val spark = batch.sparkSession
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireLayout(fs, root, layout)
+    val schema = nullable(batch.schema)
+    val types = schema.map(_.dataType)
+    val keyAt = keys.map(schema.fieldIndex)
+    val newer = new InterpretedOrdering(version.map { v =>
+      val i = schema.fieldIndex(v)
+      SortOrder(BoundReference(i, types(i), nullable = true), Ascending)
+    })
+    val at = schema.length
+    val byPartition = rows
+      .groupBy(r => if (r.isNullAt(at)) null else r.get(at, b.schema(at).dataType).toString)
+      .map { case (v, rs) => partitionDir(root, layout, v) -> rs }
+    byPartition.keys.find(dataFiles(fs, _).nonEmpty)
+      .foreach(requireSchema(fs, _, b.schema, layout))
+    byPartition.foreach { case (dir, batchRows) =>
+      val old = dataFiles(fs, dir)
+      val newest = mutable.LinkedHashMap.empty[Seq[Any], InternalRow]
+      def offer(r: InternalRow): Unit = {
+        val k = keyAt.map(i => r.get(i, types(i)))
+        if (newest.get(k).forall(cur => newer.lteq(cur, r))) newest(k) = r
+      }
+      readParquet(spark, old, schema, schema).foreach(offer)
+      batchRows.foreach(r =>
+        offer(new GenericInternalRow(types.indices.map(i => r.get(i, types(i))).toArray)))
+      val tmp = new Path(dir, s".e$epochId.tmp")
+      fs.delete(tmp, false)
+      writeParquet(spark, schema, newest.valuesIterator, tmp)
+      val file = epochFile(dir, epochId)
+      require(fs.rename(tmp, file), s"could not install $file")
+      old.foreach(f => require(fs.delete(f.getPath, false), s"could not remove superseded ${f.getPath}"))
+    }
+  }
+
+  /** Replaces `root/epoch=N` with one driver-written file of `rows`,
+    * whatever the directory held (a replay converges whichever route
+    * either attempt took). A legacy flat table is adopted into
+    * `epoch=-1` first, as on the distributed route. */
+  private def overwriteEpochOnDriver(rows: DataFrame, root: String, epochId: Long): Unit = {
+    val data = localRows(rows)
+    if (data.isEmpty) return
+    val spark = rows.sparkSession
+    EpochFold.migrateLegacyFlat(spark, root)
+    val base = new Path(root)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(base, s"epoch=$epochId")
+    val tmp = new Path(base, s".epoch=$epochId.tmp")
+    fs.delete(tmp, false)
+    writeParquet(spark, nullable(rows.schema), data.iterator, tmp)
+    if (fs.exists(dir)) require(fs.delete(dir, true), s"could not replace $dir")
+    val file = epochFile(dir, epochId)
+    require(fs.mkdirs(dir) && fs.rename(tmp, file), s"could not install $file")
   }
 
   /** Read an [[upsertParquetPartitioned]] table without its layout column. */
@@ -438,11 +605,12 @@ object Sinks {
     * INDEX, never the accumulated CSV. A batch of at most
     * `isinKeyLimit` keys (every live epoch) is probed from the driver:
     * one collect of its distinct keys, at most `isinKeyLimit + 1` on
-    * the driver at a time, and one collect of the index hits (the keys
-    * push into the scan as IN). An epoch with no new key writes
-    * nothing, so a fleet that re-reports the same unknown parts every
-    * tick adds no CSV or index partition; otherwise the rows of the
-    * new keys are written, and only that write reads the batch again.
+    * the driver at a time, and a driver-side read of the index files
+    * with the keys pushed into it as IN (no job). An epoch with no new
+    * key writes nothing, so a fleet that re-reports the same unknown
+    * parts every tick adds no CSV or index partition; otherwise the
+    * rows of the new keys are written, and only that write reads the
+    * batch again.
     * Larger batches probe by broadcast or sort-merge join
     * (IngestDedup's regimes).
     *
@@ -459,7 +627,7 @@ object Sinks {
     * `epochId = -1` keeps the original whole-CSV anti-join for callers
     * without a batch id (at-least-once, self-healing, flat layout). */
   def appendCsvDedup(batch: DataFrame, path: String, epochId: Long = -1L,
-      compactEvery: Int = 64): Unit = {
+      compactEvery: Int = NfCompactEvery): Unit = {
     val spark = batch.sparkSession
     val fresh = batch.dropDuplicates(NfKeys)
     if (epochId < 0) {
@@ -473,44 +641,70 @@ object Sinks {
       toWrite.write.mode(SaveMode.Append).option("header", "true").csv(path)
       return
     }
+    prepareNfIndex(spark, path, batch.schema, epochId, compactEvery)
+    val keyed = batch.withColumn("nf_key", nfKey)
+    val limit = IngestDedup.isinKeyLimit(spark)
+    val keys = distinctUpTo(keyed.select("nf_key"), capOf(limit)).map(_.asInstanceOf[String])
+    if (keys.size <= limit) appendNovel(keyed, keys, path, epochId, batch.columns.toSeq)
+    else {
+      val survivors = csvDedupSurvivors(fresh, path, epochId)
+        .localCheckpoint() // feeds the CSV write and the index write
+      writeNf(survivors, survivors.select(col("nf_key")).sortWithinPartitions("nf_key"),
+        batch.columns.toSeq, path, epochId)
+    }
+  }
+
+  /** [[appendCsvDedup]] of a driver-held batch with an epoch id: the
+    * keys are computed on the driver and take the driver probe, so an
+    * epoch with no new key runs no job. */
+  private def appendCsvDedupOnDriver(batch: DataFrame, path: String, epochId: Long): Unit = {
+    val keyed = batch.withColumn("nf_key", nfKey)
+    val keys = localRows(keyed.select("nf_key")).map(_.getUTF8String(0).toString).toSet
+    if (keys.isEmpty) return
+    prepareNfIndex(batch.sparkSession, path, batch.schema, epochId, NfCompactEvery)
+    appendNovel(keyed, keys, path, epochId, batch.columns.toSeq)
+  }
+
+  /** Before an epoch's probe: adopt a flat-layout CSV and bootstrap its
+    * keys into the index (once), and fold the index on its cadence. */
+  private def prepareNfIndex(spark: SparkSession, path: String, schema: StructType,
+      epochId: Long, compactEvery: Int): Unit = {
     val idxPath = nfIdxPath(path)
-    // adopt a flat-layout CSV and bootstrap its keys into the index, once
     EpochFold.migrateLegacyFlat(spark, path)
     if (!EpochFold.hasDataFiles(spark, idxPath) &&
         EpochFold.hasDataFiles(spark, s"$path/epoch=-1")) {
-      spark.read.schema(batch.schema).option("header", "true").csv(s"$path/epoch=-1")
+      spark.read.schema(schema).option("header", "true").csv(s"$path/epoch=-1")
         .select(nfKey.as("nf_key"))
         .sortWithinPartitions("nf_key")
         .write.mode(SaveMode.Overwrite).parquet(s"$idxPath/epoch=-1")
     }
     if (compactEvery > 0 && epochId > 0 && epochId % compactEvery == 0)
       EpochFold.fold(spark, idxPath, epochId, 128L * 1024 * 1024, Seq("nf_key"))
-    val keyed = batch.withColumn("nf_key", nfKey)
-    val limit = IngestDedup.isinKeyLimit(spark)
-    val keys = distinctUpTo(keyed.select("nf_key"), math.min(limit + 1, Int.MaxValue).toInt)
-      .map(_.asInstanceOf[String])
-    val (rows, newKeys) =
-      if (keys.size <= limit) {
-        val known =
-          if (!EpochFold.hasDataFiles(spark, idxPath)) Set.empty[String]
-          else nfIndexHits(spark, path, epochId, keys.toSeq).collect().map(_.getString(0)).toSet
-        val novel = keys.toSeq.filterNot(known).sorted
-        if (novel.isEmpty) return
-        // one partition: the per-key dedup needs no shuffle
-        (keyed.filter(col("nf_key").isin(novel: _*)).coalesce(1).dropDuplicates("nf_key"),
-          spark.createDataFrame(novel.map(Tuple1(_))).toDF("nf_key").coalesce(1))
-      } else {
-        val survivors = csvDedupSurvivors(fresh, path, epochId)
-          .localCheckpoint() // feeds the CSV write and the index write
-        (survivors, survivors.select(col("nf_key")).sortWithinPartitions("nf_key"))
-      }
-    rows.select(batch.columns.map(col): _*)
+  }
+
+  /** Writes the rows of `keyed` whose key (among its distinct `keys`)
+    * the index does not hold yet; an epoch with no new key writes
+    * nothing. */
+  private def appendNovel(keyed: DataFrame, keys: collection.Set[String], path: String,
+      epochId: Long, columns: Seq[String]): Unit = {
+    val novel = keys.filterNot(nfIndexHits(keyed.sparkSession, path, epochId, keys)).toSeq.sorted
+    if (novel.isEmpty) return
+    // one partition: the per-key dedup needs no shuffle
+    writeNf(keyed.filter(col("nf_key").isin(novel: _*)).coalesce(1).dropDuplicates("nf_key"),
+      keyed.sparkSession.createDataFrame(novel.map(Tuple1(_))).toDF("nf_key").coalesce(1),
+      columns, path, epochId)
+  }
+
+  private def writeNf(rows: DataFrame, newKeys: DataFrame, columns: Seq[String], path: String,
+      epochId: Long): Unit = {
+    rows.select(columns.map(col): _*)
       .write.mode(SaveMode.Overwrite).option("header", "true")
       .csv(s"$path/epoch=$epochId")
-    newKeys.write.mode(SaveMode.Overwrite).parquet(s"$idxPath/epoch=$epochId")
+    newKeys.write.mode(SaveMode.Overwrite).parquet(s"${nfIdxPath(path)}/epoch=$epochId")
   }
 
   private val NfKeys = Seq("estacion", "numero_parte", "fecha")
+  private val NfCompactEvery = 64
   private def nfIdxPath(path: String) = s"$path/._nf_idx"
   // "\\u0001" separator (explicit escape, not a raw control byte):
   // ("ab","c") and ("a","bc") must not share a key. concat_ws SKIPS
@@ -529,10 +723,27 @@ object Sinks {
     spark.read.schema("nf_key STRING, epoch LONG").parquet(nfIdxPath(path))
       .filter(col("epoch") < epochId)
 
-  /** The index hits among `keys`, which push into the index scan as IN. */
+  /** The index hits among `keys`. Spark plans the probe as a scan of
+    * the index (partitions pruned to `epoch < N`, the keys pushed into
+    * the read as IN); the driver runs that scan with Spark's parquet
+    * reader, inside a SQL execution of its own, so query listeners see
+    * the plan and no job runs. */
   private def nfIndexHits(spark: SparkSession, path: String, epochId: Long,
-      keys: Seq[String]): DataFrame =
-    nfIndex(spark, path, epochId).filter(col("nf_key").isin(keys: _*)).select("nf_key")
+      keys: collection.Set[String]): collection.Set[String] =
+    if (keys.isEmpty || !EpochFold.hasDataFiles(spark, nfIdxPath(path))) Set.empty
+    else {
+      val qe = nfIndex(spark, path, epochId).filter(col("nf_key").isin(keys.toSeq: _*))
+        .select("nf_key").queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("collect")) {
+        val scan = qe.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+        val files = scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+          .flatMap(_.files.map(_.fileStatus))
+        val at = scan.requiredSchema.fieldIndex("nf_key")
+        readParquet(spark, files, scan.relation.dataSchema, scan.requiredSchema,
+          Seq(In("nf_key", keys.toArray[Any])))
+          .map(_.getUTF8String(at).toString).filter(keys).toSet
+      }
+    }
 
   /** The batch rows whose logical key is absent from the index, for
     * batches of more than `isinKeyLimit` keys: the index probe is a
@@ -574,6 +785,22 @@ object Sinks {
     * `migrateLayout(spark, path, RecordShifts)` once. Read the table
     * with [[readUpsertedBucketed]].
     *
+    * One job gates the epoch: a capped aggregate over the cached batch
+    * returns up to `isinKeyLimit + 1` rows and the set of actions
+    * present. A batch with an epoch id and at most `isinKeyLimit` rows
+    * (every live 1 Hz epoch) is then applied on the driver, with no
+    * further job: each touched shift partition is read with Spark's
+    * parquet reader, merged newest-per-key and written back as one
+    * epoch file, which is installed before the files it supersedes are
+    * removed (in between, a reader may see a key twice; a crash there
+    * is repaired by the next merge of the partition); histories become
+    * one file replacing `epoch=N`; the
+    * not-found keys take [[appendCsvDedup]]'s driver probe. Larger
+    * batches, and `epochId = -1`, take the distributed path (Spark
+    * writes throughout). Both routes leave the same rows, and either
+    * one converges from whatever the other left, so a replay may take
+    * either.
+    *
     * Delivery guarantee: the records upsert and the CSV dedup-append
     * are idempotent by construction (newest-per-key merge; logical-PK
     * anti join), but a plain histories APPEND would double rows when
@@ -588,43 +815,55 @@ object Sinks {
       epochId: Long = -1L): Unit = {
     val df = actions.toDF().cache()
     try {
+      val spark = df.sparkSession
+      val limit = if (epochId >= 0) IngestDedup.isinKeyLimit(spark) else -1L
       // ONE job gates all three sink branches (this also materializes
-      // the cache for the writes below); the previous per-branch
-      // isEmpty actions ran three jobs per micro-batch
-      val present = distinctUpTo(df.select("action"), Int.MaxValue)
-      val records = df
-        .filter(col("action").isin(ActionRow.Create, ActionRow.Update, ActionRow.Close))
-        .withColumn("rank",
-          when(col("action") === ActionRow.Close, 3)
-            .when(col("action") === ActionRow.Update, 2).otherwise(1))
-        .select(col("recordId").as("record_id"), col("station"), col("parte"),
-          col("planDate").as("plan_date"), col("shiftId").as("shift_id"),
-          col("produced"), col("plannedQty").as("planned"),
-          col("statusId").as("status_id"), col("ts"), col("rank"))
+      // the cache for the distributed writes)
+      val (rows, present) = rowsUpTo(df, capOf(limit), "action")
+      if (rows.size <= limit) {
+        val local = spark.createDataFrame(rows.asJava, df.schema)
+        upsertOnDriver(recordRows(local), s"$outDir/production_records",
+          Seq("record_id"), Seq("ts", "rank"), RecordShifts, epochId)
+        overwriteEpochOnDriver(historyRows(local), s"$outDir/histories", epochId)
+        appendCsvDedupOnDriver(notFoundRows(local), s"$outDir/parts_not_found", epochId)
+        return
+      }
       if (Seq(ActionRow.Create, ActionRow.Update, ActionRow.Close).exists(present))
-        upsertParquetPartitioned(records, s"$outDir/production_records",
+        upsertParquetPartitioned(recordRows(df), s"$outDir/production_records",
           Seq("record_id"), Seq("ts", "rank"), RecordShifts)
-
-      val hist = df.filter(col("action") === ActionRow.History)
-        .select(col("recordId").as("record_id"), col("station"), col("parte"),
-          col("quantity"), col("perCycle").as("per_cycle"), col("ts"))
       if (present(ActionRow.History)) {
         if (epochId >= 0) {
-          EpochFold.migrateLegacyFlat(df.sparkSession, s"$outDir/histories")
-          hist.write.mode(SaveMode.Overwrite)
+          EpochFold.migrateLegacyFlat(spark, s"$outDir/histories")
+          historyRows(df).write.mode(SaveMode.Overwrite)
             .parquet(s"$outDir/histories/epoch=$epochId")
         } else
-          hist.write.mode(SaveMode.Append).parquet(s"$outDir/histories")
+          historyRows(df).write.mode(SaveMode.Append).parquet(s"$outDir/histories")
       }
-
-      val nf = df.filter(col("action") === ActionRow.NotFound)
-        .select(col("station").as("estacion"), col("parte").as("numero_parte"),
-          col("original").as("numero_parte_original"), col("fecha"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("timestamp"))
       if (present(ActionRow.NotFound))
-        appendCsvDedup(nf, s"$outDir/parts_not_found", epochId)
+        appendCsvDedup(notFoundRows(df), s"$outDir/parts_not_found", epochId)
     } finally df.unpersist()
   }
+
+  private def recordRows(actions: DataFrame): DataFrame = actions
+    .filter(col("action").isin(ActionRow.Create, ActionRow.Update, ActionRow.Close))
+    .withColumn("rank",
+      when(col("action") === ActionRow.Close, 3)
+        .when(col("action") === ActionRow.Update, 2).otherwise(1))
+    .select(col("recordId").as("record_id"), col("station"), col("parte"),
+      col("planDate").as("plan_date"), col("shiftId").as("shift_id"),
+      col("produced"), col("plannedQty").as("planned"),
+      col("statusId").as("status_id"), col("ts"), col("rank"))
+
+  private def historyRows(actions: DataFrame): DataFrame = actions
+    .filter(col("action") === ActionRow.History)
+    .select(col("recordId").as("record_id"), col("station"), col("parte"),
+      col("quantity"), col("perCycle").as("per_cycle"), col("ts"))
+
+  private def notFoundRows(actions: DataFrame): DataFrame = actions
+    .filter(col("action") === ActionRow.NotFound)
+    .select(col("station").as("estacion"), col("parte").as("numero_parte"),
+      col("original").as("numero_parte_original"), col("fecha"),
+      date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("timestamp"))
 
   /** Start the full streaming pipeline: observations → state machine →
     * foreachBatch(applyActions). Default trigger paces micro-batches at

@@ -105,4 +105,34 @@ class BenchSpec extends SparkSpec {
     assert(started.get > 1, "the profiled query must run more than one job")
     assert(lines.count(_.startsWith("[job ")) == started.get)
   }
+
+  test("stream tws selects the RocksDB state store itself") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key) // the default store, which transformWithState cannot run on
+    val lines = try printed(StreamBench.run(spark, Seq("200", "4", "tws")))
+      finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    val line = lines.find(_.contains("stream_obs_per_sec"))
+    assert(line.exists(l => l.contains("\"state_store\":\"rocksdb\"") &&
+      l.contains("\"lookup_path\":\"tws-eventtime\"") && l.contains("\"records\":4")),
+      lines.mkString("\n"))
+  }
+
+  test("ann and ivf plant twins at every rung size, the sf0.01 x1 rung included") {
+    import org.apache.spark.sql.functions.{array, lit}
+    for (nVecs <- Seq(500L, 799L, 1000L, 20000L)) {
+      val emb = AnnScaleBench.withNrm(spark.range(nVecs).select(col("id").as("vec_id"),
+        array((0 until 64).map(j => (col("id") % (j + 2) + 1).cast("float")): _*).as("embedding")))
+      val baseMod = AnnScaleBench.twinBaseMod(nVecs)
+      val twins = AnnScaleBench.plantTwins(emb, baseMod, plantOffset = 100000L).count()
+      assert(twins >= nVecs / baseMod - 1 && twins > 0, s"$twins twins of $nVecs vectors")
+    }
+    val emb = AnnScaleBench.withNrm(spark.range(10).select(col("id").as("vec_id"),
+      array(lit(1.0f)).as("embedding")))
+    val e = intercept[IllegalArgumentException](AnnScaleBench.plantTwins(emb, 2L, 100L))
+    assert(e.getMessage.contains("no twin"))
+  }
 }

@@ -308,6 +308,7 @@ class SinksSpec extends SparkSpec
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    drainListenerBus() // earlier writes' events must not reach the listener
     spark.listenerManager.register(listener)
     import scala.jdk.CollectionConverters._
     def writes = plans.asScala.filter(_.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
@@ -371,6 +372,26 @@ class SinksSpec extends SparkSpec
   }
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
+
+  /** Returns once every query event posted so far has reached the query
+    * listeners: the bus delivers them in order, so a marker query's
+    * event arrives after them all. */
+  private def drainListenerBus(): Unit = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = s"drain_${System.nanoTime()}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains(marker)) seen.countDown()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).select(lit(1).as(marker)).collect()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   private def records(outDir: String) =
     Sinks.readUpsertedBucketed(spark, s"$outDir/production_records")
@@ -492,6 +513,7 @@ class SinksSpec extends SparkSpec
     val driver = run(None)
     assert(driver == Seq("A", "B", "C", "D"))
     assert(run(Some("1")) == driver, "every batch above holds more than one key")
+    assert(run(Some(Long.MaxValue.toString)) == driver, "a limit with no bound keeps every row")
   }
 
   test("upsertParquetPartitioned: the partitioned write reuses the merge's sort") {
@@ -506,6 +528,7 @@ class SinksSpec extends SparkSpec
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    drainListenerBus() // earlier writes' events must not reach the listener
     spark.listenerManager.register(listener)
     import scala.jdk.CollectionConverters._
     def writes = plans.asScala.filter(_.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
@@ -521,5 +544,209 @@ class SinksSpec extends SparkSpec
     assert(sorts.nonEmpty && sorts.forall(_.sortOrder.size == 3),
       s"the write must reuse the window's order: $sorts")
     assert(Sinks.readUpsertedBucketed(spark, dir).select("v").as[Long].collect().toSet == Set(2L))
+  }
+
+  // ---- the small-epoch driver route of applyActions vs the distributed
+  // route, forced with isinKeyLimit = 0 on the same batches
+
+  import graft.model.ActionRow
+
+  private val RouteLimit = "spark.graft.ingest.isinKeyLimit"
+  private val (rA, rB, rA2) = ("P1|AAA|2024-03-05|1", "P2|BBB|2024-03-05|1", "P1|AAA|2024-03-05|2")
+  private def nfRow(st: String, p: String, t: String) =
+    ActionRow.partNotFound(st, p, s"$p/X", "2024-03-05", ts(t))
+
+  /** Four plc-shaped epochs: creates, updates (one stale), histories, a
+    * shift rollover in the last one, and not-found parts that repeat
+    * (already indexed) next to new ones in epochs 1 and 3. */
+  private val liveEpochs: Seq[Seq[ActionRow]] = Seq(
+    Seq(ActionRow.create("P1", "AAA", rA, "2024-03-05", 1, 5L, ts("2024-03-05 15:59:57")),
+      ActionRow.create("P2", "BBB", rB, "2024-03-05", 1, 6L, ts("2024-03-05 15:59:57")),
+      nfRow("P9", "ZZZ", "2024-03-05 15:59:57")),
+    Seq(ActionRow.updateQty("P1", "AAA", rA, 10L, 7, ts("2024-03-05 15:59:58")),
+      ActionRow.updateQty("P2", "BBB", rB, 20L, 7, ts("2024-03-05 15:59:58")),
+      ActionRow.appendHistory("P1", "AAA", rA, 10L, 1.5, ts("2024-03-05 15:59:58")),
+      ActionRow.appendHistory("P2", "BBB", rB, 20L, 1.5, ts("2024-03-05 15:59:58")),
+      nfRow("P9", "ZZZ", "2024-03-05 15:59:58"), nfRow("P8", "YYY", "2024-03-05 15:59:58")),
+    Seq(ActionRow.updateQty("P1", "AAA", rA, 12L, 7, ts("2024-03-05 15:59:59")),
+      ActionRow.updateQty("P1", "AAA", rA, 11L, 7, ts("2024-03-05 15:59:58")),
+      ActionRow.updateQty("P2", "BBB", rB, 21L, 7, ts("2024-03-05 15:59:59")),
+      ActionRow.appendHistory("P1", "AAA", rA, 2L, 1.5, ts("2024-03-05 15:59:59")),
+      nfRow("P9", "ZZZ", "2024-03-05 15:59:59"), nfRow("P8", "YYY", "2024-03-05 15:59:59")),
+    Seq(ActionRow.closeShift("P1", "AAA", rA, "2024-03-05", 1, ts("2024-03-05 16:00:00")),
+      ActionRow.create("P1", "AAA", rA2, "2024-03-05", 2, 5L, ts("2024-03-05 16:00:00")),
+      ActionRow.updateQty("P1", "AAA", rA2, 1L, 7, ts("2024-03-05 16:00:01")),
+      ActionRow.appendHistory("P1", "AAA", rA2, 1L, 1.5, ts("2024-03-05 16:00:01")),
+      nfRow("P9", "ZZZ", "2024-03-05 16:00:01"), nfRow("P7", "XXX", "2024-03-05 16:00:01")))
+
+  /** Applies `epochs` (id, batch) in order to `outDir`; the i-th call
+    * takes the distributed route when `distributed(i)`. */
+  private def applyAll(outDir: String, epochs: Seq[(Long, Seq[ActionRow])],
+      distributed: Int => Boolean): String = {
+    epochs.zipWithIndex.foreach { case ((id, b), i) =>
+      if (distributed(i)) spark.conf.set(RouteLimit, "0")
+      try Sinks.applyActions(b.toDS(), outDir, epochId = id) finally spark.conf.unset(RouteLimit)
+    }
+    outDir
+  }
+
+  private def freshDir(): String = Files.createTempDirectory("graft_route").toString
+
+  /** Every row of every sink table — records without their layout
+    * column, histories and parts_not_found with their epoch — and of
+    * the not-found key index, each sorted. */
+  private def sinkState(outDir: String): Seq[Seq[String]] = {
+    def rows(path: String)(read: String => org.apache.spark.sql.DataFrame) =
+      if (!new java.io.File(path).exists) Nil
+      else read(path).collect().map(_.toString).sorted.toSeq
+    Seq(rows(s"$outDir/production_records")(Sinks.readUpsertedBucketed(spark, _)),
+      rows(s"$outDir/histories")(spark.read.parquet(_)),
+      rows(s"$outDir/parts_not_found")(spark.read.option("header", "true").csv(_)),
+      rows(s"$outDir/parts_not_found/._nf_idx")(
+        spark.read.schema("nf_key STRING, epoch LONG").parquet(_)))
+  }
+
+  /** The sink state `epochs` leave on the driver route, checked equal
+    * to what they leave on the distributed route. */
+  private def sameOnBothRoutes(epochs: Seq[(Long, Seq[ActionRow])],
+      prepare: String => Unit = _ => ()): Seq[Seq[String]] = {
+    def run(distributed: Boolean) = {
+      val dir = freshDir(); prepare(dir)
+      sinkState(applyAll(dir, epochs, _ => distributed))
+    }
+    val driver = run(distributed = false)
+    assert(driver == run(distributed = true), "the two routes left different rows")
+    driver
+  }
+
+  private val numbered = liveEpochs.zipWithIndex.map { case (b, i) => (i.toLong, b) }
+
+  test("applyActions driver route ≡ distributed route: a fresh table") {
+    val state = sameOnBothRoutes(numbered.take(1))
+    assert(state.head.size == 2 && state(2).size == 1)
+  }
+
+  test("applyActions driver route ≡ distributed route: epoch replay") {
+    val replayed = Seq(numbered(0), numbered(1), numbered(2), numbered(2), numbered(3), numbered(3))
+    val state = sameOnBothRoutes(replayed)
+    assert(state == sinkState(applyAll(freshDir(), numbered, _ => false)),
+      "replays must leave what a run without them leaves")
+  }
+
+  test("applyActions driver route ≡ distributed route: shift rollover") {
+    sameOnBothRoutes(numbered)
+    val dir = applyAll(freshDir(), numbered, _ => false)
+    assert(dirNames(s"$dir/production_records", "__shift=") ==
+      Set("__shift=2024-03-05|1", "__shift=2024-03-05|2"))
+    assert(records(dir) == Seq(
+      (rA, 0L, StateMachine.StatusPaused, ts("2024-03-05 16:00:00")),
+      (rA2, 1L, StateMachine.StatusProducing, ts("2024-03-05 16:00:01")),
+      (rB, 21L, StateMachine.StatusProducing, ts("2024-03-05 15:59:59"))))
+  }
+
+  test("applyActions driver route ≡ distributed route: new and already-indexed not-found keys") {
+    val state = sameOnBothRoutes(numbered)
+    assert(state(2).size == 3, state(2).mkString("\n"))
+    val dir = applyAll(freshDir(), numbered, _ => false)
+    // epoch 2 re-reports only indexed keys: it writes no partition
+    assert(dirNames(s"$dir/parts_not_found", "epoch=") == Set("epoch=0", "epoch=1", "epoch=3"))
+    assert(spark.read.option("header", "true").csv(s"$dir/parts_not_found")
+      .select("estacion", "epoch").as[(String, Int)].collect().sorted.toSeq ==
+      Seq("P7" -> 3, "P8" -> 1, "P9" -> 0))
+  }
+
+  test("applyActions driver route ≡ distributed route: legacy flat histories") {
+    val legacy = Seq(ActionRow.appendHistory("P1", "AAA", rA, 3L, 1.5, ts("2024-03-05 15:00:00")))
+    val state = sameOnBothRoutes(numbered, dir => Sinks.applyActions(legacy.toDS(), dir))
+    assert(state(1).size == 5 && state(1).exists(_.endsWith(",-1]")), state(1).mkString("\n"))
+  }
+
+  test("applyActions: a route switch between consecutive epochs, both ways") {
+    val replayed = numbered :+ numbered.last
+    val driver = sinkState(applyAll(freshDir(), replayed, _ => false))
+    for (first <- Seq(0, 1)) {
+      val switched = sinkState(applyAll(freshDir(), replayed, i => i % 2 == first))
+      assert(switched == driver, s"routes alternating from ${if (first == 0) "distributed" else "driver"}")
+    }
+  }
+
+  test("applyActions converges from an installed records file whose superseded file remains") {
+    val reference = Seq(2, 3).map(n => n -> sinkState(applyAll(freshDir(), numbered.take(n), _ => false)))
+    val shift1 = "production_records/__shift=2024-03-05|1"
+    def crashed(): String = {
+      val dir = applyAll(freshDir(), numbered.take(1), _ => false)
+      val superseded = new java.io.File(s"$dir/$shift1").listFiles()
+        .filter(f => f.getName.startsWith("part-")).map(f => f.getName -> Files.readAllBytes(f.toPath))
+      assert(superseded.length == 1)
+      applyAll(dir, numbered.slice(1, 2), _ => false)
+      // the crash: epoch 1's file installed, epoch 0's not yet removed
+      superseded.foreach { case (n, bytes) => Files.write(new java.io.File(s"$dir/$shift1/$n").toPath, bytes) }
+      assert(Sinks.readUpsertedBucketed(spark, s"$dir/production_records").count() == 4)
+      dir
+    }
+    // the replayed epoch, on either route
+    for (distributed <- Seq(false, true))
+      assert(sinkState(applyAll(crashed(), numbered.slice(1, 2), _ => distributed)) == reference(0)._2)
+    // or the next epoch, on either route
+    for (distributed <- Seq(false, true))
+      assert(sinkState(applyAll(crashed(), numbered.slice(2, 3), _ => distributed)) == reference(1)._2)
+  }
+
+  test("applyActions driver route refuses another layout or schema and leaves the table") {
+    val update = Seq(ActionRow.updateQty("P1", "AAA", rA, 6L, 7, ts("2024-03-05 09:00:01")))
+    val outDir = freshDir()
+    val path = s"$outDir/production_records"
+    // a __shift table whose files lack the `rank` column
+    Sinks.upsertParquetPartitioned(
+      Seq((rA, "P1", "AAA", "2024-03-05", 1, 5L, 0L, 7, ts("2024-03-05 09:00:00")))
+        .toDF("record_id", "station", "parte", "plan_date", "shift_id", "produced", "planned",
+          "status_id", "ts"), path, Seq("record_id"), Seq("ts"), Sinks.RecordShifts)
+    val e = intercept[IllegalArgumentException](Sinks.applyActions(update.toDS(), outDir, epochId = 0))
+    assert(e.getMessage.contains("full schema"), e.getMessage)
+    assert(Sinks.readUpsertedBucketed(spark, path).select("produced").as[Long].collect().toSeq == Seq(5L))
+    // a flat file beside the partitions
+    Files.write(new java.io.File(s"$path/stray.parquet").toPath, Array[Byte](1))
+    val f = intercept[IllegalArgumentException](Sinks.applyActions(update.toDS(), outDir, epochId = 0))
+    assert(f.getMessage.contains("migrateLayout"), f.getMessage)
+    assert(dirNames(s"$path/__shift=2024-03-05|1", "part-").size == 1)
+  }
+
+  test("a warm plc-shaped applyActions epoch runs one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val stations = (0 until 50).map(i => f"P$i%02d")
+    def epoch(e: Int): Seq[ActionRow] = stations.flatMap { st =>
+      val rid = s"$st|AAA|2024-03-05|1"
+      val t = ts(f"2024-03-05 09:00:$e%02d")
+      if (e == 0) Seq(ActionRow.create(st, "AAA", rid, "2024-03-05", 1, 5L, t))
+      else Seq(ActionRow.updateQty(st, "AAA", rid, 10L * e, 7, t),
+        ActionRow.appendHistory(st, "AAA", rid, 10L, 1.5, t))
+    } ++ stations.take(5).map(st => nfRow(st, "UNKNOWN", f"2024-03-05 09:00:$e%02d"))
+    val outDir = freshDir()
+    (0 to 1).foreach(e => Sinks.applyActions(epoch(e).toDS(), outDir, epochId = e))
+    val batch = epoch(2).toDS()
+    val tag = s"sink-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.spec.tag")).foreach { t =>
+          if (t == tag) jobs.incrementAndGet() else if (t == s"$tag-drained") drained.countDown()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.spec.tag", tag)
+      try Sinks.applyActions(batch, outDir, epochId = 2) finally sc.setLocalProperty("graft.spec.tag", null)
+      // the bus delivers events in order: once this marker job's start
+      // arrives, every job of the epoch has been seen
+      sc.setLocalProperty("graft.spec.tag", s"$tag-drained")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.tag", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} Spark jobs in a warm 105-row epoch")
+    assert(records(outDir).map(_._2).toSet == Set(20L))
+    assert(spark.read.parquet(s"$outDir/histories").count() == 100)
+    assert(dirNames(s"$outDir/parts_not_found", "epoch=") == Set("epoch=0"))
   }
 }
