@@ -312,19 +312,22 @@ class SinksSpec extends SparkSpec
     spark.listenerManager.register(listener)
     import scala.jdk.CollectionConverters._
     def writes = plans.asScala.filter(_.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
+    val batch = Seq(("P0", "X", "X/Y", "2024-03-01", "t"), ("P9", "Y", "Y/Z", "2024-03-09", "t"))
+      .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp")
     try {
-      Sinks.appendCsvDedup(
-        Seq(("P0", "X", "X/Y", "2024-03-01", "t"), ("P9", "Y", "Y/Z", "2024-03-09", "t"))
-          .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp"),
-        dir, epochId = 3)
+      Sinks.appendCsvDedup(batch, dir, epochId = 3)
       val deadline = System.nanoTime() + 30e9.toLong // listener events arrive asynchronously
       while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
     assert(spark.read.option("header", "true").csv(s"$dir/epoch=3").select("estacion")
       .as[String].collect().toSeq == Seq("P9"), "known key P0 rejected by the index; novel P9 survives")
     assert(writes.size == 2, "one CSV write and one index write")
+    // the probe runs on the driver, outside any query execution: check
+    // the scan it plans and the files it reads for the same batch
+    val keys = batch.select(Sinks.nfKey).as[String].collect().toSet
+    val (probe, probeFiles) = Sinks.nfIndexProbe(spark, dir, 3, keys).get
     val scans = plans.asScala.toSeq.flatMap(qe =>
-      collectWithSubqueries(qe.executedPlan) { case sc: FileSourceScanExec => sc })
+      collectWithSubqueries(qe.executedPlan) { case sc: FileSourceScanExec => sc }) :+ probe
     val idxScans = scans.filter(_.relation.location.rootPaths
       .exists(_.toString.contains("_nf_idx")))
     assert(idxScans.nonEmpty, "the probe must read the key index")
@@ -333,6 +336,10 @@ class SinksSpec extends SparkSpec
       s"batch keys must push into the index scan: ${idxScans.map(_.metadata("PushedFilters"))}")
     assert(scans.size == idxScans.size,
       "per-batch read IO must not include the accumulated CSV itself")
+    assert(probeFiles.nonEmpty && probeFiles.forall(_.getPath.toString.contains("/._nf_idx/")),
+      s"the driver read must open index files only: ${probeFiles.map(_.getPath)}")
+    assert(probeFiles.map(_.getPath.getParent.getName).toSet == Set("epoch=0", "epoch=1", "epoch=2"),
+      "epoch 3 probes the index epochs before it")
     assert(writes.forall(qe => collectWithSubqueries(qe.executedPlan) {
       case x: ShuffleExchangeExec => x }.isEmpty), "the survivor writes must not shuffle")
   }
@@ -547,11 +554,10 @@ class SinksSpec extends SparkSpec
   }
 
   // ---- the small-epoch driver route of applyActions vs the distributed
-  // route, forced with isinKeyLimit = 0 on the same batches
+  // route, forced with a driver-route bound of 0 on the same batches
 
   import graft.model.ActionRow
 
-  private val RouteLimit = "spark.graft.ingest.isinKeyLimit"
   private val (rA, rB, rA2) = ("P1|AAA|2024-03-05|1", "P2|BBB|2024-03-05|1", "P1|AAA|2024-03-05|2")
   private def nfRow(st: String, p: String, t: String) =
     ActionRow.partNotFound(st, p, s"$p/X", "2024-03-05", ts(t))
@@ -584,8 +590,7 @@ class SinksSpec extends SparkSpec
   private def applyAll(outDir: String, epochs: Seq[(Long, Seq[ActionRow])],
       distributed: Int => Boolean): String = {
     epochs.zipWithIndex.foreach { case ((id, b), i) =>
-      if (distributed(i)) spark.conf.set(RouteLimit, "0")
-      try Sinks.applyActions(b.toDS(), outDir, epochId = id) finally spark.conf.unset(RouteLimit)
+      Sinks.applyActionsWith(b.toDS(), outDir, id, if (distributed(i)) 0L else Sinks.DriverRouteRows)
     }
     outDir
   }
@@ -748,5 +753,79 @@ class SinksSpec extends SparkSpec
     assert(records(outDir).map(_._2).toSet == Set(20L))
     assert(spark.read.parquet(s"$outDir/histories").count() == 100)
     assert(dirNames(s"$outDir/parts_not_found", "epoch=") == Set("epoch=0"))
+  }
+
+  test("the applyActions gate returns rows only when every task stays within its share") {
+    val sc = spark.sparkContext
+    def frame(rdd: org.apache.spark.rdd.RDD[(Long, String)]) = rdd.toDF("id", "action")
+    val even = frame(sc.parallelize((0L until 40L).map(i => i -> (if (i % 2 == 0) "a" else "b")), 4))
+    val (fits, tags) = Sinks.gate(even, 40, "action")
+    assert(fits.map(_.map(_.getLong(0)).sorted) == Some(0L until 40L) && tags == Set("a", "b"))
+    // each task holds 10 rows, within its share of 10, but 40 > 39
+    assert(Sinks.gate(even, 39, "action") == (None, Set("a", "b")))
+    assert(Sinks.gate(even, -1, "action") == (None, Set("a", "b")))
+    // 40 rows, under a bound of 100, but all in one of 4 tasks (share 26)
+    val skewed = frame(sc.parallelize((0L until 40L).map(_ -> "a"), 1)
+      .union(sc.parallelize(Seq.empty[(Long, String)], 3)))
+    assert(skewed.rdd.getNumPartitions == 4)
+    assert(Sinks.gate(skewed, 100, "action") == (None, Set("a")))
+    assert(Sinks.gate(skewed, 159, "action")._1.map(_.size) == Some(40))
+  }
+
+  test("applyActions: a batch past the driver bound over many partitions goes distributed; its gate ships no rows") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val stations = (0 until 2000).map(i => f"P$i%04d")
+    val t = ts("2024-03-05 09:00:01")
+    val epoch = stations.flatMap { st =>
+      val rid = s"$st|AAA|2024-03-05|1"
+      Seq(ActionRow.updateQty(st, "AAA", rid, 10L, 7, t), ActionRow.appendHistory(st, "AAA", rid, 10L, 1.5, t))
+    }
+    val sc = spark.sparkContext
+    /** The bytes the tasks of the gate's `runJob` in `run` return to the driver. */
+    def gateResultBytes(run: => Unit): Long = {
+      val tag = s"gate-bytes-${System.nanoTime()}"
+      val gateStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val bytes = new java.util.concurrent.atomic.AtomicLong()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("graft.spec.tag")).foreach { p =>
+            if (p == tag) e.stageInfos.filter(_.name.startsWith("runJob at Sinks.scala"))
+              .foreach(st => gateStages.add(st.stageId))
+            else if (p == s"$tag-drained") drained.countDown()
+          }
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (gateStages.contains(e.stageId) && e.taskMetrics != null)
+            bytes.addAndGet(e.taskMetrics.resultSize)
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty("graft.spec.tag", tag)
+        try run finally sc.setLocalProperty("graft.spec.tag", null)
+        sc.setLocalProperty("graft.spec.tag", s"$tag-drained")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.tag", null)
+        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+      assert(gateStages.size == 1, s"one gate stage: $gateStages")
+      bytes.get
+    }
+    // 4,000 rows over 64 tasks of about 62 rows; a bound of 1,000 gives
+    // each task a share of 16, so none ships its rows
+    val batch = epoch.toDS().repartition(64)
+    val outDir = freshDir()
+    val gated = gateResultBytes(Sinks.applyActionsWith(batch, outDir, 0, 1000L))
+    // the same batch without an epoch id keeps no rows at all
+    val rowless = gateResultBytes(Sinks.applyActionsWith(batch, freshDir(), -1, 1000L))
+    val allRows = gateResultBytes(Sinks.gate(batch.toDF(), Long.MaxValue, "action"))
+    info(s"gate result bytes: $gated with the bound, $rowless keeping no rows, $allRows keeping all rows")
+    assert(gated < rowless * 5 / 4 && gated * 2 < allRows,
+      s"gate result bytes: $gated with the bound, $rowless keeping no rows, $allRows keeping all rows")
+    // Spark wrote the tables: no driver-written epoch file
+    val shift = s"$outDir/production_records/__shift=2024-03-05|1"
+    assert(dirNames(shift, "part-").nonEmpty && dirNames(shift, "part-e").isEmpty)
+    assert(dirNames(s"$outDir/histories/epoch=0", "part-").nonEmpty &&
+      dirNames(s"$outDir/histories/epoch=0", "part-e").isEmpty)
+    assert(records(outDir).size == 2000 && records(outDir).forall(_._2 == 10L))
+    assert(spark.read.parquet(s"$outDir/histories").count() == 2000)
   }
 }
