@@ -15,18 +15,22 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource v2 source reading LIVE Mitsubishi PLCs over the MC
   * protocol ([[McClient]]) — the production form of [[PlcSimProvider]],
-  * with the same schema, the same one-partition-per-IP topology
-  * (the reference's per-IP reader task, Prensas.py:843-850), and the
-  * same column-prune + ip-filter pushdown (shared [[PlcScanBuilder]]).
+  * with the same schema, the same topology (the fleet packed into one
+  * input partition per core, each a fixed group of IPs:
+  * [[PlcScanBuilder.partitions]]) and the same column-prune + ip-filter
+  * pushdown (shared [[PlcScanBuilder]]).
   *
-  * Per tick each partition issues `randomread`-style requests for all
-  * configured addresses (chunked at the protocol's 192-device limit;
-  * the reference reads its whole address set in one call,
+  * A partition holds one connection per PLC of its group, and each
+  * tick reads its PLCs in turn — the order a core would run one task
+  * per PLC in anyway. Per PLC it issues `randomread`-style requests for
+  * all configured addresses (chunked at the protocol's 192-device
+  * limit; the reference reads its whole address set in one call,
   * Prensas.py:505-509). Connection failures follow the reference's
-  * recovery loop (Prensas.py:595-600): close, back off (default the
-  * reference's 2 s), reconnect, retry — up to `maxRetries`, after
-  * which the task fails loudly and the supervisor's liveness restart
-  * ([[graft.stream.Supervisor]]) takes over.
+  * recovery loop (Prensas.py:595-600), per connection: close, back off
+  * (default the reference's 2 s), reconnect, retry — up to
+  * `maxRetries`, after which the task fails loudly and the
+  * supervisor's liveness restart ([[graft.stream.Supervisor]]) takes
+  * over. The other PLCs of the group wait out a failing one's backoff.
   *
   * Offsets are poll rounds, not a replayable log: a PLC register has
   * no history, so a replayed batch re-polls and observes CURRENT
@@ -88,8 +92,8 @@ class PlcNetTable(cfg: PlcNetConfig) extends Table with SupportsRead {
         new PlcNetMicroBatchStream(cfg.copy(ips = selectedIps), required)
       override def toBatch: Batch = new Batch {
         override def planInputPartitions(): Array[InputPartition] =
-          selectedIps.map(ip =>
-            PlcNetPartition(ip, 0L, math.min(cfg.maxTicks, 1L), cfg): InputPartition).toArray
+          PlcScanBuilder.partitions(selectedIps)(
+            PlcNetPartition(_, 0L, math.min(cfg.maxTicks, 1L), cfg))
         override def createReaderFactory(): PartitionReaderFactory =
           PlcNetReaderFactory(required)
       }
@@ -127,12 +131,13 @@ class PlcNetMicroBatchStream(cfg: PlcNetConfig, schema: StructType)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TickOffset].tick
     val e = end.asInstanceOf[TickOffset].tick
-    cfg.ips.map(ip => PlcNetPartition(ip, s, e, cfg): InputPartition).toArray
+    PlcScanBuilder.partitions(cfg.ips)(PlcNetPartition(_, s, e, cfg))
   }
   override def createReaderFactory(): PartitionReaderFactory = PlcNetReaderFactory(schema)
 }
 
-case class PlcNetPartition(ip: String, startTick: Long, endTick: Long, cfg: PlcNetConfig)
+/** The poll rounds [startTick, endTick) of a group of PLCs. */
+case class PlcNetPartition(ips: Seq[String], startTick: Long, endTick: Long, cfg: PlcNetConfig)
   extends InputPartition
 
 case class PlcNetReaderFactory(schema: StructType) extends PartitionReaderFactory {
@@ -142,33 +147,36 @@ case class PlcNetReaderFactory(schema: StructType) extends PartitionReaderFactor
   }
 }
 
-/** One PLC connection per partition, held across the partition's ticks
-  * (the reference holds one `Type3E` connection per reader loop).
-  * Reads only happen when the pruned schema asks for `regs`. */
+/** One connection per PLC of the partition's group, each held across
+  * the partition's ticks (the reference holds one `Type3E` connection
+  * per reader loop); each tick reads the group's PLCs in turn. Reads
+  * only happen when the pruned schema asks for `regs`. */
 class PlcNetPartitionReader(p: PlcNetPartition, schema: StructType)
     extends PartitionReader[InternalRow] {
   private val fields = schema.fieldNames
-  private val (host, port) = PlcNetConfig.hostPort(p.ip)
-  private var client: McClient = _
+  private val ips = p.ips.map(UTF8String.fromString).toArray
+  private val hosts = p.ips.map(PlcNetConfig.hostPort).toArray
+  private val clients = new Array[McClient](hosts.length)
   private var tick = p.startTick
+  private var at = 0 // next PLC of the group at `tick`
   private var row: InternalRow = _
 
-  private def connect(): McClient = new McClient(host, port, p.cfg.timeoutMs)
-
-  /** The reference's recovery loop (Prensas.py:595-600): on any IO
-    * failure close, back off, reconnect, retry the SAME read. Bounded
-    * by maxRetries so a dead PLC eventually fails the task loudly —
-    * the supervisor's liveness restart owns long outages. */
-  private def withRetry[T](f: McClient => T): T = {
+  /** The reference's recovery loop (Prensas.py:595-600) on PLC `i`'s
+    * connection: on any IO failure close, back off, reconnect, retry
+    * the SAME read. Bounded by maxRetries so a dead PLC eventually
+    * fails the task loudly — the supervisor's liveness restart owns
+    * long outages. */
+  private def withRetry[T](i: Int)(f: McClient => T): T = {
+    val (host, port) = hosts(i)
     var attempt = 0
     while (true) {
       try {
-        if (client == null) client = connect()
-        return f(client)
+        if (clients(i) == null) clients(i) = new McClient(host, port, p.cfg.timeoutMs)
+        return f(clients(i))
       } catch {
         case e: java.io.IOException =>
-          if (client != null) { try client.close() catch { case _: Exception => } }
-          client = null
+          if (clients(i) != null) { try clients(i).close() catch { case _: Exception => } }
+          clients(i) = null
           attempt += 1
           if (attempt > p.cfg.maxRetries)
             throw new java.io.IOException(
@@ -179,29 +187,30 @@ class PlcNetPartitionReader(p: PlcNetPartition, schema: StructType)
     throw new IllegalStateException("unreachable")
   }
 
-  private def readAll(): Seq[Int] =
+  private def readAll(i: Int): Seq[Int] =
     // chunk at the protocol's 192-device randomread limit; the
     // connection is reused across chunks and ticks
-    p.cfg.addresses.grouped(192).toSeq.flatMap(chunk => withRetry(_.randomRead(chunk)))
+    p.cfg.addresses.grouped(192).toSeq.flatMap(chunk => withRetry(i)(_.randomRead(chunk)))
 
   override def next(): Boolean =
     if (tick >= p.endTick) false
     else {
       val values = fields.map[Any] {
-        case "ip" => UTF8String.fromString(p.ip)
+        case "ip" => ips(at)
         case "ts" => System.currentTimeMillis() * 1000L // µs, read time
         case "regs" =>
           val addrs = p.cfg.addresses
-          val words = readAll()
+          val words = readAll(at)
           val keys = new GenericArrayData(addrs.map(a => UTF8String.fromString(a)).toArray[Any])
           val vals = new GenericArrayData(words.map(w => w: java.lang.Integer).toArray[Any])
           new ArrayBasedMapData(keys, vals)
       }
       // note: with `regs` pruned out, nothing above touched the socket
       row = new GenericInternalRow(values.toArray)
-      tick += 1
+      at += 1
+      if (at == ips.length) { at = 0; tick += 1 }
       true
     }
   override def get(): InternalRow = row
-  override def close(): Unit = if (client != null) client.close()
+  override def close(): Unit = clients.foreach(c => if (c != null) c.close())
 }

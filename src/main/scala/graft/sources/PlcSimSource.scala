@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -18,10 +19,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (S2, Prensas.py:475-614): one snapshot row per (ip, tick) with an
   * address→word map — exactly what `Decode.decodeSnapshots` consumes.
   *
-  * Topology mirrors the reference: **one input partition per IP** (the
-  * per-IP reader task, Prensas.py:843-850), so a 1000-PLC fleet reads
-  * with 1000-way parallelism and no shuffle before the keyed state
-  * stage.
+  * Topology: the fleet is packed into one input partition per core
+  * ([[PlcScanBuilder.partitions]]), each a fixed group of IPs emitting
+  * one row per (ip, tick) of its group — the reference polls its whole
+  * fleet from one process (Prensas.py:843-850). The read parallelism is
+  * bounded by the cores either way, and a tick of a large fleet runs
+  * one task per core instead of one one-row task per PLC. No shuffle
+  * precedes the keyed state stage.
   *
   * Deterministic generator (no wall clock — SURVEY §7.5):
   *  - counter addresses (`counters` option) increase by 1 per tick from
@@ -82,8 +86,9 @@ object PlcSimConfig {
   *  - column pruning (`SupportsPushDownRequiredColumns`): a query that
   *    never touches `regs` skips generating/reading the register map;
   *  - `ip` filter pushdown (`SupportsPushDownFilters`, `=`/`IN`):
-  *    prunes whole input partitions — the fleet analog of connecting
-  *    to a subset of PLCs, before any row exists.
+  *    prunes IPs before they are grouped into input partitions — the
+  *    fleet analog of connecting to a subset of PLCs, before any row
+  *    exists.
   */
 abstract class PlcScanBuilder(allIps: Seq[String]) extends ScanBuilder with Scan
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
@@ -118,6 +123,19 @@ abstract class PlcScanBuilder(allIps: Seq[String]) extends ScanBuilder with Scan
   override def readSchema(): StructType = required
 }
 
+object PlcScanBuilder {
+  /** The input partitions of a PLC source, for both sources and both
+    * planners: `ips` dealt round-robin into min(#ips,
+    * `defaultParallelism`) fixed groups, one partition per group, made
+    * by `part`. More partitions than cores would only queue one-row
+    * tasks behind each other; the group count is not part of any
+    * offset, so a checkpoint restarts unchanged on another core count. */
+  def partitions(ips: Seq[String])(part: Seq[String] => InputPartition): Array[InputPartition] = {
+    val n = math.min(ips.size, SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate(n)(g => part((g until ips.size by n).map(ips)))
+  }
+}
+
 class PlcSimTable(cfg: PlcSimConfig) extends Table with SupportsRead {
   override def name(): String = s"plc-sim(${cfg.ips.mkString(",")})"
   override def schema(): StructType = PlcSim.schema
@@ -130,7 +148,7 @@ class PlcSimTable(cfg: PlcSimConfig) extends Table with SupportsRead {
         new PlcSimMicroBatchStream(cfg.copy(ips = selectedIps), required)
       override def toBatch: Batch = new Batch {
         override def planInputPartitions(): Array[InputPartition] =
-          selectedIps.map(ip => PlcSimPartition(ip, 0L, cfg.maxTicks, cfg): InputPartition).toArray
+          PlcScanBuilder.partitions(selectedIps)(PlcSimPartition(_, 0L, cfg.maxTicks, cfg))
         override def createReaderFactory(): PartitionReaderFactory = PlcSimReaderFactory(required)
       }
     }
@@ -171,16 +189,17 @@ class PlcSimMicroBatchStream(cfg: PlcSimConfig,
     }
   }
 
-  /** One partition per IP — the per-IP reader of the reference. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TickOffset].tick
     val e = end.asInstanceOf[TickOffset].tick
-    cfg.ips.map(ip => PlcSimPartition(ip, s, e, cfg): InputPartition).toArray
+    PlcScanBuilder.partitions(cfg.ips)(PlcSimPartition(_, s, e, cfg))
   }
   override def createReaderFactory(): PartitionReaderFactory = PlcSimReaderFactory(schema)
 }
 
-case class PlcSimPartition(ip: String, startTick: Long, endTick: Long, cfg: PlcSimConfig)
+/** The ticks [startTick, endTick) of a group of PLCs: one row per
+  * (ip, tick), tick by tick, the group's IPs in turn. */
+case class PlcSimPartition(ips: Seq[String], startTick: Long, endTick: Long, cfg: PlcSimConfig)
   extends InputPartition
 
 case class PlcSimReaderFactory(schema: StructType = PlcSim.schema)
@@ -188,8 +207,11 @@ case class PlcSimReaderFactory(schema: StructType = PlcSim.schema)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PlcSimPartition]
     val fields = schema.fieldNames
+    val ips = p.ips.map(UTF8String.fromString).toArray
+    val keys = new GenericArrayData(p.cfg.addresses.map(a => UTF8String.fromString(a)).toArray[Any])
     new PartitionReader[InternalRow] {
       private var tick = p.startTick
+      private var at = 0 // next ip of the group at `tick`
       private var row: InternalRow = _
       override def next(): Boolean =
         if (tick >= p.endTick) false
@@ -197,17 +219,16 @@ case class PlcSimReaderFactory(schema: StructType = PlcSim.schema)
           // build ONLY the pruned columns; in particular a pruned-out
           // `regs` skips the whole register-map generation
           val values = fields.map[Any] {
-            case "ip" => UTF8String.fromString(p.ip)
+            case "ip" => ips(at)
             case "ts" => (p.cfg.startEpochSec + tick) * 1000000L // µs
             case "regs" =>
-              val addrs = p.cfg.addresses
-              val keys = new GenericArrayData(addrs.map(a => UTF8String.fromString(a)).toArray[Any])
-              val vals = new GenericArrayData(
-                addrs.map(a => PlcSim.valueAt(p.cfg, p.ip, a, tick): java.lang.Integer).toArray[Any])
+              val vals = new GenericArrayData(p.cfg.addresses
+                .map(a => PlcSim.valueAt(p.cfg, p.ips(at), a, tick): java.lang.Integer).toArray[Any])
               new ArrayBasedMapData(keys, vals)
           }
           row = new GenericInternalRow(values.toArray)
-          tick += 1
+          at += 1
+          if (at == ips.length) { at = 0; tick += 1 }
           true
         }
       override def get(): InternalRow = row

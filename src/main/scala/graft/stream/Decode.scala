@@ -11,7 +11,8 @@ import graft.functions.PlcFunctions._
   *
   * Stages (all narrow or one-shuffle; streaming-safe):
   *  1. pivot each (ip, ts) snapshot into an address→word map
-  *  2. broadcast-join the per-(station, side) register layout
+  *  2. join the per-(station, side) register layout (a literal map
+  *     lookup when streaming, a broadcast join in batch)
   *  3. decode: counter word, cycle-time F9, part string F1
   *  4. expand `/`-alternatives (G1), drop empties (P3)
   *  5. combinar_listas (A1): group by (station, ts, parte) — counters
@@ -29,21 +30,26 @@ object Decode {
       .agg(map_from_entries(collect_list(struct(col("address"), col("value")))).as("regs"))
 
   /** Streaming-safe decode: snapshot rows → per-(station, side, parte)
-    * candidate observations. Entirely NARROW (broadcast join + per-row
-    * expressions + explode — no shuffle, no streaming aggregation), so
-    * `flatMapGroupsWithState` can legally and efficiently follow it;
-    * the cross-side counter sum happens inside the state function
-    * (StateMachine.combineEnriched). */
+    * candidate observations. Entirely NARROW (a per-row lookup of the
+    * snapshot's ip in the layout + per-row expressions + explode — no
+    * shuffle, no streaming aggregation), so `flatMapGroupsWithState`
+    * can legally and efficiently follow it; the cross-side counter sum
+    * happens inside the state function (StateMachine.combineEnriched).
+    *
+    * The static layout is a literal `ip → sides` map, looked up per row
+    * and exploded: an inner join, since an ip with no layout yields no
+    * rows, that plans no exchange — a broadcast join would collect its
+    * build side in a Spark job on every micro-batch. */
   def decodeSnapshots(spark: SparkSession, snapshots: DataFrame,
       configs: Seq[StationSideConfig]): Dataset[PartObservation] = {
     import spark.implicits._
-    val cfg = spark.createDataset(configs).toDF().withColumnRenamed("ip", "cfg_ip")
-    snapshots.join(broadcast(cfg), col("ip") === col("cfg_ip"))
-      .select(col("station"), col("ts"),
-        coalesce(element_at(col("regs"), col("counterAddr")), lit(0)).cast("long").as("contador"),
-        msToSeconds(when(col("tiempoAddr").isNotNull,
-          element_at(col("regs"), col("tiempoAddr"))).otherwise(lit(0))).as("tiempo"),
-        decodePlcWords(transform(col("partAddrs"),
+    val sides = typedLit(configs.groupBy(_.ip))
+    snapshots.select(col("ts"), col("regs"), explode(element_at(sides, col("ip"))).as("cfg"))
+      .select(col("cfg.station").as("station"), col("ts"),
+        coalesce(element_at(col("regs"), col("cfg.counterAddr")), lit(0)).cast("long").as("contador"),
+        msToSeconds(when(col("cfg.tiempoAddr").isNotNull,
+          element_at(col("regs"), col("cfg.tiempoAddr"))).otherwise(lit(0))).as("tiempo"),
+        decodePlcWords(transform(col("cfg.partAddrs"),
           a => coalesce(element_at(col("regs"), a), lit(0)))).as("original"))
       .select(col("station"), col("ts"), col("contador"), col("tiempo"), col("original"),
         explode(expandAlternatives(col("original"))).as("parte"))

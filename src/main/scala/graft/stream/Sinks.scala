@@ -17,7 +17,6 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
   GenericInternalRow, InterpretedOrdering, SortOrder}
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetReadSupport, ParquetToSparkSchemaConverter}
@@ -307,14 +306,17 @@ object Sinks {
   /** Reads parquet `files` on the driver with the function a Spark scan
     * task runs (`ParquetFileFormat.buildReaderWithPartitionValues`,
     * rows not batches), `filters` pushed into it; no job. Rows hold the
-    * `requiredSchema` columns, copied out of the reader's buffers. */
-  private def readParquet(spark: SparkSession, files: Seq[FileStatus], dataSchema: StructType,
-      requiredSchema: StructType, filters: Seq[Filter] = Nil): Iterator[InternalRow] =
+    * `requiredSchema` columns, copied out of the reader's buffers.
+    * `conf` is the session's Hadoop conf (`newHadoopConf`, which copies
+    * every Hadoop and SQL setting: build it once per epoch). */
+  private def readParquet(spark: SparkSession, conf: Configuration, files: Seq[FileStatus],
+      dataSchema: StructType, requiredSchema: StructType,
+      filters: Seq[Filter] = Nil): Iterator[InternalRow] =
     if (files.isEmpty) Iterator.empty
     else {
       val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
         new StructType(), requiredSchema, filters,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
       files.iterator.flatMap(f => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
         0L, f.getLen, modificationTime = f.getModificationTime, fileSize = f.getLen))
         .map(_.copy()))
@@ -323,10 +325,11 @@ object Sinks {
   /** Writes `rows` to the parquet file `file` on the driver through
     * parquet-hadoop with Spark's `ParquetWriteSupport`, configured from
     * the session as a Spark write is, so the footer carries Spark's
-    * schema metadata; no job. */
-  private def writeParquet(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
-      file: Path): Unit = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    * schema metadata; no job. The write configures a copy of `conf`,
+    * the session's Hadoop conf. */
+  private def writeParquet(spark: SparkSession, conf: Configuration, schema: StructType,
+      rows: Iterator[InternalRow], file: Path): Unit = {
+    val job = Job.getInstance(conf)
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val out = factory.newInstance(file.toString, schema,
       new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
@@ -348,7 +351,7 @@ object Sinks {
     * every row of a touched partition while it merges it (one partition
     * at a time): the bound on the batch does not bound the partitions. */
   private def upsertOnDriver(batch: DataFrame, path: String, keys: Seq[String],
-      version: Seq[String], layout: Layout, epochId: Long): Unit = {
+      version: Seq[String], layout: Layout, epochId: Long, conf: Configuration): Unit = {
     val b = batch.withColumn(layout.column, layout.value)
     val rows = localRows(b)
     if (rows.isEmpty) return
@@ -376,12 +379,12 @@ object Sinks {
         val k = keyAt.map(i => r.get(i, types(i)))
         if (newest.get(k).forall(cur => newer.lteq(cur, r))) newest(k) = r
       }
-      readParquet(spark, old, schema, schema).foreach(offer)
+      readParquet(spark, conf, old, schema, schema).foreach(offer)
       batchRows.foreach(r =>
         offer(new GenericInternalRow(types.indices.map(i => r.get(i, types(i))).toArray)))
       val tmp = new Path(dir, s".e$epochId.tmp")
       fs.delete(tmp, false)
-      writeParquet(spark, schema, newest.valuesIterator, tmp)
+      writeParquet(spark, conf, schema, newest.valuesIterator, tmp)
       val file = epochFile(dir, epochId)
       require(fs.rename(tmp, file), s"could not install $file")
       old.foreach(f => require(fs.delete(f.getPath, false), s"could not remove superseded ${f.getPath}"))
@@ -392,7 +395,8 @@ object Sinks {
     * whatever the directory held (a replay converges whichever route
     * either attempt took). A legacy flat table is adopted into
     * `epoch=-1` first, as on the distributed route. */
-  private def overwriteEpochOnDriver(rows: DataFrame, root: String, epochId: Long): Unit = {
+  private def overwriteEpochOnDriver(rows: DataFrame, root: String, epochId: Long,
+      conf: Configuration): Unit = {
     val data = localRows(rows)
     if (data.isEmpty) return
     val spark = rows.sparkSession
@@ -402,7 +406,7 @@ object Sinks {
     val dir = new Path(base, s"epoch=$epochId")
     val tmp = new Path(base, s".epoch=$epochId.tmp")
     fs.delete(tmp, false)
-    writeParquet(spark, nullable(rows.schema), data.iterator, tmp)
+    writeParquet(spark, conf, nullable(rows.schema), data.iterator, tmp)
     if (fs.exists(dir)) require(fs.delete(dir, true), s"could not replace $dir")
     val file = epochFile(dir, epochId)
     require(fs.mkdirs(dir) && fs.rename(tmp, file), s"could not install $file")
@@ -673,7 +677,8 @@ object Sinks {
     val keyed = batch.withColumn("nf_key", nfKey)
     val limit = IngestDedup.isinKeyLimit(spark)
     val keys = distinctUpTo(keyed.select("nf_key"), capOf(limit)).map(_.asInstanceOf[String])
-    if (keys.size <= limit) appendNovel(keyed, keys, path, epochId, batch.columns.toSeq)
+    if (keys.size <= limit)
+      appendNovel(keyed, keys, path, epochId, batch.columns.toSeq, spark.sessionState.newHadoopConf())
     else {
       val survivors = csvDedupSurvivors(fresh, path, epochId)
         .localCheckpoint() // feeds the CSV write and the index write
@@ -685,12 +690,13 @@ object Sinks {
   /** [[appendCsvDedup]] of a driver-held batch with an epoch id: the
     * keys are computed on the driver and take the driver probe, so an
     * epoch with no new key runs no job. */
-  private def appendCsvDedupOnDriver(batch: DataFrame, path: String, epochId: Long): Unit = {
+  private def appendCsvDedupOnDriver(batch: DataFrame, path: String, epochId: Long,
+      conf: Configuration): Unit = {
     val keyed = batch.withColumn("nf_key", nfKey)
     val keys = localRows(keyed.select("nf_key")).map(_.getUTF8String(0).toString).toSet
     if (keys.isEmpty) return
     prepareNfIndex(batch.sparkSession, path, batch.schema, epochId, NfCompactEvery)
-    appendNovel(keyed, keys, path, epochId, batch.columns.toSeq)
+    appendNovel(keyed, keys, path, epochId, batch.columns.toSeq, conf)
   }
 
   /** Before an epoch's probe: adopt a flat-layout CSV and bootstrap its
@@ -714,8 +720,9 @@ object Sinks {
     * the index does not hold yet; an epoch with no new key writes
     * nothing. */
   private def appendNovel(keyed: DataFrame, keys: collection.Set[String], path: String,
-      epochId: Long, columns: Seq[String]): Unit = {
-    val novel = keys.filterNot(nfIndexHits(keyed.sparkSession, path, epochId, keys)).toSeq.sorted
+      epochId: Long, columns: Seq[String], conf: Configuration): Unit = {
+    val novel = keys.filterNot(nfIndexHits(keyed.sparkSession, conf, path, epochId, keys))
+      .toSeq.sorted
     if (novel.isEmpty) return
     // one partition: the per-key dedup needs no shuffle
     writeNf(keyed.filter(col("nf_key").isin(novel: _*)).coalesce(1).dropDuplicates("nf_key"),
@@ -752,30 +759,33 @@ object Sinks {
       .filter(col("epoch") < epochId)
 
   /** The index probe for `keys` (None when there is nothing to probe):
-    * the scan Spark plans over the index — partitions pruned to
-    * `epoch < N`, the keys pushed into the read as IN — and the files
-    * that scan lists, which [[nfIndexHits]] reads. */
+    * the index files epoch N may see — the data files of its `epoch=K`
+    * directories with `K < N`, listed through the FileSystem (no Spark
+    * file index) — and the filter [[nfIndexHits]] pushes into their
+    * read. */
   private[graft] def nfIndexProbe(spark: SparkSession, path: String, epochId: Long,
-      keys: collection.Set[String]): Option[(FileSourceScanExec, Seq[FileStatus])] =
-    if (keys.isEmpty || !EpochFold.hasDataFiles(spark, nfIdxPath(path))) None
-    else {
-      val scan = nfIndex(spark, path, epochId).filter(col("nf_key").isin(keys.toSeq: _*))
-        .select("nf_key").queryExecution.executedPlan
-        .collectFirst { case s: FileSourceScanExec => s }.get
-      Some(scan -> scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
-        .flatMap(_.files.map(_.fileStatus)))
-    }
+      keys: collection.Set[String]): Option[(Seq[FileStatus], Filter)] = {
+    val root = new Path(nfIdxPath(path))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (keys.isEmpty || !fs.exists(root)) Nil
+      else fs.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch=") &&
+          st.getPath.getName.stripPrefix("epoch=").toLongOption.exists(_ < epochId))
+        .flatMap(st => dataFiles(fs, st.getPath))
+    if (files.isEmpty) None else Some(files -> In("nf_key", keys.toArray[Any]))
+  }
+
+  private val NfIndexSchema = new StructType().add("nf_key", "string")
 
   /** The index hits among `keys`: the driver reads the files of
     * [[nfIndexProbe]] with Spark's parquet reader, the keys pushed in;
     * no job. */
-  private def nfIndexHits(spark: SparkSession, path: String, epochId: Long,
-      keys: collection.Set[String]): collection.Set[String] =
-    nfIndexProbe(spark, path, epochId, keys).fold(Set.empty[String]) { case (scan, files) =>
-      val at = scan.requiredSchema.fieldIndex("nf_key")
-      readParquet(spark, files, scan.relation.dataSchema, scan.requiredSchema,
-        Seq(In("nf_key", keys.toArray[Any])))
-        .map(_.getUTF8String(at).toString).filter(keys).toSet
+  private def nfIndexHits(spark: SparkSession, conf: Configuration, path: String,
+      epochId: Long, keys: collection.Set[String]): collection.Set[String] =
+    nfIndexProbe(spark, path, epochId, keys).fold(Set.empty[String]) { case (files, pushed) =>
+      readParquet(spark, conf, files, NfIndexSchema, NfIndexSchema, Seq(pushed))
+        .map(_.getUTF8String(0).toString).filter(keys).toSet
     }
 
   /** The batch rows whose logical key is absent from the index, for
@@ -877,10 +887,12 @@ object Sinks {
       rows match {
         case Some(rows) =>
           val local = spark.createDataFrame(rows.asJava, df.schema)
+          // one copy of the session's Hadoop conf for every driver read and write
+          val conf = spark.sessionState.newHadoopConf()
           upsertOnDriver(recordRows(local), s"$outDir/production_records",
-            Seq("record_id"), Seq("ts", "rank"), RecordShifts, epochId)
-          overwriteEpochOnDriver(historyRows(local), s"$outDir/histories", epochId)
-          appendCsvDedupOnDriver(notFoundRows(local), s"$outDir/parts_not_found", epochId)
+            Seq("record_id"), Seq("ts", "rank"), RecordShifts, epochId, conf)
+          overwriteEpochOnDriver(historyRows(local), s"$outDir/histories", epochId, conf)
+          appendCsvDedupOnDriver(notFoundRows(local), s"$outDir/parts_not_found", epochId, conf)
         case None =>
           if (Seq(ActionRow.Create, ActionRow.Update, ActionRow.Close).exists(present))
             upsertParquetPartitioned(recordRows(df), s"$outDir/production_records",

@@ -15,7 +15,7 @@ class StubMcServer(value: (Int, Int) => Int, failFirstExchanges: Int = 0)
     java.net.InetAddress.getLoopbackAddress)
   val port: Int = server.getLocalPort
   @volatile private var closed = false
-  private val exchanges = new java.util.concurrent.atomic.AtomicInteger(0)
+  val exchanges = new java.util.concurrent.atomic.AtomicInteger(0)
   val connections = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val acceptor = new Thread(() => {
@@ -177,6 +177,39 @@ class PlcNetSourceSpec extends SparkSpec {
       assert(out.select("vals").as[Seq[Int]].collect()
         .forall(_ == Seq(3100 + 0xA8, 3101 + 0xA8)))
     } finally srv.close()
+  }
+
+  test("a fleet larger than the cores: one partition per core, one connection per PLC, one read per tick") {
+    val cores = spark.sparkContext.defaultParallelism
+    // one stub per logical PLC, each answering words offset by its index
+    val stubs = (0 until 2 * cores + 1).map(k =>
+      new StubMcServer((code, num) => (num + code + k) & 0xFFFF))
+    try {
+      val ips = stubs.map(s => s"127.0.0.1:${s.port}")
+      val planned = new java.util.concurrent.atomic.AtomicInteger()
+      val rows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
+      val q = spark.readStream.format("plc-net")
+        .option("ips", ips.mkString(","))
+        .option("addresses", "D3100")
+        .option("ticksPerTrigger", "3").option("maxTicks", "3")
+        .load()
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          planned.set(b.queryExecution.toRdd.getNumPartitions)
+          b.select(col("ip"), map_values(col("regs"))).as[(String, Seq[Int])].collect()
+            .foreach(rows.add); ()
+        }.start()
+      assert(q.awaitTermination(120000))
+      assert(planned.get == cores, s"${planned.get} partitions on $cores cores")
+      import scala.jdk.CollectionConverters._
+      assert(rows.asScala.toSeq.groupBy(_._1).map { case (ip, rs) => ip -> rs.map(_._2) } ==
+        ips.zipWithIndex.map { case (ip, k) => ip -> Seq.fill(3)(Seq(3100 + 0xA8 + k)) }.toMap,
+        "every PLC read once per tick, 3 ticks")
+      assert(stubs.map(_.connections.get) == stubs.map(_ => 1),
+        "one connection per PLC, held across the ticks")
+      assert(stubs.map(_.exchanges.get) == stubs.map(_ => 3), "one read per PLC per tick")
+    } finally stubs.foreach(_.close())
   }
 
   test("hostPort defaults to the reference's port 1025") {

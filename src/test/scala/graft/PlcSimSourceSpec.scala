@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.StationSideConfig
+import graft.sources.{PlcSim, PlcSimConfig}
 import graft.stream.{Decode, Sinks, StateMachine}
 
-/** The DSv2 plc-sim source: schema, determinism, per-IP partitioning,
-  * and the full source → decode → state machine → sinks integration. */
+/** The DSv2 plc-sim source: schema, determinism, packing the fleet into
+  * one partition per core, and the full source → decode → state machine
+  * → sinks integration. */
 class PlcSimSourceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -112,8 +114,95 @@ class PlcSimSourceSpec extends SparkSpec {
     val rec = spark.read.parquet(s"$outDir/production_records").collect()
     assert(rec.length == 1)
     // produced := final raw counter (base + 4 after 5 ticks), base_ct 0
-    val base = graft.sources.PlcSim.base("10.0.0.1", "D3100")
+    val base = PlcSim.base("10.0.0.1", "D3100")
     assert(rec.head.getAs[Long]("produced") == base + 4L)
     assert(rec.head.getAs[String]("parte") == "AB12")
+  }
+
+  test("a fleet larger than the cores packs into defaultParallelism partitions, rows in closed form") {
+    val cores = spark.sparkContext.defaultParallelism
+    val ips = (1 to 2 * cores + 3).map(i => s"10.1.0.$i")
+    val cfg = PlcSimConfig(ips, Seq("D3100", "D3200"), Set("D3100"), Map.empty,
+      startEpochSec = 1709625600L, maxTicks = 3L)
+    val options = Map("ips" -> ips.mkString(","), "addresses" -> "D3100,D3200",
+      "counters" -> "D3100", "maxTicks" -> "3")
+    val expected = for (ip <- ips; tick <- 0L until 3L)
+      yield (ip, tick, cfg.addresses.map(a => a -> PlcSim.valueAt(cfg, ip, a, tick)).toMap)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"ip", $"ts", $"regs").as[(String, java.sql.Timestamp, Map[String, Int])]
+        .collect().map { case (ip, ts, regs) => (ip, ts.getTime / 1000 - cfg.startEpochSec, regs) }
+
+    val batch = spark.read.format("plc-sim").options(options).load()
+    assert(batch.queryExecution.toRdd.getNumPartitions == cores)
+    val read = rows(batch)
+    assert(read.length == expected.length && read.toSet == expected.toSet)
+
+    val planned = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val streamed = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Map[String, Int])]()
+    val q = spark.readStream.format("plc-sim").options(options)
+      .option("maxTicksPerTrigger", "2").load().writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        planned.add(b.queryExecution.toRdd.getNumPartitions)
+        rows(b).foreach(streamed.add); ()
+      }.start()
+    assert(q.awaitTermination(120000))
+    import scala.jdk.CollectionConverters._
+    assert(planned.asScala.toSeq == Seq(cores, cores), s"two epochs of $cores partitions: $planned")
+    assert(streamed.size == expected.length && streamed.asScala.toSet == expected.toSet)
+  }
+
+  test("a warm 50-PLC epoch through decode, state machine and sinks runs one job of at most 2 x cores tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val ips = (1 to 50).map(i => s"10.2.0.$i")
+    val stations = ips.indices.map(i => f"PRENSA$i%02d")
+    val layout = ips.zip(stations).map { case (ip, st) =>
+      StationSideConfig(ip, st, "LH", "D3100", None, Seq("D3200", "D3201"))
+    }
+    val source = spark.readStream.format("plc-sim")
+      .option("ips", ips.mkString(",")).option("addresses", "D3100,D3200,D3201")
+      .option("counters", "D3100").option("words", "D3200=16961;D3201=12849") // "AB12"
+      .option("maxTicks", "3").option("maxTicksPerTrigger", "1").load()
+    val machine = new StateMachine( // every fifth station's part is unknown
+      knownParts = stations.zipWithIndex.collect { case (st, i) if i % 5 != 0 => (st, "AB12") -> 1L }.toMap,
+      multipliers = Map.empty, priorRecords = Map.empty, timeoutMs = 0)
+    val outDir = Files.createTempDirectory("graft_sim_jobs").toString
+    // the jobs of the last epoch, by the batch id the stream tags them with
+    val warm = "2"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val tag = s"drained-${System.nanoTime()}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("streaming.sql.batchId") == warm)) {
+          jobs.incrementAndGet(); e.stageIds.foreach(stages.add(_))
+        }
+        if (props.exists(_.getProperty("graft.spec.tag") == tag)) drained.countDown()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId)) tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val q = Sinks.startPipeline(Decode.decodeSnapshots(spark, source, layout), machine,
+        outDir, s"$outDir/_ckpt", Trigger.AvailableNow())
+      assert(q.awaitTermination(120000))
+      // the bus delivers events in order: once this marker job's start
+      // arrives, every event of the stream has been seen
+      sc.setLocalProperty("graft.spec.tag", tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.tag", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val cores = sc.defaultParallelism
+    assert(jobs.get == 1, s"${jobs.get} Spark jobs in warm epoch $warm")
+    assert(tasks.get <= 2 * cores, s"${tasks.get} tasks in warm epoch $warm ($cores cores)")
+    val produced = spark.read.parquet(s"$outDir/production_records").select("produced")
+      .as[Long].collect()
+    assert(produced.length == 40, "one record per known station")
+    assert(spark.read.option("header", "true").csv(s"$outDir/parts_not_found").count() == 10)
   }
 }

@@ -323,20 +323,22 @@ class SinksSpec extends SparkSpec
       .as[String].collect().toSeq == Seq("P9"), "known key P0 rejected by the index; novel P9 survives")
     assert(writes.size == 2, "one CSV write and one index write")
     // the probe runs on the driver, outside any query execution: check
-    // the scan it plans and the files it reads for the same batch
+    // the files it lists and the filter it pushes into their read for
+    // the same batch
     val keys = batch.select(Sinks.nfKey).as[String].collect().toSet
-    val (probe, probeFiles) = Sinks.nfIndexProbe(spark, dir, 3, keys).get
+    val (probeFiles, pushed) = Sinks.nfIndexProbe(spark, dir, 3, keys).get
     val scans = plans.asScala.toSeq.flatMap(qe =>
-      collectWithSubqueries(qe.executedPlan) { case sc: FileSourceScanExec => sc }) :+ probe
+      collectWithSubqueries(qe.executedPlan) { case sc: FileSourceScanExec => sc })
     val idxScans = scans.filter(_.relation.location.rootPaths
       .exists(_.toString.contains("_nf_idx")))
-    assert(idxScans.nonEmpty, "the probe must read the key index")
-    assert(idxScans.exists(sc => Seq("In(nf_key", "EqualTo(nf_key")
-        .exists(sc.metadata("PushedFilters").contains)),
-      s"batch keys must push into the index scan: ${idxScans.map(_.metadata("PushedFilters"))}")
+    assert(probeFiles.nonEmpty, "the probe must read the key index")
+    assert(pushed match {
+        case org.apache.spark.sql.sources.In("nf_key", vs) => vs.toSet == keys
+        case _ => false
+      }, s"batch keys must push into the index read: $pushed")
     assert(scans.size == idxScans.size,
       "per-batch read IO must not include the accumulated CSV itself")
-    assert(probeFiles.nonEmpty && probeFiles.forall(_.getPath.toString.contains("/._nf_idx/")),
+    assert(probeFiles.forall(_.getPath.toString.contains("/._nf_idx/")),
       s"the driver read must open index files only: ${probeFiles.map(_.getPath)}")
     assert(probeFiles.map(_.getPath.getParent.getName).toSet == Set("epoch=0", "epoch=1", "epoch=2"),
       "epoch 3 probes the index epochs before it")
