@@ -1,5 +1,6 @@
 package graft.stream
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 import graft.batch.Lake
@@ -36,9 +37,13 @@ private[stream] object EpochFold {
     * re-run moves whatever flat files remain. Metadata files
     * (`_SUCCESS`, dot-files) stay at the root, where Spark's file index
     * already ignores them. */
-  def migrateLegacyFlat(s: SparkSession, path: String): Unit = {
+  def migrateLegacyFlat(s: SparkSession, path: String): Unit =
+    migrateLegacyFlat(s.sparkContext.hadoopConfiguration, path)
+
+  /** [[migrateLegacyFlat]] with the FileSystem of `conf`. */
+  def migrateLegacyFlat(conf: Configuration, path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return
     val flat = fs.listStatus(root).filter { st =>
       val n = st.getPath.getName
@@ -60,9 +65,13 @@ private[stream] object EpochFold {
     * dir holding only `_SUCCESS`, and `spark.read.parquet` over
     * metadata-only dirs dies with UNABLE_TO_INFER_SCHEMA — the same
     * trap as the round-4 bucketed-sink marker bug. */
-  def hasDataFiles(s: SparkSession, path: String): Boolean = {
+  def hasDataFiles(s: SparkSession, path: String): Boolean =
+    hasDataFiles(s.sparkContext.hadoopConfiguration, path)
+
+  /** [[hasDataFiles]] with the FileSystem of `conf`. */
+  def hasDataFiles(conf: Configuration, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return false
     val it = fs.listFiles(p, true)
     while (it.hasNext) {

@@ -26,6 +26,7 @@ import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.io.NioLocal
 import graft.model._
 
 /** Batch/foreachBatch sinks for the action stream (K1-K5).
@@ -357,7 +358,7 @@ object Sinks {
     if (rows.isEmpty) return
     val spark = batch.sparkSession
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(conf)
     requireLayout(fs, root, layout)
     val schema = nullable(batch.schema)
     val types = schema.map(_.dataType)
@@ -400,9 +401,9 @@ object Sinks {
     val data = localRows(rows)
     if (data.isEmpty) return
     val spark = rows.sparkSession
-    EpochFold.migrateLegacyFlat(spark, root)
+    EpochFold.migrateLegacyFlat(conf, root)
     val base = new Path(root)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(conf)
     val dir = new Path(base, s"epoch=$epochId")
     val tmp = new Path(base, s".epoch=$epochId.tmp")
     fs.delete(tmp, false)
@@ -673,7 +674,8 @@ object Sinks {
       toWrite.write.mode(SaveMode.Append).option("header", "true").csv(path)
       return
     }
-    prepareNfIndex(spark, path, batch.schema, epochId, compactEvery)
+    prepareNfIndex(spark, spark.sparkContext.hadoopConfiguration, path, batch.schema, epochId,
+      compactEvery)
     val keyed = batch.withColumn("nf_key", nfKey)
     val limit = IngestDedup.isinKeyLimit(spark)
     val keys = distinctUpTo(keyed.select("nf_key"), capOf(limit)).map(_.asInstanceOf[String])
@@ -695,18 +697,21 @@ object Sinks {
     val keyed = batch.withColumn("nf_key", nfKey)
     val keys = localRows(keyed.select("nf_key")).map(_.getUTF8String(0).toString).toSet
     if (keys.isEmpty) return
-    prepareNfIndex(batch.sparkSession, path, batch.schema, epochId, NfCompactEvery)
+    prepareNfIndex(batch.sparkSession, conf, path, batch.schema, epochId, NfCompactEvery)
     appendNovel(keyed, keys, path, epochId, batch.columns.toSeq, conf)
   }
 
   /** Before an epoch's probe: adopt a flat-layout CSV and bootstrap its
-    * keys into the index (once), and fold the index on its cadence. */
-  private def prepareNfIndex(spark: SparkSession, path: String, schema: StructType,
-      epochId: Long, compactEvery: Int): Unit = {
+    * keys into the index (once), and fold the index on its cadence. The
+    * listings use the FileSystem of `conf`. */
+  private def prepareNfIndex(spark: SparkSession, conf: Configuration, path: String,
+      schema: StructType, epochId: Long, compactEvery: Int): Unit = {
     val idxPath = nfIdxPath(path)
-    EpochFold.migrateLegacyFlat(spark, path)
-    if (!EpochFold.hasDataFiles(spark, idxPath) &&
-        EpochFold.hasDataFiles(spark, s"$path/epoch=-1")) {
+    EpochFold.migrateLegacyFlat(conf, path)
+    // the absent epoch=-1 first: in the steady state one existence
+    // check, not a walk of the whole index
+    if (EpochFold.hasDataFiles(conf, s"$path/epoch=-1") &&
+        !EpochFold.hasDataFiles(conf, idxPath)) {
       spark.read.schema(schema).option("header", "true").csv(s"$path/epoch=-1")
         .select(nfKey.as("nf_key"))
         .sortWithinPartitions("nf_key")
@@ -752,27 +757,25 @@ object Sinks {
       NfKeys.map(k => coalesce(col(k).cast("string"), lit("\u0000"))): _*)
       .cast("binary"))
 
-  /** The index entries epoch N may see (`epoch < N`), read with the
-    * index's known schema: no schema-inference job. */
-  private def nfIndex(spark: SparkSession, path: String, epochId: Long): DataFrame =
-    spark.read.schema("nf_key STRING, epoch LONG").parquet(nfIdxPath(path))
-      .filter(col("epoch") < epochId)
+  /** The index files epoch N may see: the data files of its `epoch=K`
+    * directories with `K < N`, listed through the FileSystem of `conf`
+    * (no Spark file index). */
+  private def nfIndexFiles(conf: Configuration, path: String, epochId: Long): Seq[FileStatus] = {
+    val root = new Path(nfIdxPath(path))
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch=") &&
+        st.getPath.getName.stripPrefix("epoch=").toLongOption.exists(_ < epochId))
+      .flatMap(st => dataFiles(fs, st.getPath))
+  }
 
   /** The index probe for `keys` (None when there is nothing to probe):
-    * the index files epoch N may see — the data files of its `epoch=K`
-    * directories with `K < N`, listed through the FileSystem (no Spark
-    * file index) — and the filter [[nfIndexHits]] pushes into their
-    * read. */
-  private[graft] def nfIndexProbe(spark: SparkSession, path: String, epochId: Long,
+    * the [[nfIndexFiles]] of epoch N and the filter [[nfIndexHits]]
+    * pushes into their read. */
+  private[graft] def nfIndexProbe(conf: Configuration, path: String, epochId: Long,
       keys: collection.Set[String]): Option[(Seq[FileStatus], Filter)] = {
-    val root = new Path(nfIdxPath(path))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (keys.isEmpty || !fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch=") &&
-          st.getPath.getName.stripPrefix("epoch=").toLongOption.exists(_ < epochId))
-        .flatMap(st => dataFiles(fs, st.getPath))
+    val files = if (keys.isEmpty) Nil else nfIndexFiles(conf, path, epochId)
     if (files.isEmpty) None else Some(files -> In("nf_key", keys.toArray[Any]))
   }
 
@@ -783,7 +786,7 @@ object Sinks {
     * no job. */
   private def nfIndexHits(spark: SparkSession, conf: Configuration, path: String,
       epochId: Long, keys: collection.Set[String]): collection.Set[String] =
-    nfIndexProbe(spark, path, epochId, keys).fold(Set.empty[String]) { case (files, pushed) =>
+    nfIndexProbe(conf, path, epochId, keys).fold(Set.empty[String]) { case (files, pushed) =>
       readParquet(spark, conf, files, NfIndexSchema, NfIndexSchema, Seq(pushed))
         .map(_.getUTF8String(0).toString).filter(keys).toSet
     }
@@ -791,14 +794,17 @@ object Sinks {
   /** The batch rows whose logical key is absent from the index, for
     * batches of more than `isinKeyLimit` keys: the index probe is a
     * broadcast or sort-merge join (the regimes and `epoch < N`
-    * visibility of [[IngestDedup.verdicts]]). */
+    * visibility of [[IngestDedup.verdicts]]) against the
+    * [[nfIndexFiles]], read as explicit paths with the index's schema
+    * (no schema inference, no scan of the index's root). */
   private def csvDedupSurvivors(fresh: DataFrame, path: String, epochId: Long): DataFrame = {
     val spark = fresh.sparkSession
     val keyed = fresh.withColumn("nf_key", nfKey)
       .localCheckpoint() // one micro-batch; probed + anti-joined below
-    if (!EpochFold.hasDataFiles(spark, nfIdxPath(path))) keyed
+    val files = nfIndexFiles(spark.sparkContext.hadoopConfiguration, path, epochId)
+    if (files.isEmpty) keyed
     else {
-      val idx = nfIndex(spark, path, epochId)
+      val idx = spark.read.schema(NfIndexSchema).parquet(files.map(_.getPath.toString): _*)
       // same conf-overridable switch point as the doc-ingest probes
       // (spark.graft.ingest.*), so one set of knobs tunes — and one
       // spec style can force — every probe regime in the library
@@ -887,8 +893,9 @@ object Sinks {
       rows match {
         case Some(rows) =>
           val local = spark.createDataFrame(rows.asJava, df.schema)
-          // one copy of the session's Hadoop conf for every driver read and write
-          val conf = spark.sessionState.newHadoopConf()
+          // one copy of the session's Hadoop conf for every driver read,
+          // write and listing, its file: paths on the fork-free FileSystem
+          val conf = NioLocal.withFileSystem(spark.sessionState.newHadoopConf())
           upsertOnDriver(recordRows(local), s"$outDir/production_records",
             Seq("record_id"), Seq("ts", "rank"), RecordShifts, epochId, conf)
           overwriteEpochOnDriver(historyRows(local), s"$outDir/histories", epochId, conf)
@@ -959,12 +966,22 @@ object Sinks {
     * [[StateMachine.withDimTablesEventTimeTws]] and pass the result to
     * a foreachBatch identical to this one — the two hosts are
     * transition-identical by construction (one shared [[StateMachine
-    * .Core]]; pinned by TransformWithStateSpec / EventTimeTwsSpec). */
+    * .Core]]; pinned by TransformWithStateSpec / EventTimeTwsSpec).
+    *
+    * The session gets the fork-free `file:` FileContext
+    * ([[graft.io.NioLocal.ensureInstalled]]) before the stream starts,
+    * so a local checkpoint's offsets, commits and state-store files are
+    * written without forking `chmod` or `readlink`, and each small
+    * epoch's driver route lists, reads and writes its `file:` tables
+    * through [[graft.io.NioLocalFileSystem]]. Only those forking calls
+    * change: checksums, `.crc` files and atomic renames are Hadoop's
+    * and Spark's own, and other schemes are untouched. */
   def startPipeline(obs: Dataset[PartObservation], machine: StateMachine,
       outDir: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    NioLocal.ensureInstalled(obs.sparkSession)
     machine(obs).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -973,4 +990,5 @@ object Sinks {
         applyActions(batch, outDir, epochId = id)
       }
       .start()
+  }
 }

@@ -6,6 +6,7 @@ import java.time.ZoneOffset
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode}
 
+import graft.io.NioLocal
 import graft.model._
 
 /** The per-(station, parte) production state machine — the reference's
@@ -82,8 +83,14 @@ class StateMachine(
       state: GroupState[ActiveRecord]): Iterator[ActionRow] =
     core.process(key, rows.map(enrich), state)
 
-  /** Wire the machine onto a typed observation stream. */
+  /** Wire the machine onto a typed observation stream. Installs the
+    * fork-free `file:` FileContext ([[graft.io.NioLocal.ensureInstalled]])
+    * in the session, so a stream started on the result writes its
+    * offsets, commits and state-store files to a local checkpoint
+    * without forking `chmod` or `readlink`; only those forking calls
+    * change, and other schemes are untouched. */
   def apply(obs: Dataset[PartObservation]): Dataset[ActionRow] = {
+    NioLocal.ensureInstalled(obs.sparkSession)
     import obs.sparkSession.implicits._
     obs.map(enrich).groupByKey(o => (o.station, o.parte))
       .flatMapGroupsWithState[ActiveRecord, ActionRow](
@@ -201,13 +208,16 @@ object StateMachine {
         else GroupStateTimeout.NoTimeout)(new Core(timeoutMs).processEventTime)
   }
 
-  /** The stream-static dimension joins shared by both stateful APIs. */
+  /** The stream-static dimension joins shared by both stateful APIs;
+    * installs the fork-free `file:` FileContext for the hosts' streams,
+    * as [[StateMachine.apply]] does. */
   private[stream] def enrichWithDims(obs: Dataset[PartObservation],
       parts: org.apache.spark.sql.DataFrame,
       multipliers: org.apache.spark.sql.DataFrame,
       records: org.apache.spark.sql.DataFrame): Dataset[ObsEnriched] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val s = obs.sparkSession
+    NioLocal.ensureInstalled(s)
     import s.implicits._
     val keyed = obs.map { o =>
       val (shiftId, planDate) = shiftAndDate(o.ts)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -152,8 +154,11 @@ class PlcSimSourceSpec extends SparkSpec {
     assert(streamed.size == expected.length && streamed.asScala.toSet == expected.toSet)
   }
 
-  test("a warm 50-PLC epoch through decode, state machine and sinks runs one job of at most 2 x cores tasks") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+  /** Starts the 50-PLC fleet (one-tick epochs up to tick `ticks`, every
+    * fifth station's part unknown) through decode, state machine and
+    * sinks on `Sinks.startPipeline`, checkpointed under `outDir/_ckpt`. */
+  private def startFleet(outDir: String, ticks: Int = 3)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val ips = (1 to 50).map(i => s"10.2.0.$i")
     val stations = ips.indices.map(i => f"PRENSA$i%02d")
     val layout = ips.zip(stations).map { case (ip, st) =>
@@ -162,10 +167,23 @@ class PlcSimSourceSpec extends SparkSpec {
     val source = spark.readStream.format("plc-sim")
       .option("ips", ips.mkString(",")).option("addresses", "D3100,D3200,D3201")
       .option("counters", "D3100").option("words", "D3200=16961;D3201=12849") // "AB12"
-      .option("maxTicks", "3").option("maxTicksPerTrigger", "1").load()
-    val machine = new StateMachine( // every fifth station's part is unknown
+      .option("maxTicks", ticks.toString).option("maxTicksPerTrigger", "1").load()
+    val machine = new StateMachine(
       knownParts = stations.zipWithIndex.collect { case (st, i) if i % 5 != 0 => (st, "AB12") -> 1L }.toMap,
       multipliers = Map.empty, priorRecords = Map.empty, timeoutMs = 0)
+    Sinks.startPipeline(Decode.decodeSnapshots(spark, source, layout), machine,
+      outDir, s"$outDir/_ckpt", Trigger.AvailableNow())
+  }
+
+  private def checkFleetOutput(outDir: String): Unit = {
+    val produced = spark.read.parquet(s"$outDir/production_records").select("produced")
+      .as[Long].collect()
+    assert(produced.length == 40, "one record per known station")
+    assert(spark.read.option("header", "true").csv(s"$outDir/parts_not_found").count() == 10)
+  }
+
+  test("a warm 50-PLC epoch through decode, state machine and sinks runs one job of at most 2 x cores tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
     val outDir = Files.createTempDirectory("graft_sim_jobs").toString
     // the jobs of the last epoch, by the batch id the stream tags them with
     val warm = "2"
@@ -188,9 +206,7 @@ class PlcSimSourceSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      val q = Sinks.startPipeline(Decode.decodeSnapshots(spark, source, layout), machine,
-        outDir, s"$outDir/_ckpt", Trigger.AvailableNow())
-      assert(q.awaitTermination(120000))
+      assert(startFleet(outDir).awaitTermination(120000))
       // the bus delivers events in order: once this marker job's start
       // arrives, every event of the stream has been seen
       sc.setLocalProperty("graft.spec.tag", tag)
@@ -200,9 +216,40 @@ class PlcSimSourceSpec extends SparkSpec {
     val cores = sc.defaultParallelism
     assert(jobs.get == 1, s"${jobs.get} Spark jobs in warm epoch $warm")
     assert(tasks.get <= 2 * cores, s"${tasks.get} tasks in warm epoch $warm ($cores cores)")
-    val produced = spark.read.parquet(s"$outDir/production_records").select("produced")
-      .as[Long].collect()
-    assert(produced.length == 40, "one record per known station")
-    assert(spark.read.option("header", "true").csv(s"$outDir/parts_not_found").count() == 10)
+    checkFleetOutput(outDir)
+  }
+
+  test("warm 50-PLC epochs start no process on their checkpoint or tables") {
+    val outDir = Files.createTempDirectory("graft_sim_forks").toString
+    // the first epoch writes the new not-found keys with Spark's writer
+    assert(startFleet(outDir, ticks = 1).awaitTermination(120000))
+    // a restart on the checkpoint, then two warm epochs; every Hadoop
+    // shell-out names the path it acts on
+    val (forks, done) = Forks.during(startFleet(outDir).awaitTermination(120000))
+    assert(done)
+    val ours = forks.filter(_.contains(outDir))
+    assert(ours.isEmpty, s"${ours.size} processes on $outDir, e.g. ${ours.take(3)}")
+    checkFleetOutput(outDir)
+  }
+
+  test("the checkpoint keeps the .crc sidecars of its offsets, commits and state deltas, and the state checksums") {
+    val outDir = Files.createTempDirectory("graft_sim_crc").toString
+    assert(startFleet(outDir).awaitTermination(120000))
+    val ckpt = java.nio.file.Paths.get(s"$outDir/_ckpt")
+    def names(sub: String): Set[String] = {
+      val walk = Files.walk(ckpt.resolve(sub))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSet
+      finally walk.close()
+    }
+    for (log <- Seq("offsets", "commits"); epoch <- 0 to 2) {
+      assert(names(log).contains(s"$epoch") && names(log).contains(s".$epoch.crc"),
+        s"$log/$epoch and its sidecar: ${names(log)}")
+    }
+    val deltas = names("state").filter(_.endsWith(".delta"))
+    assert(deltas.nonEmpty, s"state-store delta files: ${names("state")}")
+    assert(deltas.forall(d => names("state").contains(s".$d.crc")),
+      s"every delta has its sidecar: ${names("state")}")
+    assert(deltas.forall(d => names("state").contains(s"$d.crc")),
+      s"every delta has Spark's state checksum file: ${names("state")}")
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.stream.{Sinks, StateMachine}
@@ -326,7 +328,7 @@ class SinksSpec extends SparkSpec
     // the files it lists and the filter it pushes into their read for
     // the same batch
     val keys = batch.select(Sinks.nfKey).as[String].collect().toSet
-    val (probeFiles, pushed) = Sinks.nfIndexProbe(spark, dir, 3, keys).get
+    val (probeFiles, pushed) = Sinks.nfIndexProbe(spark.sparkContext.hadoopConfiguration, dir, 3, keys).get
     val scans = plans.asScala.toSeq.flatMap(qe =>
       collectWithSubqueries(qe.executedPlan) { case sc: FileSourceScanExec => sc })
     val idxScans = scans.filter(_.relation.location.rootPaths
@@ -523,6 +525,40 @@ class SinksSpec extends SparkSpec
     assert(driver == Seq("A", "B", "C", "D"))
     assert(run(Some("1")) == driver, "every batch above holds more than one key")
     assert(run(Some(Long.MaxValue.toString)) == driver, "a limit with no bound keeps every row")
+  }
+
+  test("appendCsvDedup past isinKeyLimit reads the index files, not the index root") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    def nf(parts: String*) = parts.map(p => (s"P$p", p, p, "2024-03-05", "t"))
+      .toDF("estacion", "numero_parte", "numero_parte_original", "fecha", "timestamp")
+    val epochs = Seq(nf("A", "B"), nf("A", "B", "C"), nf("C", "D", "A", "D"))
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-nf-idx", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
+    }
+    val log = LogManager.getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    capture.start()
+    log.addAppender(capture)
+    // both join regimes: broadcast (the default limit) and sort-merge
+    val runs = try Seq(None, Some("0")).map { broadcastLimit =>
+      val dir = Files.createTempDirectory("graft_csv_join").toString + "/nf"
+      spark.conf.set("spark.graft.ingest.isinKeyLimit", "1")
+      broadcastLimit.foreach(spark.conf.set("spark.graft.ingest.broadcastKeyLimit", _))
+      try {
+        epochs.zipWithIndex.foreach { case (b, e) => Sinks.appendCsvDedup(b, dir, epochId = e) }
+        Sinks.appendCsvDedup(epochs.last, dir, epochId = epochs.size - 1) // replay
+      } finally {
+        spark.conf.unset("spark.graft.ingest.isinKeyLimit")
+        spark.conf.unset("spark.graft.ingest.broadcastKeyLimit")
+      }
+      spark.read.option("header", "true").csv(dir).select("numero_parte", "epoch")
+        .as[(String, Int)].collect().sorted.toSeq
+    } finally { log.removeAppender(capture); capture.stop() }
+    assert(runs.forall(_ == Seq("A" -> 0, "B" -> 0, "C" -> 1, "D" -> 2)), runs)
+    assert(!warnings.asScala.exists(_.contains("All paths were ignored")), warnings)
   }
 
   test("upsertParquetPartitioned: the partitioned write reuses the merge's sort") {
