@@ -27,10 +27,11 @@ object Bench {
 
   /** The harness session: `SPARK_GRAFT_CPUS` local cores (default: the
     * processors the JVM sees), as many shuffle partitions, the UTC
-    * session zone the oracle run uses, and AQE coalescing post-shuffle
+    * session zone the oracle run uses, AQE coalescing post-shuffle
     * partitions to target SIZE instead of keeping cpus-many tiny tasks
     * (the small-SF fixed-overhead killer; harmless at scale, where
-    * partitions are size-bound anyway). */
+    * partitions are size-bound anyway), and a codegen cache of
+    * [[CodegenCacheEntries]] classes. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       String.valueOf(Runtime.getRuntime.availableProcessors()))
@@ -39,11 +40,18 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Generated classes Spark's codegen cache holds (a static conf; the
+    * default is 100). A rotation of queries generates more distinct
+    * classes than that — the 8 queries of a curation pass about 220 —
+    * so with the default every pass recompiles all of them. */
+  val CodegenCacheEntries = 4000
 
   /** `body`'s seconds and result. */
   def timed[A](body: => A): (Double, A) = {

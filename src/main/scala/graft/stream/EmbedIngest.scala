@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,6 +69,11 @@ object EmbedIngest {
 
   private[stream] def quantizerDim(s: SparkSession, dir: String, cents: DataFrame): Int =
     dimCache.getOrElseUpdate(dir, cents.select(size(col("ce"))).head.getInt(0))
+
+  /** The pinned quantizer ([[init]]), read with its footer's schema. */
+  private def centroids(s: SparkSession, dir: String): DataFrame =
+    StoreEpoch.read(s, s"$dir/centroids").getOrElse(
+      throw new IllegalStateException(s"EmbedIngest: no quantizer pinned at $dir/centroids (init)"))
 
   /** Pin the coarse quantizer. `centroids` must be (cid, ce: embedding,
     * cn: norm)-shaped — typically `IvfIndex.build`'s centroids from a
@@ -371,9 +376,13 @@ object EmbedIngest {
                   tau: Double = 0.95, nProbe: Int = 4): Unit =
     // survivors land in THEIR nearest cell (pr = 1) for this epoch;
     // epoch-dir OVERWRITE is the replay-idempotence point
-    admitted(verdicts(batch, dir, epochId, tau, nProbe))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$dir/cells/epoch=$epochId")
+    StoreEpoch.commit(Seq(cellsStore(dir, admitted(verdicts(batch, dir, epochId, tau, nProbe)
+      .localCheckpoint(eager = false)))), epochId, Sinks.DriverRouteRows)
+
+  /** The epoch write of the cells store under `dir`: admitted rows
+    * ([[admitted]]) in `cell=M/` subdirectories. */
+  private[stream] def cellsStore(dir: String, admitted: DataFrame): StoreEpoch.Write =
+    StoreEpoch.Write(s"$dir/cells", admitted, partitionBy = Some("cell"))
 
   /** Witness-side cap for the in-batch pair stage — per probe cell,
     * only the first [[InBatchWitnessCap]] members (by vec_id) serve as
@@ -448,8 +457,9 @@ object EmbedIngest {
     // read — a half-swapped layout (new centroids, old cells) would
     // probe the wrong cells silently
     recoverRequant(s, dir)
-    val cents = s.read.parquet(s"$dir/centroids")
+    val cents = centroids(s, dir)
     val cdim = quantizerDim(s, dir, cents)
+    val cells = StoreEpoch.read(s, s"$dir/cells")
     // exact-dup collapse FIRST (linear, map-side hash): a crawl flood of
     // byte-identical embeddings would otherwise meet the pairwise tau
     // stage as one hot cell — m²/2 cosine pairs. Keeping min vec_id per
@@ -482,7 +492,7 @@ object EmbedIngest {
     // bad BATCH: warn and let every row's verdict read `malformed`.
     // One job over the whole batch, which also fills the checkpoint:
     // the distinct values of the dim-match flag (at most three).
-    val dimMatch = Sinks.distinctUpTo(keyed.select(size(col("embedding")) === cdim), 3)
+    val dimMatch = StoreEpoch.distinctUpTo(keyed.select(size(col("embedding")) === cdim), 3)
     if (!dimMatch.contains(true) && dimMatch.nonEmpty) {
       // the bring-up throw is OPT-OUT (round-12 ADVICE): foreachBatch
       // replays the same batch on every restart, so if the FIRST
@@ -497,7 +507,7 @@ object EmbedIngest {
       // flag exists to avoid; unparseable defaults to strict
       val strict = s.conf.getOption("spark.graft.embedIngest.strictBringup")
         .flatMap(_.toBooleanOption).getOrElse(true)
-      if (!EpochFold.hasDataFiles(s, s"$dir/cells") && strict)
+      if (cells.isEmpty && strict)
         throw new IllegalStateException(
           s"EmbedIngest: quantizer at $dir has dim $cdim but NO batch row matches " +
             "and the corpus is empty — wrong index dir? (set " +
@@ -525,16 +535,16 @@ object EmbedIngest {
     // cells; join on cell, never a corpus shuffle. Touched cells are
     // bounded by the centroid count, not the batch.
     // data-presence gate (not fs.exists): an empty first micro-batch
-    // leaves an epoch dir holding only _SUCCESS, which must read as
+    // leaves an epoch dir holding no data file, which must read as
     // "no corpus yet", not UNABLE_TO_INFER_SCHEMA on batch two
-    val corpus =
-      if (!EpochFold.hasDataFiles(s, s"$dir/cells")) IngestDedup.noClaims(s, "vec_id")
-      else {
+    val corpus = cells match {
+      case None => IngestDedup.noClaims(s, "vec_id")
+      case Some(stored) =>
         // copies probe their min's cells, so every probed row's cells
         // are exactly the touched set
-        val touched = Sinks.distinctUpTo(probed.select(explode(col("cells"))),
+        val touched = StoreEpoch.distinctUpTo(probed.select(explode(col("cells"))),
           Int.MaxValue).toSeq // ≤ nCells ids — bounded literal
-        val corpus = s.read.parquet(s"$dir/cells")
+        val corpus = stored
           .filter(col("epoch") < epochId && col("cell").isin(touched: _*))
           .select(col("cell"), col("vec_id").as("dup_src"),
             col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
@@ -542,7 +552,7 @@ object EmbedIngest {
           .filter(dot(col("embedding"), col("c_emb"))
             / (col("nrm") * col("c_nrm")) >= tau)
           .select(col("vec_id"), lit(2).as("rank"), col("dup_src").as("dup_of"))
-      }
+    }
 
     keyed.join(
         IngestDedup.firstClaim(exactDups.unionByName(inBatch).unionByName(corpus),
@@ -578,8 +588,9 @@ object EmbedIngest {
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int, nProbe: Int): DataFrame = {
     recoverRequant(spark, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cells = spark.read.parquet(s"$dir/cells")
+    val cents = centroids(spark, dir)
+    val cells = StoreEpoch.read(spark, s"$dir/cells")
+      .getOrElse(throw new IllegalStateException(s"EmbedIngest: no admitted vectors under $dir"))
     val q = withNorm(queries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     val probes = q.crossJoin(broadcast(IvfIndex.centroidArray(cents)))

@@ -1,6 +1,7 @@
 package graft.stream
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.batch.Lake
@@ -64,22 +65,40 @@ private[stream] object EpochFold {
     * a table to read": an empty micro-batch's write leaves an epoch
     * dir holding only `_SUCCESS`, and `spark.read.parquet` over
     * metadata-only dirs dies with UNABLE_TO_INFER_SCHEMA — the same
-    * trap as the round-4 bucketed-sink marker bug. */
+    * trap as the round-4 bucketed-sink marker bug.
+    *
+    * A data file is what Spark's file index reads: a file none of whose
+    * path components below `path` is [[hidden]]. So the rows of a fold
+    * snapshot in `.compact_tmp_N/` or of an install in `.epoch=N.tmp/`
+    * are not data until renamed into place — a store holding only such
+    * a directory after a crash has no data, exactly as a read of it
+    * would find. */
   def hasDataFiles(s: SparkSession, path: String): Boolean =
     hasDataFiles(s.sparkContext.hadoopConfiguration, path)
 
   /** [[hasDataFiles]] with the FileSystem of `conf`. */
-  def hasDataFiles(conf: Configuration, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) return true
+  def hasDataFiles(conf: Configuration, path: String): Boolean =
+    firstDataFile(conf, path).isDefined
+
+  /** The first data file ([[hasDataFiles]]) under `path`, depth first,
+    * listing only the directories a read would enter. */
+  def firstDataFile(conf: Configuration, path: String): Option[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def walk(dir: Path): Option[FileStatus] = {
+      val (files, dirs) = fs.listStatus(dir).filterNot(st => hidden(st.getPath.getName))
+        .partition(_.isFile)
+      files.headOption.orElse(dirs.iterator.map(d => walk(d.getPath)).collectFirst {
+        case Some(f) => f
+      })
     }
-    false
+    if (fs.exists(root)) walk(root) else None
   }
+
+  /** A name Spark's file index skips: a leading `.`, or a leading `_`
+    * unless it names a partition (`__shift=…`). */
+  def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
 
   def fold(s: SparkSession, path: String, upTo: Long, targetBytes: Long,
            sortCols: Seq[String] = Nil, partitionCols: Seq[String] = Nil): Unit = {

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -70,16 +70,6 @@ object IngestDedup {
       }
       .start()
 
-  private[stream] def readIfExists(s: SparkSession, path: String): Option[DataFrame] =
-    // data-presence gate, not fs.exists: an EMPTY first micro-batch
-    // leaves epoch dirs holding only _SUCCESS, and reading a
-    // metadata-only tree throws UNABLE_TO_INFER_SCHEMA on the next
-    // batch (EpochFold.hasDataFiles short-circuits on the first data
-    // file, so the check is O(1) listings on a populated index; it
-    // also covers the HDFS/object-store case a java.io check would
-    // silently miss)
-    if (EpochFold.hasDataFiles(s, path)) Some(s.read.parquet(path)) else None
-
   /** Epochs strictly before `epochId`; an index written before the
     * epoch-partitioned layout (no `epoch` column) is all-prior by
     * definition — filtering on the missing column would throw, and
@@ -120,39 +110,40 @@ object IngestDedup {
       case None => dedupKeep
       case Some(r) =>
         dedupKeep.join(broadcast(r), Seq("doc_id"), "left_anti")
-          .localCheckpoint() // consumed by three writes below
+          .localCheckpoint() // consumed by three store writes below
     }
 
-    // 4. commit survivors + index keys into this epoch's partitions.
-    // OVERWRITE of the epoch dir is the idempotence point: a replay
-    // replaces any partial output instead of appending next to it.
-    // Index files are written key-sorted (sortWithinPartitions — no
-    // shuffle) so their parquet row-group min/max stats are tight:
-    // the trickle probe's pushed IN filter then skips nearly every
-    // row group of every epoch file.
-    keep.drop("bands", "content_key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/corpus/epoch=$epochId")
-    // both indexes carry the owning doc_id alongside the key: probes
-    // read it back as the dup_of attribution. Indexes written before
-    // this column existed still probe fine and attribute a null dup_of.
-    keep.select(col("content_key"), col("doc_id"))
-      .sortWithinPartitions("content_key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/exact_idx/epoch=$epochId")
-    keep.select(col("doc_id"), explode(col("bands")).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc_id"))
-      .filter(col("key").isNotNull) // shingle-less docs have no signature
-      .sortWithinPartitions("key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/band_idx/epoch=$epochId")
-    // the rejection ledger: WHY each non-survivor was turned away — the
-    // verdicts' rejected rows, chains resolved — committed into this
-    // epoch's partition like every other store, so replays overwrite
-    // and cluster accounting stays exactly-once. lm rejections append
-    // as terminal rows (dup_of = null — a quality drop has no content
+    // 4. commit survivors, index keys and the rejection ledger into this
+    // epoch's partitions (StoreEpoch.commit: one gate job, then driver
+    // writes for a batch-sized epoch). OVERWRITE of the epoch dir is the
+    // idempotence point: a replay replaces any partial output instead
+    // of appending next to it. The ledger says WHY each non-survivor
+    // was turned away — the verdicts' rejected rows, chains resolved —
+    // so cluster accounting stays exactly-once; lm rejections append as
+    // terminal rows (dup_of = null — a quality drop has no content
     // owner)
-    resolveChains(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
-        .getOrElse(rejections(verdict)))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/ledger/epoch=$epochId")
+    val ledger = resolveChains(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
+      .getOrElse(rejections(verdict)))
+    StoreEpoch.commit(stores(keep, dir) :+ StoreEpoch.Write(s"$dir/ledger", ledger),
+      epochId, Sinks.DriverRouteRows)
   }
+
+  /** The epoch writes of the text stores under `dir` for the admitted
+    * docs `keep` (verdict columns): the corpus, and both indexes with
+    * the owning doc_id beside the key — probes read it back as the
+    * dup_of attribution (indexes written before this column existed
+    * still probe fine and attribute a null dup_of). Index files are
+    * key-sorted so their parquet row-group min/max stats are tight:
+    * the trickle probe's pushed IN filter then skips nearly every row
+    * group of every epoch file. */
+  private[stream] def stores(keep: DataFrame, dir: String): Seq[StoreEpoch.Write] = Seq(
+    StoreEpoch.Write(s"$dir/corpus", keep.drop("bands", "content_key")),
+    StoreEpoch.Write(s"$dir/exact_idx", keep.select(col("content_key"), col("doc_id")),
+      sortBy = Seq("content_key")),
+    StoreEpoch.Write(s"$dir/band_idx", keep.select(col("doc_id"), explode(col("bands")).as("bk"))
+      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc_id"))
+      .filter(col("key").isNotNull), // shingle-less docs have no signature
+      sortBy = Seq("key")))
 
   /** Ledger rows for lm-rejected doc ids: terminal (dup_of = null). */
   private[stream] def lmRows(rejected: DataFrame): DataFrame =
@@ -283,7 +274,7 @@ object IngestDedup {
     // 2. exact vs corpus index (epochs strictly before this one: a
     // replayed epoch must not see its own half-committed keys). One
     // left join carries both the fresh docs and the owners they lost to
-    val (exactFresh, exactCorpus) = readIfExists(s, s"$dir/exact_idx") match {
+    val (exactFresh, exactCorpus) = StoreEpoch.read(s, s"$dir/exact_idx") match {
       case Some(idx) =>
         val idxPrior = priorEpochs(idx, epochId)
           .select(col("content_key"), ownerOf(idx), lit(true).as("hit"))
@@ -322,7 +313,7 @@ object IngestDedup {
       .select(col("doc_id"), lit(3).as("rank"), col("min_id").as("dup_of"))
     // 3b. near-dup vs corpus band index (same epoch < N visibility rule,
     // same three probe regimes; band keys are ~2 per doc)
-    val nearCorpus = readIfExists(s, s"$dir/band_idx") match {
+    val nearCorpus = StoreEpoch.read(s, s"$dir/band_idx") match {
       case Some(idx) =>
         val idxPrior = priorEpochs(idx, epochId)
           .select(col("band"), col("key"), ownerOf(idx))
@@ -392,64 +383,79 @@ object IngestDedup {
     * lost a later stage) to their terminal target. Stage order is a
     * DAG, so chains are finite and strictly id-decreasing within a
     * batch; each row keeps ITS OWN rejection reason. Batch-bounded
-    * ledgers resolve on the driver ([[ChainResolveDriverLimit]]);
-    * larger ones take the pointer-jump join loop, whose resolved
+    * ledgers ([[ChainResolveDriverLimit]]) come to the driver in one
+    * bounded collect ([[StoreEpoch.gate]]) and resolve there, and the
+    * result is a local frame; larger ones take the pointer-jump join
+    * loop, whose resolved
     * depth DOUBLES per round so the round cap bounds depth at 2^40
     * — the loop exits via the convergence check long before that on
     * any real ledger. `driverLimit` is injectable for tests only. */
   private[stream] def resolveChains(
       rej: DataFrame,
       driverLimit: Long = ChainResolveDriverLimit): DataFrame = {
-    val cur0 = rej.localCheckpoint(eager = false) // filled by the count
-    if (cur0.rdd.count() <= driverLimit) {
-      val rows = cur0.select(col("doc_id"), col("dup_of"), col("reason")).collect()
-      val dupOf = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
-      rows.foreach(r => dupOf.put(r.getLong(0),
-        if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))))
-      // Memoized path compression: each node's terminal is computed
-      // once, so total work is O(rows) no matter how deep the chains
-      // get (a chained-neighbor LSH cluster yields depth ∝ cluster
-      // DIAMETER, not stage count — the same adversarial shape qd6's
-      // large-star/small-star rounds exist for). The hop bound is a
-      // cycle guard only — chains are strictly id-decreasing so a
-      // cycle means corrupted input, not a long chain.
-      val memo = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
-      def terminal(start: java.lang.Long): java.lang.Long = {
-        var t = start
-        var hops = 0
-        val path = new java.util.ArrayList[Long]()
-        while (t != null && !memo.containsKey(t.longValue()) &&
-            dupOf.containsKey(t.longValue()) &&
-            dupOf.get(t.longValue()) != null) {
-          path.add(t.longValue())
-          t = dupOf.get(t.longValue())
-          hops += 1
-          require(hops <= dupOf.size,
-            "ingest ledger: dup_of chain cycled (corrupted batch frame)")
+    val cur0 = rej.localCheckpoint(eager = false) // filled by the gate
+    // one bounded collect decides the route and brings the rows
+    StoreEpoch.gate(cur0.select(col("doc_id"), col("dup_of"), col("reason")),
+        driverLimit)._1 match {
+      case Some(rows) =>
+        val dupOf = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
+        rows.foreach(r => dupOf.put(r.getLong(0),
+          if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))))
+        // Memoized path compression: each node's terminal is computed
+        // once, so total work is O(rows) no matter how deep the chains
+        // get (a chained-neighbor LSH cluster yields depth ∝ cluster
+        // DIAMETER, not stage count — the same adversarial shape qd6's
+        // large-star/small-star rounds exist for). The hop bound is a
+        // cycle guard only — chains are strictly id-decreasing so a
+        // cycle means corrupted input, not a long chain.
+        val memo = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
+        def terminal(start: java.lang.Long): java.lang.Long = {
+          var t = start
+          var hops = 0
+          val path = new java.util.ArrayList[Long]()
+          while (t != null && !memo.containsKey(t.longValue()) &&
+              dupOf.containsKey(t.longValue()) &&
+              dupOf.get(t.longValue()) != null) {
+            path.add(t.longValue())
+            t = dupOf.get(t.longValue())
+            hops += 1
+            require(hops <= dupOf.size,
+              "ingest ledger: dup_of chain cycled (corrupted batch frame)")
+          }
+          val term = if (t != null && memo.containsKey(t.longValue()))
+            memo.get(t.longValue()) else t
+          var i = 0
+          while (i < path.size) { memo.put(path.get(i), term); i += 1 }
+          term
         }
-        val term = if (t != null && memo.containsKey(t.longValue()))
-          memo.get(t.longValue()) else t
-        var i = 0
-        while (i < path.size) { memo.put(path.get(i), term); i += 1 }
-        term
-      }
-      val s = cur0.sparkSession
-      import s.implicits._
-      return rows.toSeq.map { r =>
-        (r.getLong(0),
-          Option(terminal(if (r.isNullAt(1)) null else Long.box(r.getLong(1))))
-            .map(_.longValue()),
-          r.getString(2))
-      }.toDF("doc_id", "dup_of", "reason")
+        val s = cur0.sparkSession
+        import s.implicits._
+        rows.map { r =>
+          (r.getLong(0),
+            Option(terminal(if (r.isNullAt(1)) null else Long.box(r.getLong(1))))
+              .map(_.longValue()),
+            r.getUTF8String(2).toString)
+        }.toDF("doc_id", "dup_of", "reason")
+      case None =>
+        // Pointer-doubling join loop (shared engine, batch.PointerJump):
+        // resolved depth doubles per round, convergence fails loudly on
+        // odd cycles (no fixpoint) and even cycles (collapse to
+        // self-pointing rows, rejected by the engine's post-loop guard).
+        graft.batch.PointerJump.resolveTerminal(cur0,
+          idCol = "doc_id", ptrCol = "dup_of", carry = Seq("reason"),
+          what = "ingest ledger: dup_of")
     }
-    // Pointer-doubling join loop (shared engine, batch.PointerJump):
-    // resolved depth doubles per round, convergence fails loudly on
-    // odd cycles (no fixpoint) and even cycles (collapse to
-    // self-pointing rows, rejected by the engine's post-loop guard).
-    graft.batch.PointerJump.resolveTerminal(cur0,
-      idCol = "doc_id", ptrCol = "dup_of", carry = Seq("reason"),
-      what = "ingest ledger: dup_of")
   }
+
+  /** Rejected docs per reason in a [[resolveChains]] ledger: counted on
+    * the driver when the ledger was resolved there (a local frame, no
+    * job), else by one aggregate. */
+  private[stream] def reasonCounts(ledger: DataFrame): Map[String, Long] =
+    if (StoreEpoch.isLocal(ledger))
+      StoreEpoch.localRows(ledger.select(col("reason"))).toSeq
+        .groupMapReduce(_.getUTF8String(0).toString)(_ => 1L)(_ + _)
+    else ledger.groupBy(col("reason")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** The accumulated rejection ledger (all epochs); empty frame with
     * the correct schema before the first rejection lands. With the LM

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -147,7 +147,7 @@ object MediaIngest {
     // skipped and the (still map-side) broadcast band join carries the
     // probe alone, mirroring the text membrane's regime split.
     // Distance is verified map-side either way.
-    val corpus = IngestDedup.readIfExists(s, s"$dir/media_idx") match {
+    val corpus = StoreEpoch.read(s, s"$dir/media_idx") match {
       case Some(idx0) =>
         val idx = (if (idx0.columns.contains("epoch"))
           idx0.filter(col("epoch") < epochId) else idx0)
@@ -165,7 +165,7 @@ object MediaIngest {
             val bkUpper = math.min(4 * batchRows, 4L << bandBits)
             val pre =
               if (bkUpper <= IngestDedup.isinKeyLimit(s)) {
-                val bks = Sinks.distinctUpTo(hashed.select(explode(bandCol(bandBits))),
+                val bks = StoreEpoch.distinctUpTo(hashed.select(explode(bandCol(bandBits))),
                   Int.MaxValue).toSeq
                 if (bks.isEmpty) idx.limit(0)
                 else idx.filter(col("bk").isin(bks: _*))
@@ -183,18 +183,17 @@ object MediaIngest {
       Seq("doc_id"), "left")
   }
 
-  /** The index rows for a set of ADMITTED docs — one (bk, phash,
-    * doc_id) row per band per distinct hash the admitted set carries.
-    * Unhashable payloads contribute no rows ([[Multimodal.phashWide]]
-    * drops them before hashing). Sorted by bk so the bounded IN probe
-    * skips row groups. */
-  private[graft] def indexRows(admitted: DataFrame, mediaCol: String,
-      bandBits: Int = 8): DataFrame =
-    Multimodal.phashWide(
+  /** The epoch write of the index under `dir` for a set of ADMITTED
+    * docs — one (bk, phash, doc_id) row per band per distinct hash the
+    * admitted set carries. Unhashable payloads contribute no rows
+    * ([[Multimodal.phashWide]] drops them before hashing). Files are
+    * sorted by bk so the bounded IN probe skips row groups. */
+  private[graft] def indexStore(admitted: DataFrame, dir: String, mediaCol: String,
+      bandBits: Int): StoreEpoch.Write =
+    StoreEpoch.Write(s"$dir/media_idx", Multimodal.phashWide(
         admitted.select(col("doc_id"), col(mediaCol).as("text")), hashBits(bandBits))
       .select(col("doc_id"), col("phash"), explode(bandCol(bandBits)).as("bk"))
-      .select(col("bk"), col("phash"), col("doc_id"))
-      .sortWithinPartitions("bk")
+      .select(col("bk"), col("phash"), col("doc_id")), sortBy = Seq("bk"))
 
   /** Standalone one-batch pass (composition inside
     * [[MultimodalIngest.ingestBatch]] writes the index itself so only
@@ -205,10 +204,9 @@ object MediaIngest {
       maxHamming: Int = DefaultMaxHamming, bandBits: Int = 8): Unit = {
     val keep = verdicts(batch, dir, epochId, mediaCol, maxHamming, bandBits)
       .filter(col("reason").isNull).drop("phash", "dup_of", "reason")
-      .localCheckpoint(eager = false) // filled by the first write
-    keep.write.mode(SaveMode.Overwrite).parquet(s"$dir/corpus/epoch=$epochId")
-    indexRows(keep, mediaCol, bandBits)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/media_idx/epoch=$epochId")
+      .localCheckpoint(eager = false) // filled by the commit's gate
+    StoreEpoch.commit(Seq(StoreEpoch.Write(s"$dir/corpus", keep),
+      indexStore(keep, dir, mediaCol, bandBits)), epochId, Sinks.DriverRouteRows)
   }
 
   /** Fold index epochs `< upTo` on the shared cadence (same contract

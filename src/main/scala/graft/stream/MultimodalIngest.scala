@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -40,6 +40,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Index keys and cell vectors are extended by ADMITTED docs only, so
   * the invariant of both membranes — state describes the corpus, the
   * whole corpus, and nothing else — holds for the composite too.
+  *
+  * An epoch's stores commit together through [[StoreEpoch.commit]]: a
+  * batch-sized epoch brings every store's rows to the driver in one
+  * gate job and installs each `epoch=N` from there, a backfill keeps
+  * Spark's writers ([[ingestBatch]] has the protocol).
   *
   * State layout under `dir`:
   * {{{
@@ -122,9 +127,8 @@ object MultimodalIngest {
     * along with every other store. Callable after a backfill
     * [[ingestBatch]] the same way. */
   def foldStats(s: SparkSession, dir: String, epochId: Long): Unit = {
-    val part = s"$dir/text/corpus/epoch=$epochId"
-    if (EpochFold.hasDataFiles(s, part))
-      CorpusStats.fold(s.read.parquet(part), s"$dir/stats", epochId)
+    StoreEpoch.read(s, s"$dir/text/corpus/epoch=$epochId")
+      .foreach(CorpusStats.fold(_, s"$dir/stats", epochId))
   }
 
   /** Fold epochs `< upTo` in every store — text indexes, text corpus,
@@ -152,11 +156,32 @@ object MultimodalIngest {
 
   /** One micro-batch pass (same epoch contract as
     * [[IngestDedup.ingestBatch]]: strictly increasing epochs,
-    * replay-idempotent; backfill and streaming share this path). */
+    * replay-idempotent; backfill and streaming share this path).
+    *
+    * Commit protocol: every store's epoch N is committed by
+    * [[StoreEpoch.commit]], which OVERWRITEs `epoch=N` in each store.
+    * One gate job brings the rows of the corpus, both text indexes,
+    * the cells and the media index to the driver (the ledger is already
+    * there, from its chain resolution); when the epoch holds at most
+    * [[Sinks.DriverRouteRows]] rows in all — every live micro-batch —
+    * each store is written on the driver and installed as `epoch=N`
+    * (hidden temporary, `epoch=N` removed, renamed into place), with no
+    * further job; larger epochs (backfills) take Spark's writers. The
+    * metrics row is then counted from what the driver holds: the
+    * ledger's rejections per stage and the admitted count, with
+    * `n_in` = admitted + rejected. */
   def ingestBatch(batch: DataFrame, dir: String, epochId: Long,
                   tau: Double = 0.95, nProbe: Int = 4,
                   mediaBandBits: Int = 8,
-                  lmModelDir: Option[String] = None): Unit = {
+                  lmModelDir: Option[String] = None): Unit =
+    ingestBatchWith(batch, dir, epochId, tau, nProbe, mediaBandBits, lmModelDir,
+      Sinks.DriverRouteRows)
+
+  /** [[ingestBatch]] with the driver route's row bound as a parameter
+    * (specs force either commit route with it). */
+  private[graft] def ingestBatchWith(batch: DataFrame, dir: String, epochId: Long,
+      tau: Double, nProbe: Int, mediaBandBits: Int, lmModelDir: Option[String],
+      driverRows: Long): Unit = {
     val s = batch.sparkSession
     Seq("corpus", "exact_idx", "band_idx")
       .foreach(t => EpochFold.migrateLegacyFlat(s, s"$dir/text/$t"))
@@ -164,9 +189,9 @@ object MultimodalIngest {
     val hasMedia = batch.columns.contains("media")
     // each stage returns one VERDICT row per input doc — decided and
     // attributed by the same probes — and is checkpointed once: the
-    // next stage, the ledger and the metrics all read that one
-    // materialization. Stage 1 — text membrane (cheap hash work first,
-    // so the later stages only ever see text-novel docs)
+    // next stage and the ledger read that one materialization. Stage
+    // 1 — text membrane (cheap hash work first, so the later stages
+    // only ever see text-novel docs)
     val textV = IngestDedup.verdicts(batch, s"$dir/text", epochId)
       .localCheckpoint(eager = false) // bounded (one micro-batch)
     val dedupKeep = textV.filter(col("reason").isNull).drop("dup_of", "reason")
@@ -195,7 +220,7 @@ object MultimodalIngest {
         mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
         s"$dir/embed", epochId, tau, nProbe)
       .localCheckpoint(eager = false)
-    // the admitted documents, materialized once for the four writes below
+    // the admitted documents, materialized once for the store writes below
     val keep = mediaKeep.join(
         broadcast(EmbedIngest.admitted(embedV).select(col("vec_id").as("doc_id"))),
         Seq("doc_id"))
@@ -211,63 +236,47 @@ object MultimodalIngest {
     // owner); a dup chain MAY therefore end at an lm-rejected doc, the
     // one documented exception to dup_of naming an admitted doc (the
     // content's owner was dropped for quality — that cluster simply has
-    // no admitted member). Committed into this epoch's partition like
-    // every store — replays overwrite, exactly-once.
+    // no admitted member).
     val stageRows = Seq(IngestDedup.rejections(textV)) ++
       lmRej.map(IngestDedup.lmRows) ++ mediaV.map(IngestDedup.rejections(_)) :+
       IngestDedup.rejections(embedV, "vec_id")
-    IngestDedup.resolveChains(stageRows.reduce(_ unionByName _))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/ledger/epoch=$epochId")
+    val ledger = IngestDedup.resolveChains(stageRows.reduce(_ unionByName _))
 
-    // per-batch observability: which membrane rejected how much — one
-    // aggregate over the checkpointed verdicts (every batch doc has one
-    // text verdict; a stage's rejections are its non-null reasons). The
-    // row commits into its own epoch partition like every store —
-    // replays overwrite, so the ledger is exactly-once too.
-    def tally(stage: Int, v: DataFrame) = v.select(lit(stage).as("stage"), col("reason"))
-    val tallies = (Seq(tally(0, textV)) ++
-        lmRej.map(r => tally(1, r.select(lit("lm").as("reason")))) ++
-        mediaV.map(tally(2, _)) :+ tally(3, embedV))
-      .reduce(_ unionByName _)
-    def n(p: org.apache.spark.sql.Column) = count(when(p, lit(1)))
-    val rejected = col("reason").isNotNull
-    val row = tallies.agg(n(col("stage") === 0), n(col("stage") === 0 && rejected),
-        n(col("stage") === 1), n(col("stage") === 2 && rejected),
-        n(col("stage") === 3 && rejected), n(col("stage") === 3 && !rejected))
-      .head()
+    // commit, mirroring the single-membrane writes: OVERWRITE of each
+    // epoch partition is the idempotence point in every store. The
+    // perceptual index holds rows of FULLY-admitted docs only, so the
+    // media membrane's state keeps the corpus-describing invariant too
+    val stores = IngestDedup.stores(keep, s"$dir/text") ++ Seq(
+        EmbedIngest.cellsStore(s"$dir/embed", EmbedIngest.admitted(embedV)),
+        StoreEpoch.Write(s"$dir/ledger", ledger)) ++
+      (if (hasMedia) Seq(MediaIngest.indexStore(keep, s"$dir/media", "media", mediaBandBits))
+       else Nil)
+    val admitted = StoreEpoch.commit(stores, epochId, driverRows).head // the corpus rows
+
+    // per-batch observability: which membrane rejected how much — each
+    // batch doc is admitted or has exactly one ledger row, so the row
+    // is counted from what the driver holds. It commits into its own
+    // epoch partition like every store — replays overwrite, so the
+    // metrics are exactly-once too
+    val rejected = IngestDedup.reasonCounts(ledger)
+    val unknown = rejected.keySet -- StageReasons.flatten
+    require(unknown.isEmpty, s"ingest ledger: rejection reasons of no stage: $unknown")
+    val byStage = StageReasons.map(_.map(rejected.getOrElse(_, 0L)).sum)
     import s.implicits._
     // batch_id is a DATA column (the epoch partition label moves when
     // the ledger folds; attribution must survive the fold)
-    Seq((epochId, row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3),
-        row.getLong(4), row.getLong(5)))
+    val metrics = Seq((epochId, admitted + byStage.sum, byStage(0), byStage(1), byStage(2),
+        byStage(3), admitted))
       .toDF("batch_id", "n_in", "n_text_rejected", "n_lm_rejected",
         "n_media_rejected", "n_embed_rejected", "n_admitted")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/metrics/epoch=$epochId")
-
-    // commit, mirroring the single-membrane writes: OVERWRITE of each
-    // epoch partition is the idempotence point in every store
-    keep.drop("bands", "content_key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/text/corpus/epoch=$epochId")
-    // owner column alongside the key, like IngestDedup's indexes —
-    // the probes read it back as the dup_of attribution
-    keep.select(col("content_key"), col("doc_id"))
-      .sortWithinPartitions("content_key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/text/exact_idx/epoch=$epochId")
-    keep.select(col("doc_id"), explode(col("bands")).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("doc_id"))
-      .filter(col("key").isNotNull)
-      .sortWithinPartitions("key")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/text/band_idx/epoch=$epochId")
-    EmbedIngest.admitted(embedV)
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$dir/embed/cells/epoch=$epochId")
-    // perceptual index rows for FULLY-admitted docs only, so the media
-    // membrane's state keeps the corpus-describing invariant too
-    if (hasMedia)
-      MediaIngest.indexRows(keep, "media", mediaBandBits)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/media/media_idx/epoch=$epochId")
+    StoreEpoch.commit(Seq(StoreEpoch.Write(s"$dir/metrics", metrics)), epochId, driverRows)
   }
+
+  /** The ledger reasons of each stage, in the metrics row's order:
+    * text, lm, media, embedding. */
+  private val StageReasons = Seq(
+    Seq("exact_batch", "exact_corpus", "near_batch", "near_corpus"), Seq("lm"),
+    Seq("media_batch", "media_corpus"), Seq("embed_batch", "embed_corpus", "malformed"))
 
   /** The admitted corpus (documents with all their columns). */
   def corpus(spark: SparkSession, dir: String): DataFrame =

@@ -6,28 +6,20 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
   GenericInternalRow, InterpretedOrdering, SortOrder}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{Filter, In}
-import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 import graft.io.NioLocal
 import graft.model._
+import graft.stream.StoreEpoch.{capOf, dataFiles, epochFile, footerSchema, gate, localRows,
+  nullable, partitionDir, readParquet, writeParquet}
 
 /** Batch/foreachBatch sinks for the action stream (K1-K5).
   *
@@ -131,19 +123,10 @@ object Sinks {
     try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
   }
 
-  // names starting with '.' or '_' (without '=') are metadata, not data
+  // hidden names ('.', or '_' without '=') are metadata, not data
   private def dataEntries(fs: FileSystem, root: Path): Seq[String] =
     if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filterNot(n => n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
-
-  /** The data files directly under `dir` (none if it does not exist). */
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    else fs.listStatus(root).toSeq.map(_.getPath.getName).filterNot(EpochFold.hidden)
 
   /** Refuses a table under `root` in another layout (flat files or other
     * partitions), then lets the layout pin its parameters. */
@@ -156,13 +139,6 @@ object Sinks {
     layout.pin(fs, root)
   }
 
-  /** The directory of partition value `v`; null and "" land in Hive's
-    * default partition, as on a Spark write. */
-  private def partitionDir(root: Path, layout: Layout, v: Any): Path = {
-    val s = if (v == null || v == "") ExternalCatalogUtils.DEFAULT_PARTITION_NAME else v.toString
-    new Path(root, ExternalCatalogUtils.getPartitionPathString(layout.column, s))
-  }
-
   /** Refuses a batch whose column names or types differ from those in
     * the footer of one data file in partition `dir`. */
   private def requireSchema(fs: FileSystem, dir: Path, batch: StructType,
@@ -170,7 +146,7 @@ object Sinks {
     dataFiles(fs, dir).headOption.foreach { file =>
       val shape = (s: StructType) => s.fields.toSeq.filter(_.name != layout.column)
         .map(f => f.name.toLowerCase -> f.dataType.catalogString).toSet
-      val table = footerSchema(file.getPath, fs.getConf)
+      val table = footerSchema(file, fs.getConf)
       require(shape(table) == shape(batch),
         s"batch columns ${shape(batch).toSeq.sorted.mkString(", ")} differ from the " +
           s"table's ${shape(table).toSeq.sorted.mkString(", ")} at ${dir.getParent}; an " +
@@ -202,8 +178,8 @@ object Sinks {
     val b = batch.withColumn(layout.column, layout.value)
     // the batch's partition values: bounded by the layout, not by the
     // batch
-    val present = distinctUpTo(b.select(layout.column), Int.MaxValue).toSeq
-      .map(partitionDir(root, layout, _))
+    val present = StoreEpoch.distinctUpTo(b.select(layout.column), Int.MaxValue).toSeq
+      .map(partitionDir(root, layout.column, _))
       .filter(p => EpochFold.hasDataFiles(spark, p.toString))
     present.headOption.foreach(p => requireSchema(fs, p, b.schema, layout))
     val merged =
@@ -235,113 +211,6 @@ object Sinks {
       version: Seq[String], nBuckets: Int = 64): Unit =
     upsertParquetPartitioned(batch, path, keys, version, Buckets(keys, nBuckets))
 
-  /** Up to `cap` distinct values of `df`'s one column. Each task keeps
-    * at most `cap` of them and the driver merges task results into one
-    * set as they arrive, capped again: one job, no shuffle, and the
-    * driver holds at most `cap` values besides a task result in flight. */
-  private[stream] def distinctUpTo(df: DataFrame, cap: Int): collection.Set[Any] = {
-    def add(s: mutable.HashSet[Any], v: Any) = { if (s.size < cap) s += v; s }
-    df.rdd.map(_.get(0)).aggregate(mutable.HashSet.empty[Any])(add, _.foldLeft(_)(add))
-  }
-
-  /** The Spark schema a parquet file was written with, from its footer:
-    * read on the driver, no job. */
-  private def footerSchema(file: Path, conf: Configuration): StructType = {
-    val in = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val meta = in.getFooter.getFileMetaData
-      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter().convert(meta.getSchema))
-    } finally in.close()
-  }
-
-  /** The gate of an [[applyActions]] epoch, in one job over `df`: the
-    * distinct values of its string column `tag`, and its rows when it
-    * holds at most `limit` of them (else None). Each of the n tasks
-    * keeps up to ⌈(limit + 1) / n⌉ rows and ships none once it holds
-    * more, so the driver receives at most about `limit + n` rows
-    * however large the batch; a batch skewed past one task's share is
-    * treated as over the limit. */
-  private[graft] def gate(df: DataFrame, limit: Long, tag: String)
-      : (Option[Seq[Row]], collection.Set[String]) = {
-    val rdd = df.queryExecution.toRdd
-    val tasks = math.max(rdd.getNumPartitions, 1)
-    val share = ((capOf(limit).toLong + tasks - 1) / tasks).toInt
-    val at = df.schema.fieldIndex(tag)
-    val kept = mutable.ArrayBuffer.empty[InternalRow]
-    val tags = mutable.HashSet.empty[String]
-    var fits = true
-    // a task's rows, or null once it holds more than its share
-    type Result = (mutable.ArrayBuffer[InternalRow], mutable.HashSet[UTF8String])
-    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
-      var rows = mutable.ArrayBuffer.empty[InternalRow]
-      val seen = mutable.HashSet.empty[UTF8String]
-      it.foreach { r =>
-        val v = if (r.isNullAt(at)) null else r.getUTF8String(at)
-        if (!seen.contains(v)) seen += (if (v == null) null else v.clone())
-        if (rows != null) { if (rows.size < share) rows += r.copy() else rows = null }
-      }
-      (rows, seen): Result
-    }, (_: Int, res: Result) => {
-      tags ++= res._2.map(v => if (v == null) null else v.toString)
-      if (res._1 == null) { fits = false; kept.clear() } else if (fits) kept ++= res._1
-    })
-    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
-    (if (fits && kept.size <= limit) Some(kept.map(toRow).toSeq) else None, tags)
-  }
-
-  /** `limit + 1` as a collect cap (one row past the limit tells a batch
-    * over it from one at it); a negative limit collects nothing. */
-  private def capOf(limit: Long): Int =
-    if (limit < 0) 0 else (math.min(limit, Int.MaxValue - 1L) + 1).toInt
-
-  /** The rows of a frame over a driver-held batch: the optimizer folds
-    * its filters and projections into one local relation, so computing
-    * it runs no job. */
-  private def localRows(df: DataFrame): Array[InternalRow] =
-    df.queryExecution.executedPlan.executeCollect()
-
-  private def nullable(s: StructType): StructType = StructType(s.map(_.copy(nullable = true)))
-
-  /** Reads parquet `files` on the driver with the function a Spark scan
-    * task runs (`ParquetFileFormat.buildReaderWithPartitionValues`,
-    * rows not batches), `filters` pushed into it; no job. Rows hold the
-    * `requiredSchema` columns, copied out of the reader's buffers.
-    * `conf` is the session's Hadoop conf (`newHadoopConf`, which copies
-    * every Hadoop and SQL setting: build it once per epoch). */
-  private def readParquet(spark: SparkSession, conf: Configuration, files: Seq[FileStatus],
-      dataSchema: StructType, requiredSchema: StructType,
-      filters: Seq[Filter] = Nil): Iterator[InternalRow] =
-    if (files.isEmpty) Iterator.empty
-    else {
-      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
-        new StructType(), requiredSchema, filters,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
-      files.iterator.flatMap(f => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
-        0L, f.getLen, modificationTime = f.getModificationTime, fileSize = f.getLen))
-        .map(_.copy()))
-    }
-
-  /** Writes `rows` to the parquet file `file` on the driver through
-    * parquet-hadoop with Spark's `ParquetWriteSupport`, configured from
-    * the session as a Spark write is, so the footer carries Spark's
-    * schema metadata; no job. The write configures a copy of `conf`,
-    * the session's Hadoop conf. */
-  private def writeParquet(spark: SparkSession, conf: Configuration, schema: StructType,
-      rows: Iterator[InternalRow], file: Path): Unit = {
-    val job = Job.getInstance(conf)
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-    val out = factory.newInstance(file.toString, schema,
-      new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
-    try rows.foreach(out.write) finally out.close()
-  }
-
-  /** A driver-written data file of epoch `epochId`: unique per attempt,
-    * so installing it never overwrites a file a reader may still see. */
-  private def epochFile(dir: Path, epochId: Long): Path =
-    new Path(dir, s"part-e$epochId-${java.util.UUID.randomUUID()}.parquet")
-
   /** [[upsertParquetPartitioned]] of a driver-held batch, applied on the
     * driver with the same refusals: for each partition the batch
     * touches, read its files, merge newest-per-key, write the result
@@ -370,7 +239,7 @@ object Sinks {
     val at = schema.length
     val byPartition = rows
       .groupBy(r => if (r.isNullAt(at)) null else r.get(at, b.schema(at).dataType).toString)
-      .map { case (v, rs) => partitionDir(root, layout, v) -> rs }
+      .map { case (v, rs) => partitionDir(root, layout.column, v) -> rs }
     byPartition.keys.find(dataFiles(fs, _).nonEmpty)
       .foreach(requireSchema(fs, _, b.schema, layout))
     byPartition.foreach { case (dir, batchRows) =>
@@ -392,25 +261,17 @@ object Sinks {
     }
   }
 
-  /** Replaces `root/epoch=N` with one driver-written file of `rows`,
-    * whatever the directory held (a replay converges whichever route
-    * either attempt took). A legacy flat table is adopted into
-    * `epoch=-1` first, as on the distributed route. */
+  /** Replaces `root/epoch=N` with one driver-written file of `rows`
+    * ([[StoreEpoch.install]]), whatever the directory held (a replay
+    * converges whichever route either attempt took); no rows write
+    * nothing, as on the distributed route. A legacy flat table is
+    * adopted into `epoch=-1` first, as on the distributed route. */
   private def overwriteEpochOnDriver(rows: DataFrame, root: String, epochId: Long,
       conf: Configuration): Unit = {
     val data = localRows(rows)
     if (data.isEmpty) return
-    val spark = rows.sparkSession
     EpochFold.migrateLegacyFlat(conf, root)
-    val base = new Path(root)
-    val fs = base.getFileSystem(conf)
-    val dir = new Path(base, s"epoch=$epochId")
-    val tmp = new Path(base, s".epoch=$epochId.tmp")
-    fs.delete(tmp, false)
-    writeParquet(spark, conf, nullable(rows.schema), data.iterator, tmp)
-    if (fs.exists(dir)) require(fs.delete(dir, true), s"could not replace $dir")
-    val file = epochFile(dir, epochId)
-    require(fs.mkdirs(dir) && fs.rename(tmp, file), s"could not install $file")
+    StoreEpoch.install(rows.sparkSession, conf, root, epochId, rows.schema, data.toSeq, None)
   }
 
   /** Read an [[upsertParquetPartitioned]] table without its layout column. */
@@ -678,7 +539,8 @@ object Sinks {
       compactEvery)
     val keyed = batch.withColumn("nf_key", nfKey)
     val limit = IngestDedup.isinKeyLimit(spark)
-    val keys = distinctUpTo(keyed.select("nf_key"), capOf(limit)).map(_.asInstanceOf[String])
+    val keys = StoreEpoch.distinctUpTo(keyed.select("nf_key"), capOf(limit))
+      .map(_.asInstanceOf[String])
     if (keys.size <= limit)
       appendNovel(keyed, keys, path, epochId, batch.columns.toSeq, spark.sessionState.newHadoopConf())
     else {
@@ -834,7 +696,7 @@ object Sinks {
     * `migrateLayout(spark, path, RecordShifts)` once. Read the table
     * with [[readUpsertedBucketed]].
     *
-    * One job gates the epoch ([[gate]], which also builds the cache):
+    * One job gates the epoch ([[StoreEpoch.gate]], which also builds the cache):
     * it returns the set of actions present and, when the batch holds at
     * most [[DriverRouteRows]] rows and no task more than its share of
     * them, the rows. Such a batch with an epoch id (every live 1 Hz
@@ -877,7 +739,9 @@ object Sinks {
     * 1.01 s, 16,000 in 0.55 against 1.05 s, and broke even near 48,000
     * rows. The bound sits well below that break-even (more executors
     * speed up only the distributed route) and bounds the batch the
-    * driver holds. */
+    * driver holds. The ingest membranes' epoch commits
+    * ([[StoreEpoch.commit]]) take the driver route under the same
+    * bound, counted over all the rows an epoch writes. */
   val DriverRouteRows = 8192L
 
   /** [[applyActions]] with the driver route's row bound as a parameter
@@ -889,10 +753,12 @@ object Sinks {
       val spark = df.sparkSession
       // ONE job gates all three sink branches (this also materializes
       // the cache for the distributed writes)
-      val (rows, present) = gate(df, if (epochId >= 0) driverRows else -1L, "action")
+      val (rows, counts) = gate(df, if (epochId >= 0) driverRows else -1L, Some("action"))
+      val present = counts.keySet
       rows match {
         case Some(rows) =>
-          val local = spark.createDataFrame(rows.asJava, df.schema)
+          val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+          val local = spark.createDataFrame(rows.map(toRow).asJava, df.schema)
           // one copy of the session's Hadoop conf for every driver read,
           // write and listing, its file: paths on the fork-free FileSystem
           val conf = NioLocal.withFileSystem(spark.sessionState.newHadoopConf())

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.stream.{Sinks, StateMachine}
+import graft.stream.{Sinks, StateMachine, StoreEpoch}
 
 /** Upsert + dedup-append sink behavior (K1-K5, K4). */
 class SinksSpec extends SparkSpec
@@ -797,17 +797,18 @@ class SinksSpec extends SparkSpec
     val sc = spark.sparkContext
     def frame(rdd: org.apache.spark.rdd.RDD[(Long, String)]) = rdd.toDF("id", "action")
     val even = frame(sc.parallelize((0L until 40L).map(i => i -> (if (i % 2 == 0) "a" else "b")), 4))
-    val (fits, tags) = Sinks.gate(even, 40, "action")
-    assert(fits.map(_.map(_.getLong(0)).sorted) == Some(0L until 40L) && tags == Set("a", "b"))
+    val (fits, tags) = StoreEpoch.gate(even, 40, Some("action"))
+    val perTag = Map("a" -> 20L, "b" -> 20L)
+    assert(fits.map(_.map(_.getLong(0)).sorted) == Some(0L until 40L) && tags == perTag)
     // each task holds 10 rows, within its share of 10, but 40 > 39
-    assert(Sinks.gate(even, 39, "action") == (None, Set("a", "b")))
-    assert(Sinks.gate(even, -1, "action") == (None, Set("a", "b")))
+    assert(StoreEpoch.gate(even, 39, Some("action")) == (None, perTag))
+    assert(StoreEpoch.gate(even, -1, Some("action")) == (None, perTag))
     // 40 rows, under a bound of 100, but all in one of 4 tasks (share 26)
     val skewed = frame(sc.parallelize((0L until 40L).map(_ -> "a"), 1)
       .union(sc.parallelize(Seq.empty[(Long, String)], 3)))
     assert(skewed.rdd.getNumPartitions == 4)
-    assert(Sinks.gate(skewed, 100, "action") == (None, Set("a")))
-    assert(Sinks.gate(skewed, 159, "action")._1.map(_.size) == Some(40))
+    assert(StoreEpoch.gate(skewed, 100, Some("action")) == (None, Map("a" -> 40L)))
+    assert(StoreEpoch.gate(skewed, 159, Some("action"))._1.map(_.size) == Some(40))
   }
 
   test("applyActions: a batch past the driver bound over many partitions goes distributed; its gate ships no rows") {
@@ -828,7 +829,7 @@ class SinksSpec extends SparkSpec
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
           Option(e.properties).map(_.getProperty("graft.spec.tag")).foreach { p =>
-            if (p == tag) e.stageInfos.filter(_.name.startsWith("runJob at Sinks.scala"))
+            if (p == tag) e.stageInfos.filter(_.name.startsWith("runJob at StoreEpoch.scala"))
               .foreach(st => gateStages.add(st.stageId))
             else if (p == s"$tag-drained") drained.countDown()
           }
@@ -854,7 +855,7 @@ class SinksSpec extends SparkSpec
     val gated = gateResultBytes(Sinks.applyActionsWith(batch, outDir, 0, 1000L))
     // the same batch without an epoch id keeps no rows at all
     val rowless = gateResultBytes(Sinks.applyActionsWith(batch, freshDir(), -1, 1000L))
-    val allRows = gateResultBytes(Sinks.gate(batch.toDF(), Long.MaxValue, "action"))
+    val allRows = gateResultBytes(StoreEpoch.gate(batch.toDF(), Long.MaxValue, Some("action")))
     info(s"gate result bytes: $gated with the bound, $rowless keeping no rows, $allRows keeping all rows")
     assert(gated < rowless * 5 / 4 && gated * 2 < allRows,
       s"gate result bytes: $gated with the bound, $rowless keeping no rows, $allRows keeping all rows")

@@ -25,6 +25,35 @@ class EpochFoldSpec extends SparkSpec {
   private def allKeys(root: String): Seq[String] =
     spark.read.parquet(root).select("content_key").as[String].collect().sorted.toSeq
 
+  test("data files under hidden directories are not data, as for Spark's file index") {
+    // a crash can leave a store whose only data files sit in a fold
+    // snapshot (.compact_tmp_N/) or an install's temporary
+    // (.epoch=N.tmp/); Spark reads neither, so gating such a store as
+    // "has data" made every replay's read die on UNABLE_TO_INFER_SCHEMA
+    val root = Files.createTempDirectory("graft_fold_hidden").toString + "/idx"
+    writeEpoch(root, 0, Seq("a"))
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/epoch=0"),
+      new org.apache.hadoop.fs.Path(s"$root/.epoch=0.tmp")))
+    writeEpoch(s"$root/.compact_tmp_3", 1, Seq("b"))
+    mkEmptyEpoch(root, 2)
+    assert(!EpochFold.hasDataFiles(spark, root))
+    assert(intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(root))
+      .getMessage.contains("UNABLE_TO_INFER_SCHEMA"))
+    // the text membrane probes such a store as empty and admits
+    val text = Files.createTempDirectory("graft_fold_hidden_text").toString
+    writeEpoch(s"$text/exact_idx", 0, Seq("c"))
+    assert(new java.io.File(s"$text/exact_idx/epoch=0")
+      .renameTo(new java.io.File(s"$text/exact_idx/.epoch=0.tmp")))
+    IngestDedup.ingestBatch(Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
+      text, epochId = 0)
+    assert(spark.read.parquet(s"$text/corpus").count() == 1)
+    // a visible data file, also under a `_`-led partition directory, is data
+    writeEpoch(s"$root/__shift=x", 3, Seq("d"))
+    assert(EpochFold.firstDataFile(spark.sparkContext.hadoopConfiguration, root)
+      .exists(_.getPath.toString.contains("/__shift=x/epoch=3/part-")))
+  }
+
   test("fold over metadata-only epoch dirs deletes them instead of crashing") {
     // an idle stream writes epoch dirs holding only _SUCCESS; the fold
     // runs at the START of a micro-batch, so throwing here crashloops

@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.col
 
 /** The Spark jobs of one warm [[MultimodalIngest.ingestBatch]] epoch —
   * the per-epoch coordination cost the ingest path pays. Counted with a
@@ -14,7 +15,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * the epoch's own jobs count. Deciding and attributing each doc in the
   * membranes' own probe passes (verdicts), instead of re-probing the
   * rejected set in separate post-hoc ledger passes, took this epoch from
-  * 194 jobs to well under half that; the bound pins the halving. */
+  * 194 jobs to 48; committing the stores from the driver
+  * ([[StoreEpoch.commit]]), reading them with their footers' schemas
+  * and counting the metrics row on the driver took it to 34, the
+  * bound. The same store serves one search, bounded the same way. */
 class IngestEpochJobsSpec extends graft.SparkSpec {
 
   /** Jobs per call site of `f`, from the jobs started while it ran. A
@@ -60,16 +64,35 @@ class IngestEpochJobsSpec extends graft.SparkSpec {
     sites.synchronized(sites.groupBy(identity).map { case (k, v) => k -> v.size })
   }
 
-  test("a warm three-membrane epoch runs at most half the jobs of the post-hoc ledger path") {
+  private def report(sites: Map[String, Int]): (Int, String) =
+    (sites.values.sum, sites.toSeq.sortBy(-_._2).map { case (k, v) => s"$v $k" }.mkString("\n  "))
+
+  private lazy val store = {
     val dir = Files.createTempDirectory("graft_epoch_jobs").toString + "/mm"
     IngestFixture.init(spark, 901, dir)
-    def epoch(e: Long): Unit = MultimodalIngest.ingestBatch(
-      IngestFixture.docs(spark, 901, e * 100, (e + 1) * 100), dir, epochId = e, tau = 0.99)
+    dir
+  }
+  private def epoch(e: Long): Unit = MultimodalIngest.ingestBatch(
+    IngestFixture.docs(spark, 901, e * 100, (e + 1) * 100), store, epochId = e, tau = 0.99)
+
+  test("a warm three-membrane epoch runs at most half the jobs of the post-hoc ledger path") {
     epoch(0)
-    val sites = jobsOf(epoch(1))
-    val total = sites.values.sum
-    val breakdown = sites.toSeq.sortBy(-_._2).map { case (k, v) => s"$v $k" }.mkString("\n  ")
+    val (total, breakdown) = report(jobsOf(epoch(1)))
     info(s"$total jobs:\n  $breakdown")
-    assert(total <= 194 / 2, s"$total jobs per warm epoch:\n  $breakdown")
+    // 48 before the epoch's stores were committed from the driver and
+    // read with their footers' schemas
+    assert(total <= 34, s"$total jobs per warm epoch:\n  $breakdown")
+  }
+
+  test("a search over the ingest stores runs at most 5 jobs") {
+    if (!EpochFold.hasDataFiles(spark, s"$store/embed/cells")) { epoch(0); epoch(1) }
+    val query = IngestFixture.docs(spark, 901, 0, 1)
+      .select((-col("doc_id") - 1).as("vec_id"), col("embedding"))
+    MultimodalIngest.search(spark, store, query, k = 5, nProbe = 4).collect() // warm
+    val (total, breakdown) =
+      report(jobsOf(MultimodalIngest.search(spark, store, query, k = 5, nProbe = 4).collect()))
+    info(s"$total jobs:\n  $breakdown")
+    // 7 while the centroids and cells reads inferred their schemas
+    assert(total <= 5, s"$total jobs per search:\n  $breakdown")
   }
 }

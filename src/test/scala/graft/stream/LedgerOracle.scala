@@ -86,7 +86,7 @@ object LedgerOracle {
 
       // 2. exact vs corpus index (epochs strictly before this one: a
       // replayed epoch must not see its own half-committed keys)
-      val exactFresh = IngestDedup.readIfExists(s, s"$dir/exact_idx") match {
+      val exactFresh = StoreEpoch.read(s, s"$dir/exact_idx") match {
         case Some(idx) =>
           val idxPrior = IngestDedup.priorEpochs(idx, epochId)
           if (batchRows > bcastLimit)
@@ -126,7 +126,7 @@ object LedgerOracle {
         .select(col("doc_id")).distinct()
       // 3b. near-dup vs corpus band index (same epoch < N visibility rule,
       // same three probe regimes; band keys are ~2 per doc)
-      val corpusHits = IngestDedup.readIfExists(s, s"$dir/band_idx") match {
+      val corpusHits = StoreEpoch.read(s, s"$dir/band_idx") match {
         case Some(idx) =>
           val idxPrior = IngestDedup.priorEpochs(idx, epochId)
           if (2 * batchRows > bcastLimit)
@@ -232,7 +232,7 @@ object LedgerOracle {
       * membrane probes, but sized by the probe (= rejection) count. */
     def ownerHits(s: SparkSession, path: String, epochId: Long,
         probe: DataFrame, cols: Seq[String], nKeys: Long): DataFrame =
-      IngestDedup.readIfExists(s, path) match {
+      StoreEpoch.read(s, path) match {
         case Some(idx0) =>
           val idx = IngestDedup.priorEpochs(idx0, epochId)
           val owner = if (idx.columns.contains("doc_id")) col("doc_id")
@@ -290,7 +290,7 @@ object LedgerOracle {
       // skipped and the (still map-side) broadcast band join carries the
       // probe alone, mirroring the text membrane's regime split.
       // Distance is verified map-side either way.
-      val corpusHits = IngestDedup.readIfExists(s, s"$dir/media_idx") match {
+      val corpusHits = StoreEpoch.read(s, s"$dir/media_idx") match {
         case Some(idx0) =>
           val idx = if (idx0.columns.contains("epoch"))
             idx0.filter(col("epoch") < epochId) else idx0
@@ -355,7 +355,7 @@ object LedgerOracle {
         .select(col("doc_id"), col("dup_of"), lit("media_batch").as("reason"))
       val rem = rejBands
         .join(inBatch.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      val corpusAttr = IngestDedup.readIfExists(s, s"$dir/media_idx") match {
+      val corpusAttr = StoreEpoch.read(s, s"$dir/media_idx") match {
         case Some(idx0) =>
           val idx = if (idx0.columns.contains("epoch"))
             idx0.filter(col("epoch") < epochId) else idx0
@@ -672,7 +672,8 @@ object LedgerOracle {
       // perceptual index rows for FULLY-admitted docs only, so the media
       // membrane's state keeps the corpus-describing invariant too
       if (hasMedia)
-        MediaIngest.indexRows(keep, "media", mediaBandBits)
+        MediaIngest.indexStore(keep, s"$dir/media", "media", mediaBandBits).rows
+          .sortWithinPartitions("bk")
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/media/media_idx/epoch=$epochId")
     }
   }
