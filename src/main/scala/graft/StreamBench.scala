@@ -23,20 +23,18 @@ import graft.stream.{Sinks, StateMachine}
   * stations served at the reference's own cadence.
   *
   * `sbt "runMain graft.Bench stream [nObs] [nStations] [rocksdb]
-  * [dimjoin|eventtime|tws] [recover]"` — prints one JSON line. The
-  * optional `rocksdb` arg runs the same load on the RocksDB state
-  * store (the large-state production config; `tws` selects it too, as
-  * `transformWithState` needs it); `dimjoin` routes the
-  * dimension lookups through the stream-static-join path
-  * (`StateMachine.withDimTables`, the scale configuration) instead of
-  * the in-memory snapshot maps; `eventtime` / `tws` run the dim-join
-  * path under the EVENT-TIME hosts (watermark + event-time timers —
-  * `flatMapGroupsWithState`'s EventTimeTimeout or the
-  * `transformWithState` processor respectively), the production
-  * replay/backfill configuration, with the final state-store size
-  * reported so per-key state growth is a measured number (VERDICT r10
-  * ask #6: state must stay FLAT per key — the machine keeps one
-  * ActiveRecord per (station, parte), never an observation log).
+  * [dimjoin|eventtime] [recover]"` — prints one JSON line; any other
+  * argument is a usage error. The optional `rocksdb` arg runs the same
+  * load on the RocksDB state store (the large-state production
+  * config); `dimjoin` routes the dimension lookups through the
+  * stream-static-join path (`StateMachine.withDimTables`, the scale
+  * configuration) instead of the in-memory snapshot maps; `eventtime`
+  * runs the dim-join path on the EVENT-TIME silence clock (watermark +
+  * `EventTimeTimeout`), the production replay/backfill configuration,
+  * with the final state-store size reported so per-key state growth
+  * is a measured number (VERDICT r10 ask #6: state must stay FLAT per
+  * key — the machine keeps one ActiveRecord per (station, parte),
+  * never an observation log).
   *
   * `recover` (VERDICT r11 ask #4 — the recovery SLA at rung scale):
   * process roughly half the input in bounded micro-batches, STOP the
@@ -52,14 +50,20 @@ import graft.stream.{Sinks, StateMachine}
   * (StreamingSpec's restart scenario, at 5000× the scale).
   */
 object StreamBench {
+  private val Flags = Set("rocksdb", "dimjoin", "eventtime", "recover")
+
   def run(spark: SparkSession, args: Seq[String]): Unit = {
-    val n = if (args.length > 0) args(0).toInt else 200000
-    val stations = if (args.length > 1) args(1).toInt else 200
-    val eventtime = args.contains("eventtime")
-    val tws = args.contains("tws")
-    // transformWithState runs only on the RocksDB state store
-    val rocksdb = args.contains("rocksdb") || tws
-    val dimjoin = args.contains("dimjoin") || eventtime || tws
+    // up to two counts, then flags: anything else fails before a run
+    val (counts, flags) = args.span(a => a.nonEmpty && a.forall(_.isDigit))
+    val unknown = counts.drop(2) ++ flags.filterNot(Flags)
+    if (unknown.nonEmpty) throw new Bench.UsageError(
+      s"stream: unknown argument(s) ${unknown.mkString(" ")}; usage: stream [nObs] " +
+        "[nStations] [rocksdb] [dimjoin|eventtime] [recover]")
+    val n = counts.headOption.fold(200000)(_.toInt)
+    val stations = counts.lift(1).fold(200)(_.toInt)
+    val eventtime = flags.contains("eventtime")
+    val rocksdb = flags.contains("rocksdb")
+    val dimjoin = flags.contains("dimjoin") || eventtime
     if (rocksdb) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
@@ -77,7 +81,7 @@ object StreamBench {
     val outDir = Files.createTempDirectory("graft_sbench_out").toString
     val ckpt = Files.createTempDirectory("graft_sbench_ckpt").toString
     val useFiles = n >= 1000000
-    val recover = args.contains("recover")
+    val recover = flags.contains("recover")
 
     // ONE definition of the file-backed load and the dim fixtures,
     // shared by the throughput path and the recover arm — the
@@ -114,12 +118,9 @@ object StreamBench {
         .option("maxFilesPerTrigger", maxFiles)
         .parquet(inDir).as[PartObservation]
       def startRun(ckptDir: String, out: String) = {
-        val actions =
-          if (tws) StateMachine.withDimTablesEventTimeTws(
-            mkObs(), dimParts, dimMults, dimRecs, timeoutMs = 30000L)
-          else StateMachine.withDimTablesEventTime(
-            mkObs(), dimParts, dimMults, dimRecs, timeoutMs = 30000L)
-        actions.writeStream.outputMode("append")
+        StateMachine.withDimTables(mkObs(), dimParts, dimMults, dimRecs, timeoutMs = 30000L,
+            clock = StateMachine.EventTime("10 seconds"))
+          .writeStream.outputMode("append")
           .option("checkpointLocation", ckptDir).trigger(Trigger.AvailableNow())
           // epochId wired through → exactly-once histories, so the
           // replayed post-crash epoch overwrites instead of doubling
@@ -186,8 +187,7 @@ object StreamBench {
       require(recDiff == 0 && histDiff == 0,
         s"recovered output differs from uninterrupted run: records=$recDiff histories=$histDiff")
       val nRecords = spark.read.parquet(s"$outDir/production_records").count()
-      val host2 = if (tws) "tws-eventtime" else "fmgws-eventtime"
-      println(s"""{"metric":"stream_recovery_sec","value":${Bench.num(recoverySec, 2)},"unit":"sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"$host2","batches_before_kill":$batchesBeforeKill,"recovery_first_batch_sec":${Bench.num(recoverySec, 2)},"recovered_drain_sec":${Bench.num(drainSec, 2)},"uninterrupted_sec":${Bench.num(refSec, 2)},"records":$nRecords,"records_diff":$recDiff,"histories_diff":$histDiff}""")
+      println(s"""{"metric":"stream_recovery_sec","value":${Bench.num(recoverySec, 2)},"unit":"sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"fmgws-eventtime","batches_before_kill":$batchesBeforeKill,"recovery_first_batch_sec":${Bench.num(recoverySec, 2)},"recovered_drain_sec":${Bench.num(drainSec, 2)},"uninterrupted_sec":${Bench.num(refSec, 2)},"records":$nRecords,"records_diff":$recDiff,"histories_diff":$histDiff}""")
       return
     }
 
@@ -209,17 +209,14 @@ object StreamBench {
       }
     val t0 = System.nanoTime()
     val q = if (dimjoin) {
-      // event-time hosts get a real timer horizon (30 s of event time —
-      // the default production silence window); the processing-time
-      // host keeps timers off as before (AvailableNow would race a
-      // wall-clock timeout)
+      // the event-time clock gets a real timer horizon (30 s of event
+      // time — the default production silence window); the
+      // processing-time clock keeps timers off as before (AvailableNow
+      // would race a wall-clock timeout)
       val actions =
-        if (tws) StateMachine.withDimTablesEventTimeTws(
-          obsStream, dimParts, dimMults, dimRecs, timeoutMs = 30000L)
-        else if (eventtime) StateMachine.withDimTablesEventTime(
-          obsStream, dimParts, dimMults, dimRecs, timeoutMs = 30000L)
-        else StateMachine.withDimTables(obsStream, dimParts, dimMults, dimRecs,
-          timeoutMs = 0)
+        if (eventtime) StateMachine.withDimTables(obsStream, dimParts, dimMults, dimRecs,
+          timeoutMs = 30000L, clock = StateMachine.EventTime("10 seconds"))
+        else StateMachine.withDimTables(obsStream, dimParts, dimMults, dimRecs, timeoutMs = 0)
       actions.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.ActionRow], id: Long) =>
@@ -246,8 +243,7 @@ object StreamBench {
     val stateRows = stateOps.map(_.numRowsTotal).sum
     val stateBytes = stateOps.map(_.memoryUsedBytes).sum
     val records = spark.read.parquet(s"$outDir/production_records").count()
-    val host = if (tws) "tws-eventtime" else if (eventtime) "fmgws-eventtime"
-      else if (dimjoin) "dimjoin" else "map"
+    val host = if (eventtime) "fmgws-eventtime" else if (dimjoin) "dimjoin" else "map"
     println(s"""{"metric":"stream_obs_per_sec","value":${Bench.num(rate, 0)},"unit":"obs/sec","n_obs":$n,"stations":$stations,"state_store":"${if (rocksdb) "rocksdb" else "hdfs"}","lookup_path":"$host","wall_sec":${Bench.num(sec, 2)},"records":$records,"state_rows":$stateRows,"state_bytes":$stateBytes,"equiv_stations_at_reference_cadence":${(rate / 2).toLong}}""")
   }
 }

@@ -23,11 +23,9 @@ import graft.stream.StoreEpoch.{capOf, dataFiles, epochFile, footerSchema, gate,
 
 /** Batch/foreachBatch sinks for the action stream (K1-K5).
   *
-  * The environment ships no Delta jar, so the keyed upsert is a
-  * MERGE-by-rewrite on parquet: union the batch with the current table,
-  * keep the newest version per key, atomically swap directories. On a
-  * real deployment this is one `DeltaTable.merge` per micro-batch — the
-  * call sites are shaped for that swap.
+  * The environment ships no Delta or Iceberg jar, so the keyed record
+  * upsert is a MERGE-by-rewrite on parquet: the partitions a batch
+  * touches are read, merged newest-per-key and overwritten.
   *
   * The sinks are declarative Spark plans, with one bounded exception:
   * a small [[applyActions]] epoch (an epoch id and at most
@@ -39,89 +37,20 @@ import graft.stream.StoreEpoch.{capOf, dataFiles, epochFile, footerSchema, gate,
   */
 object Sinks {
 
-  /** K1/K2/K5: keyed parquet upsert — newest row per key wins, ordered
-    * by `version` (ties broken by `rank`, higher wins). */
-  def upsertParquet(batch: DataFrame, path: String, keys: Seq[String],
-      version: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    val tmp = new Path(path + "._tmp")
-    val old = new Path(path + "._old")
-    // crash recovery: a previous run may have died between the two
-    // renames below — the displaced table is still at `old`
-    if (!fs.exists(cur) && fs.exists(old)) fs.rename(old, cur)
-    val merged =
-      if (fs.exists(cur)) spark.read.parquet(path).unionByName(batch, allowMissingColumns = true)
-      else batch
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(version.map(c => col(c).desc): _*)
-    merged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // two renames instead of delete+rename: at no point is the only
-    // copy of the table deleted (single-writer; foreachBatch serializes)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) fs.rename(cur, old)
-    fs.rename(tmp, cur)
-    fs.delete(old, true)
-  }
-
-  /** A hive partition layout for a keyed upsert table: the partition
-    * column and how each row's value derives from its key, so every
-    * version of a key lands in the same partition. */
-  sealed trait Layout {
-    def column: String
-    def value: Column
-    /** Called before each write under `root`: a layout with parameters
-      * pins them on the first write and checks them on later ones. */
-    private[Sinks] def pin(fs: FileSystem, root: Path): Unit = ()
-  }
-
-  /** `__bucket=NN/`: a stable hash of the keys modulo `n`. The bucket
-    * count is part of the table's physical identity — a different count
-    * re-keys every row and would strand stale versions in old buckets —
-    * so it is pinned in a `_graft_buckets` root marker BEFORE the first
-    * data write: a crash between a data commit and marker creation must
-    * never leave partitions whose count a later call could re-pin. */
-  final case class Buckets(keys: Seq[String], n: Int) extends Layout {
-    def column: String = BucketColumn
-    def value: Column = pmod(hash(keys.map(col): _*), lit(n))
-    override private[Sinks] def pin(fs: FileSystem, root: Path): Unit = {
-      val marker = new Path(root, BucketMarker)
-      if (fs.exists(marker)) {
-        val stored = readBucketCount(fs, root)
-        require(stored == n, s"table at $root was bucketed with nBuckets=$stored, got $n")
-      } else {
-        require(!dataEntries(fs, root).exists(_.startsWith(column + "=")),
-          s"bucketed table at $root has no $BucketMarker marker; refusing to " +
-            "re-pin a bucket count over existing partitions (restore the marker)")
-        val out = fs.create(marker, true)
-        try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-      }
-    }
-  }
-
-  /** `__shift=<date>|<shift>/`: the layout of `production_records`. The
-    * value is the `date|shift` suffix of `record_id`
+  /** `production_records` is laid out in `__shift=<date>|<shift>/`
+    * partitions. The value is the `date|shift` suffix of `record_id`
     * ([[StateMachine.recordId]]), taken from the key itself because
     * update rows ([[ActionRow.updateQty]]) leave `plan_date` and
-    * `shift_id` empty. At the reference's 1 Hz cadence every live key
-    * updates every tick, and every live key belongs to the current
-    * shift, so an epoch rewrites one partition: the live shift's
-    * records, however old the table is. */
-  case object RecordShifts extends Layout {
-    def column: String = ShiftColumn
-    def value: Column = substring_index(col("record_id"), "|", -2)
-  }
-
-  private val BucketColumn = "__bucket"
+    * `shift_id` empty, so every version of a key lands in the same
+    * partition. At the reference's 1 Hz cadence every live key updates
+    * every tick, and every live key belongs to the current shift, so
+    * an epoch rewrites one partition: the live shift's records,
+    * however old the table is. */
   private val ShiftColumn = "__shift"
-  private val LayoutColumns = Seq(BucketColumn, ShiftColumn)
-  private val BucketMarker = "_graft_buckets"
-
-  private def readBucketCount(fs: FileSystem, root: Path): Int = {
-    val in = fs.open(new Path(root, BucketMarker))
-    try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
-  }
+  private def shiftOf: Column = substring_index(col("record_id"), "|", -2)
+  // the column of the retired `__bucket=NN/` hash layout, dropped when
+  // migrateLayout adopts such a table
+  private val LegacyBucketColumn = "__bucket"
 
   // hidden names ('.', or '_' without '=') are metadata, not data
   private def dataEntries(fs: FileSystem, root: Path): Seq[String] =
@@ -129,22 +58,20 @@ object Sinks {
     else fs.listStatus(root).toSeq.map(_.getPath.getName).filterNot(EpochFold.hidden)
 
   /** Refuses a table under `root` in another layout (flat files or other
-    * partitions), then lets the layout pin its parameters. */
-  private def requireLayout(fs: FileSystem, root: Path, layout: Layout): Unit = {
-    val foreign = dataEntries(fs, root).filterNot(_.startsWith(layout.column + "="))
+    * partitions). */
+  private def requireLayout(fs: FileSystem, root: Path): Unit = {
+    val foreign = dataEntries(fs, root).filterNot(_.startsWith(ShiftColumn + "="))
     require(foreign.isEmpty,
-      s"table at $root is not in the ${layout.column}= layout " +
+      s"table at $root is not in the $ShiftColumn= layout " +
         s"(e.g. ${foreign.take(3).mkString(", ")}); run Sinks.migrateLayout " +
         s"once to adopt it")
-    layout.pin(fs, root)
   }
 
   /** Refuses a batch whose column names or types differ from those in
     * the footer of one data file in partition `dir`. */
-  private def requireSchema(fs: FileSystem, dir: Path, batch: StructType,
-      layout: Layout): Unit =
+  private def requireSchema(fs: FileSystem, dir: Path, batch: StructType): Unit =
     dataFiles(fs, dir).headOption.foreach { file =>
-      val shape = (s: StructType) => s.fields.toSeq.filter(_.name != layout.column)
+      val shape = (s: StructType) => s.fields.toSeq.filter(_.name != ShiftColumn)
         .map(f => f.name.toLowerCase -> f.dataType.catalogString).toSet
       val table = footerSchema(file, fs.getConf)
       require(shape(table) == shape(batch),
@@ -153,11 +80,13 @@ object Sinks {
           "upsert batch must carry the table's full schema")
     }
 
-  /** Keyed upsert into a table laid out by `layout`: newest row per key
-    * wins, ordered by `version` (ties broken by later columns). Each
-    * batch reads only the partitions its keys map to, with the batch's
-    * own schema (no listing or schema-inference job), merges
-    * newest-per-key, and dynamically overwrites those partitions.
+  /** Keyed upsert into a table in `__shift=` partitions, the layout of
+    * `production_records` ([[ShiftColumn]]; the batch carries
+    * `record_id`): newest row per key wins, ordered by `version` (ties
+    * broken by later columns). Each batch reads only the partitions
+    * its keys map to, with the batch's own schema (no listing or
+    * schema-inference job), merges newest-per-key, and dynamically
+    * overwrites those partitions.
     * Dynamic overwrite stages the output and swaps each partition in at
     * job commit, after every read of the merge, so the merge may read
     * the partitions it replaces (single writer; foreachBatch
@@ -170,27 +99,27 @@ object Sinks {
     * file in a touched partition is checked on the driver, and a batch
     * whose column names or types differ from it is refused. */
   def upsertParquetPartitioned(batch: DataFrame, path: String, keys: Seq[String],
-      version: Seq[String], layout: Layout): Unit = {
+      version: Seq[String]): Unit = {
     val spark = batch.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireLayout(fs, root, layout)
-    val b = batch.withColumn(layout.column, layout.value)
+    requireLayout(fs, root)
+    val b = batch.withColumn(ShiftColumn, shiftOf)
     // the batch's partition values: bounded by the layout, not by the
     // batch
-    val present = StoreEpoch.distinctUpTo(b.select(layout.column), Int.MaxValue).toSeq
-      .map(partitionDir(root, layout.column, _))
+    val present = StoreEpoch.distinctUpTo(b.select(ShiftColumn), Int.MaxValue).toSeq
+      .map(partitionDir(root, ShiftColumn, _))
       .filter(p => EpochFold.hasDataFiles(spark, p.toString))
-    present.headOption.foreach(p => requireSchema(fs, p, b.schema, layout))
+    present.headOption.foreach(p => requireSchema(fs, p, b.schema))
     val merged =
       if (present.isEmpty) b
       else spark.read.schema(b.schema).option("basePath", path)
         .parquet(present.map(_.toString): _*).unionByName(b)
-    // the layout column leads the window key (it is a function of the
+    // the shift column leads the window key (it is a function of the
     // keys, so the groups are the same): the window's sort then already
     // orders rows the way the partitioned write needs, and the write
     // adds no second sort holding its own memory pages in the same task
-    val w = Window.partitionBy((layout.column +: keys).map(col): _*)
+    val w = Window.partitionBy((ShiftColumn +: keys).map(col): _*)
       .orderBy(version.map(c => col(c).desc): _*)
     // partitionOverwriteMode is a per-writer option, NOT a session conf
     // mutation — a concurrent partitioned Overwrite on the same session
@@ -198,18 +127,8 @@ object Sinks {
     merged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(layout.column).parquet(path)
+      .partitionBy(ShiftColumn).parquet(path)
   }
-
-  /** [[upsertParquetPartitioned]] over [[Buckets]] of the key: a batch
-    * rewrites the buckets its keys hash to, and point lookups
-    * ([[lookupBucketed]]) open one bucket. A batch of k keys touches
-    * min(k, nBuckets) buckets, so this pays off only when batches touch
-    * few keys of a large table; a stream whose live keys all update
-    * every tick touches most buckets every batch. */
-  def upsertParquetBucketed(batch: DataFrame, path: String, keys: Seq[String],
-      version: Seq[String], nBuckets: Int = 64): Unit =
-    upsertParquetPartitioned(batch, path, keys, version, Buckets(keys, nBuckets))
 
   /** [[upsertParquetPartitioned]] of a driver-held batch, applied on the
     * driver with the same refusals: for each partition the batch
@@ -221,14 +140,14 @@ object Sinks {
     * every row of a touched partition while it merges it (one partition
     * at a time): the bound on the batch does not bound the partitions. */
   private def upsertOnDriver(batch: DataFrame, path: String, keys: Seq[String],
-      version: Seq[String], layout: Layout, epochId: Long, conf: Configuration): Unit = {
-    val b = batch.withColumn(layout.column, layout.value)
+      version: Seq[String], epochId: Long, conf: Configuration): Unit = {
+    val b = batch.withColumn(ShiftColumn, shiftOf)
     val rows = localRows(b)
     if (rows.isEmpty) return
     val spark = batch.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    requireLayout(fs, root, layout)
+    requireLayout(fs, root)
     val schema = nullable(batch.schema)
     val types = schema.map(_.dataType)
     val keyAt = keys.map(schema.fieldIndex)
@@ -239,9 +158,9 @@ object Sinks {
     val at = schema.length
     val byPartition = rows
       .groupBy(r => if (r.isNullAt(at)) null else r.get(at, b.schema(at).dataType).toString)
-      .map { case (v, rs) => partitionDir(root, layout.column, v) -> rs }
+      .map { case (v, rs) => partitionDir(root, ShiftColumn, v) -> rs }
     byPartition.keys.find(dataFiles(fs, _).nonEmpty)
-      .foreach(requireSchema(fs, _, b.schema, layout))
+      .foreach(requireSchema(fs, _, b.schema))
     byPartition.foreach { case (dir, batchRows) =>
       val old = dataFiles(fs, dir)
       val newest = mutable.LinkedHashMap.empty[Seq[Any], InternalRow]
@@ -276,129 +195,33 @@ object Sinks {
 
   /** Read an [[upsertParquetPartitioned]] table without its layout column. */
   def readUpsertedBucketed(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop(LayoutColumns: _*)
+    spark.read.parquet(path).drop(ShiftColumn)
 
-  /** Point lookup in a bucketed upsert table: the key's bucket is the
-    * same `pmod(hash(keys), n)` the writer used (n from the pinned
-    * marker), expressed as a constant-foldable filter on the partition
-    * column — so the scan opens ONE `__bucket=` directory out of n,
-    * never the table (SinksSpec pins the partition filter). */
-  def lookupBucketed(spark: SparkSession, path: String, keys: Seq[String],
-      keyValues: Seq[Any]): DataFrame = {
-    require(keys.length == keyValues.length, "one value per key column")
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(root, BucketMarker)), s"no $BucketMarker marker at $path")
-    val n = readBucketCount(fs, root)
-    val table = spark.read.parquet(path)
-    // hash() is type-sensitive: an Int literal probed against a Long key
-    // column Murmur3-hashes differently from the writer's hash(col), so
-    // the filter would prune to the WRONG __bucket= partition and the
-    // lookup would silently return empty. Cast each literal to the
-    // stored column's type so probe and writer hash identical values.
-    val typedLits = keys.zip(keyValues).map { case (k, v) =>
-      lit(v).cast(table.schema(k).dataType)
-    }
-    val keyPred = keys.zip(typedLits).map { case (k, v) => col(k) === v }
-      .reduce(_ && _)
-    table
-      // all-literal expression: constant-folded to `__bucket = <N>` at
-      // optimization time, which partition-prunes the scan
-      .filter(col(BucketColumn) === pmod(hash(typedLits: _*), lit(n)) && keyPred)
-      .drop(BucketColumn)
-  }
-
-  /** One-time migration of an upsert table into `layout`, from the flat
-    * [[upsertParquet]] layout or from another partition layout — e.g. a
-    * `production_records` table written in `__bucket=` hash buckets,
-    * before [[applyActions]] laid it out by [[RecordShifts]]. The
-    * rewritten table (with any marker the layout pins) is staged in a
-    * temp dir and swapped in with the same two-rename dance as
-    * [[upsertParquet]], so a crash at any point leaves either the old
-    * table or the complete new one — never a half-layout the upsert
-    * path would refuse or misread. */
-  def migrateLayout(spark: SparkSession, path: String, layout: Layout): Unit = {
+  /** One-time migration of an upsert table into the `__shift=` layout
+    * of [[upsertParquetPartitioned]], from a flat table or from another
+    * partition layout — e.g. a `production_records` table written in
+    * the retired `__bucket=` hash buckets. The rewritten table is
+    * staged in a temp dir and swapped in with two renames (at no point
+    * is the only copy deleted), so a crash at any point leaves either
+    * the old table or the complete new one — never a half-layout the
+    * upsert path would refuse or misread. */
+  def migrateLayout(spark: SparkSession, path: String): Unit = {
     val cur = new Path(path)
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "._tmp")
     val old = new Path(path + "._old")
     if (!fs.exists(cur) && fs.exists(old)) fs.rename(old, cur) // crash recovery
     require(fs.exists(cur), s"no table at $path to migrate")
-    require(dataEntries(fs, cur).exists(!_.startsWith(layout.column + "=")),
-      s"table at $path is already in the ${layout.column}= layout")
+    require(dataEntries(fs, cur).exists(!_.startsWith(ShiftColumn + "=")),
+      s"table at $path is already in the $ShiftColumn= layout")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    layout.pin(fs, tmp)
-    spark.read.parquet(path).drop(LayoutColumns: _*)
-      .withColumn(layout.column, layout.value)
-      .write.mode(SaveMode.Append).partitionBy(layout.column).parquet(tmp.toString)
+    spark.read.parquet(path).drop(LegacyBucketColumn, ShiftColumn)
+      .withColumn(ShiftColumn, shiftOf)
+      .write.mode(SaveMode.Append).partitionBy(ShiftColumn).parquet(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     require(fs.rename(cur, old), s"could not displace $cur")
     require(fs.rename(tmp, cur), s"could not install migrated table at $cur")
     fs.delete(old, true)
-  }
-
-  /** K1/K2 on a transactional table format (Delta Lake / Iceberg) — the
-    * ACID MERGE the reference gets from SQL Server (actualizar_registro,
-    * Prensas.py:212-225; crear_nuevo_registro, Prensas.py:315-365).
-    *
-    * Spark PARSES `MERGE INTO` natively; only executing it needs a
-    * format with row-level-operation support, and this environment
-    * ships neither jar. So the seam is cut exactly like the JDBC one:
-    * the batch is reduced to newest-per-key here, the statement is
-    * generated by [[mergeSql]] (pinned against Spark's own parser in
-    * SinksSpec), and `run` defaults to `spark.sql`. On a deployment
-    * with Delta present this works as-is — add the two session confs
-    * (`spark.sql.extensions`, `spark.sql.catalog.spark_catalog`) and
-    * point `table` at a Delta table: a config change, no code change.
-    * Tests drive the identical call path through a file-backed fake
-    * runner and prove it equivalent to [[upsertParquet]].
-    *
-    * Per-batch IO under Delta is O(files containing matched keys) via
-    * data skipping — the transactional version of what
-    * [[upsertParquetPartitioned]] approximates with partitions. */
-  def upsertDelta(batch: DataFrame, table: String, keys: Seq[String],
-      version: Seq[String], run: String => Unit = null): Unit = {
-    val spark = batch.sparkSession
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(version.map(c => col(c).desc): _*)
-    val newest = batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val src = "__graft_merge_src"
-    newest.createOrReplaceTempView(src)
-    try {
-      val sql = mergeSql(table, src, newest.columns.toSeq, keys, version)
-      if (run == null) spark.sql(sql) else run(sql)
-    } finally spark.catalog.dropTempView(src)
-  }
-
-  /** The MERGE statement [[upsertDelta]] executes: match on every key;
-    * update only when the source is strictly newer (lexicographically
-    * over the `version` columns — a tie keeps the existing row, like
-    * the parquet stand-ins); insert unmatched keys.
-    *
-    * Identifiers are backtick-quoted (the table name per dot-separated
-    * qualifier) so column or table names needing escaping can't break
-    * the statement, and an empty `keys`/`version` is refused up front —
-    * it would otherwise render an empty ON clause or a
-    * `WHEN MATCHED AND ()` that fails to parse only at run time. */
-  def mergeSql(table: String, srcView: String, cols: Seq[String],
-      keys: Seq[String], version: Seq[String]): String = {
-    require(keys.nonEmpty, "mergeSql: at least one key column required")
-    require(version.nonEmpty, "mergeSql: at least one version column required")
-    def q(id: String) = "`" + id.replace("`", "``") + "`"
-    def qt(t: String) = t.split('.').map(q).mkString(".")
-    val on = keys.map(k => s"t.${q(k)} = s.${q(k)}").mkString(" AND ")
-    // (s.v1, s.v2, …) > (t.v1, t.v2, …), expanded lexicographically
-    val newer = version.indices.map { i =>
-      val eqs = version.take(i).map(v => s"s.${q(v)} = t.${q(v)}")
-      (eqs :+ s"s.${q(version(i))} > t.${q(version(i))}").mkString("(", " AND ", ")")
-    }.mkString(" OR ")
-    val sets = cols.map(c => s"t.${q(c)} = s.${q(c)}").mkString(", ")
-    s"""MERGE INTO ${qt(table)} t
-       |USING ${qt(srcView)} s
-       |ON $on
-       |WHEN MATCHED AND ($newer) THEN UPDATE SET $sets
-       |WHEN NOT MATCHED THEN INSERT (${cols.map(q).mkString(", ")})
-       |VALUES (${cols.map(c => s"s.${q(c)}").mkString(", ")})""".stripMargin
   }
 
   /** K1/K2 against a real database: newest-per-key reduction in Spark,
@@ -411,7 +234,7 @@ object Sinks {
     * of MERGE because it is portable across SQL Server, DB2/AS400, and
     * embedded engines. The table must exist with matching column names.
     * This is the low-volume record-upsert path; bulk keyed merges stay
-    * on [[upsertParquet]] (or a transactional MERGE sink).
+    * on [[upsertParquetPartitioned]].
     *
     * Statements go to the database in `jdbcBatchSize`-row batches
     * (`addBatch`/`executeBatch`): one round trip per batch, with the
@@ -684,17 +507,17 @@ object Sinks {
     * update → close precedence at equal ts), histories append,
     * parts-not-found CSV dedup (the E3 foreachBatch sink).
     *
-    * `production_records` is laid out by [[RecordShifts]]. At the
-    * reference's 1 Hz cadence every live key updates every tick, so a
-    * layout hashed on the key (one bucket per key, up to the bucket
-    * count) rewrites nearly the whole table each epoch once the fleet
-    * has as many live keys as buckets. Every live key belongs to the
-    * current shift, so the shift layout rewrites one partition per
-    * epoch: the live shift's records, independent of the table's age
-    * (two at a shift rollover). A table in the flat or `__bucket=`
-    * layout is refused with a pointer to [[migrateLayout]]; run
-    * `migrateLayout(spark, path, RecordShifts)` once. Read the table
-    * with [[readUpsertedBucketed]].
+    * `production_records` is laid out by shift ([[ShiftColumn]]). At
+    * the reference's 1 Hz cadence every live key updates every tick,
+    * so a layout hashed on the key (one bucket per key, up to the
+    * bucket count) would rewrite nearly the whole table each epoch
+    * once the fleet has as many live keys as buckets. Every live key
+    * belongs to the current shift, so the shift layout rewrites one
+    * partition per epoch: the live shift's records, independent of the
+    * table's age (two at a shift rollover). A table in the flat or
+    * `__bucket=` layout is refused with a pointer to [[migrateLayout]];
+    * run `migrateLayout(spark, path)` once. Read the table with
+    * [[readUpsertedBucketed]].
     *
     * One job gates the epoch ([[StoreEpoch.gate]], which also builds the cache):
     * it returns the set of actions present and, when the batch holds at
@@ -763,13 +586,13 @@ object Sinks {
           // write and listing, its file: paths on the fork-free FileSystem
           val conf = NioLocal.withFileSystem(spark.sessionState.newHadoopConf())
           upsertOnDriver(recordRows(local), s"$outDir/production_records",
-            Seq("record_id"), Seq("ts", "rank"), RecordShifts, epochId, conf)
+            Seq("record_id"), Seq("ts", "rank"), epochId, conf)
           overwriteEpochOnDriver(historyRows(local), s"$outDir/histories", epochId, conf)
           appendCsvDedupOnDriver(notFoundRows(local), s"$outDir/parts_not_found", epochId, conf)
         case None =>
           if (Seq(ActionRow.Create, ActionRow.Update, ActionRow.Close).exists(present))
             upsertParquetPartitioned(recordRows(df), s"$outDir/production_records",
-              Seq("record_id"), Seq("ts", "rank"), RecordShifts)
+              Seq("record_id"), Seq("ts", "rank"))
           if (present(ActionRow.History)) {
             if (epochId >= 0) {
               EpochFold.migrateLegacyFlat(spark, s"$outDir/histories")
@@ -819,20 +642,15 @@ object Sinks {
     * and checkpoints ship changelogs instead of full snapshots.
     * Semantics are provider-independent (RocksDBStateSpec).
     *
-    * HOST DECISION (round 12, closing VERDICT r11 ask #7): the default
-    * host stays `flatMapGroupsWithState`, deliberately. The
-    * `transformWithState` twin is 10–15% faster at the 1M/5M-obs rungs
-    * (BASELINE.md r11) and is the Spark-4-forward API, but it HARD
-    * REQUIRES the RocksDB state store provider — a session-level
-    * config this method cannot assume or set per-query — so making it
-    * the default would turn every unconfigured caller into a runtime
-    * failure. fMGWS runs identically on every provider. Deployments
-    * that configure RocksDB (any production deployment at scale)
-    * should wire the machine through
-    * [[StateMachine.withDimTablesEventTimeTws]] and pass the result to
-    * a foreachBatch identical to this one — the two hosts are
-    * transition-identical by construction (one shared [[StateMachine
-    * .Core]]; pinned by TransformWithStateSpec / EventTimeTwsSpec).
+    * HOST DECISION: the state machine runs on `flatMapGroupsWithState`,
+    * which works on every state store provider. A `transformWithState`
+    * host of the same transition ran 10–15% faster at the 1M/5M-obs
+    * rungs on RocksDB (BASELINE.md r11), but that API needs the RocksDB
+    * provider, a session-level config this method can neither assume
+    * nor set per query. Deployments that want the dimension lookups as
+    * stream-static joins, or the event-time silence clock, wire
+    * [[StateMachine.withDimTables]] into a foreachBatch identical to
+    * this one.
     *
     * The session gets the fork-free `file:` FileContext
     * ([[graft.io.NioLocal.ensureInstalled]]) before the stream starts,

@@ -4,14 +4,21 @@ import java.sql.Timestamp
 import java.time.ZoneOffset
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.io.NioLocal
 import graft.model._
 
 /** The per-(station, parte) production state machine — the reference's
   * `plc_processor` loop (Prensas.py:616-831) re-expressed as a
-  * `flatMapGroupsWithState` function emitting typed [[ActionRow]]s.
+  * `flatMapGroupsWithState` function emitting typed [[ActionRow]]s. It
+  * has two entry points, which differ only in how an observation's
+  * dimension lookups are resolved: this class ([[apply]], in-memory
+  * snapshot maps, processing-time silence) and
+  * [[StateMachine.withDimTables]] (stream-static joins; the silence
+  * clock a parameter). Both run one transition ([[StateMachine.Core]])
+  * on `flatMapGroupsWithState`, which works on every state store
+  * provider.
   *
   * Semantics mirrored from the reference (SURVEY ST2-ST5):
   *  - admission (Prensas.py:703-741): resolve the prior record for
@@ -29,9 +36,10 @@ import graft.model._
   *    created, and corrida_previa comes from THAT record when paused,
   *    else 0 (Prensas.py:783)
   *  - history rows carry the RAW counter as quantity (Prensas.py:802)
-  *  - silence: ProcessingTimeTimeout closes the run 7→8 once and clears
-  *    state (limpieza edge-trigger, Prensas.py:663-685); the close is
-  *    stamped after the last update so a newest-wins upsert applies it
+  *  - silence: the group-state timeout closes the run 7→8 once and
+  *    clears state (limpieza edge-trigger, Prensas.py:663-685); the
+  *    close is stamped after the last update so a newest-wins upsert
+  *    applies it
   *
   * Departures from the reference (SURVEY §7.5, deliberate):
   *  - record ids are deterministic keys `station|parte|date|shift`
@@ -94,15 +102,28 @@ class StateMachine(
     import obs.sparkSession.implicits._
     obs.map(enrich).groupByKey(o => (o.station, o.parte))
       .flatMapGroupsWithState[ActiveRecord, ActionRow](
-        OutputMode.Append, timeoutConf(timeoutMs))(core.process)
+        OutputMode.Append, core.timeout)(core.process)
   }
 }
 
 object StateMachine {
 
-  private[stream] def timeoutConf(timeoutMs: Long): GroupStateTimeout =
-    if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
+  /** The clock ST4's silence is measured on. */
+  sealed trait SilenceClock
+  /** The executor wall clock, as in the reference's loop. */
+  case object ProcessingTime extends SilenceClock
+  /** The stream's watermark, trailing the newest event time by
+    * `maxLateness` (SURVEY §2.10). What that buys at scale:
+    *  - deterministic replay/backfill: a historical silence gap closes
+    *    the run at the same stream position every run, even when the
+    *    backfill processes days of data in minutes (the wall clock
+    *    would either never close or close by luck);
+    *  - observations later than `maxLateness` are dropped by the engine
+    *    (FlatMapGroupsWithStateExec's watermark predicate) instead of
+    *    resurrecting or corrupting an already-closed run — the
+    *    admission/gate logic never sees them.
+    * The close row is stamped lastTs + timeoutMs either way. */
+  final case class EventTime(maxLateness: String) extends SilenceClock
 
   /** Wire the state machine onto an observation stream with the J6/W1
     * lookups (part catalog, AS400 multipliers, prior records) resolved
@@ -118,100 +139,31 @@ object StateMachine {
     * multipliers(parte, multiplier), records(record_id, produced,
     * status_id, planned); keys are assumed unique per catalog row.
     * Dims are snapshots as of query start; refresh on supervisor
-    * reconcile when the config changes. */
+    * reconcile when the config changes. `clock` is ST4's silence
+    * clock: [[ProcessingTime]], or [[EventTime]] with its lateness
+    * allowance (the replay/backfill configuration). */
   def withDimTables(obs: Dataset[PartObservation],
       parts: org.apache.spark.sql.DataFrame,
       multipliers: org.apache.spark.sql.DataFrame,
       records: org.apache.spark.sql.DataFrame,
-      timeoutMs: Long = 30000L): Dataset[ActionRow] = {
-    val s = obs.sparkSession
-    import s.implicits._
-    enrichWithDims(obs, parts, multipliers, records)
-      .groupByKey(o => (o.station, o.parte))
-      .flatMapGroupsWithState[ActiveRecord, ActionRow](
-        OutputMode.Append, timeoutConf(timeoutMs))(new Core(timeoutMs).process)
-  }
-
-  /** [[withDimTables]] on Spark 4's `transformWithState` (arbitrary
-    * stateful processing v2): the identical [[Core]] transition hosted
-    * in a [[ProductionStatefulProcessor]] with typed `ValueState` and
-    * an explicit per-key silence timer. Requires the RocksDB state
-    * store provider (a transformWithState constraint). */
-  def withDimTablesTws(obs: Dataset[PartObservation],
-      parts: org.apache.spark.sql.DataFrame,
-      multipliers: org.apache.spark.sql.DataFrame,
-      records: org.apache.spark.sql.DataFrame,
-      timeoutMs: Long = 30000L): Dataset[ActionRow] = {
-    val s = obs.sparkSession
-    import s.implicits._
-    enrichWithDims(obs, parts, multipliers, records)
-      .groupByKey(o => (o.station, o.parte))
-      .transformWithState(new ProductionStatefulProcessor(timeoutMs),
-        if (timeoutMs > 0) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** [[withDimTablesEventTime]] on `transformWithState`: the same
-    * event-time silence semantics — watermark-driven close stamped
-    * lastTs + timeoutMs, late rows dropped by the engine — hosted in a
-    * [[ProductionStatefulProcessor]] under `TimeMode.EventTime()`,
-    * where the per-key timer carries the deadline the legacy host
-    * derives from `setTimeoutTimestamp`. EventTimeTwsSpec pins the two
-    * event-time hosts action-for-action, late-row drop included. */
-  def withDimTablesEventTimeTws(obs: Dataset[PartObservation],
-      parts: org.apache.spark.sql.DataFrame,
-      multipliers: org.apache.spark.sql.DataFrame,
-      records: org.apache.spark.sql.DataFrame,
       timeoutMs: Long = 30000L,
-      maxLateness: String = "10 seconds"): Dataset[ActionRow] = {
+      clock: SilenceClock = ProcessingTime): Dataset[ActionRow] = {
     val s = obs.sparkSession
     import s.implicits._
-    enrichWithDims(obs, parts, multipliers, records)
-      .withWatermark("ts", maxLateness)
-      .groupByKey(o => (o.station, o.parte))
-      .transformWithState(new ProductionStatefulProcessor(timeoutMs),
-        if (timeoutMs > 0) TimeMode.EventTime() else TimeMode.None(),
-        OutputMode.Append())
+    val enriched = enrichWithDims(obs, parts, multipliers, records)
+    val clocked = clock match {
+      case ProcessingTime => enriched
+      case EventTime(maxLateness) => enriched.withWatermark("ts", maxLateness)
+    }
+    val core = new Core(timeoutMs, clock)
+    clocked.groupByKey(o => (o.station, o.parte))
+      .flatMapGroupsWithState[ActiveRecord, ActionRow](OutputMode.Append, core.timeout)(core.process)
   }
 
-  /** [[withDimTables]] with ST4's silence measured in EVENT time
-    * (SURVEY §2.10): the same [[Core]] transition hosted under
-    * `EventTimeTimeout` + `withWatermark`, so the silence clock is the
-    * stream's own watermark instead of the executor wall clock. What
-    * that buys at scale:
-    *  - deterministic replay/backfill: a historical silence gap closes
-    *    the run at the same stream position every run, even when the
-    *    backfill processes days of data in minutes (the
-    *    processing-time host would either never close or close by
-    *    wall-clock luck);
-    *  - late observations beyond `maxLateness` are dropped by the
-    *    engine (FlatMapGroupsWithStateExec's watermark predicate)
-    *    instead of resurrecting or corrupting an already-closed run —
-    *    the admission/gate logic never sees them.
-    * The close row is stamped lastTs + timeoutMs — pure event time,
-    * reproducible across runs, ordered after the run's last update for
-    * the newest-wins upsert exactly like the processing-time stamp. */
-  def withDimTablesEventTime(obs: Dataset[PartObservation],
-      parts: org.apache.spark.sql.DataFrame,
-      multipliers: org.apache.spark.sql.DataFrame,
-      records: org.apache.spark.sql.DataFrame,
-      timeoutMs: Long = 30000L,
-      maxLateness: String = "10 seconds"): Dataset[ActionRow] = {
-    val s = obs.sparkSession
-    import s.implicits._
-    enrichWithDims(obs, parts, multipliers, records)
-      .withWatermark("ts", maxLateness)
-      .groupByKey(o => (o.station, o.parte))
-      .flatMapGroupsWithState[ActiveRecord, ActionRow](
-        OutputMode.Append,
-        if (timeoutMs > 0) GroupStateTimeout.EventTimeTimeout
-        else GroupStateTimeout.NoTimeout)(new Core(timeoutMs).processEventTime)
-  }
-
-  /** The stream-static dimension joins shared by both stateful APIs;
-    * installs the fork-free `file:` FileContext for the hosts' streams,
-    * as [[StateMachine.apply]] does. */
-  private[stream] def enrichWithDims(obs: Dataset[PartObservation],
+  /** The stream-static dimension joins of [[withDimTables]]; installs
+    * the fork-free `file:` FileContext for its stream, as
+    * [[StateMachine.apply]] does. */
+  private def enrichWithDims(obs: Dataset[PartObservation],
       parts: org.apache.spark.sql.DataFrame,
       multipliers: org.apache.spark.sql.DataFrame,
       records: org.apache.spark.sql.DataFrame): Dataset[ObsEnriched] = {
@@ -249,11 +201,20 @@ object StateMachine {
   /** The state-transition core: operates on [[ObsEnriched]] so it is
     * agnostic to HOW the dimension lookups were resolved (in-memory
     * maps for tests / small catalogs, stream-static joins at scale)
-    * AND to which stateful API hosts it — `advance`/`closeRow` are
-    * pure (state in, state + actions out), with thin adapters for
-    * flatMapGroupsWithState ([[process]]) and transformWithState
-    * ([[ProductionStatefulProcessor]]). */
-  private[stream] class Core(timeoutMs: Long) extends Serializable {
+    * AND to the silence clock — `advance`/`closeRow` are pure (state
+    * in, state + actions out); [[process]] adapts them to
+    * flatMapGroupsWithState. */
+  private class Core(timeoutMs: Long, clock: SilenceClock = ProcessingTime)
+      extends Serializable {
+
+    /** The group-state timeout `process` relies on; none when
+      * `timeoutMs <= 0` (closes disabled). */
+    def timeout: GroupStateTimeout =
+      if (timeoutMs <= 0) GroupStateTimeout.NoTimeout
+      else clock match {
+        case ProcessingTime => GroupStateTimeout.ProcessingTimeTimeout
+        case _: EventTime => GroupStateTimeout.EventTimeTimeout
+      }
 
     /** Pure batch transition: current state + this tick's rows →
       * (next state, emitted actions). Never drops existing state — only
@@ -316,7 +277,12 @@ object StateMachine {
         ar.planDate, ar.shiftId, new Timestamp(ar.lastTsMs + math.max(timeoutMs, 1L)))
         .copy(produced = ar.produced, plannedQty = ar.plannedQty)
 
-    /** The flatMapGroupsWithState adapter. */
+    /** The flatMapGroupsWithState adapter. Under [[EventTime]] the
+      * run closes when the watermark passes lastTs + timeoutMs;
+      * `setTimeoutTimestamp` is floored just above the current
+      * watermark — Spark rejects a timestamp at or below it, and a state
+      * whose deadline the watermark already passed should time out at
+      * the next opportunity, not crash the query. */
     def process(key: (String, String), rows: Iterator[ObsEnriched],
         state: GroupState[ActiveRecord]): Iterator[ActionRow] = {
       val (station, parte) = key
@@ -331,36 +297,11 @@ object StateMachine {
       val (next, out) = advance(station, parte,
         if (state.exists) Some(state.get) else None, rows.toVector)
       next.foreach(state.update)
-      if (timeoutMs > 0 && state.exists) state.setTimeoutDuration(timeoutMs)
-      out.iterator
-    }
-
-    /** The flatMapGroupsWithState adapter under EVENT-TIME timeout —
-      * identical transition, but ST4's silence clock is the stream's
-      * watermark, not the executor wall clock: the run closes when
-      * observed event time across the stream (minus allowed lateness)
-      * passes lastTs + timeoutMs. `setTimeoutTimestamp` is floored just
-      * above the current watermark — Spark rejects a timestamp at or
-      * below it, and a state whose deadline the watermark already
-      * passed should time out at the next opportunity, not crash the
-      * query. */
-    def processEventTime(key: (String, String), rows: Iterator[ObsEnriched],
-        state: GroupState[ActiveRecord]): Iterator[ActionRow] = {
-      val (station, parte) = key
-
-      if (!state.exists && !rows.hasNext && state.hasTimedOut) return Iterator.empty
-      if (state.hasTimedOut) {
-        val ar = state.get
-        state.remove()
-        return Iterator.single(closeRow(station, parte, ar))
-      }
-
-      val (next, out) = advance(station, parte,
-        if (state.exists) Some(state.get) else None, rows.toVector)
-      next.foreach(state.update)
-      if (timeoutMs > 0 && state.exists)
-        state.setTimeoutTimestamp(
+      if (timeoutMs > 0 && state.exists) clock match {
+        case ProcessingTime => state.setTimeoutDuration(timeoutMs)
+        case _: EventTime => state.setTimeoutTimestamp(
           math.max(state.get.lastTsMs + timeoutMs, state.getCurrentWatermarkMs() + 1))
+      }
       out.iterator
     }
 

@@ -106,19 +106,15 @@ class BenchSpec extends SparkSpec {
     assert(lines.count(_.startsWith("[job ")) == started.get)
   }
 
-  test("stream tws selects the RocksDB state store itself") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.unset(key) // the default store, which transformWithState cannot run on
-    val lines = try printed(StreamBench.run(spark, Seq("200", "4", "tws")))
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    val line = lines.find(_.contains("stream_obs_per_sec"))
-    assert(line.exists(l => l.contains("\"state_store\":\"rocksdb\"") &&
-      l.contains("\"lookup_path\":\"tws-eventtime\"") && l.contains("\"records\":4")),
-      lines.mkString("\n"))
+  test("stream rejects an unknown argument with a usage error, naming it") {
+    // `tws` named the deleted transformWithState host; then a typo, a
+    // third count and a count after a flag
+    val bad = Seq(Seq("200", "4", "tws"), Seq("200", "4", "rocksbd"), Seq("200", "4", "5"),
+      Seq("rocksdb", "200"))
+    val errors = bad.map(a => intercept[Bench.UsageError](StreamBench.run(spark, a)))
+    for ((e, word) <- errors.zip(Seq("tws", "rocksbd", "5", "200")))
+      assert(e.getMessage.contains(s"unknown argument(s) $word"), e.getMessage)
+    assert(errors.forall(_.getMessage.contains("usage: stream")))
   }
 
   test("ann and ivf plant twins at every rung size, the sf0.01 x1 rung included") {

@@ -13,229 +13,99 @@ class SinksSpec extends SparkSpec
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  test("upsertParquet: newest version wins per key; others untouched") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/t"
-    Sinks.upsertParquet(
-      Seq(("a", 1L, 10L), ("b", 1L, 20L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"))
-    Sinks.upsertParquet(
-      Seq(("a", 2L, 99L), ("c", 1L, 30L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"))
-    val got = spark.read.parquet(dir).orderBy("k")
-      .select("k", "x").as[(String, Long)].collect().toSeq
-    assert(got == Seq(("a", 99L), ("b", 20L), ("c", 30L)))
-  }
+  /** The retired layouts of a keyed upsert table, written by hand:
+    * flat parquet files, and `__bucket=NN/` hash buckets of the key
+    * with their `_graft_buckets` marker. */
+  private val legacyLayouts: Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit)] = Seq(
+    "flat" -> ((df, path) => df.write.parquet(path)),
+    "__bucket=" -> { (df, path) =>
+      df.withColumn("__bucket", pmod(hash(col("record_id")), lit(8)))
+        .write.partitionBy("__bucket").parquet(path)
+      Files.write(new java.io.File(s"$path/_graft_buckets").toPath, "8".getBytes("UTF-8"))
+    })
 
-  test("upsertParquetBucketed: newest wins; untouched buckets not rewritten") {
-    val dir = Files.createTempDirectory("graft_upsertb").toString + "/t"
-    val nB = 8
-    // seed: 200 keys spread across all buckets
-    val seed = (0 until 200).map(i => (s"k$i", 1L, i.toLong))
-    Sinks.upsertParquetBucketed(seed.toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nB)
-    val before = new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
-      .map(d => d.getName -> d.listFiles().map(f => (f.getName, f.lastModified)).toSet).toMap
-    assert(before.size == nB, s"expected all $nB buckets populated")
+  /** Every file of each `__shift=` partition under `dir`, by name, with
+    * its bytes. */
+  private def shiftFiles(dir: String): Map[String, Map[String, Seq[Byte]]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("__shift=")).map { d =>
+      d.getName -> d.listFiles().map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    }.toMap
 
-    // upsert 3 keys (newer version) + 1 new key
-    Sinks.upsertParquetBucketed(
-      Seq(("k5", 2L, 999L), ("k6", 2L, 998L), ("k7", 0L, 0L), ("kNEW", 1L, 777L))
-        .toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nB)
+  test("upsertParquetPartitioned: newest wins; untouched __shift= partitions' files are byte-identical") {
+    val dir = Files.createTempDirectory("graft_upsertp").toString + "/t"
+    def rid(i: Any, day: Int) = s"P$i|A|2024-03-0$day|1"
+    // seed: 200 keys over 8 shift partitions
+    val seed = (0 until 200).map(i => (rid(i, i % 8 + 1), 1L, i.toLong))
+    Sinks.upsertParquetPartitioned(seed.toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
+    val before = shiftFiles(dir)
+    assert(before.size == 8, s"expected all 8 shift partitions populated: ${before.keySet}")
+
+    // upsert 3 keys (one with an older version) + 1 new key
+    Sinks.upsertParquetPartitioned(
+      Seq((rid(5, 6), 2L, 999L), (rid(6, 7), 2L, 998L), (rid(7, 8), 0L, 0L), (rid("NEW", 6), 1L, 777L))
+        .toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
 
     val got = Sinks.readUpsertedBucketed(spark, dir)
-      .select("k", "x").as[(String, Long)].collect().toMap
+      .select("record_id", "x").as[(String, Long)].collect().toMap
     assert(got.size == 201)
-    assert(got("k5") == 999L && got("k6") == 998L)
-    assert(got("k7") == 7L, "older version must not regress the row")
-    assert(got("kNEW") == 777L && got("k0") == 0L)
+    assert(got(rid(5, 6)) == 999L && got(rid(6, 7)) == 998L)
+    assert(got(rid(7, 8)) == 7L, "older version must not regress the row")
+    assert(got(rid("NEW", 6)) == 777L && got(rid(0, 1)) == 0L)
 
-    // only the buckets containing the 4 batch keys were rewritten
-    val touched = Seq("k5", "k6", "k7", "kNEW").toDF("k")
-      .select(pmod(hash(col("k")), lit(nB))).as[Int].collect()
-      .map(b => s"__bucket=$b").toSet
-    val after = new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
-      .map(d => d.getName -> d.listFiles().map(f => (f.getName, f.lastModified)).toSet).toMap
-    before.foreach { case (bucket, files) =>
-      if (!touched(bucket))
-        assert(after(bucket) == files, s"untouched $bucket was rewritten")
-      else assert(after(bucket) != files, s"touched $bucket unchanged")
+    // only the partitions of the 4 batch keys were rewritten
+    val touched = Set(6, 7, 8).map(d => s"__shift=2024-03-0$d|1")
+    val after = shiftFiles(dir)
+    assert(after.keySet == before.keySet)
+    before.foreach { case (shift, files) =>
+      if (!touched(shift)) assert(after(shift) == files, s"untouched $shift was rewritten")
+      else assert(after(shift) != files, s"touched $shift unchanged")
     }
   }
 
-  test("upsertParquetBucketed: changing nBuckets on an existing table is refused") {
-    val dir = Files.createTempDirectory("graft_upsertb2").toString + "/t"
-    Sinks.upsertParquetBucketed(
-      Seq(("a", 1L, 1L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nBuckets = 8)
-    val e = intercept[IllegalArgumentException] {
-      Sinks.upsertParquetBucketed(
-        Seq(("b", 1L, 2L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nBuckets = 16)
-    }
-    assert(e.getMessage.contains("nBuckets=8"))
-  }
+  test("upsertParquetPartitioned: refuses a flat or __bucket= table; migrateLayout adopts it") {
+    val (ra, rb, rc) = ("P1|A|2024-03-05|1", "P2|A|2024-03-05|2", "P3|A|2024-03-06|1")
+    for ((layout, writeOld) <- legacyLayouts) {
+      val dir = Files.createTempDirectory("graft_upsert_mig").toString + "/t"
+      writeOld(Seq((ra, 1L, 10L), (rb, 1L, 20L)).toDF("record_id", "v", "x"), dir)
+      val e = intercept[IllegalArgumentException] {
+        Sinks.upsertParquetPartitioned(
+          Seq((rc, 1L, 30L)).toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
+      }
+      assert(e.getMessage.contains("migrateLayout"), s"$layout: ${e.getMessage}")
+      assert(spark.read.parquet(dir).count() == 2, s"$layout: a refused call must leave the table")
 
-  test("upsertParquetBucketed: refuses a flat table; migrateLayout adopts it") {
-    val dir = Files.createTempDirectory("graft_upsertb3").toString + "/t"
-    // a round-3-era flat table written by the non-bucketed upsert
-    Sinks.upsertParquet(
-      Seq(("a", 1L, 10L), ("b", 1L, 20L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"))
-    val e = intercept[IllegalArgumentException] {
-      Sinks.upsertParquetBucketed(
-        Seq(("c", 1L, 30L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nBuckets = 8)
+      Sinks.migrateLayout(spark, dir)
+      assert(dirNames(dir, "__") == Set("__shift=2024-03-05|1", "__shift=2024-03-05|2"), layout)
+      Sinks.upsertParquetPartitioned(
+        Seq((ra, 2L, 99L), (rc, 1L, 30L)).toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
+      val got = Sinks.readUpsertedBucketed(spark, dir)
+      assert(got.columns.toSeq == Seq("record_id", "v", "x"), layout)
+      assert(got.select("record_id", "x").as[(String, Long)].collect().toMap ==
+        Map(ra -> 99L, rb -> 20L, rc -> 30L), layout)
     }
-    assert(e.getMessage.contains("migrateLayout"))
-    // the refused call must not have poisoned the table with a marker
-    assert(spark.read.parquet(dir).count() == 2)
-
-    Sinks.migrateLayout(spark, dir, Sinks.Buckets(Seq("k"), 8))
-    Sinks.upsertParquetBucketed(
-      Seq(("a", 2L, 99L), ("c", 1L, 30L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), 8)
-    val got = Sinks.readUpsertedBucketed(spark, dir)
-      .select("k", "x").as[(String, Long)].collect().toMap
-    assert(got == Map("a" -> 99L, "b" -> 20L, "c" -> 30L))
   }
 
   test("upsertParquetPartitioned refuses a batch whose columns differ from the table's") {
     val dir = Files.createTempDirectory("graft_upsert_schema").toString + "/t"
-    Sinks.upsertParquetBucketed(
-      Seq(("a", 1L, 10L), ("b", 1L, 20L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), 1)
-    Seq(Seq(("a", 2L)).toDF("k", "v"),                   // lacks x: x would vanish from b
-        Seq(("a", 2L, "10")).toDF("k", "v", "x"),         // x retyped
-        Seq(("a", 2L, 10L, 1)).toDF("k", "v", "x", "y")   // adds y
+    val (ra, rb) = ("P1|A|2024-03-05|1", "P2|A|2024-03-05|1")
+    Sinks.upsertParquetPartitioned(
+      Seq((ra, 1L, 10L), (rb, 1L, 20L)).toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
+    Seq(Seq((ra, 2L)).toDF("record_id", "v"),                   // lacks x: x would vanish from rb
+        Seq((ra, 2L, "10")).toDF("record_id", "v", "x"),         // x retyped
+        Seq((ra, 2L, 10L, 1)).toDF("record_id", "v", "x", "y")   // adds y
     ).foreach { batch =>
       val e = intercept[IllegalArgumentException] {
-        Sinks.upsertParquetBucketed(batch, dir, Seq("k"), Seq("v"), 1)
+        Sinks.upsertParquetPartitioned(batch, dir, Seq("record_id"), Seq("v"))
       }
       assert(e.getMessage.contains("full schema"), e.getMessage)
     }
-    assert(Sinks.readUpsertedBucketed(spark, dir).select("k", "v", "x")
-      .as[(String, Long, Long)].collect().sorted.toSeq == Seq(("a", 1L, 10L), ("b", 1L, 20L)),
+    assert(Sinks.readUpsertedBucketed(spark, dir).select("record_id", "v", "x")
+      .as[(String, Long, Long)].collect().sorted.toSeq == Seq((ra, 1L, 10L), (rb, 1L, 20L)),
       "a refused batch must leave the table as it was")
-    Sinks.upsertParquetBucketed(Seq(("a", 2L, 11L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), 1)
-    assert(Sinks.readUpsertedBucketed(spark, dir).select("k", "x").as[(String, Long)]
-      .collect().sorted.toSeq == Seq("a" -> 11L, "b" -> 20L))
-  }
-
-  test("upsertParquetBucketed: first write to a fresh table succeeds (default path)") {
-    // regression: the marker used to materialize the dir before the first
-    // data write, and the merge-read then died on UNABLE_TO_INFER_SCHEMA
-    val dir = Files.createTempDirectory("graft_upsertb4").toString + "/t"
-    Sinks.upsertParquetBucketed(
-      Seq(("a", 1L, 1L)).toDF("k", "v", "x"), dir, Seq("k"), Seq("v"))
-    assert(Sinks.readUpsertedBucketed(spark, dir).count() == 1)
-  }
-
-  test("lookupBucketed: point lookup partition-prunes to one bucket") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = Files.createTempDirectory("graft_lookup").toString + "/t"
-    val nB = 8
-    val seed = (0 until 200).map(i => (s"k$i", 1L, i.toLong))
-    Sinks.upsertParquetBucketed(seed.toDF("k", "v", "x"), dir, Seq("k"), Seq("v"), nB)
-
-    val res = Sinks.lookupBucketed(spark, dir, Seq("k"), Seq("k42"))
-    assert(res.select("x").as[Long].collect().toSeq == Seq(42L))
-    // the lookup must reach the scan as a PARTITION filter (one
-    // __bucket= dir opened), not as a data filter over the whole table
-    val qe = res.queryExecution
-    qe.toRdd.count() // execute so the scan's numFiles metric is populated
-    val scans = qe.executedPlan.collect {
-      case s: FileSourceScanExec => s }
-    assert(scans.nonEmpty && scans.forall(_.partitionFilters.nonEmpty),
-      "bucket predicate did not become a partition filter")
-    val filesRead = scans.map(_.metrics("numFiles").value).sum
-    val filesTotal = spark.read.parquet(dir).inputFiles.length
-    assert(filesRead < filesTotal,
-      s"lookup read $filesRead of $filesTotal files — no pruning happened")
-  }
-
-  test("lookupBucketed: literal type narrower than the stored key still finds the row") {
-    val dir = Files.createTempDirectory("graft_lookup_t").toString + "/t"
-    val seed = (0 until 100).map(i => (i.toLong, 1L, i.toString))
-    Sinks.upsertParquetBucketed(seed.toDF("id", "v", "x"), dir, Seq("id"), Seq("v"), 8)
-    // probe with Int literals against the Long key column: Murmur3 over
-    // 4 bytes != over 8 bytes, so an uncast literal would prune to the
-    // WRONG __bucket= partition and silently return nothing
-    (40 to 44).foreach { i =>
-      val got = Sinks.lookupBucketed(spark, dir, Seq("id"), Seq(i)) // Int vs Long
-        .select("x").as[String].collect().toSeq
-      assert(got == Seq(i.toString), s"lookup for id=$i returned $got")
-    }
-  }
-
-  test("mergeSql: refuses empty key/version; escaped identifiers still parse") {
-    import org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
-    val e = intercept[IllegalArgumentException] {
-      Sinks.mergeSql("t", "s", Seq("k", "v"), Seq("k"), Nil)
-    }
-    assert(e.getMessage.contains("version"))
-    // an empty version seq used to render `WHEN MATCHED AND ()` — a
-    // runtime parse failure; reserved words / spaces in identifiers
-    // used to break the statement entirely
-    val sql = Sinks.mergeSql("lake.select", "src",
-      Seq("record id", "order", "ts"), Seq("record id"), Seq("ts"))
-    assert(spark.sessionState.sqlParser.parsePlan(sql).isInstanceOf[MergeIntoTable])
-  }
-
-  test("upsertDelta: generated MERGE parses to the expected plan shape") {
-    import org.apache.spark.sql.catalyst.plans.logical.{InsertAction, MergeIntoTable, UpdateAction}
-    val sql = Sinks.mergeSql("lake.production_records", "src",
-      Seq("record_id", "produced", "ts", "rank"), Seq("record_id"), Seq("ts", "rank"))
-    val m = spark.sessionState.sqlParser.parsePlan(sql).asInstanceOf[MergeIntoTable]
-    assert(m.mergeCondition.sql.toLowerCase.contains("record_id"))
-    m.matchedActions match {
-      case Seq(UpdateAction(Some(cond), assigns, _)) =>
-        assert(assigns.size == 4)
-        // strictly-newer guard, lexicographic over (ts, rank)
-        val c = cond.sql.toLowerCase
-        assert(c.contains("ts") && c.contains("rank"))
-      case other => fail(s"expected one conditional UPDATE, got $other")
-    }
-    m.notMatchedActions match {
-      case Seq(InsertAction(None, assigns)) => assert(assigns.size == 4)
-      case other => fail(s"expected one unconditional INSERT, got $other")
-    }
-    assert(m.notMatchedBySourceActions.isEmpty,
-      "MERGE must never touch target rows absent from the batch")
-  }
-
-  test("upsertDelta through a file-backed MERGE runner ≡ upsertParquet") {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
-    import org.apache.spark.sql.expressions.Window
-    val root = Files.createTempDirectory("graft_delta").toString
-    val (dirD, dirP) = (s"$root/delta", s"$root/plain")
-    val keys = Seq("k"); val version = Seq("v")
-    // a stand-in for DeltaTable.merge: takes the GENERATED statement,
-    // resolves the source through the parsed plan (proving the temp view
-    // is live when the runner fires), applies MERGE row-level semantics
-    // to a parquet-backed target
-    def fake(sql: String): Unit = {
-      val m = spark.sessionState.sqlParser.parsePlan(sql).asInstanceOf[MergeIntoTable]
-      val srcName = m.sourceTable.collectFirst {
-        case r: UnresolvedRelation => r.multipartIdentifier.last
-      }.get
-      val src = spark.table(srcName)
-      val exists = new java.io.File(dirD).exists
-      val merged =
-        if (!exists) src.withColumn("__src", lit(1))
-        else spark.read.parquet(dirD).withColumn("__src", lit(0))
-          .unionByName(src.withColumn("__src", lit(1)))
-      // WHEN MATCHED AND strictly-newer → source; tie → target row wins
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy((version.map(c => col(c).desc) :+ col("__src").asc): _*)
-      merged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .drop("__rn", "__src")
-        .localCheckpoint()
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dirD)
-    }
-    val batches = Seq(
-      Seq(("a", 1L, 10L), ("b", 1L, 20L)),
-      Seq(("a", 2L, 99L), ("c", 1L, 30L)),
-      Seq(("a", 1L, 0L))) // stale version: must not regress the row
-    batches.foreach { b =>
-      Sinks.upsertDelta(b.toDF("k", "v", "x"), "t", keys, version, run = fake)
-      Sinks.upsertParquet(b.toDF("k", "v", "x"), dirP, keys, version)
-    }
-    def slurp(d: String) = spark.read.parquet(d)
-      .select("k", "v", "x").as[(String, Long, Long)].collect().sorted.toSeq
-    assert(slurp(dirD) == slurp(dirP))
-    assert(slurp(dirD) == Seq(("a", 2L, 99L), ("b", 1L, 20L), ("c", 1L, 30L)))
+    Sinks.upsertParquetPartitioned(
+      Seq((ra, 2L, 11L)).toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
+    assert(Sinks.readUpsertedBucketed(spark, dir).select("record_id", "x").as[(String, Long)]
+      .collect().sorted.toSeq == Seq(ra -> 11L, rb -> 20L))
   }
 
   test("applyActions with epoch id: histories replay is exactly-once") {
@@ -463,19 +333,16 @@ class SinksSpec extends SparkSpec
       .toDF("record_id", "station", "parte", "plan_date", "shift_id", "produced", "planned",
         "status_id", "ts", "rank")
     val update = Seq(ActionRow.updateQty("P1", "AAA", rid, 6L, 7, ts("2024-03-05 09:00:01")))
-    Seq[String => Unit](
-      Sinks.upsertParquet(old, _, Seq("record_id"), Seq("ts", "rank")),
-      Sinks.upsertParquetBucketed(old, _, Seq("record_id"), Seq("ts", "rank"), 8)
-    ).foreach { writeOld =>
+    for ((_, writeOld) <- legacyLayouts) {
       val outDir = Files.createTempDirectory("graft_rec_mig").toString
       val path = s"$outDir/production_records"
-      writeOld(path)
+      writeOld(old, path)
       val e = intercept[IllegalArgumentException] {
         Sinks.applyActions(update.toDS(), outDir, epochId = 0)
       }
       assert(e.getMessage.contains("migrateLayout"), e.getMessage)
       assert(records(outDir).map(_._2) == Seq(5L), "a refused epoch must leave the table as it was")
-      Sinks.migrateLayout(spark, path, Sinks.RecordShifts)
+      Sinks.migrateLayout(spark, path)
       assert(dirNames(path, "__") == Set("__shift=2024-03-05|1"))
       Sinks.applyActions(update.toDS(), outDir, epochId = 0)
       assert(records(outDir).map(r => r._1 -> r._2) == Seq(rid -> 6L))
@@ -567,7 +434,7 @@ class SinksSpec extends SparkSpec
     val dir = Files.createTempDirectory("graft_onesort").toString + "/t"
     def batch(v: Long) = (0 until 20).map(i => (s"P$i|A|2024-03-05|${i % 2 + 1}", v, i.toLong))
       .toDF("record_id", "v", "x")
-    Sinks.upsertParquetPartitioned(batch(1L), dir, Seq("record_id"), Seq("v"), Sinks.RecordShifts)
+    Sinks.upsertParquetPartitioned(batch(1L), dir, Seq("record_id"), Seq("v"))
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
@@ -578,7 +445,7 @@ class SinksSpec extends SparkSpec
     import scala.jdk.CollectionConverters._
     def writes = plans.asScala.filter(_.executedPlan.toString.contains("InsertIntoHadoopFsRelation"))
     try {
-      Sinks.upsertParquetPartitioned(batch(2L), dir, Seq("record_id"), Seq("v"), Sinks.RecordShifts)
+      Sinks.upsertParquetPartitioned(batch(2L), dir, Seq("record_id"), Seq("v"))
       val deadline = System.nanoTime() + 30e9.toLong // listener events arrive asynchronously
       while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
@@ -743,7 +610,7 @@ class SinksSpec extends SparkSpec
     Sinks.upsertParquetPartitioned(
       Seq((rA, "P1", "AAA", "2024-03-05", 1, 5L, 0L, 7, ts("2024-03-05 09:00:00")))
         .toDF("record_id", "station", "parte", "plan_date", "shift_id", "produced", "planned",
-          "status_id", "ts"), path, Seq("record_id"), Seq("ts"), Sinks.RecordShifts)
+          "status_id", "ts"), path, Seq("record_id"), Seq("ts"))
     val e = intercept[IllegalArgumentException](Sinks.applyActions(update.toDS(), outDir, epochId = 0))
     assert(e.getMessage.contains("full schema"), e.getMessage)
     assert(Sinks.readUpsertedBucketed(spark, path).select("produced").as[Long].collect().toSeq == Seq(5L))
