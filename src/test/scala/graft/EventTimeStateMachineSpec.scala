@@ -11,7 +11,8 @@ import graft.stream.StateMachine
 /** ST4 with the silence clock on EVENT time: the same Core transition
   * under EventTimeTimeout + withWatermark
   * ([[StateMachine.withDimTables]] with [[StateMachine.EventTime]]).
-  * Pins, on the default and the RocksDB state store:
+  * Pins, on the session's default state store (EventTimeTwsSpec pins
+  * the same two watermark cases on RocksDB):
   *  - the watermark (not the wall clock) closes a silent run, at the
   *    deterministic stamp lastTs + timeout;
   *  - observations later than the watermark allowance are DROPPED by
@@ -35,94 +36,73 @@ class EventTimeStateMachineSpec extends SparkSpec {
     (parts, mults, records)
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  /** The state stores each watermark case runs on: the session's
-    * default and RocksDB, the large-state production store. */
-  private val providers = Seq("default" -> None, "rocksdb" -> Some(
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-
-  private def onEachProvider(body: String => Unit): Unit = {
-    val prev = spark.conf.getOption(ProviderKey)
-    for ((name, provider) <- providers) {
-      provider.fold(spark.conf.unset(ProviderKey))(spark.conf.set(ProviderKey, _))
-      try withClue(s"[$name state store] ")(body(name))
-      finally prev.fold(spark.conf.unset(ProviderKey))(spark.conf.set(ProviderKey, _))
-    }
-  }
-
   private val eventTime = StateMachine.EventTime("10 seconds")
 
   test("watermark-driven close: silence in STREAM time closes 7→8 once, stamped lastTs + timeout") {
-    onEachProvider { store =>
-      implicit val sqlCtx = spark.sqlContext
-      val (parts, mults, records) = dims
-      val input = MemoryStream[PartObservation]
-      val sink = s"et_close_$store"
-      val q = StateMachine.withDimTables(input.toDS(), parts, mults, records,
-          timeoutMs = 30000L, clock = eventTime)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        // batch 1: AAA produces at 09:00
-        input.addData(
-          PartObservation(station, "AAA", "AAA", 10, 1.5, ts("2024-03-05 09:00:00")),
-          PartObservation(station, "AAA", "AAA", 12, 1.5, ts("2024-03-05 09:00:10")))
-        q.processAllAvailable()
-        // wall-clock time passes but the STREAM clock is parked at
-        // watermark 09:00:00 (< deadline 09:00:40): no close may fire,
-        // no matter how long the query idles
-        Thread.sleep(1500)
-        q.processAllAvailable()
-        val whileParked = spark.table(sink).as[ActionRow].collect()
-        assert(!whileParked.exists(_.action == ActionRow.Close),
-          "close must follow the watermark, not the wall clock")
-        // batch 2: a DIFFERENT key carries the stream clock to 09:10;
-        // the watermark (09:09:50) passes AAA's deadline and the engine's
-        // no-data batch fires the timeout
-        input.addData(
-          PartObservation(station, "BBB", "BBB", 1, 0.5, ts("2024-03-05 09:10:00")))
-        q.processAllAvailable()
-        val actions = spark.table(sink).as[ActionRow].collect()
-        val closes = actions.filter(_.action == ActionRow.Close)
-        assert(closes.map(_.parte).toSeq == Seq("AAA"),
-          s"exactly AAA's silent run closes (BBB is live): ${closes.toSeq}")
-        assert(closes.head.ts == ts("2024-03-05 09:00:40"),
-          "close stamp is lastTs + timeout — pure event time, replay-deterministic")
-      } finally q.stop()
-    }
+    implicit val sqlCtx = spark.sqlContext
+    val (parts, mults, records) = dims
+    val input = MemoryStream[PartObservation]
+    val q = StateMachine.withDimTables(input.toDS(), parts, mults, records,
+        timeoutMs = 30000L, clock = eventTime)
+      .writeStream.format("memory").queryName("et_close")
+      .outputMode(OutputMode.Append).start()
+    try {
+      // batch 1: AAA produces at 09:00
+      input.addData(
+        PartObservation(station, "AAA", "AAA", 10, 1.5, ts("2024-03-05 09:00:00")),
+        PartObservation(station, "AAA", "AAA", 12, 1.5, ts("2024-03-05 09:00:10")))
+      q.processAllAvailable()
+      // wall-clock time passes but the STREAM clock is parked at
+      // watermark 09:00:00 (< deadline 09:00:40): no close may fire,
+      // no matter how long the query idles
+      Thread.sleep(1500)
+      q.processAllAvailable()
+      val whileParked = spark.table("et_close").as[ActionRow].collect()
+      assert(!whileParked.exists(_.action == ActionRow.Close),
+        "close must follow the watermark, not the wall clock")
+      // batch 2: a DIFFERENT key carries the stream clock to 09:10;
+      // the watermark (09:09:50) passes AAA's deadline and the engine's
+      // no-data batch fires the timeout
+      input.addData(
+        PartObservation(station, "BBB", "BBB", 1, 0.5, ts("2024-03-05 09:10:00")))
+      q.processAllAvailable()
+      val actions = spark.table("et_close").as[ActionRow].collect()
+      val closes = actions.filter(_.action == ActionRow.Close)
+      assert(closes.map(_.parte).toSeq == Seq("AAA"),
+        s"exactly AAA's silent run closes (BBB is live): ${closes.toSeq}")
+      assert(closes.head.ts == ts("2024-03-05 09:00:40"),
+        "close stamp is lastTs + timeout — pure event time, replay-deterministic")
+    } finally q.stop()
   }
 
   test("late observation beyond the allowance is dropped: gate unmoved, closed run not resurrected") {
-    onEachProvider { store =>
-      implicit val sqlCtx = spark.sqlContext
-      val (parts, mults, records) = dims
-      val input = MemoryStream[PartObservation]
-      val sink = s"et_late_$store"
-      val q = StateMachine.withDimTables(input.toDS(), parts, mults, records,
-          timeoutMs = 30000L, clock = eventTime)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(
-          PartObservation(station, "AAA", "AAA", 10, 1.5, ts("2024-03-05 09:00:00")))
-        q.processAllAvailable()
-        input.addData( // stream clock → watermark 09:09:50 after this batch
-          PartObservation(station, "BBB", "BBB", 1, 0.5, ts("2024-03-05 09:10:00")))
-        q.processAllAvailable()
-        // AAA's run closes in this batch; the LATE row (08:59:00, far
-        // below watermark) must be filtered before the state function —
-        // were it admitted, it would re-create state and emit an update
-        input.addData(
-          PartObservation(station, "AAA", "AAA", 99, 1.5, ts("2024-03-05 08:59:00")),
-          PartObservation(station, "BBB", "BBB", 2, 0.5, ts("2024-03-05 09:10:30")))
-        q.processAllAvailable()
-        val actions = spark.table(sink).as[ActionRow].collect()
-        assert(!actions.exists(a => a.parte == "AAA" && a.quantity == 99),
-          "a counter-99 history row would mean the late observation reached the gate")
-        assert(actions.count(a => a.parte == "AAA" && a.action == ActionRow.Close) == 1,
-          "the silent run still closes exactly once")
-      } finally q.stop()
-    }
+    implicit val sqlCtx = spark.sqlContext
+    val (parts, mults, records) = dims
+    val input = MemoryStream[PartObservation]
+    val q = StateMachine.withDimTables(input.toDS(), parts, mults, records,
+        timeoutMs = 30000L, clock = eventTime)
+      .writeStream.format("memory").queryName("et_late")
+      .outputMode(OutputMode.Append).start()
+    try {
+      input.addData(
+        PartObservation(station, "AAA", "AAA", 10, 1.5, ts("2024-03-05 09:00:00")))
+      q.processAllAvailable()
+      input.addData( // stream clock → watermark 09:09:50 after this batch
+        PartObservation(station, "BBB", "BBB", 1, 0.5, ts("2024-03-05 09:10:00")))
+      q.processAllAvailable()
+      // AAA's run closes in this batch; the LATE row (08:59:00, far
+      // below watermark) must be filtered before the state function —
+      // were it admitted, it would re-create state and emit an update
+      input.addData(
+        PartObservation(station, "AAA", "AAA", 99, 1.5, ts("2024-03-05 08:59:00")),
+        PartObservation(station, "BBB", "BBB", 2, 0.5, ts("2024-03-05 09:10:30")))
+      q.processAllAvailable()
+      val actions = spark.table("et_late").as[ActionRow].collect()
+      assert(!actions.exists(a => a.parte == "AAA" && a.quantity == 99),
+        "a counter-99 history row would mean the late observation reached the gate")
+      assert(actions.count(a => a.parte == "AAA" && a.action == ActionRow.Close) == 1,
+        "the silent run still closes exactly once")
+    } finally q.stop()
   }
 
   test("in-order input, closes disabled: event-time host ≡ processing-time host") {

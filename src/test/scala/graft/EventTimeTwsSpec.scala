@@ -8,18 +8,16 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.model._
 import graft.stream.StateMachine
 
-/** The event-time silence clock on the `transformWithState` host
-  * ([[StateMachine.withDimTablesEventTimeTws]]): both stateful APIs
-  * must now carry BOTH clocks. Pins, on RocksDB (a transformWithState
-  * requirement):
+/** The event-time silence clock on RocksDB, the large-state production
+  * store. The spec is named for the transformWithState host it first
+  * pinned, which required RocksDB; that host is gone and
+  * [[StateMachine.withDimTables]] with [[StateMachine.EventTime]] is the
+  * one event-time host, so the same two cases now run through it:
   *  - the watermark (not the wall clock) closes a silent run, at the
-  *    deterministic stamp lastTs + timeout — same as the
-  *    flatMapGroupsWithState event-time host;
+  *    deterministic stamp lastTs + timeout;
   *  - observations later than the watermark allowance are dropped by
-  *    the engine before the processor sees them;
-  *  - scenario-for-scenario equivalence with
-  *    [[StateMachine.withDimTablesEventTime]] on the same input —
-  *    the Core transition is shared, only the timer plumbing differs.
+  *    the engine before the state function sees them.
+  * EventTimeStateMachineSpec pins both on the session's default store.
   */
 class EventTimeTwsSpec extends SparkSpec {
   import spark.implicits._
@@ -47,13 +45,15 @@ class EventTimeTwsSpec extends SparkSpec {
     }
   }
 
+  private val eventTime = StateMachine.EventTime("10 seconds")
+
   test("tws event-time close follows the watermark, stamped lastTs + timeout") {
     withRocksDB {
       implicit val sqlCtx = spark.sqlContext
       val (parts, mults, records) = dims
       val input = MemoryStream[PartObservation]
-      val q = StateMachine.withDimTablesEventTimeTws(input.toDS(), parts, mults,
-          records, timeoutMs = 30000L, maxLateness = "10 seconds")
+      val q = StateMachine.withDimTables(input.toDS(), parts, mults, records,
+          timeoutMs = 30000L, clock = eventTime)
         .writeStream.format("memory").queryName("ettws_close")
         .outputMode(OutputMode.Append).start()
       try {
@@ -86,8 +86,8 @@ class EventTimeTwsSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       val (parts, mults, records) = dims
       val input = MemoryStream[PartObservation]
-      val q = StateMachine.withDimTablesEventTimeTws(input.toDS(), parts, mults,
-          records, timeoutMs = 30000L, maxLateness = "10 seconds")
+      val q = StateMachine.withDimTables(input.toDS(), parts, mults, records,
+          timeoutMs = 30000L, clock = eventTime)
         .writeStream.format("memory").queryName("ettws_late")
         .outputMode(OutputMode.Append).start()
       try {
@@ -107,48 +107,6 @@ class EventTimeTwsSpec extends SparkSpec {
         assert(actions.count(a => a.parte == "AAA" && a.action == ActionRow.Close) == 1,
           "the silent run still closes exactly once")
       } finally q.stop()
-    }
-  }
-
-  test("event-time tws host ≡ event-time fmgws host on the same batched input") {
-    withRocksDB {
-      implicit val sqlCtx = spark.sqlContext
-      val (parts, mults, records) = dims
-      // three batches: produce, advance the stream clock (fires AAA's
-      // close), then a late row that must be dropped by both hosts
-      def drain(name: String,
-          wire: org.apache.spark.sql.Dataset[PartObservation] =>
-            org.apache.spark.sql.Dataset[ActionRow]): Seq[ActionRow] = {
-        val input = MemoryStream[PartObservation]
-        val q = wire(input.toDS()).writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append).start()
-        try {
-          input.addData(
-            PartObservation(station, "AAA", "AAA", 10, 1.5, ts("2024-03-05 09:00:00")),
-            PartObservation(station, "AAA", "AAA", 12, 1.5, ts("2024-03-05 09:00:10")))
-          q.processAllAvailable()
-          input.addData(
-            PartObservation(station, "BBB", "BBB", 1, 0.5, ts("2024-03-05 09:10:00")))
-          q.processAllAvailable()
-          input.addData(
-            PartObservation(station, "AAA", "AAA", 99, 1.5, ts("2024-03-05 08:59:00")),
-            PartObservation(station, "BBB", "BBB", 2, 0.5, ts("2024-03-05 09:10:30")))
-          q.processAllAvailable()
-        } finally q.stop()
-        spark.table(name).as[ActionRow].collect().toSeq
-      }
-      val key = (a: ActionRow) =>
-        (a.action, a.parte, a.recordId, a.ts.getTime, a.quantity, a.produced)
-      val viaTws = drain("ettws_equiv",
-        ds => StateMachine.withDimTablesEventTimeTws(ds, parts, mults, records,
-          timeoutMs = 30000L, maxLateness = "10 seconds")).sortBy(key)
-      val viaFmgws = drain("etfmgws_equiv",
-        ds => StateMachine.withDimTablesEventTime(ds, parts, mults, records,
-          timeoutMs = 30000L, maxLateness = "10 seconds")).sortBy(key)
-      assert(viaTws.nonEmpty, "event-time transformWithState emitted nothing")
-      assert(viaTws.exists(_.action == ActionRow.Close), "the close must have fired")
-      assert(viaTws == viaFmgws,
-        s"event-time hosts diverged:\ntws:   ${viaTws.mkString("\n  ")}\nfmgws: ${viaFmgws.mkString("\n  ")}")
     }
   }
 }

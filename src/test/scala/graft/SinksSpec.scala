@@ -62,6 +62,16 @@ class SinksSpec extends SparkSpec
     }
   }
 
+  test("upsertParquetPartitioned: first write to a fresh table succeeds") {
+    // the table directory does not exist yet: the layout check must let
+    // it through and the merge must not try to read what is not there
+    val dir = Files.createTempDirectory("graft_upsert_fresh").toString + "/t"
+    Sinks.upsertParquetPartitioned(
+      Seq(("P1|A|2024-03-05|1", 1L, 1L)).toDF("record_id", "v", "x"), dir, Seq("record_id"), Seq("v"))
+    assert(Sinks.readUpsertedBucketed(spark, dir).count() == 1)
+    assert(shiftFiles(dir).keySet == Set("__shift=2024-03-05|1"))
+  }
+
   test("upsertParquetPartitioned: refuses a flat or __bucket= table; migrateLayout adopts it") {
     val (ra, rb, rc) = ("P1|A|2024-03-05|1", "P2|A|2024-03-05|2", "P3|A|2024-03-06|1")
     for ((layout, writeOld) <- legacyLayouts) {
