@@ -413,7 +413,7 @@ object Bench {
   def ab(spark: SparkSession, args: Seq[String],
       queries: Map[String, Query] = SparkEntry.queries): Unit = {
     val (key, arms) = sys.env.getOrElse("SPARK_GRAFT_AB",
-      "graft.components.driverLimit=1000000|0").split("=", 2) match {
+      "graft.graph.driverLimit=1000000|0").split("=", 2) match {
       case Array(k, vs) if vs.contains("|") => (k, vs.split("\\|", 2).toSeq)
       case _ => throw new UsageError("SPARK_GRAFT_AB must read key=a|b")
     }

@@ -307,8 +307,7 @@ object Curation {
     * banding only the exact winners yields the same components as
     * banding everything — the losers connect through their winner's
     * content edge — and matches the chain's own `bands` stage, which
-    * the qc7 oracle restates). Components via the shared pointer-jump
-    * loop ([[Dedup.labelsFromEdges]]). */
+    * the qc7 oracle restates). Components via [[Graph.components]]. */
   private[graft] def membersFromSignals(sig: DataFrame): DataFrame = {
     val exactMin = sig.groupBy(col("content_key")).agg(min(col("doc_id")).as("id_a"))
     val exactE = sig.select(col("content_key"), col("doc_id"))
@@ -324,10 +323,10 @@ object Curation {
     val bandE = bk.join(bandMin, Seq("band", "key"))
       .filter(col("doc_id") =!= col("id_a"))
       .select(col("id_a"), col("doc_id").as("id_b"))
-    // no checkpoint: labelsFromEdges materializes the edge set itself
-    // (its driver-resolve size gate needs the count anyway)
+    // no checkpoint: Graph.components materializes the edge set itself,
+    // in the job that gates it
     val pairs = exactE.union(bandE).distinct()
-    Dedup.membersOf(sig.select(col("doc_id")), Dedup.labelsFromEdges(pairs))
+    Dedup.membersOf(sig.select(col("doc_id")), Graph.components(pairs))
   }
 
   /** Per-split deterministic prefix bins — [[TextOps.docBins]] run

@@ -476,17 +476,11 @@ object Dedup {
     * components and keep one canonical representative (min doc_id) per
     * cluster.
     *
-    * Algorithm: min-label propagation to a fixpoint — each round every
-    * node takes the min label among itself and its neighbours; rounds =
-    * O(component diameter). Each round is one shuffle-by-id join +
-    * aggregation, with `localCheckpoint()` cutting the growing lineage
-    * (the standard Spark iterative-graph pattern). Only docs that
-    * appear in a candidate pair enter the graph, so the iteration input
-    * is pair-space-sized, not corpus-sized. At 100 TB with adversarial
-    * long-chain graphs, swap the loop body for [[starComponents]] —
-    * the large-star/small-star rewrite (Kiveris et al., "Connected
-    * Components in MapReduce"), equivalence-pinned by DedupClusterSpec
-    * on this operator's own graph; the contract is unchanged.
+    * Algorithm: [[Graph.components]] over the LSH star edges — union-find
+    * on the driver for a graph within its gate, else min-label
+    * propagation with a pointer-jumping shortcut. Only docs that appear
+    * in a candidate pair enter the graph, so its input is
+    * pair-space-sized, not corpus-sized.
     */
   def qd6_dup_clusters(s: SparkSession, d: String): DataFrame = {
     val labels = dupLabels(s, d)
@@ -498,9 +492,8 @@ object Dedup {
   }
 
   /** The LSH near-dup graph's component labels (id, label = component
-    * min id) — qd6's pointer-jump loop, extracted so
-    * [[qd17_quality_canonical]] shares the exact same graph and
-    * convergence machinery. */
+    * min id), extracted so [[qd17_quality_canonical]] shares the exact
+    * same graph. */
   private[graft] def dupLabels(s: SparkSession, d: String): DataFrame =
     dupLabelsOf(Tables.spread(Tables.documents(s, d)))
 
@@ -516,142 +509,9 @@ object Dedup {
     // star edges, not the bucket clique: identical components (any two
     // bucket members connect through the bucket min), linear — not
     // quadratic — in hot-bucket size; see lshStarEdges.
-    // No checkpoint here: labelsFromEdges materializes the edge set
-    // itself (its size gate needs the count anyway) — round 17 dropped
-    // the double checkpoint this line used to pay.
-    labelsFromEdges(lshStarEdges(sigs))
-  }
-
-  /** The pointer-jump component loop over an arbitrary star-edge set
-    * `pairs` (id_a, id_b) — [[dupLabelsOf]]'s convergence machinery,
-    * split out (round 15) so [[Curation.membersFromSignals]] can build
-    * the SAME component labels from the curation chain's pass-1
-    * signals (content_key + row-local band keys) without a second
-    * text scan. Returns (id, label = component min id); nodes with no
-    * edge are absent (the callers' membersOf treats them as
-    * singletons). */
-  private[graft] def labelsFromEdges(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    // Route by measured size (round-17, guide §1.2 "the distributed
-    // algorithm first": the loop below costs 3 jobs of driver-side
-    // scheduling PER ROUND — ~1.5-3 s of a composed query's wall time
-    // at fixture scale for a graph that fits in one task). Edge sets
-    // under the limit resolve on the driver with union-find — the
-    // SAME gated-collect discipline as IngestDedup.resolveChains
-    // (bounded, conf-overridable, loud) — and the pointer-jump loop
-    // stays the at-scale path: a 100 TB corpus's near-dup graph has
-    // billions of edges and takes the loop below unchanged.
-    // DedupClusterSpec pins driver ≡ loop labels on the fixture graph.
-    val p0 = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .localCheckpoint()
-    val driverLimit = s.conf.getOption("graft.components.driverLimit")
-      .map(_.toLong).getOrElse(DriverComponentEdgeLimit)
-    if (p0.count() <= driverLimit) return unionFindLabels(p0)
-    // undirected: propagate labels both ways
-    val edges = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var converged = false
-    var rounds = 0
-    // pointer-jump shortcutting below makes convergence O(log diameter),
-    // so the cap is a can't-happen safety net (48 covers diameter 2^48),
-    // not a limit real near-dup graphs can hit; still overridable.
-    val maxRounds = s.conf.getOption("graft.qd6.maxRounds").map(_.toInt).getOrElse(48)
-    while (!converged && rounds < maxRounds) {
-      val prop = edges.join(labels, edges("dst") === labels("id"))
-        .select(col("src").as("id"), col("label"))
-        .union(labels)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint() // feeds both sides of the shortcut join
-      // shortcut: label := label(label). Every label is itself a node
-      // id, so one extra self-join halves the remaining chain depth
-      // (pointer jumping) — long chains converge in O(log d) rounds
-      // instead of O(d).
-      val propL = prop.select(col("id").as("lid"), col("label").as("llabel"))
-      val next = prop.join(propL, prop("label") === propL("lid"), "left")
-        .select(prop("id"), coalesce(col("llabel"), prop("label")).as("label"))
-        .localCheckpoint()
-      // labels only ever decrease, so "no change" == fixpoint
-      converged = next.withColumnRenamed("label", "next_label")
-        .join(labels, "id")
-        .filter(col("next_label") =!= col("label"))
-        .isEmpty
-      labels = next
-      rounds += 1
-    }
-    require(converged, s"qd6 label propagation did not converge in $rounds rounds" +
-      " (raise graft.qd6.maxRounds)")
-    labels
-  }
-
-  /** Edge-count gate for [[labelsFromEdges]]' driver-side resolve —
-    * IngestDedup.ChainResolveDriverLimit's batch twin, and the same
-    * budget arithmetic: 1M edges collect as ~16 MB of longs, far under
-    * any driver heap, and union-find with path compression labels them
-    * in tens of milliseconds vs the loop's ~3 scheduled jobs per
-    * round. Conf `graft.components.driverLimit` overrides (tests force
-    * 0 to exercise the loop). */
-  private[graft] val DriverComponentEdgeLimit = 1000000L
-
-  /** Driver-side component labels of a SMALL edge set: union-find with
-    * path compression + union by rank, then label = component MIN id —
-    * definitionally the loop's fixpoint (label propagation converges
-    * to the component minimum), so the two paths are result-identical
-    * on any graph; DedupClusterSpec pins it. */
-  private def unionFindLabels(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    val rows = pairs.collect()
-    val parent = new java.util.HashMap[Long, Long](rows.length * 4)
-    val rank = new java.util.HashMap[Long, Int](rows.length * 4)
-    def find(x0: Long): Long = {
-      var x = x0
-      while (parent.get(x) != x) {
-        val gp = parent.get(parent.get(x))
-        parent.put(x, gp) // path halving
-        x = gp
-      }
-      x
-    }
-    def add(x: Long): Unit =
-      if (!parent.containsKey(x)) { parent.put(x, x); rank.put(x, 0) }
-    rows.foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
-      add(a); add(b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        val (hi, lo) =
-          if (rank.get(ra) >= rank.get(rb)) (ra, rb) else (rb, ra)
-        parent.put(lo, hi)
-        if (rank.get(hi) == rank.get(lo)) rank.put(hi, rank.get(hi) + 1)
-      }
-    }
-    // component min id per root, then (id, label = its root's min)
-    val minOf = new java.util.HashMap[Long, Long](rows.length * 4)
-    val it0 = parent.keySet().iterator()
-    while (it0.hasNext) {
-      val id = it0.next()
-      val r = find(id)
-      if (!minOf.containsKey(r) || id < minOf.get(r)) minOf.put(r, id)
-    }
-    val out = new Array[(Long, Long)](parent.size())
-    var i = 0
-    val it1 = parent.keySet().iterator()
-    while (it1.hasNext) {
-      val id = it1.next()
-      out(i) = (id, minOf.get(find(id)))
-      i += 1
-    }
-    import s.implicits._
-    // width from the label count, not the core count (round-17): a
-    // 32-partition label table made EVERY downstream labels join a
-    // 32-task job (~2.5 s of executor overhead per join in qc7/qd19's
-    // profiles) for a frame that fits in one task by construction —
-    // the driver route only fires under the collect gate
-    s.createDataset(s.sparkContext.parallelize(out.toSeq,
-      graft.Tables.widthForRows(s, out.length.toLong)))
-      .toDF("id", "label")
+    // No checkpoint here: Graph.components materializes the edge set
+    // itself, in the job that gates it.
+    Graph.components(lshStarEdges(sigs))
   }
 
   /** qd17: quality-aware cluster canonicalization — the keep-decision a
@@ -1408,73 +1268,6 @@ object Dedup {
       // a (corpus, eval) pair reached through several probed cells
       // would count several times — hits are per distinct pair
       .select(col("vec_id"), col("eid"), col("rcos")).distinct()
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the loop body qd6's scaladoc promises for adversarial
-    * graphs: per round each node hooks its neighborhood onto the
-    * neighborhood minimum, which contracts even a pure path graph in
-    * O(log² n) rounds where plain min-label propagation (without
-    * qd6's pointer-jump shortcut) needs O(n). Per round: two
-    * groupBy-min + join passes over the EDGE list — edge-space-sized
-    * like qd6's loop, no corpus rows, no driver-side graph.
-    *
-    * Input: undirected candidate pairs `(id_a, id_b)`. Output:
-    * `(id, label)` — every node that appears in any pair, labeled by
-    * its component's minimum id. DedupClusterSpec pins equivalence
-    * with qd6's pointer-jump labels on the real LSH graph and with a
-    * local union-find on chain/star/random fixtures.
-    */
-  def starComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val s = pairs.sparkSession
-    def dedup(e: DataFrame) = e.filter(col("u") =!= col("v")).distinct()
-    // current edge set, kept oriented u -> v meaning "u knows v"
-    // (both directions present after this seed)
-    var edges = dedup(
-      pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-        .union(pairs.select(col("id_b").as("u"), col("id_a").as("v"))))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // large-star: around each center u, every LARGER neighbor hooks
-      // onto m = min(N(u) ∪ {u}). Edges to smaller neighbors are NOT
-      // re-emitted from this center — the smaller endpoint's own
-      // center view re-emits them (or hooks them lower), which is
-      // what contracts tall chains
-      val minsL = edges.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val large = edges.filter(col("v") > col("u")).join(minsL, "u")
-        .select(col("v").as("a"), col("m").as("b"))
-      val afterLarge = dedup(large.select(col("a").as("u"), col("b").as("v"))
-        .union(large.select(col("b").as("u"), col("a").as("v"))))
-        .localCheckpoint()
-      // small-star: orient each edge toward its larger endpoint
-      // (center u = max side, so every kept neighbor v < u); u and
-      // all its smaller neighbors hook onto the minimum
-      val small0 = afterLarge.filter(col("v") < col("u"))
-      val minsS = small0.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val joined = small0.join(minsS, "u")
-      val smallEdges = joined.select(col("v").as("a"), col("m").as("b"))
-        .union(joined.select(col("u").as("a"), col("m").as("b")))
-      val next = dedup(smallEdges.select(col("a").as("u"), col("b").as("v"))
-        .union(smallEdges.select(col("b").as("u"), col("a").as("v"))))
-        .localCheckpoint()
-      converged = next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty
-      edges = next
-      rounds += 1
-    }
-    require(converged,
-      s"starComponents did not converge in $rounds rounds (raise maxRounds)")
-    // fixpoint is a union of stars: every non-root points at exactly
-    // its component min; roots are the mins themselves
-    val members = edges.filter(col("v") < col("u"))
-      .select(col("u").as("id"), col("v").as("label"))
-    val roots = edges.select(least(col("u"), col("v")).as("id")).distinct()
-      .join(members.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("label", col("id"))
-    members.union(roots)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

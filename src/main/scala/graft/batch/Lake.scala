@@ -91,12 +91,11 @@ object Lake {
     * larger files. `sortCols` re-clusters each output file
     * (sortWithinPartitions — still no shuffle) so parquet row-group
     * min/max stats stay tight for point-lookup pushdown; coalescing
-    * alone concatenates sorted inputs and would destroy that. Returns
-    * (filesBefore, filesAfter). */
+    * alone concatenates sorted inputs and would destroy that. */
   def compactDirs(spark: SparkSession, srcs: Seq[String], dest: String,
                   targetBytes: Long = 128L * 1024 * 1024,
                   sortCols: Seq[String] = Nil,
-                  partitionCols: Seq[String] = Nil): (Int, Int) = {
+                  partitionCols: Seq[String] = Nil): Unit = {
     // with partition subdirs below each src, a multi-path read trips
     // Spark's conflicting-directory-structures check — read each root
     // (which then infers its own partition cols) and union
@@ -119,6 +118,5 @@ object Lake {
       if (sortCols.isEmpty) binned
       else binned.sortWithinPartitions(sortCols.map(col): _*)
     clustered.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(dest)
-    (before, spark.read.parquet(dest).inputFiles.length)
   }
 }

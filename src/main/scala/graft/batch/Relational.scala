@@ -555,11 +555,10 @@ object Relational {
     * cycles; qd6's min-label loop is the scalable form anyway.) */
   def q37_recursive_chain(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-    // Walk the per-customer order chain by POINTER DOUBLING (shared
-    // engine, PointerJump.rank) instead of Spark's WITH RECURSIVE: the
-    // recursion schedules one join round per hop (depth-D chain → D
-    // driver barriers — 2.7 s of pure scheduling at sf0.1), while
-    // doubling resolves the same walk in ceil(log2 D)+1 rounds. The
+    // Walk the per-customer order chain by POINTER DOUBLING (Graph.rank)
+    // instead of Spark's WITH RECURSIVE: the recursion schedules one
+    // join round per hop (depth-D chain → D driver barriers — 2.7 s
+    // of pure scheduling at sf0.1), while doubling resolves the same walk in ceil(log2 D)+1 rounds. The
     // predecessor pointer is the exact graph inverse of the reference
     // chain's k_next link (one window pass builds it); hop = distance
     // to the chain head + 1, identical to the recursion's hop counter.
@@ -567,8 +566,8 @@ object Relational {
       .select(col("o_custkey"), col("o_orderkey"))
       .withColumn("ptr", lag(col("o_orderkey"), 1).over(w))
       .withColumn("dist", when(col("ptr").isNull, 0L).otherwise(1L))
-    val (ranked, _) = PointerJump.rank(state, Seq("o_custkey"),
-      idCol = "o_orderkey", ptrCol = "ptr", distCol = "dist")
+    val (ranked, _) = Graph.rank(state, Seq("o_custkey"),
+      id = "o_orderkey", ptr = "ptr", dist = "dist")
     ranked.select(col("o_custkey").as("custkey"), col("o_orderkey"),
         (col("dist") + 1).cast("int").as("hop"))
       .orderBy("custkey", "hop")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.batch.Dedup
+import graft.batch.{Dedup, Graph}
 
 /** Dedup-at-ingest: the streaming form of qd1 (exact) + qd2 (near-dup)
   * for an incrementally built training corpus.
@@ -122,8 +122,8 @@ object IngestDedup {
     // so cluster accounting stays exactly-once; lm rejections append as
     // terminal rows (dup_of = null — a quality drop has no content
     // owner)
-    val ledger = resolveChains(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
-      .getOrElse(rejections(verdict)))
+    val ledger = Graph.terminals(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
+      .getOrElse(rejections(verdict)), "doc_id", "dup_of", Seq("reason"))
     StoreEpoch.commit(stores(keep, dir) :+ StoreEpoch.Write(s"$dir/ledger", ledger),
       epochId, Sinks.DriverRouteRows)
   }
@@ -223,8 +223,8 @@ object IngestDedup {
     * dup_of = the smallest such mate), `near_corpus` (shares a band with
     * an admitted doc; dup_of = the smallest owner). A dup_of may name a
     * batch-mate that itself lost — callers resolve chains
-    * ([[resolveChains]]) before writing the ledger. dup_of is null only
-    * against a pre-owner-column legacy index.
+    * ([[Graph.terminals]]) before writing the ledger. dup_of is null
+    * only against a pre-owner-column legacy index.
     *
     * The index sides are corpus-lifetime (unbounded); the batch side is
     * one micro-batch (bounded). The default SMJ joins would therefore
@@ -370,86 +370,9 @@ object IngestDedup {
     verdicts.filter(col("reason").isNotNull)
       .select(col(id).as("doc_id"), col("dup_of"), col("reason"))
 
-  /** Ledgers at most this large resolve their dup_of chains on the
-    * driver (one collect of 3 narrow columns, ≤ ~40 MB) instead of the
-    * iterative join loop — the loop's ~3 jobs per round of driver-side
-    * scheduling cost ~5 s per micro-batch at trickle sizes, three
-    * orders of magnitude more than chasing pointers in a hash map.
-    * Only a bulk backfill's rejection set can exceed this, and it
-    * amortizes the loop. */
-  private[stream] val ChainResolveDriverLimit = 1000000L
-
-  /** Rewrite in-batch dup_of chains (doc → batch-mate that itself
-    * lost a later stage) to their terminal target. Stage order is a
-    * DAG, so chains are finite and strictly id-decreasing within a
-    * batch; each row keeps ITS OWN rejection reason. Batch-bounded
-    * ledgers ([[ChainResolveDriverLimit]]) come to the driver in one
-    * bounded collect ([[StoreEpoch.gate]]) and resolve there, and the
-    * result is a local frame; larger ones take the pointer-jump join
-    * loop, whose resolved
-    * depth DOUBLES per round so the round cap bounds depth at 2^40
-    * — the loop exits via the convergence check long before that on
-    * any real ledger. `driverLimit` is injectable for tests only. */
-  private[stream] def resolveChains(
-      rej: DataFrame,
-      driverLimit: Long = ChainResolveDriverLimit): DataFrame = {
-    val cur0 = rej.localCheckpoint(eager = false) // filled by the gate
-    // one bounded collect decides the route and brings the rows
-    StoreEpoch.gate(cur0.select(col("doc_id"), col("dup_of"), col("reason")),
-        driverLimit)._1 match {
-      case Some(rows) =>
-        val dupOf = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
-        rows.foreach(r => dupOf.put(r.getLong(0),
-          if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))))
-        // Memoized path compression: each node's terminal is computed
-        // once, so total work is O(rows) no matter how deep the chains
-        // get (a chained-neighbor LSH cluster yields depth ∝ cluster
-        // DIAMETER, not stage count — the same adversarial shape qd6's
-        // large-star/small-star rounds exist for). The hop bound is a
-        // cycle guard only — chains are strictly id-decreasing so a
-        // cycle means corrupted input, not a long chain.
-        val memo = new java.util.HashMap[Long, java.lang.Long](rows.length * 2)
-        def terminal(start: java.lang.Long): java.lang.Long = {
-          var t = start
-          var hops = 0
-          val path = new java.util.ArrayList[Long]()
-          while (t != null && !memo.containsKey(t.longValue()) &&
-              dupOf.containsKey(t.longValue()) &&
-              dupOf.get(t.longValue()) != null) {
-            path.add(t.longValue())
-            t = dupOf.get(t.longValue())
-            hops += 1
-            require(hops <= dupOf.size,
-              "ingest ledger: dup_of chain cycled (corrupted batch frame)")
-          }
-          val term = if (t != null && memo.containsKey(t.longValue()))
-            memo.get(t.longValue()) else t
-          var i = 0
-          while (i < path.size) { memo.put(path.get(i), term); i += 1 }
-          term
-        }
-        val s = cur0.sparkSession
-        import s.implicits._
-        rows.map { r =>
-          (r.getLong(0),
-            Option(terminal(if (r.isNullAt(1)) null else Long.box(r.getLong(1))))
-              .map(_.longValue()),
-            r.getUTF8String(2).toString)
-        }.toDF("doc_id", "dup_of", "reason")
-      case None =>
-        // Pointer-doubling join loop (shared engine, batch.PointerJump):
-        // resolved depth doubles per round, convergence fails loudly on
-        // odd cycles (no fixpoint) and even cycles (collapse to
-        // self-pointing rows, rejected by the engine's post-loop guard).
-        graft.batch.PointerJump.resolveTerminal(cur0,
-          idCol = "doc_id", ptrCol = "dup_of", carry = Seq("reason"),
-          what = "ingest ledger: dup_of")
-    }
-  }
-
-  /** Rejected docs per reason in a [[resolveChains]] ledger: counted on
-    * the driver when the ledger was resolved there (a local frame, no
-    * job), else by one aggregate. */
+  /** Rejected docs per reason in a chain-resolved ledger
+    * ([[Graph.terminals]]): counted on the driver when the ledger was
+    * resolved there (a local frame, no job), else by one aggregate. */
   private[stream] def reasonCounts(ledger: DataFrame): Map[String, Long] =
     if (StoreEpoch.isLocal(ledger))
       StoreEpoch.localRows(ledger.select(col("reason"))).toSeq

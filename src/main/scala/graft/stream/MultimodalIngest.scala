@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.batch.Graph
+
 /** The composed ingest membrane for a multimodal training corpus: one
   * `foreachBatch` that runs every dedup-at-ingest filter over documents
   * carrying `text`, `embedding`, and (optionally) `media` columns —
@@ -240,7 +242,8 @@ object MultimodalIngest {
     val stageRows = Seq(IngestDedup.rejections(textV)) ++
       lmRej.map(IngestDedup.lmRows) ++ mediaV.map(IngestDedup.rejections(_)) :+
       IngestDedup.rejections(embedV, "vec_id")
-    val ledger = IngestDedup.resolveChains(stageRows.reduce(_ unionByName _))
+    val ledger = Graph.terminals(stageRows.reduce(_ unionByName _), "doc_id", "dup_of",
+      Seq("reason"))
 
     // commit, mirroring the single-membrane writes: OVERWRITE of each
     // epoch partition is the idempotence point in every store. The

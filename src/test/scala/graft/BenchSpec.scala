@@ -81,7 +81,7 @@ class BenchSpec extends SparkSpec {
       assert(lines.size == 2 && lines.head.startsWith(s"${prefix}q_a ") &&
         lines(1).startsWith(s"${prefix}q_b "), s"$mode printed:\n${lines.mkString("\n")}")
     }
-    assert(spark.conf.getOption("graft.components.driverLimit").isEmpty,
+    assert(spark.conf.getOption("graft.graph.driverLimit").isEmpty,
       "ab must leave the session conf it flips as it found it")
   }
 

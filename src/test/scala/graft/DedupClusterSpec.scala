@@ -149,88 +149,4 @@ class DedupClusterSpec extends SparkSpec {
       .filter(col("ca") =!= col("cb"))
     assert(violated.isEmpty, "every candidate pair must land in one cluster")
   }
-
-  // local union-find reference for the star-components equivalences
-  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    parent.keys.map(k => k -> find(k)).toMap
-  }
-
-  private def starLabels(edges: Seq[(Long, Long)], maxRounds: Int = 64): Map[Long, Long] = {
-    import spark.implicits._
-    Dedup.starComponents(edges.toDF("id_a", "id_b"), maxRounds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  test("large-star/small-star: a 256-node path needs O(log² n) rounds, not O(n)") {
-    // the adversarial case the qd6 scaladoc names: plain min-label
-    // propagation walks a path one hop per round; the star rewrite
-    // must collapse it well under the 64-round cap (and in far fewer
-    // than the 255 rounds a hop-per-round loop would take)
-    val chain = (0L until 255L).map(i => (i, i + 1))
-    val labels = starLabels(chain, maxRounds = 30)
-    assert(labels.keySet == (0L to 255L).toSet)
-    assert(labels.values.forall(_ == 0L), "one path component, rooted at 0")
-  }
-
-  test("star components ≡ union-find on star, two-component, and seeded random graphs") {
-    val star = (1L to 40L).map(i => (0L, i))
-    val two = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L))
-    val rnd = new scala.util.Random(7)
-    val random = Seq.fill(200)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
-      .filter { case (a, b) => a != b }
-    Seq(star, two, random).foreach { edges =>
-      val got = starLabels(edges)
-      val want = unionFind(edges)
-      assert(got == want, s"diverged from union-find on ${edges.take(5)}…")
-    }
-  }
-
-  test("star components ≡ qd6's pointer-jump labels on the real LSH graph") {
-    val pairs = Dedup.qd2_minhash_lsh(spark, sf).select(col("id_a"), col("id_b"))
-    val got = Dedup.starComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = Dedup.qd6_dup_clusters(spark, sf)
-      .select(col("doc_id"), col("cluster_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want, "the two loop bodies must produce identical clusters")
-  }
-
-  test("driver union-find route ≡ the distributed pointer-jump loop") {
-    // round-17: labelsFromEdges routes small edge sets to a driver
-    // union-find (IngestDedup.resolveChains' gated-collect twin). Pin
-    // both routes label-identical on adversarial shapes AND the real
-    // fixture graph, by forcing the loop via the conf gate.
-    import spark.implicits._
-    val star = (1L to 40L).map(i => (0L, i))
-    val chain = (0L until 64L).map(i => (i, i + 1))
-    val rnd = new scala.util.Random(13)
-    val random = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter { case (a, b) => a != b }
-    def labels(edges: Seq[(Long, Long)]): Map[Long, Long] =
-      Dedup.labelsFromEdges(edges.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Seq(star, chain, random).foreach { edges =>
-      val viaDriver = labels(edges)
-      assert(viaDriver == unionFind(edges), "driver route diverged from union-find")
-      spark.conf.set("graft.components.driverLimit", "0")
-      try assert(labels(edges) == viaDriver, "loop route diverged from driver route")
-      finally spark.conf.unset("graft.components.driverLimit")
-    }
-    // the real LSH graph: qd6 through both routes
-    val viaDriver = Dedup.qd6_dup_clusters(spark, sf).collect().map(_.toSeq).toSeq
-    spark.conf.set("graft.components.driverLimit", "0")
-    try {
-      val viaLoop = Dedup.qd6_dup_clusters(spark, sf).collect().map(_.toSeq).toSeq
-      assert(viaDriver == viaLoop, "qd6 must be route-invariant")
-    } finally spark.conf.unset("graft.components.driverLimit")
-  }
 }

@@ -65,7 +65,7 @@ class StreamingSpec extends SparkSpec {
     assert(nf.collect().head.getAs[String]("numero_parte") == "ZZZ")
   }
 
-  test("same pipeline with the bucketed records sink reaches the same state") {
+  test("one AvailableNow drain of both observations gives the golden two-drain record") {
     val outDir = Files.createTempDirectory("graft_stream_b").toString
     val ckpt = Files.createTempDirectory("graft_ckpt_b").toString
     val station = "PRENSA1"

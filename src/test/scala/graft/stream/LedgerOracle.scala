@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.batch.{Dedup, IvfIndex, Multimodal}
+import graft.batch.{Dedup, Graph, IvfIndex, Multimodal}
 
 /** The ingest membranes as they were before verdicts: each survivor
   * pass decided admission alone, and separate post-hoc
@@ -223,8 +223,8 @@ object LedgerOracle {
         .join(nearCorpus.select("doc_id"), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), lit(null).cast("long").as("dup_of"),
           lit("unknown").as("reason")) // can't-happen guard, kept loud in specs
-      IngestDedup.resolveChains(exactBatch.unionByName(exactCorpus).unionByName(nearBatch)
-        .unionByName(nearCorpus).unionByName(unattributed))
+      Graph.terminals(exactBatch.unionByName(exactCorpus).unionByName(nearBatch)
+        .unionByName(nearCorpus).unionByName(unattributed), "doc_id", "dup_of", Seq("reason"))
     }
 
     /** Owners of the probe keys present in the prior-epoch index:
@@ -632,8 +632,8 @@ object LedgerOracle {
           mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
           s"$dir/embed", epochId, embedKeep, tau, nProbe)
         .withColumnRenamed("vec_id", "doc_id")
-      IngestDedup.resolveChains(
-          textLedger.unionByName(mediaLedger).unionByName(embedLedger))
+      Graph.terminals(textLedger.unionByName(mediaLedger).unionByName(embedLedger),
+          "doc_id", "dup_of", Seq("reason"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/ledger/epoch=$epochId")
 
       // per-batch observability: which membrane rejected how much. The

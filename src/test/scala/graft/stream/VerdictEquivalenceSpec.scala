@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.batch.Graph
+
 /** The one-pass membrane verdicts against the post-hoc ledger passes
   * they replace ([[LedgerOracle]]): over the same batches, the same
   * admitted docs, the same metrics rows and, row for row, the same
@@ -36,7 +38,7 @@ class VerdictEquivalenceSpec extends graft.SparkSpec {
 
   private def rows(df: DataFrame): Set[Row] = df.collect().toSet
   private def resolved(ledger: DataFrame): Set[Row] =
-    rows(IngestDedup.resolveChains(ledger.select(col("doc_id"), col("dup_of"), col("reason"))))
+    rows(Graph.terminals(ledger, "doc_id", "dup_of", Seq("reason")))
   private def fresh(tag: String) = Files.createTempDirectory(s"graft_verdict_$tag").toString
 
   // three epochs of 60 docs — every group kind, exact payload copies
