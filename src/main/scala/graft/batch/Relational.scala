@@ -558,10 +558,11 @@ object Relational {
     // Walk the per-customer order chain by POINTER DOUBLING (Graph.rank)
     // instead of Spark's WITH RECURSIVE: the recursion schedules one
     // join round per hop (depth-D chain → D driver barriers — 2.7 s
-    // of pure scheduling at sf0.1), while doubling resolves the same walk in ceil(log2 D)+1 rounds. The
-    // predecessor pointer is the exact graph inverse of the reference
-    // chain's k_next link (one window pass builds it); hop = distance
-    // to the chain head + 1, identical to the recursion's hop counter.
+    // of pure scheduling at sf0.1), while doubling resolves the same
+    // walk in ceil(log2 D)+1 rounds. The predecessor pointer is the
+    // exact graph inverse of the reference chain's k_next link (one
+    // window pass builds it); hop = distance to the chain head + 1,
+    // identical to the recursion's hop counter.
     val state = Tables.orders(s, d).filter(pmod(col("o_custkey"), lit(50)) === 0)
       .select(col("o_custkey"), col("o_orderkey"))
       .withColumn("ptr", lag(col("o_orderkey"), 1).over(w))
