@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.batch.Dedup
+import graft.batch.{Dedup, Graph}
 
 /** qd6 duplicate-cluster resolution: structural invariants of the
   * connected-components output (the oracle pins exact values; these pin
@@ -148,5 +148,54 @@ class DedupClusterSpec extends SparkSpec {
       .join(labels.withColumnRenamed("doc_id", "id_b").withColumnRenamed("cluster_id", "cb"), "id_b")
       .filter(col("ca") =!= col("cb"))
     assert(violated.isEmpty, "every candidate pair must land in one cluster")
+  }
+
+  private def labels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    import spark.implicits._
+    Graph.components(edges.toDF("id_a", "id_b")).as[(Long, Long)].collect().toMap
+  }
+
+  private def distributedLabels(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    GraphSpec.distributed(spark)(labels(edges))
+
+  test("large-star/small-star: a 256-node path needs O(log² n) rounds, not O(n)") {
+    // the adversarial case the qd6 scaladoc names: plain min-label
+    // propagation walks a path one hop per round; the distributed loop's
+    // pointer-jumping shortcut must collapse it under Graph.MaxRounds,
+    // far fewer than the 255 rounds a hop-per-round loop would take
+    // (the loop fails loudly at the cap)
+    assert(Graph.MaxRounds < 255)
+    val chain = (0L until 255L).map(i => (i, i + 1))
+    val got = distributedLabels(chain)
+    assert(got.keySet == (0L to 255L).toSet)
+    assert(got.values.forall(_ == 0L), "one path component, rooted at 0")
+  }
+
+  test("star components ≡ union-find on star, two-component, and seeded random graphs") {
+    val star = (1L to 40L).map(i => (0L, i))
+    val two = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L))
+    val rnd = new scala.util.Random(7)
+    val random = Seq.fill(200)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
+      .filter { case (a, b) => a != b }
+    Seq(star, two, random).foreach { edges =>
+      val want = GraphSpec.unionFind(edges)
+      assert(distributedLabels(edges) == want, s"diverged from union-find on ${edges.take(5)}…")
+    }
+  }
+
+  test("driver union-find route ≡ the distributed pointer-jump loop") {
+    // Graph.components routes small edge sets to a driver union-find;
+    // pin both routes label-identical on adversarial shapes by forcing
+    // the loop through the conf gate (GraphSpec runs qd6 through both)
+    val star = (1L to 40L).map(i => (0L, i))
+    val chain = (0L until 64L).map(i => (i, i + 1))
+    val rnd = new scala.util.Random(13)
+    val random = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
+      .filter { case (a, b) => a != b }
+    Seq(star, chain, random).foreach { edges =>
+      val viaDriver = labels(edges)
+      assert(viaDriver == GraphSpec.unionFind(edges), "driver route diverged from union-find")
+      assert(distributedLabels(edges) == viaDriver, "loop route diverged from driver route")
+    }
   }
 }

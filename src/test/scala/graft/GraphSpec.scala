@@ -1,28 +1,24 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.batch.{Dedup, Graph}
-import graft.stream.StoreEpoch
 
-/** [[Graph]]'s operations on both sides of their one gate
-  * (`graft.graph.driverLimit`; 0 forces the distributed loops):
-  * components equal a local union-find on either route, chain
-  * terminals resolve every adversarial ledger shape the same way on
-  * either route and fail loudly on cycles, and rank resolves a depth-D
-  * chain in ⌊log2 D⌋+1 rounds with exact hops.
-  */
-class GraphSpec extends SparkSpec {
-  import spark.implicits._
+/** Route helpers shared by the graph specs: DedupClusterSpec pins
+  * `Graph.components` on adversarial shapes, DupChainSpec pins
+  * `Graph.terminals` on adversarial ledgers. */
+object GraphSpec {
 
-  private def distributed[T](f: => T): T = {
+  /** `f` with `graft.graph.driverLimit` at 0: the distributed loops. */
+  def distributed[T](spark: SparkSession)(f: => T): T = {
     spark.conf.set("graft.graph.driverLimit", "0")
     try f finally spark.conf.unset("graft.graph.driverLimit")
   }
 
-  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  /** Local union-find reference: node -> its component's min id. */
+  def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElseUpdate(x, x)
@@ -34,6 +30,18 @@ class GraphSpec extends SparkSpec {
     }
     parent.keys.map(k => k -> find(k)).toMap
   }
+}
+
+/** [[Graph]]'s operations on both sides of their one gate
+  * (`graft.graph.driverLimit`; 0 forces the distributed loops) on the
+  * real LSH graph and a random graph 10× its size, and rank resolving a
+  * depth-D chain in ⌊log2 D⌋+1 rounds with exact hops.
+  */
+class GraphSpec extends SparkSpec {
+  import spark.implicits._
+  import GraphSpec.unionFind
+
+  private def distributed[T](f: => T): T = GraphSpec.distributed(spark)(f)
 
   private def labels(edges: Seq[(Long, Long)]): Map[Long, Long] =
     Graph.components(edges.toDF("id_a", "id_b"))
@@ -48,16 +56,6 @@ class GraphSpec extends SparkSpec {
   private def lshPairs(d: String): Seq[(Long, Long)] =
     Dedup.qd2_minhash_lsh(spark, d).select(col("id_a").cast("long"), col("id_b").cast("long"))
       .as[(Long, Long)].collect().toSeq
-
-  test("components: both routes ≡ union-find on star, path, two, random") {
-    val star = (1L to 40L).map(i => (0L, i))
-    val path = (0L until 255L).map(i => (i, i + 1))
-    val two = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L))
-    val rnd = new scala.util.Random(13)
-    val random = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter { case (a, b) => a != b }
-    Seq(star, path, two, random).foreach(bothRoutesEqualUnionFind)
-  }
 
   test("components: qd6 is route-invariant on the real LSH graph") {
     val d = "/root/testdata/sf0.01"
@@ -77,64 +75,6 @@ class GraphSpec extends SparkSpec {
         (rnd.nextInt(10 * nodes).toLong, rnd.nextInt(10 * nodes).toLong))
       .filter { case (a, b) => a != b }
     bothRoutesEqualUnionFind(random)
-  }
-
-  private def ledger(rows: (Long, Option[Long], String)*): DataFrame =
-    rows.toDF("doc_id", "dup_of", "reason")
-
-  private def resolved(rej: DataFrame): Map[Long, (Option[Long], String)] =
-    Graph.terminals(rej, "doc_id", "dup_of", Seq("reason"))
-      .as[(Long, Option[Long], String)].collect()
-      .map { case (id, dup, reason) => id -> (dup, reason) }.toMap
-
-  private def onBothRoutes(rej: DataFrame)(check: Map[Long, (Option[Long], String)] => Unit): Unit = {
-    check(resolved(rej))
-    check(distributed(resolved(rej)))
-  }
-
-  test("terminals: a 10k-hop chain resolves to its winner on both routes") {
-    // doc k lost to doc k-1 for every k in 1..10000; doc 0 is admitted
-    // (absent from the ledger), so every row resolves to 0 — the
-    // chained-neighbor LSH cluster, whose depth is its diameter
-    val n = 10000
-    val rej = ledger((1 to n).map(k => (k.toLong, Option((k - 1).toLong), "near_batch")): _*)
-    onBothRoutes(rej) { out =>
-      assert(out.size == n)
-      assert(out.values.forall(_ == ((Some(0L), "near_batch"))), "every member resolves to doc 0")
-    }
-  }
-
-  test("terminals: null-dup terminals and per-row reasons, both routes") {
-    // 4 -> 3 -> 2 (quality, dup_of null): 4 and 3 resolve to 2, which
-    // keeps its null dup_of; 9 -> 8 where 8 is absent (admitted): 9
-    // keeps 8. Reasons never rewrite.
-    val rej = ledger((2L, None, "quality"), (3L, Some(2L), "near_batch"),
-      (4L, Some(3L), "exact_batch"), (9L, Some(8L), "near_corpus"))
-    onBothRoutes(rej) { out =>
-      assert(out == Map(2L -> ((None, "quality")), 3L -> ((Some(2L), "near_batch")),
-        4L -> ((Some(2L), "exact_batch")), 9L -> ((Some(8L), "near_corpus"))))
-    }
-  }
-
-  test("terminals: the driver route returns a local frame") {
-    val rej = ledger((3L, Some(2L), "near_batch"), (4L, Some(3L), "exact_batch"))
-    assert(StoreEpoch.isLocal(Graph.terminals(rej, "doc_id", "dup_of", Seq("reason"))),
-      "a gated ledger is read without a job")
-    assert(!distributed(StoreEpoch.isLocal(Graph.terminals(rej, "doc_id", "dup_of", Seq("reason")))))
-  }
-
-  test("terminals: even and odd cycles fail loudly on both routes") {
-    // corrupted input: ledger chains are id-decreasing by construction.
-    // A healthy chain rides alongside, so the failure is the cycle's
-    val even = ledger((1L, Some(2L), "near_batch"), (2L, Some(1L), "near_batch"),
-      (5L, Some(4L), "exact_batch"))
-    val odd = ledger((1L, Some(2L), "near_batch"), (2L, Some(3L), "near_batch"),
-      (3L, Some(1L), "near_batch"), (5L, Some(4L), "exact_batch"))
-    for (rej <- Seq(even, odd)) {
-      val viaDriver = intercept[IllegalArgumentException](resolved(rej))
-      val viaLoop = intercept[IllegalArgumentException](distributed(resolved(rej)))
-      Seq(viaDriver, viaLoop).foreach(e => assert(e.getMessage.contains("cycled"), e.getMessage))
-    }
   }
 
   private def log2ceil(d: Long): Int =
