@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,9 +22,19 @@ import org.apache.spark.sql.functions._
   * prints per-regime docs/sec in one JSON line — the boundary numbers
   * BASELINE.md records; `lm` adds the frozen-LM quality membrane with
   * a planted low-LM slice (v3), every kept/rejected count require()d.
-  * Prints one JSON line with docs/sec and the dedup ratio achieved.
+  * Prints one JSON line with docs/sec, the dedup ratio achieved and
+  * the classes Spark compiled during the batches (`codegen_compiles`).
   */
 object IngestBench {
+
+  /** `body`'s result and the classes Spark's code generator compiled
+    * while it ran (the JVM-wide `CodegenMetrics` count). */
+  private def compiling[A](body: => A): (A, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val a = body
+    (a, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+  }
+
   def run(spark: SparkSession, args: Seq[String]): Unit = {
     val nDocs = sys.env.getOrElse("GRAFT_INGEST_DOCS", "100000").toLong
     val nBatches = sys.env.getOrElse("GRAFT_INGEST_BATCHES", "10").toInt
@@ -53,13 +64,14 @@ object IngestBench {
       val hi = if (b == nBatches - 1) nDocs else (b + 1) * batchSize
       df.filter(col("doc_id") >= b * batchSize && col("doc_id") < hi)
     }
-    /** Every batch through the text membrane into `toDir`: seconds and
-      * the corpus size kept. */
-    def ingestAll(toDir: String, lmModelDir: Option[String] = None): (Double, Long) = {
-      val (secs, _) = Bench.timed((0 until nBatches).foreach { b =>
+    /** Every batch through the text membrane into `toDir`: seconds, the
+      * corpus size kept and the classes Spark's code generator compiled
+      * while the batches ran. */
+    def ingestAll(toDir: String, lmModelDir: Option[String] = None): (Double, Long, Long) = {
+      val ((secs, _), compiles) = compiling(Bench.timed((0 until nBatches).foreach { b =>
         stream.IngestDedup.ingestBatch(batchOf(docs, b), toDir, epochId = b, lmModelDir = lmModelDir)
-      })
-      (secs, spark.read.parquet(s"$toDir/corpus").count())
+      }))
+      (secs, spark.read.parquet(s"$toDir/corpus").count(), compiles)
     }
 
     if (mode == "multimodal") {
@@ -121,7 +133,7 @@ object IngestBench {
       var lastTick = -1
       var statsSecs = 0.0
       val batchSecs = Array.ofDim[Double](nBatches)
-      val (secs, _) = Bench.timed((0 until nBatches).foreach { b =>
+      val ((secs, _), compiles) = compiling(Bench.timed((0 until nBatches).foreach { b =>
         if (compactEvery > 0 && b > 0 && b % compactEvery == 0) {
           compactSecs += Bench.timed(stream.MultimodalIngest.compact(spark, mmDir, upTo = b))._1
           compactions += 1
@@ -140,7 +152,7 @@ object IngestBench {
           if (statsOn)
             statsSecs += Bench.timed(stream.MultimodalIngest.foldStats(spark, mmDir, b))._1
         }._1
-      })
+      }))
       val kept = stream.MultimodalIngest.corpus(spark, mmDir).count()
       val expectedKept = if (withMedia) nDocs / 5 + 1 else nDocs * 2 / 5
 
@@ -196,7 +208,7 @@ object IngestBench {
         val qDocs = (if (qi == 3) nDocs else hiB * batchSize) - loB * batchSize
         if (qSecs == 0) 0.0 else qDocs / qSecs
       }
-      println(s"""{"metric":"multimodal_ingest_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":$expectedKept,"media":${if (withMedia) 1 else 0},"media_rejected":$nMediaRej,"secs":${Bench.num(secs, 1)},"cluster_secs":${Bench.num(clSecs, 1)},"n_clusters":${cl.values.map(_._1).sum},"q_docs_per_sec":[${quartileRates.map(Bench.num(_, 1)).mkString(",")}],"compact_every":$compactEvery,"compactions":$compactions,"compact_secs_per_tick":${Bench.num(if (compactions == 0) 0.0 else compactSecs / compactions, 2)},"requant_every":$requantEvery,"requant_ticks":$ticks,"requant_secs_per_tick":${Bench.num(if (ticks == 0) 0.0 else tickSecs / ticks, 2)},"post_requant_docs_per_sec":${Bench.num(postRate, 1)}$statsJson}""")
+      println(s"""{"metric":"multimodal_ingest_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":$expectedKept,"media":${if (withMedia) 1 else 0},"media_rejected":$nMediaRej,"secs":${Bench.num(secs, 1)},"codegen_compiles":$compiles,"cluster_secs":${Bench.num(clSecs, 1)},"n_clusters":${cl.values.map(_._1).sum},"q_docs_per_sec":[${quartileRates.map(Bench.num(_, 1)).mkString(",")}],"compact_every":$compactEvery,"compactions":$compactions,"compact_secs_per_tick":${Bench.num(if (compactions == 0) 0.0 else compactSecs / compactions, 2)},"requant_every":$requantEvery,"requant_ticks":$ticks,"requant_secs_per_tick":${Bench.num(if (ticks == 0) 0.0 else tickSecs / ticks, 2)},"post_requant_docs_per_sec":${Bench.num(postRate, 1)}$statsJson}""")
     } else if (mode == "lm") {
       // the LM/quality membrane priced (round-16 verdict #2): same
       // dedup structure, plus a planted quality structure — the frozen
@@ -212,14 +224,14 @@ object IngestBench {
       val (trainSecs, _) = Bench.timed(batch.TextOps.saveLm(spark, modelDir,
         batch.TextOps.lmTrain((0 until 8).map(_ => refDocs).reduce(_ union _))))
       val lmDir = s"$dir/lm"
-      val (secs, kept) = ingestAll(lmDir, Some(modelDir))
+      val (secs, kept, compiles) = ingestAll(lmDir, Some(modelDir))
       require(kept == nDocs * 2 / 5,
         s"lm-gated ingest kept $kept, expected ${nDocs * 2 / 5}")
       val lmRej = stream.IngestDedup.ledger(spark, lmDir)
         .filter(col("reason") === "lm").count()
       require(lmRej == nDocs / 5,
         s"lm rejections $lmRej, expected ${nDocs / 5} (every v3 doc)")
-      println(s"""{"metric":"ingest_lm_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 2 / 5},"lm_rejected":$lmRej,"train_secs":${Bench.num(trainSecs, 1)},"secs":${Bench.num(secs, 1)}}""")
+      println(s"""{"metric":"ingest_lm_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 2 / 5},"lm_rejected":$lmRej,"train_secs":${Bench.num(trainSecs, 1)},"secs":${Bench.num(secs, 1)},"codegen_compiles":$compiles}""")
     } else if (mode == "regimes") {
       // force each probe regime over the identical workload; the limits
       // are read per batch, so setting them before a run is enough
@@ -232,14 +244,14 @@ object IngestBench {
                         "spark.graft.ingest.broadcastKeyLimit" -> "0")))
       val rates = forced.map { case (name, confs) =>
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        val (secs, kept) = ingestAll(s"$dir/$name")
+        val (secs, kept, compiles) = ingestAll(s"$dir/$name")
         require(kept == nDocs * 3 / 5, s"$name regime kept $kept, expected ${nDocs * 3 / 5}")
-        s""""$name":${Bench.num(nDocs / secs, 1)}"""
+        s""""$name":${Bench.num(nDocs / secs, 1)},"${name}_codegen_compiles":$compiles"""
       }
       println(s"""{"metric":"ingest_regime_docs_per_sec",${rates.mkString(",")},"docs":$nDocs,"batches":$nBatches}""")
     } else {
-      val (secs, kept) = ingestAll(dir)
-      println(s"""{"metric":"ingest_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 3 / 5},"secs":${Bench.num(secs, 1)}}""")
+      val (secs, kept, compiles) = ingestAll(dir)
+      println(s"""{"metric":"ingest_docs_per_sec","value":${Bench.num(nDocs / secs, 1)},"docs":$nDocs,"batches":$nBatches,"kept":$kept,"expected_kept":${nDocs * 3 / 5},"secs":${Bench.num(secs, 1)},"codegen_compiles":$compiles}""")
     }
   }
 }

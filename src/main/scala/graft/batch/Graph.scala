@@ -210,14 +210,23 @@ object Graph {
     * that row's `acc` into its own (`theirs` is null when the pointer
     * names no row). The resolved depth doubles per round, so a depth-D
     * chain takes ⌊log2 D⌋+1 rounds where a walk schedules D. Pointers
-    * drain to null; on a cycle they never do, and the loop fails at
+    * drain to null; on a cycle they never do. The one job per round that
+    * asks whether any pointer is left also asks whether one names its
+    * own row: a cycle of length L = 2^k has each member point at itself
+    * after k rounds, so it fails then; other cycles fail at
     * [[MaxRounds]]. */
   private def double(state: DataFrame, grp: Seq[String], id: String, ptr: String,
       acc: String, fold: (Column, Column) => Column, what: String): (DataFrame, Int) = {
     val in = state.localCheckpoint()
     var cur = in
     var rounds = 0
-    while (!cur.filter(col(ptr).isNotNull).isEmpty) {
+    // whether a pointer is left, and whether one names its own row
+    def left = StoreEpoch.distinctUpTo(cur.filter(col(ptr).isNotNull)
+      .select(col(ptr) === col(id)), 2)
+    var open = left
+    while (open.nonEmpty) {
+      require(!open.contains(true),
+        s"$what: pointer chain cycled (did not converge: a row points at itself after $rounds rounds)")
       require(rounds < MaxRounds,
         s"$what: pointer chain cycled (did not converge in $MaxRounds rounds)")
       val tgt = cur.select(grp.map(g => col(g).as(s"t_$g")) ++ Seq(
@@ -232,6 +241,7 @@ object Graph {
           case c => cur(c)
         }: _*), in)
       rounds += 1
+      open = left
     }
     (cur, rounds)
   }

@@ -376,8 +376,10 @@ object EmbedIngest {
                   tau: Double = 0.95, nProbe: Int = 4): Unit =
     // survivors land in THEIR nearest cell (pr = 1) for this epoch;
     // epoch-dir OVERWRITE is the replay-idempotence point
-    StoreEpoch.commit(Seq(cellsStore(dir, admitted(verdicts(batch, dir, epochId, tau, nProbe)
-      .localCheckpoint(eager = false)))), epochId, Sinks.DriverRouteRows)
+    StoreEpoch.sized(batch, Sinks.DriverRouteRows) { (raw, _) =>
+      StoreEpoch.commit(Seq(cellsStore(dir, admitted(verdicts(raw, dir, epochId, tau, nProbe)
+        .localCheckpoint(eager = false)))), epochId, Sinks.DriverRouteRows)
+    }
 
   /** The epoch write of the cells store under `dir`: admitted rows
     * ([[admitted]]) in `cell=M/` subdirectories. */

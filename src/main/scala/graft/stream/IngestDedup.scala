@@ -102,30 +102,32 @@ object IngestDedup {
     // writes land beside their flat files (see EpochFold.migrateLegacyFlat)
     Seq("corpus", "exact_idx", "band_idx")
       .foreach(t => EpochFold.migrateLegacyFlat(s, s"$dir/$t"))
-    val verdict = verdicts(batch, dir, epochId)
-      .localCheckpoint(eager = false) // filled by the lm gate or the first write
-    val dedupKeep = verdict.filter(col("reason").isNull).drop("dup_of", "reason")
-    val lmRej = lmModelDir.map(m => lmRejects(dedupKeep, m).localCheckpoint())
-    val keep = lmRej match {
-      case None => dedupKeep
-      case Some(r) =>
-        dedupKeep.join(broadcast(r), Seq("doc_id"), "left_anti")
-          .localCheckpoint() // consumed by three store writes below
-    }
+    StoreEpoch.sized(batch, Sinks.DriverRouteRows) { (raw, rows) =>
+      val verdict = verdicts(raw, dir, epochId, Some(rows))
+        .localCheckpoint(eager = false) // filled by the lm gate or the first write
+      val dedupKeep = verdict.filter(col("reason").isNull).drop("dup_of", "reason")
+      val lmRej = lmModelDir.map(m => lmRejects(dedupKeep, m).localCheckpoint())
+      val keep = lmRej match {
+        case None => dedupKeep
+        case Some(r) =>
+          dedupKeep.join(broadcast(r), Seq("doc_id"), "left_anti")
+            .localCheckpoint() // consumed by three store writes below
+      }
 
-    // 4. commit survivors, index keys and the rejection ledger into this
-    // epoch's partitions (StoreEpoch.commit: one gate job, then driver
-    // writes for a batch-sized epoch). OVERWRITE of the epoch dir is the
-    // idempotence point: a replay replaces any partial output instead
-    // of appending next to it. The ledger says WHY each non-survivor
-    // was turned away — the verdicts' rejected rows, chains resolved —
-    // so cluster accounting stays exactly-once; lm rejections append as
-    // terminal rows (dup_of = null — a quality drop has no content
-    // owner)
-    val ledger = Graph.terminals(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
-      .getOrElse(rejections(verdict)), "doc_id", "dup_of", Seq("reason"))
-    StoreEpoch.commit(stores(keep, dir) :+ StoreEpoch.Write(s"$dir/ledger", ledger),
-      epochId, Sinks.DriverRouteRows)
+      // 4. commit survivors, index keys and the rejection ledger into this
+      // epoch's partitions (StoreEpoch.commit: one gate job, then driver
+      // writes for a batch-sized epoch). OVERWRITE of the epoch dir is the
+      // idempotence point: a replay replaces any partial output instead
+      // of appending next to it. The ledger says WHY each non-survivor
+      // was turned away — the verdicts' rejected rows, chains resolved —
+      // so cluster accounting stays exactly-once; lm rejections append as
+      // terminal rows (dup_of = null — a quality drop has no content
+      // owner)
+      val ledger = Graph.terminals(lmRej.map(r => rejections(verdict).unionByName(lmRows(r)))
+        .getOrElse(rejections(verdict)), "doc_id", "dup_of", Seq("reason"))
+      StoreEpoch.commit(stores(keep, dir) :+ StoreEpoch.Write(s"$dir/ledger", ledger),
+        epochId, Sinks.DriverRouteRows)
+    }
   }
 
   /** The epoch writes of the text stores under `dir` for the admitted
@@ -239,8 +241,13 @@ object IngestDedup {
     *     key set, stream the index map-side (scanned, never shuffled),
     *     and broadcast the tiny hit set back into the probe join;
     *   - bulk backfill: plain shuffle joins — correct at any size, and
-    *     a batch that large amortizes the index shuffle it pays for. */
-  private[graft] def verdicts(batch: DataFrame, dir: String, epochId: Long): DataFrame = {
+    *     a batch that large amortizes the index shuffle it pays for.
+    *
+    * `knownRows` is the batch's row count when the caller has it
+    * ([[StoreEpoch.sized]] counts every ingest epoch); without it the
+    * keyed batch is counted here, by the job that fills its checkpoint. */
+  private[graft] def verdicts(batch: DataFrame, dir: String, epochId: Long,
+      knownRows: Option[Long] = None): DataFrame = {
     val s = batch.sparkSession
     // 1. exact within batch: min doc_id per content wins (deterministic)
     val keyed = batch
@@ -248,9 +255,7 @@ object IngestDedup {
       .withColumn("bands", Dedup.bandKeys(col("text")))
       .withColumn("winner", min(col("doc_id")).over(Window.partitionBy("content_key")))
       .localCheckpoint(eager = false) // small (one micro-batch); read multiple times below
-    // one job, which also fills the checkpoint (Dataset.count would add
-    // an aggregate exchange and a second job)
-    val batchRows = keyed.rdd.count()
+    val batchRows = knownRows.getOrElse(keyed.queryExecution.toRdd.count())
     val isinLimit = isinKeyLimit(s)
     val bcastLimit = broadcastKeyLimit(s)
     // the trickle IN lists, in one collect: the batch's content keys and
@@ -261,10 +266,10 @@ object IngestDedup {
     val (contentLits, bandLits) =
       if (batchRows > isinLimit) (Nil, Nil)
       else {
-        val rows = keyed.select(col("content_key"), col("bands.key")).collect()
-        (rows.map(_.getString(0)).distinct.toSeq,
+        val keys = keyed.select(col("content_key"), col("bands.key")).collect()
+        (keys.map(_.getString(0)).distinct.toSeq,
           if (2 * batchRows > isinLimit) Nil
-          else rows.flatMap(_.getSeq[String](1)).filter(_ != null).distinct.toSeq)
+          else keys.flatMap(_.getSeq[String](1)).filter(_ != null).distinct.toSeq)
       }
 
     val winners = keyed.filter(col("doc_id") === col("winner"))

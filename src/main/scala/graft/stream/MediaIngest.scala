@@ -107,11 +107,19 @@ object MediaIngest {
     * inside the Hamming ball) beats `media_corpus` (dup_of = the
     * smallest admitted owner from the index). A dup_of may name a
     * batch-mate a LATER membrane rejects — [[MultimodalIngest]] resolves
-    * cross-membrane chains before the write. */
+    * cross-membrane chains before the write.
+    *
+    * `rowsUpTo` bounds the batch's distinct hashes (the epoch's row
+    * count, from [[StoreEpoch.sized]]); it sizes the corpus probe's
+    * regime. Without it they are counted, one job. At 8-bit bands the
+    * bound cannot change the regime; at 16-bit an epoch of many exact
+    * copies may probe by broadcast where its distinct count would have
+    * pushed the IN. */
   private[graft] def verdicts(batch: DataFrame, dir: String, epochId: Long,
       mediaCol: String = "media",
       maxHamming: Int = DefaultMaxHamming,
-      bandBits: Int = 8): DataFrame = {
+      bandBits: Int = 8,
+      rowsUpTo: Option[Long] = None): DataFrame = {
     val s = batch.sparkSession
     checkBandBits(s, dir, bandBits)
     val nBits = hashBits(bandBits)
@@ -152,7 +160,8 @@ object MediaIngest {
         val idx = (if (idx0.columns.contains("epoch"))
           idx0.filter(col("epoch") < epochId) else idx0)
           .select(col("bk"), col("phash").as("c_phash"), col("doc_id").as("dup_src"))
-        val batchRows = hashed.filter(col("doc_id") === col("first")).rdd.count()
+        val batchRows = rowsUpTo.getOrElse(
+          hashed.filter(col("doc_id") === col("first")).queryExecution.toRdd.count())
         val hits =
           if (batchRows > IngestDedup.broadcastKeyLimit(s)) idx.join(bands, Seq("bk"))
           else {
@@ -201,13 +210,14 @@ object MediaIngest {
     * [[IngestDedup.ingestBatch]]. */
   def ingestBatch(batch: DataFrame, dir: String, epochId: Long,
       mediaCol: String = "media",
-      maxHamming: Int = DefaultMaxHamming, bandBits: Int = 8): Unit = {
-    val keep = verdicts(batch, dir, epochId, mediaCol, maxHamming, bandBits)
-      .filter(col("reason").isNull).drop("phash", "dup_of", "reason")
-      .localCheckpoint(eager = false) // filled by the commit's gate
-    StoreEpoch.commit(Seq(StoreEpoch.Write(s"$dir/corpus", keep),
-      indexStore(keep, dir, mediaCol, bandBits)), epochId, Sinks.DriverRouteRows)
-  }
+      maxHamming: Int = DefaultMaxHamming, bandBits: Int = 8): Unit =
+    StoreEpoch.sized(batch, Sinks.DriverRouteRows) { (raw, rows) =>
+      val keep = verdicts(raw, dir, epochId, mediaCol, maxHamming, bandBits, Some(rows))
+        .filter(col("reason").isNull).drop("phash", "dup_of", "reason")
+        .localCheckpoint(eager = false) // filled by the commit's gate
+      StoreEpoch.commit(Seq(StoreEpoch.Write(s"$dir/corpus", keep),
+        indexStore(keep, dir, mediaCol, bandBits)), epochId, Sinks.DriverRouteRows)
+    }
 
   /** Fold index epochs `< upTo` on the shared cadence (same contract
     * as [[IngestDedup.compactIndexes]]). */

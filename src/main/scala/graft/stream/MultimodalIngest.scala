@@ -160,6 +160,16 @@ object MultimodalIngest {
     * [[IngestDedup.ingestBatch]]: strictly increasing epochs,
     * replay-idempotent; backfill and streaming share this path).
     *
+    * Plan shape: the batch is checkpointed and counted by one job
+    * ([[StoreEpoch.sized]]). An epoch of at most [[Sinks.DriverRouteRows]]
+    * rows — every live micro-batch — then runs its membranes under
+    * [[StoreEpoch.SmallEpochShape]]: interpreted, with no AQE stage
+    * barriers and one shuffle partition, so its cost is the rows rather
+    * than generated-code compiles and per-stage jobs; larger epochs keep
+    * the session's plans. A warm 100-doc three-membrane epoch runs 15
+    * Spark jobs (34 under the session's plans) and compiles 2 generated
+    * classes; IngestEpochJobsSpec bounds both.
+    *
     * Commit protocol: every store's epoch N is committed by
     * [[StoreEpoch.commit]], which OVERWRITEs `epoch=N` in each store.
     * One gate job brings the rows of the corpus, both text indexes,
@@ -179,8 +189,9 @@ object MultimodalIngest {
     ingestBatchWith(batch, dir, epochId, tau, nProbe, mediaBandBits, lmModelDir,
       Sinks.DriverRouteRows)
 
-  /** [[ingestBatch]] with the driver route's row bound as a parameter
-    * (specs force either commit route with it). */
+  /** [[ingestBatch]] with the driver route's row bound as a parameter:
+    * it picks both the plan shape and the commit route (specs force the
+    * session's shape and Spark's writers with 0). */
   private[graft] def ingestBatchWith(batch: DataFrame, dir: String, epochId: Long,
       tau: Double, nProbe: Int, mediaBandBits: Int, lmModelDir: Option[String],
       driverRows: Long): Unit = {
@@ -189,90 +200,93 @@ object MultimodalIngest {
       .foreach(t => EpochFold.migrateLegacyFlat(s, s"$dir/text/$t"))
 
     val hasMedia = batch.columns.contains("media")
-    // each stage returns one VERDICT row per input doc — decided and
-    // attributed by the same probes — and is checkpointed once: the
-    // next stage and the ledger read that one materialization. Stage
-    // 1 — text membrane (cheap hash work first, so the later stages
-    // only ever see text-novel docs)
-    val textV = IngestDedup.verdicts(batch, s"$dir/text", epochId)
-      .localCheckpoint(eager = false) // bounded (one micro-batch)
-    val dedupKeep = textV.filter(col("reason").isNull).drop("dup_of", "reason")
-    // stage 1a — frozen-LM quality gate over the dedup survivors
-    // (quality scored AT ADMISSION; after dedup so the admitted set
-    // equals the batch pipeline's — IngestDedup.ingestBatch's contract
-    // — and before the media/embed stages so their probes never pay
-    // for docs quality already rejects)
-    val lmRej = lmModelDir.map(m =>
-      IngestDedup.lmRejects(dedupKeep, m).localCheckpoint())
-    val textKeep = lmRej match {
-      case None => dedupKeep
-      case Some(r) =>
-        dedupKeep.join(broadcast(r), Seq("doc_id"), "left_anti")
-          .localCheckpoint() // feeds stage 1b + writes
+    StoreEpoch.sized(batch, driverRows) { (raw, rows) =>
+      // each stage returns one VERDICT row per input doc — decided and
+      // attributed by the same probes — and is checkpointed once: the
+      // next stage and the ledger read that one materialization. Stage
+      // 1 — text membrane (cheap hash work first, so the later stages
+      // only ever see text-novel docs)
+      val textV = IngestDedup.verdicts(raw, s"$dir/text", epochId, Some(rows))
+        .localCheckpoint(eager = false) // bounded (one micro-batch)
+      val dedupKeep = textV.filter(col("reason").isNull).drop("dup_of", "reason")
+      // stage 1a — frozen-LM quality gate over the dedup survivors
+      // (quality scored AT ADMISSION; after dedup so the admitted set
+      // equals the batch pipeline's — IngestDedup.ingestBatch's contract
+      // — and before the media/embed stages so their probes never pay
+      // for docs quality already rejects)
+      val lmRej = lmModelDir.map(m =>
+        IngestDedup.lmRejects(dedupKeep, m).localCheckpoint())
+      val textKeep = lmRej match {
+        case None => dedupKeep
+        case Some(r) =>
+          dedupKeep.join(broadcast(r), Seq("doc_id"), "left_anti")
+            .localCheckpoint() // feeds stage 1b + writes
+      }
+      // stage 1b — perceptual membrane over the text survivors (only
+      // when the batch carries a media payload column)
+      val mediaV = if (hasMedia) Some(MediaIngest.verdicts(textKeep, s"$dir/media", epochId,
+          bandBits = mediaBandBits, rowsUpTo = Some(rows)).localCheckpoint(eager = false))
+        else None
+      val mediaKeep = mediaV.map(_.filter(col("reason").isNull)
+          .drop("phash", "dup_of", "reason")).getOrElse(textKeep)
+      // stage 2 — embedding membrane over the earlier survivors; its
+      // admitted rows are the cells store's rows
+      val embedV = EmbedIngest.verdicts(
+          mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
+          s"$dir/embed", epochId, tau, nProbe)
+        .localCheckpoint(eager = false)
+      // the admitted documents, materialized once for the store writes below
+      val keep = mediaKeep.join(
+          broadcast(EmbedIngest.admitted(embedV).select(col("vec_id").as("doc_id"))),
+          Seq("doc_id"))
+        .localCheckpoint(eager = false)
+
+      // the per-doc rejection ledger, spanning ALL membranes: the union of
+      // every stage's rejected verdict rows, dup_of chains resolved ACROSS
+      // membranes — a text loser whose batch winner the embedding stage
+      // later rejects must point at that winner's terminal admitted
+      // target, so every dup_of names an ADMITTED doc and [[clusters]]
+      // can roll the composite up without a batch rebuild. lm rejections
+      // are terminal rows (dup_of = null — a quality drop has no content
+      // owner); a dup chain MAY therefore end at an lm-rejected doc, the
+      // one documented exception to dup_of naming an admitted doc (the
+      // content's owner was dropped for quality — that cluster simply has
+      // no admitted member).
+      val stageRows = Seq(IngestDedup.rejections(textV)) ++
+        lmRej.map(IngestDedup.lmRows) ++ mediaV.map(IngestDedup.rejections(_)) :+
+        IngestDedup.rejections(embedV, "vec_id")
+      val ledger = Graph.terminals(stageRows.reduce(_ unionByName _), "doc_id", "dup_of",
+        Seq("reason"))
+
+      // commit, mirroring the single-membrane writes: OVERWRITE of each
+      // epoch partition is the idempotence point in every store. The
+      // perceptual index holds rows of FULLY-admitted docs only, so the
+      // media membrane's state keeps the corpus-describing invariant too
+      val stores = IngestDedup.stores(keep, s"$dir/text") ++ Seq(
+          EmbedIngest.cellsStore(s"$dir/embed", EmbedIngest.admitted(embedV)),
+          StoreEpoch.Write(s"$dir/ledger", ledger)) ++
+        (if (hasMedia) Seq(MediaIngest.indexStore(keep, s"$dir/media", "media", mediaBandBits))
+         else Nil)
+      val admitted = StoreEpoch.commit(stores, epochId, driverRows).head // the corpus rows
+
+      // per-batch observability: which membrane rejected how much — each
+      // batch doc is admitted or has exactly one ledger row, so the row
+      // is counted from what the driver holds. It commits into its own
+      // epoch partition like every store — replays overwrite, so the
+      // metrics are exactly-once too
+      val rejected = IngestDedup.reasonCounts(ledger)
+      val unknown = rejected.keySet -- StageReasons.flatten
+      require(unknown.isEmpty, s"ingest ledger: rejection reasons of no stage: $unknown")
+      val byStage = StageReasons.map(_.map(rejected.getOrElse(_, 0L)).sum)
+      import s.implicits._
+      // batch_id is a DATA column (the epoch partition label moves when
+      // the ledger folds; attribution must survive the fold)
+      val metrics = Seq((epochId, admitted + byStage.sum, byStage(0), byStage(1), byStage(2),
+          byStage(3), admitted))
+        .toDF("batch_id", "n_in", "n_text_rejected", "n_lm_rejected",
+          "n_media_rejected", "n_embed_rejected", "n_admitted")
+      StoreEpoch.commit(Seq(StoreEpoch.Write(s"$dir/metrics", metrics)), epochId, driverRows)
     }
-    // stage 1b — perceptual membrane over the text survivors (only
-    // when the batch carries a media payload column)
-    val mediaV = if (hasMedia) Some(MediaIngest.verdicts(textKeep, s"$dir/media",
-        epochId, bandBits = mediaBandBits).localCheckpoint(eager = false)) else None
-    val mediaKeep = mediaV.map(_.filter(col("reason").isNull)
-        .drop("phash", "dup_of", "reason")).getOrElse(textKeep)
-    // stage 2 — embedding membrane over the earlier survivors; its
-    // admitted rows are the cells store's rows
-    val embedV = EmbedIngest.verdicts(
-        mediaKeep.select(col("doc_id").as("vec_id"), col("embedding")),
-        s"$dir/embed", epochId, tau, nProbe)
-      .localCheckpoint(eager = false)
-    // the admitted documents, materialized once for the store writes below
-    val keep = mediaKeep.join(
-        broadcast(EmbedIngest.admitted(embedV).select(col("vec_id").as("doc_id"))),
-        Seq("doc_id"))
-      .localCheckpoint(eager = false)
-
-    // the per-doc rejection ledger, spanning ALL membranes: the union of
-    // every stage's rejected verdict rows, dup_of chains resolved ACROSS
-    // membranes — a text loser whose batch winner the embedding stage
-    // later rejects must point at that winner's terminal admitted
-    // target, so every dup_of names an ADMITTED doc and [[clusters]]
-    // can roll the composite up without a batch rebuild. lm rejections
-    // are terminal rows (dup_of = null — a quality drop has no content
-    // owner); a dup chain MAY therefore end at an lm-rejected doc, the
-    // one documented exception to dup_of naming an admitted doc (the
-    // content's owner was dropped for quality — that cluster simply has
-    // no admitted member).
-    val stageRows = Seq(IngestDedup.rejections(textV)) ++
-      lmRej.map(IngestDedup.lmRows) ++ mediaV.map(IngestDedup.rejections(_)) :+
-      IngestDedup.rejections(embedV, "vec_id")
-    val ledger = Graph.terminals(stageRows.reduce(_ unionByName _), "doc_id", "dup_of",
-      Seq("reason"))
-
-    // commit, mirroring the single-membrane writes: OVERWRITE of each
-    // epoch partition is the idempotence point in every store. The
-    // perceptual index holds rows of FULLY-admitted docs only, so the
-    // media membrane's state keeps the corpus-describing invariant too
-    val stores = IngestDedup.stores(keep, s"$dir/text") ++ Seq(
-        EmbedIngest.cellsStore(s"$dir/embed", EmbedIngest.admitted(embedV)),
-        StoreEpoch.Write(s"$dir/ledger", ledger)) ++
-      (if (hasMedia) Seq(MediaIngest.indexStore(keep, s"$dir/media", "media", mediaBandBits))
-       else Nil)
-    val admitted = StoreEpoch.commit(stores, epochId, driverRows).head // the corpus rows
-
-    // per-batch observability: which membrane rejected how much — each
-    // batch doc is admitted or has exactly one ledger row, so the row
-    // is counted from what the driver holds. It commits into its own
-    // epoch partition like every store — replays overwrite, so the
-    // metrics are exactly-once too
-    val rejected = IngestDedup.reasonCounts(ledger)
-    val unknown = rejected.keySet -- StageReasons.flatten
-    require(unknown.isEmpty, s"ingest ledger: rejection reasons of no stage: $unknown")
-    val byStage = StageReasons.map(_.map(rejected.getOrElse(_, 0L)).sum)
-    import s.implicits._
-    // batch_id is a DATA column (the epoch partition label moves when
-    // the ledger folds; attribution must survive the fold)
-    val metrics = Seq((epochId, admitted + byStage.sum, byStage(0), byStage(1), byStage(2),
-        byStage(3), admitted))
-      .toDF("batch_id", "n_in", "n_text_rejected", "n_lm_rejected",
-        "n_media_rejected", "n_embed_rejected", "n_admitted")
-    StoreEpoch.commit(Seq(StoreEpoch.Write(s"$dir/metrics", metrics)), epochId, driverRows)
   }
 
   /** The ledger reasons of each stage, in the metrics row's order:

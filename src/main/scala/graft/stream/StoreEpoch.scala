@@ -243,6 +243,47 @@ private[graft] object StoreEpoch {
     (if (fits && kept.size <= limit) Some(kept.toSeq) else None, counts.toMap)
   }
 
+  /** The plan shape of an ingest epoch of at most
+    * [[Sinks.DriverRouteRows]] rows, as session confs: interpreted
+    * expressions and operators (a warm 500-doc `ingest_serve` epoch's
+    * plans otherwise compile about 175 generated classes, at 13–17 ms
+    * each, more than its rows cost), no adaptive stage barriers (AQE runs each shuffle stage of a
+    * verdict plan as its own job) and one shuffle partition.
+    * `spark.sql.codegen.factoryMode` is a Spark-internal conf;
+    * IngestEpochJobsSpec's compile bound fails if Spark stops honouring
+    * it. */
+  val SmallEpochShape: Map[String, String] = Map(
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "1")
+
+  /** `f(raw, rows)` for an ingest epoch: `raw` is `batch` checkpointed
+    * and `rows` its row count, from the one job that fills the
+    * checkpoint. The route is decided here, before any membrane plan
+    * runs (under AQE even a lazy checkpoint runs its shuffle stages when
+    * it is made): an epoch of at most `driverRows` rows runs under
+    * [[SmallEpochShape]], set on the batch's session (in a streaming
+    * query, the stream's own clone) and each key restored afterwards,
+    * also when `f` throws; a larger one runs under the session's own
+    * confs. */
+  def sized[T](batch: DataFrame, driverRows: Long)(f: (DataFrame, Long) => T): T = {
+    val raw = batch.localCheckpoint(eager = false)
+    val rows = raw.queryExecution.toRdd.count()
+    if (rows > driverRows) f(raw, rows)
+    else {
+      val conf = raw.sparkSession.conf
+      val set = conf.getAll
+      val prior = SmallEpochShape.keys.map(k => k -> set.get(k))
+      SmallEpochShape.foreach { case (k, v) => conf.set(k, v) }
+      try f(raw, rows)
+      finally prior.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    }
+  }
+
   /** `limit + 1` as a collect cap (one row past the limit tells a frame
     * over it from one at it); a negative limit collects nothing. */
   def capOf(limit: Long): Int =

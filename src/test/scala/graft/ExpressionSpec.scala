@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.functions.{GraftFunctions, PlcFunctions}
+import graft.stream.StoreEpoch
 
 /** Native DecodePlcWordsExpr vs the built-in Column composition:
   * bit-identical on arbitrary word arrays (incl. nulls/negatives),
@@ -126,63 +128,105 @@ class ExpressionSpec extends SparkSpec {
     assert(Set("minhash_sigs", "int8_pack", "int8_dot", "shift_of").subsetOf(viaExtensions))
   }
 
-  test("vec_dot interpreted evaluation == codegen evaluation") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(5)
-    val rows = Seq.fill(50)((
-      Seq.fill(16)(rnd.nextFloat() * 2 - 1), Seq.fill(16)(rnd.nextFloat() * 2 - 1)))
-    val df = rows.toDF("a", "b")
-    val expr = GraftFunctions.vec_dot(col("a"), col("b")).as("d")
-    // exclude ConvertToLocalRelation or the LocalRelation fixture is
-    // folded with an interpreted projection in BOTH runs and doGenCode
-    // never executes (round-12 review finding; same fix in Int8Spec)
-    val prevExcl = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    try {
-      val codegen = df.select(expr).collect().map(_.getDouble(0))
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val interpreted = df.select(expr).collect().map(_.getDouble(0))
-      assert(interpreted.toSeq === codegen.toSeq)
-    } finally {
-      prevFactory match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
-        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
+  /** The rows of `df.select(cols)` evaluated by generated code (the
+    * session's defaults: whole-stage codegen, compiled projections) and
+    * interpreted (the small-epoch shape, [[StoreEpoch.SmallEpochShape]],
+    * that every live ingest epoch runs under), asserted equal; returns
+    * the codegen rows. ConvertToLocalRelation is excluded in both runs,
+    * or the optimizer folds the local fixture with an interpreted
+    * projection both times and doGenCode never runs (same fix in
+    * Int8Spec). */
+  private def interpretedEqualsCodegen(df: DataFrame, cols: Column*): Seq[Row] = {
+    def withConfs[T](kv: Map[String, String])(f: => T): T = {
+      val set = spark.conf.getAll
+      val prior = kv.keys.map(k => k -> set.get(k))
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
-      prevExcl match {
-        case Some(v) => spark.conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => spark.conf.unset("spark.sql.optimizer.excludedRules")
-      }
+    }
+    withConfs(Map("spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")) {
+      val codegen = df.select(cols: _*).collect().toSeq
+      val interpreted = withConfs(StoreEpoch.SmallEpochShape)(df.select(cols: _*).collect().toSeq)
+      assert(interpreted == codegen)
+      codegen
     }
   }
 
+  test("vec_dot interpreted evaluation == codegen evaluation") {
+    val rnd = new scala.util.Random(5)
+    val rows = Seq.fill(50)((
+      Seq.fill(16)(rnd.nextFloat() * 2 - 1), Seq.fill(16)(rnd.nextFloat() * 2 - 1)))
+    interpretedEqualsCodegen(rows.toDF("a", "b"), GraftFunctions.vec_dot(col("a"), col("b")))
+  }
+
   test("bpe_encode interpreted evaluation == codegen evaluation") {
-    import spark.implicits._
     // overlap runs, chained merges, an l==r merge, an unseen charset
     // word, and the empty word (encodes to just the end marker)
     val merges = Seq((1, "a", "b"), (2, "ab", "c"), (3, "c", "</w>"), (4, "ab", "ab"))
     val df = Seq("abcabc", "abc", "ababab", "aababb", "zq", "").toDF("w")
-    val e = GraftFunctions.bpe_encode(col("w"), merges).as("syms")
-    val prevExcl = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    try {
-      val codegen = df.select(e).collect().map(_.getSeq[String](0))
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val interpreted = df.select(e).collect().map(_.getSeq[String](0))
-      assert(interpreted.toSeq === codegen.toSeq)
-      assert(codegen.last == Seq("</w>"), "empty word → just the end marker")
-    } finally {
-      prevFactory match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
-        case None => spark.conf.unset("spark.sql.codegen.factoryMode")
-      }
-      prevExcl match {
-        case Some(v) => spark.conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => spark.conf.unset("spark.sql.optimizer.excludedRules")
-      }
-    }
+    val codegen = interpretedEqualsCodegen(df, GraftFunctions.bpe_encode(col("w"), merges))
+    assert(codegen.last.getSeq[String](0) == Seq("</w>"), "empty word → just the end marker")
+  }
+
+  test("band_keys and minhash_sigs interpreted evaluation == codegen evaluation") {
+    // shingle-less, short, mixed-case, non-ASCII, past-the-window and
+    // null texts
+    val rnd = new scala.util.Random(11)
+    val texts = Seq(Some(""), Some("one two"), Some("One TWO three four"),
+      Some("résumé naïve café über straße"), None) ++
+      Seq.fill(20)(Some(Seq.fill(rnd.nextInt(80))(rnd.alphanumeric.take(1 + rnd.nextInt(6)).mkString)
+        .mkString(" ")))
+    val codegen = interpretedEqualsCodegen(texts.toDF("t"),
+      GraftFunctions.band_keys(col("t")), GraftFunctions.minhash_sigs(col("t")))
+    assert(codegen.exists(r => !r.isNullAt(0) && r.getSeq[Row](0).exists(b => !b.isNullAt(1))),
+      "some text must have a signature")
+  }
+
+  test("phash_blocks interpreted evaluation == codegen evaluation, string and binary payloads") {
+    // the ingest fixture's payloads, random ASCII and non-ASCII strings,
+    // sub-block (unhashable) and null payloads
+    val rnd = new scala.util.Random(13)
+    val strs = (0 until 8).map(h => Some("a" * (h * 10) + "z" * 10 + "a" * ((31 - h) * 10))) ++
+      Seq.fill(10)(Some(rnd.nextString(40 + rnd.nextInt(200)))) ++
+      Seq.fill(10)(Some(rnd.alphanumeric.take(64 + rnd.nextInt(200)).mkString)) ++
+      Seq(Some("x"), Some("short payload"), None)
+    val s = interpretedEqualsCodegen(strs.toDF("m"),
+      GraftFunctions.phash_blocks(col("m"), 32), GraftFunctions.phash_blocks(col("m"), 64))
+    assert(s.count(!_.isNullAt(1)) >= 18, "the fixture and alphanumeric payloads hash at 64 bits")
+    // binary: unsigned byte intensities, bytes past 127 included
+    val bins = Seq.fill(20)(Option(Array.fill(32 + rnd.nextInt(200))(rnd.nextInt(256).toByte))) ++
+      Seq(Some(Array.fill(31)(200.toByte)), None)
+    val b = interpretedEqualsCodegen(bins.toDF("m"),
+      GraftFunctions.phash_blocks(col("m"), 32), GraftFunctions.phash_blocks(col("m"), 64))
+    assert(b.count(!_.isNullAt(0)) == 20, "every payload of at least 32 bytes hashes at 32 bits")
+  }
+
+  test("nearest_cells interpreted evaluation == codegen evaluation, malformed rows included") {
+    // a tie, an opposite vector, a wrong-dim row, a null element, a
+    // zero vector (its cosines are NaN) and a null embedding, against
+    // a quantizer that holds one malformed centroid
+    val cs = typedLit(Seq((0L, Seq(1f, 0f, 0f, 0f), 1.0), (1L, Seq(0f, 1f, 0f, 0f), 1.0),
+      (2L, Seq(0f, 0f, 1f, 0f), 1.0), (3L, Seq(0.5f, 0.5f, 0.5f), 0.87),
+      (4L, Seq(-0.5f, -0.5f, 0.5f, 0.5f), 1.0)))
+    val rows = Seq[(Option[Seq[Option[Float]]], Option[Double])](
+      (Some(Seq(1f, 0f, 0f, 0f).map(Some(_))), Some(1.0)),
+      (Some(Seq(0.6f, 0.8f, 0f, 0f).map(Some(_))), Some(1.0)),
+      (Some(Seq(1f, 1f, 0f, 0f).map(Some(_))), Some(math.sqrt(2))),
+      (Some(Seq(-1f, -1f, 1f, 1f).map(Some(_))), Some(2.0)),
+      (Some(Seq(1f, 0f, 0f).map(Some(_))), Some(1.0)),
+      (Some(Seq(Some(1f), None, Some(0f), Some(0f))), Some(1.0)),
+      (Some(Seq(0f, 0f, 0f, 0f).map(Some(_))), Some(0.0)),
+      (None, None))
+    val df = rows.toDF("emb", "nrm")
+    def cells(p: Int, rounded: Boolean) =
+      GraftFunctions.nearest_cells(cs, col("emb"), col("nrm"), p, rounded)
+    val got = interpretedEqualsCodegen(df, cells(2, rounded = true), cells(2, rounded = false),
+      cells(9, rounded = true))
+    assert(got.head.getSeq[Long](0) == Seq(0L, 1L), "a unit vector's nearest cell is its own")
+    assert(got.exists(r => !r.isNullAt(2) && r.getSeq[Long](2).isEmpty) || got.exists(_.isNullAt(2)),
+      "some malformed row probes no cell")
   }
 }

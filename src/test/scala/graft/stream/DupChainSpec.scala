@@ -42,6 +42,8 @@ class DupChainSpec extends graft.SparkSpec {
     (5L, Some(4L), "exact_batch"))
   private val oddCycle = Seq((1L, Some(2L), "near_batch"), (2L, Some(3L), "near_batch"),
     (3L, Some(1L), "near_batch"), (5L, Some(4L), "exact_batch"))
+  private val fourCycle = Seq((1L, Some(2L), "near_batch"), (2L, Some(3L), "near_batch"),
+    (3L, Some(4L), "near_batch"), (4L, Some(1L), "near_batch"), (7L, Some(6L), "exact_batch"))
 
   test("a 10k-hop chained-neighbor ledger resolves to the terminal winner") {
     // doc k lost to doc k-1 for every k in 1..10000; doc 0 is admitted
@@ -81,9 +83,17 @@ class DupChainSpec extends graft.SparkSpec {
   }
 
   test("the distributed join loop also fails loudly on a cycle") {
-    for (rej <- Seq(evenCycle, oddCycle)) {
+    val After = """.*after (\d+) rounds.*""".r
+    for ((rej, len) <- Seq(evenCycle -> 2, oddCycle -> 3, fourCycle -> 4)) {
       val e = intercept[IllegalArgumentException](distributed(resolved(ledger(rej: _*))))
       assert(e.getMessage.contains("cycled"), e.getMessage)
+      // a cycle of length 2^k points each member at itself after k
+      // rounds, which the round's one check job sees: ⌊log2 L⌋+1 rounds
+      // at most, not Graph.MaxRounds
+      if (Integer.bitCount(len) == 1) e.getMessage match {
+        case After(r) => assert(r.toInt <= Integer.numberOfTrailingZeros(len) + 1, e.getMessage)
+        case m => fail(s"a $len-cycle ran to the round cap: $m")
+      }
     }
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.col
@@ -17,9 +18,18 @@ import org.apache.spark.sql.functions.col
   * rejected set in separate post-hoc ledger passes, took this epoch from
   * 194 jobs to 48; committing the stores from the driver
   * ([[StoreEpoch.commit]]), reading them with their footers' schemas
-  * and counting the metrics row on the driver took it to 34, the
-  * bound. The same store serves one search, bounded the same way. */
+  * and counting the metrics row on the driver took it to 34; running
+  * it under [[StoreEpoch.SmallEpochShape]] took it to 15, the bound,
+  * with 2 generated classes compiled. The first epoch, the compiles
+  * and the shape's confs are bounded too, and the same store serves
+  * one search, bounded the same way. */
 class IngestEpochJobsSpec extends graft.SparkSpec {
+
+  /** Measured bounds of the fixture's epochs of 100 docs (the
+    * compile count has slack for an evicted codegen cache entry). */
+  private val ColdJobs = 12
+  private val WarmJobs = 15
+  private val WarmCompiles = 6L
 
   /** Jobs per call site of `f`, from the jobs started while it ran. A
     * job's site is the first graft frame of the call site of the SQL
@@ -75,13 +85,50 @@ class IngestEpochJobsSpec extends graft.SparkSpec {
   private def epoch(e: Long): Unit = MultimodalIngest.ingestBatch(
     IngestFixture.docs(spark, 901, e * 100, (e + 1) * 100), store, epochId = e, tau = 0.99)
 
+  /** Classes Spark's code generator compiled while `f` ran. */
+  private def compilesOf(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
   test("a warm three-membrane epoch runs at most half the jobs of the post-hoc ledger path") {
-    epoch(0)
+    store // the quantizer's write is not the epoch's
+    var coldCompiles = 0L
+    val (cold, coldBreakdown) = report(jobsOf { coldCompiles = compilesOf(epoch(0)) })
+    info(s"$cold jobs cold, $coldCompiles classes compiled:\n  $coldBreakdown")
+    assert(cold <= ColdJobs, s"$cold jobs in the first epoch:\n  $coldBreakdown")
     val (total, breakdown) = report(jobsOf(epoch(1)))
     info(s"$total jobs:\n  $breakdown")
-    // 48 before the epoch's stores were committed from the driver and
-    // read with their footers' schemas
-    assert(total <= 34, s"$total jobs per warm epoch:\n  $breakdown")
+    assert(total <= WarmJobs, s"$total jobs per warm epoch:\n  $breakdown")
+  }
+
+  test("a warm small epoch runs interpreted: at most a handful of generated classes") {
+    if (!EpochFold.hasDataFiles(spark, s"$store/embed/cells")) { epoch(0); epoch(1) }
+    val n = compilesOf(epoch(2))
+    info(s"$n classes compiled")
+    // about 175 under whole-stage codegen; a Spark that stops honouring
+    // spark.sql.codegen.factoryMode compiles them again
+    assert(n <= WarmCompiles, s"$n classes compiled in a warm small epoch")
+  }
+
+  test("the plan shape's confs read the same after an epoch, and after one that throws") {
+    def confs = {
+      val set = spark.conf.getAll
+      StoreEpoch.SmallEpochShape.keys.toSeq.sorted.map(k => (k, set.get(k), spark.conf.getOption(k)))
+    }
+    // the spec session sets spark.sql.shuffle.partitions and leaves the
+    // other keys unset: a restore must set the one and unset the others
+    val before = confs
+    if (!EpochFold.hasDataFiles(spark, s"$store/embed/cells")) { epoch(0); epoch(1) }
+    epoch(3)
+    assert(confs == before)
+    // no quantizer pinned: the embedding stage throws inside the shape
+    val bare = Files.createTempDirectory("graft_epoch_shape").toString + "/mm"
+    val e = intercept[IllegalStateException](MultimodalIngest.ingestBatch(
+      IngestFixture.docs(spark, 901, 0, 100), bare, epochId = 0, tau = 0.99))
+    assert(e.getMessage.contains("no quantizer"), e.getMessage)
+    assert(confs == before)
   }
 
   test("a search over the ingest stores runs at most 5 jobs") {
